@@ -4253,7 +4253,8 @@ def _q_incremental_refresh(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from dbt_databricks_metrics_spark.plans.rollup import BuiltRollup, _swap_write
+    from dbt_databricks_metrics_spark.plans.rollup import BuiltRollup
+    from dbt_databricks_metrics_spark.publish import publish_dir
     from dbt_databricks_metrics_spark.streaming import refresh as srefresh
 
     eng = _engine(spark, sf_dir)
@@ -4262,11 +4263,8 @@ def _q_incremental_refresh(spark, sf_dir):
     src = eng._compiler.source_plan(rv.spec)
     cutoff = "1996-01-01"
     path = _os.path.join(_tf.mkdtemp(prefix="inc_roll_"), "monthly_revenue")
-    _swap_write(
-        srefresh._partial_agg(src.filter(F.col("order_date") < cutoff), built),
-        spark,
-        path,
-    )
+    prefix = srefresh._partial_agg(src.filter(F.col("order_date") < cutoff), built)
+    publish_dir(path, prefix.write.parquet)
     scratch = BuiltRollup(
         spec=built.spec, path=path, decompositions=built.decompositions
     )

@@ -153,18 +153,13 @@ def cms_fold_stream(
     Returns the streaming query (caller awaits termination, then reads
     the sketch at *out_path*).
 
-    Sketch promotion is crash-safe rename-based swap-write and therefore
-    LOCAL-POSIX-FS ONLY (``operators/cdc._promote_state_dir``): the old
+    Sketch promotion is the crash-safe rename-based
+    ``publish.publish_dir`` and therefore LOCAL-POSIX-FS ONLY: the old
     sketch is renamed aside and deleted only after the new one is
     promoted, so a crash mid-swap never loses all state. Object stores
     need a transactional table format instead.
     """
-    import os
-
-    from dbt_databricks_metrics_spark.operators.cdc import (
-        _promote_state_dir,
-        _restore_state_dir,
-    )
+    from ..publish import publish_dir, recover_dir
 
     if schema is None:
         schema = spark.read.parquet(source_dir).schema
@@ -173,14 +168,13 @@ def cms_fold_stream(
     def fold(batch_df, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        _restore_state_dir(out_path)  # adopt a crash-orphaned aside
         s = batch_df.sparkSession
         delta = cms_build(batch_df, item_col, depth, width, seed)
-        if os.path.exists(out_path):
+        if recover_dir(out_path):
             merged = cms_merge(s.read.parquet(out_path), delta)
         else:
             merged = delta
-        _promote_state_dir(merged, out_path)
+        publish_dir(out_path, merged.write.parquet)
 
     return (
         stream.writeStream.foreachBatch(fold)

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..publish import publish_dir, recover_dir
+
 # ---------------------------------------------------------------------------
 # exact dedup
 # ---------------------------------------------------------------------------
@@ -783,34 +785,29 @@ def dedup_against_registry(
     an arriving shard dedups with ONE anti-join against it and never
     rescans the corpus. Within-shard dups collapse keep-lowest-id first;
     survivors' fingerprints fold into the registry via the crash-safe
-    rename-aside swap (``operators/cdc._promote_state_dir`` — LOCAL
-    POSIX FS only; use a transactional table format on object stores).
+    rename-aside publish (``publish.publish_dir`` — LOCAL POSIX FS only;
+    use a transactional table format on object stores).
 
     Returns the kept rows of *new_docs* (recomputed via a semi-join
     against the updated registry, so the returned plan does not depend on
     the pre-swap state). Ids must be globally unique across shards.
     """
-    import os
-
-    from ..operators.cdc import _promote_state_dir, _restore_state_dir
-
     spark = new_docs.sparkSession
-    # adopt a rename-aside left by a crashed prior promote BEFORE probing
-    # existence — otherwise the registry reads as empty and the promote
-    # sweep below would discard all prior-shard fingerprints
-    _restore_state_dir(registry_path)
     with_fp = new_docs.withColumn(
         "_fp", F.xxhash64(normalized_text(text_col))
     )
     batch_first = with_fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    if os.path.exists(registry_path):
+    # recover_dir adopts a crash-orphaned aside; a plain existence probe
+    # would read the registry as empty and the publish sweep would then
+    # discard all prior-shard fingerprints
+    if recover_dir(registry_path):
         old = spark.read.parquet(registry_path)
         fresh = batch_first.join(old.select("_fp"), "_fp", "left_anti")
         updated = old.unionByName(fresh)
     else:
         fresh = batch_first
         updated = fresh
-    _promote_state_dir(updated, registry_path)
+    publish_dir(registry_path, updated.write.parquet)
     reg = spark.read.parquet(registry_path)
     return new_docs.join(
         reg.select(F.col(id_col)), id_col, "left_semi"
@@ -932,8 +929,8 @@ def neardup_against_registry(
     doc is dropped (the registry is older by construction).
 
     Registry layout: ``<path>/sigs`` (id, sig) and ``<path>/bands``
-    (id, band, key), each folded with the crash-safe rename-aside swap
-    (``operators/cdc._promote_state_dir`` — LOCAL POSIX FS only). Sigs
+    (id, band, key), each folded with the crash-safe rename-aside
+    publish (``publish.publish_dir`` — LOCAL POSIX FS only). Sigs
     promote BEFORE bands, and EACH fold derives its fresh ids by
     anti-joining its OWN registry side (sigs vs reg_sigs, bands vs
     reg_bands) — so a crash between the two promotes leaves an
@@ -948,13 +945,11 @@ def neardup_against_registry(
     """
     import os
 
-    from ..operators.cdc import _promote_state_dir, _restore_state_dir
-
     spark = new_docs.sparkSession
     sigs_path = os.path.join(registry_path, "sigs")
     bands_path = os.path.join(registry_path, "bands")
-    _restore_state_dir(sigs_path)
-    _restore_state_dir(bands_path)
+    recover_dir(sigs_path)
+    has_bands = recover_dir(bands_path)
 
     survivors = minhash_dedup(
         new_docs, id_col, text_col, k, num_perm, bands, threshold
@@ -968,7 +963,7 @@ def neardup_against_registry(
         F.explode(_banded_keys(F.col("_sig"), num_perm, bands)).alias("bk"),
     ).select(F.col(id_col), F.col("bk.band"), F.col("bk.key"))
 
-    if os.path.exists(bands_path):
+    if has_bands:
         reg_bands = spark.read.parquet(bands_path)
         reg_sigs = spark.read.parquet(sigs_path)
         cand = (
@@ -1032,8 +1027,8 @@ def neardup_against_registry(
         new_bands = shard_bands.join(kept_ids, id_col, "left_semi")
     # sigs first (see docstring crash-ordering contract); the bands fold
     # was pinned above, so replacing sigs_path cannot invalidate it
-    _promote_state_dir(new_sigs, sigs_path)
-    _promote_state_dir(new_bands, bands_path)
+    publish_dir(sigs_path, new_sigs.write.parquet)
+    publish_dir(bands_path, new_bands.write.parquet)
     return new_docs.join(kept_ids, id_col, "left_semi")
 
 

@@ -48,6 +48,8 @@ from typing import Any, Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .publish import publish_dir, recover_dir
+
 ModelFn = Callable[..., DataFrame]
 
 
@@ -702,7 +704,7 @@ class Runner:
 
     def _materialize_incremental(self, model: Model) -> DataFrame:
         path = self._model_path(model)
-        exists = os.path.isdir(path)
+        exists = recover_dir(path)
         ctx = IncrementalContext(
             is_incremental=exists,
             _existing=(lambda: self.spark.read.parquet(path)) if exists else None,
@@ -730,17 +732,15 @@ class Runner:
                 .parquet(path)
             )
         else:  # merge
-            from .plans.rollup import _swap_write
-
             old = self.spark.read.parquet(path)
             keys = list(model.unique_key)
             merged = old.join(
                 df.select(*keys).distinct(), keys, "left_anti"
             ).unionByName(df)
             # parquet has no transactional MERGE: the upsert rewrites the
-            # table (anti-join + union + swap). Honest fallback — at 100 TB
+            # table (anti-join + union + publish). Honest fallback — at 100 TB
             # use insert_overwrite partitioning or a table format with MERGE
-            _swap_write(merged, self.spark, path)
+            publish_dir(path, merged.write.parquet)
         out = self.spark.read.parquet(path)
         out.createOrReplaceTempView(model.name)
         return out
@@ -791,17 +791,16 @@ def snapshot_scd2(
 
     Plan shape: ONE full-outer join keyed on *unique_key* between the open
     generation and the snapshot (closed history passes through untouched),
-    then a swap-write — |history| + |snapshot| rows per run, no per-row
-    driver logic. The change hash is ``xxhash64`` over the check columns
-    (stored as ``scd_hash``, so later runs never re-derive old hashes).
+    then one ``publish_dir`` — |history| + |snapshot| rows per run, no
+    per-row driver logic. The change hash is ``xxhash64`` over the check
+    columns (stored as ``scd_hash``, so later runs never re-derive old
+    hashes).
 
     *snapshot_at* must be strictly later than any previous run's value —
     generations are dated, not versioned (same-date re-runs would produce
     zero-length generations).
     """
     from pyspark.sql import functions as F
-
-    from .plans.rollup import _swap_write
 
     keys = list(unique_key)
     if not keys:
@@ -814,13 +813,13 @@ def snapshot_scd2(
     at = F.lit(snapshot_at).cast("date")
 
     snap = new_df.withColumn("scd_hash", F.xxhash64(*[F.col(c) for c in checks]))
-    if not os.path.isdir(path):
+    if not recover_dir(path):
         first = snap.select(
             *keys, *data_cols, "scd_hash",
             at.alias("valid_from"),
             F.lit(None).cast("date").alias("valid_to"),
         )
-        _swap_write(first, spark, path)
+        publish_dir(path, first.write.parquet)
         return spark.read.parquet(path)
 
     hist = spark.read.parquet(path)
@@ -853,5 +852,5 @@ def snapshot_scd2(
         at.alias("valid_from"),
         F.lit(None).cast("date").alias("valid_to"),
     )
-    _swap_write(closed.unionByName(kept).unionByName(opened), spark, path)
+    publish_dir(path, closed.unionByName(kept).unionByName(opened).write.parquet)
     return spark.read.parquet(path)

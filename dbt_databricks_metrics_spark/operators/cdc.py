@@ -33,151 +33,10 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..publish import publish_dir, recover_dir
+
 UPSERT = "upsert"
 DELETE = "delete"
-
-
-class _state_lock:
-    """Advisory exclusive lock serializing the SWAP WINDOW on one state
-    directory (round-5, VERDICT r4 #8): ``flock`` on a ``__lock`` file
-    beside the state dir, so a same-machine restore cannot adopt an
-    aside while a promote is mid-rename (the ENOTEMPTY failure mode in
-    :func:`_restore_state_dir`'s contract). flock releases
-    automatically when the holder dies — no stale-lock sweeps.
-
-    WHAT THIS DOES NOT DO: make concurrent FOLDS safe. A fold is a
-    read-merge-write cycle; two processes folding the same registry
-    concurrently still race at the semantic level (the second promote
-    silently discards the first's merge — classic lost update), lock or
-    no lock. The single-writer contract stands: callers serialize fold
-    cycles; the lock only removes the restore/promote interleaving
-    hazard for READERS. Cross-machine coordination needs a
-    transactional table format."""
-
-    def __init__(self, state_path: str):
-        import os
-
-        parent = os.path.dirname(state_path) or "."
-        os.makedirs(parent, exist_ok=True)
-        self._path = os.path.join(
-            parent, f"{os.path.basename(state_path)}__lock"
-        )
-        self._fd = None
-
-    def __enter__(self):
-        import fcntl
-        import os
-
-        self._fd = os.open(self._path, os.O_CREAT | os.O_RDWR, 0o644)
-        fcntl.flock(self._fd, fcntl.LOCK_EX)
-        return self
-
-    def __exit__(self, *exc):
-        import fcntl
-        import os
-
-        if self._fd is not None:
-            fcntl.flock(self._fd, fcntl.LOCK_UN)
-            os.close(self._fd)
-            self._fd = None
-        return False
-
-
-def _restore_state_dir(state_path: str) -> None:
-    """Crash recovery for the swap-write protocol: if ``state_path`` is
-    missing but an ``__old`` aside survives (a crash landed between the
-    rename-aside and the promote), the newest aside IS the last
-    committed state — restore it before reading. Without this, the next
-    fold would rebuild from the current batch alone and the sweep would
-    delete the only surviving copy.
-
-    CONCURRENCY CONTRACT: the swap protocol assumes a SINGLE writer.
-    Same-machine restore/promote interleavings are serialized by
-    :class:`_state_lock` (flock on ``<state>__lock``) — without it, a
-    reader hitting the promote window (between rename-aside and
-    promote-tmp) would adopt the aside, re-creating ``state_path`` and
-    making the writer's final ``os.rename(tmp, state_path)`` fail with
-    ENOTEMPTY. Streaming folds additionally satisfy it by construction
-    (one query, sequential micro-batches). CROSS-MACHINE writers are
-    outside flock's reach — use a transactional table format there."""
-    import os
-
-    parent = os.path.dirname(state_path) or "."
-    if not os.path.isdir(parent):
-        return
-    with _state_lock(state_path):
-        if os.path.exists(state_path):
-            return
-        base = os.path.basename(state_path)
-        asides = sorted(
-            (
-                os.path.join(parent, name)
-                for name in os.listdir(parent)
-                if name.startswith(f"{base}__old_")
-            ),
-            key=os.path.getmtime,
-        )
-        if asides:
-            os.rename(asides[-1], state_path)
-
-
-def _promote_state_dir(df: DataFrame, state_path: str) -> None:
-    """Crash-safe swap-write of a state directory (LOCAL POSIX FS only).
-
-    Order matters: write tmp → rename current aside → promote tmp →
-    delete the aside copy. A crash at any point leaves a complete state
-    directory on disk: either ``state_path`` itself, or an ``__old``
-    aside that :func:`_restore_state_dir` renames back on the next fold
-    (the previous write-tmp/rmtree/rename sequence had a window where a
-    crash lost ALL state while the streaming checkpoint still marked the
-    batch committed — ADVICE r2). Orphaned ``__old``/``__tmp`` residue
-    from earlier crashes is swept only AFTER this promote succeeds, when
-    a newer committed state provably exists. Object stores lack atomic
-    directory rename; use a transactional table format there instead.
-    """
-    import os
-    import shutil
-    import uuid
-
-    # NOTE: readers/folds must call _restore_state_dir BEFORE building the
-    # DataFrame they pass here — restoring at promote time would adopt an
-    # aside the merge never saw and then discard it
-    token = uuid.uuid4().hex[:8]
-    tmp = f"{state_path}__tmp_{token}"
-    df.write.mode("overwrite").parquet(tmp)
-    # the filesystem phase (aside → promote → sweep) holds the advisory
-    # lock so a concurrent same-machine restore cannot adopt the aside
-    # mid-window (VERDICT r4 #8); the Spark write above stays outside
-    # the critical section — tmp dirs are token-unique
-    with _state_lock(state_path):
-        old = f"{state_path}__old_{token}"
-        if os.path.exists(state_path):
-            os.rename(state_path, old)
-        os.rename(tmp, state_path)
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        # sweep residue orphaned by earlier crashes — safe only now,
-        # after a newer state was promoted (includes stale __tmp_ dirs,
-        # which the old sweep leaked forever). __tmp_ removal is
-        # AGE-GATED: the Spark write runs outside the lock, so a young
-        # tmp may be another process's in-flight write (which the
-        # single-writer contract forbids, but a misconfigured caller
-        # should lose ITS update, not have its files deleted under it).
-        import time
-
-        parent = os.path.dirname(state_path) or "."
-        base = os.path.basename(state_path)
-        for name in os.listdir(parent):
-            full = os.path.join(parent, name)
-            if name.startswith(f"{base}__old_") and name != os.path.basename(old):
-                shutil.rmtree(full, ignore_errors=True)
-            elif name.startswith(f"{base}__tmp_") and name != os.path.basename(tmp):
-                try:
-                    age = time.time() - os.path.getmtime(full)
-                except OSError:
-                    continue
-                if age > 3600:
-                    shutil.rmtree(full, ignore_errors=True)
 
 
 def latest_changes(
@@ -264,33 +123,30 @@ def cdc_fold_stream(
     resurrecting the key. Each fold is
     ``state' = latest_changes(state ∪ batch)`` (one window over
     state+batch — both keyed-entity-sized, never feed-history-sized),
-    swap-written. Read the current table with :func:`cdc_post_image`.
-    `availableNow` gives scheduled-batch semantics.
+    published with ``publish.publish_dir``. Read the current table with
+    :func:`cdc_post_image`. `availableNow` gives scheduled-batch
+    semantics.
 
-    State promotion is rename-based and therefore LOCAL-POSIX-FS ONLY
-    (os.rename of directories; object stores need a transactional table
-    format instead — Delta/Iceberg state tables at cluster scale). The
-    old state is renamed aside and deleted only AFTER the new state is
-    promoted, so a crash mid-swap leaves either the old or the new state
-    on disk — never neither (see ``_promote_state_dir``).
+    State publication is rename-based and therefore LOCAL-POSIX-FS ONLY
+    (object stores need a transactional table format instead —
+    Delta/Iceberg state tables at cluster scale): a crash mid-publish
+    leaves either the old or the new state on disk — never neither (see
+    ``publish.publish_dir``).
     """
     if schema is None:
         schema = spark.read.parquet(source_dir).schema
     stream = spark.readStream.schema(schema).parquet(source_dir)
 
     def fold(batch_df, batch_id: int) -> None:
-        import os
-
         if batch_df.isEmpty():
             return
-        _restore_state_dir(state_path)  # adopt a crash-orphaned aside
         s = batch_df.sparkSession
-        if os.path.exists(state_path):
+        if recover_dir(state_path):
             merged = s.read.parquet(state_path).unionByName(batch_df)
         else:
             merged = batch_df
         new_state = latest_changes(merged, key_cols, seq_col, tiebreak_cols)
-        _promote_state_dir(new_state, state_path)
+        publish_dir(state_path, new_state.write.parquet)
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -308,7 +164,7 @@ def cdc_post_image(
 ) -> DataFrame:
     """The current table from folded CDC state: surviving upserts with
     tombstones and change metadata dropped."""
-    _restore_state_dir(state_path)
+    recover_dir(state_path)
     state = spark.read.parquet(state_path)
     out = state.filter(F.col(op_col) == UPSERT).drop(op_col)
     for c in drop_cols:

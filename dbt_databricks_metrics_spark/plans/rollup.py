@@ -23,16 +23,16 @@ Routing rules (``README.md:424-431``):
 4. otherwise the live source.
 
 Refresh (= ``scripts/refresh_metric_views.py`` semantics, O5 in SURVEY §2.7)
-recomputes each rollup with write-temp-then-swap so readers never see a
-half-written table; ``CREATE OR REPLACE`` of an unchanged spec preserves
-rollup state (``macros/generate_metric_views.sql:78-79``).
+recomputes each rollup and publishes it with ``publish.publish_dir`` so
+readers never see a half-written table; ``CREATE OR REPLACE`` of an
+unchanged spec preserves rollup state
+(``macros/generate_metric_views.sql:78-79``).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
-import uuid
 from dataclasses import dataclass, field
 from typing import Optional
 
@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.aggregates import Decomposition, decompose_aggregate, merge_column
+from ..publish import publish_dir, recover_dir
 from ..specs import MetricViewSpec, RollupSpec
 from .compiler import (
     MetricQuery,
@@ -68,13 +69,13 @@ class MaterializationState:
     rollups: dict[str, BuiltRollup] = field(default_factory=dict)
 
 
-def _swap_write(df: DataFrame, spark: SparkSession, path: str) -> None:
-    """Write parquet atomically-ish: temp dir, then swap into place."""
-    tmp = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(tmp)
-    if os.path.exists(path):
-        shutil.rmtree(path)
-    os.replace(tmp, path)
+def _estimated_bytes(df: DataFrame) -> int:
+    """Catalyst's driver-side size estimate of *df* (no job). A failed
+    estimate reads as unbounded, the scale-safe side of a size gate."""
+    try:
+        return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except Exception:
+        return 1 << 62
 
 
 class WindowGrainProvider:
@@ -175,6 +176,7 @@ class RollupManager:
         with self._cache_lock:
             df = self._df_cache.get(built.path)
             if df is None:
+                recover_dir(built.path)
                 df = self.spark.read.parquet(built.path).cache()
                 self._df_cache[built.path] = df
         return df
@@ -242,8 +244,8 @@ class RollupManager:
                         state.baseline = None  # router falls through to live
                         continue
                     path = self._path(spec.name, r.name)
-                    _swap_write(
-                        self.compiler.baseline_projection(spec, src), self.spark, path
+                    publish_dir(
+                        path, self.compiler.baseline_projection(spec, src).write.parquet
                     )
                     state.baseline = path
             if len(aggregated) > 1:
@@ -317,13 +319,7 @@ class RollupManager:
         # toy scale, where the direct grouping sets avoid paying an
         # extra job-floor exchange. Estimation failure falls back to
         # two-level (the scale-safe default).
-        try:
-            src_bytes = int(
-                flat._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            src_bytes = 1 << 62
-        two_level_worthwhile = src_bytes >= 16 * 1024 * 1024
+        two_level_worthwhile = _estimated_bytes(flat) >= 16 * 1024 * 1024
         if (
             two_level_worthwhile
             and all_dims
@@ -394,7 +390,7 @@ class RollupManager:
                 cols = [c for c in cols if not (c in seen or seen.add(c))]
                 slice_df = grouped.filter(F.col("_gid") == gid).select(*cols)
                 path = self._path(spec.name, r.name)
-                _swap_write(slice_df, self.spark, path)
+                publish_dir(path, slice_df.write.parquet)
                 out[r.name] = BuiltRollup(
                     spec=r,
                     path=path,
@@ -436,8 +432,8 @@ class RollupManager:
         from pyspark.sql import Observation
 
         ob = Observation()
-        _swap_write(
-            rolled.observe(ob, F.count(F.lit(1)).alias("n")), self.spark, path
+        publish_dir(
+            path, rolled.observe(ob, F.count(F.lit(1)).alias("n")).write.parquet
         )
         return BuiltRollup(
             spec=r, path=path, decompositions=decs, n_rows=int(ob.get["n"])

@@ -13,6 +13,8 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..publish import publish_dir, recover_dir
+
 
 _FORMATS = ("parquet", "csv", "json", "orc")
 
@@ -45,13 +47,12 @@ def compact_parquet(
     partition_by: Sequence[str] = (),
 ) -> int:
     """Small-file compaction: rewrite a parquet dir into ~``target_mb``
-    files. Write-temp-then-swap: readers see either the old or the new
-    layout, never a mix. The swap is two renames; a crash in between
-    leaves the data intact at ``<path>__compact_old``, and the next run
-    RESTORES it before doing anything else. Readers racing the swap
-    window itself can observe a missing path for an instant — a
-    transactional table format is the answer when even that is
-    unacceptable.
+    files, published with the crash-safe ``publish.publish_dir``: readers
+    see either the old or the new layout, never a mix, and a crash at any
+    step leaves a complete version that the next run (or any
+    ``recover_dir`` reader) adopts. Readers racing the rename window
+    itself can observe a missing path for an instant — a transactional
+    table format is the answer when even that is unacceptable.
 
     The operational counterpart of the Runner's REBALANCE-on-write: long-
     running ingestion (streaming folds, incremental appends) accretes
@@ -63,15 +64,8 @@ def compact_parquet(
     value lands in few writers (AQE still splits skewed values).
     """
     import os
-    import shutil
 
-    path = path.rstrip("/")  # tmp/old must be SIBLINGS, never nested inside
-    tmp = f"{path}__compact_tmp"
-    old = f"{path}__compact_old"
-    if not os.path.exists(path) and os.path.exists(old):
-        # crash recovery: a previous run died between its two swap
-        # renames — the pre-compaction data is complete at `old`
-        os.rename(old, path)
+    recover_dir(path)
     df = spark.read.parquet(path)
     size = sum(
         os.path.getsize(os.path.join(root, f))
@@ -86,22 +80,12 @@ def compact_parquet(
         # explicit count means NO AQE coalescing or skew-splitting here:
         # a single hot value concentrates in one task/file — acceptable
         # for an offline compaction pass, by design.
-        out = df.repartition(n_out, *partition_by)
+        writer = df.repartition(n_out, *partition_by).write.partitionBy(
+            *partition_by
+        )
     else:
-        out = df.coalesce(n_out)
-    for stale in (tmp, old):  # debris from a previous crash (path intact)
-        if os.path.exists(stale):
-            shutil.rmtree(stale)
-    writer = out.write.mode("overwrite")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(tmp)
-    # swap with the live-path window as small as os.rename allows; a
-    # crash between the renames leaves the data intact at tmp/old (the
-    # stale-debris sweep above recovers the NEXT run instead of failing)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+        writer = df.coalesce(n_out).write
+    publish_dir(path, writer.parquet)
     return sum(
         1
         for root, _, files in os.walk(path)

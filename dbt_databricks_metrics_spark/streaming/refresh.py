@@ -10,7 +10,7 @@ place:
 
 * :func:`fold_increment` — batch fold: aggregate only the new rows to
   partial states and merge them into the stored rollup (read old + union +
-  re-merge + swap-write). At 100 TB this touches |rollup| + |Δ| rows, not
+  re-merge + ``publish_dir``). At 100 TB this touches |rollup| + |Δ| rows, not
   the full source.
 * :func:`streaming_rollup` — Structured Streaming form: `readStream` over
   an append-only directory, `trigger(availableNow=True)`, `foreachBatch`
@@ -20,15 +20,13 @@ place:
 
 from __future__ import annotations
 
-import os
-
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
 from ..functions.aggregates import merge_column
-from ..plans.rollup import BuiltRollup, _swap_write
+from ..plans.rollup import BuiltRollup
+from ..publish import publish_dir, recover_dir
 
 
 def _partial_agg(delta: DataFrame, built: BuiltRollup) -> DataFrame:
@@ -62,15 +60,17 @@ def merge_partials(old: DataFrame, delta_partials: DataFrame, built: BuiltRollup
 def fold_increment(
     spark: SparkSession, built: BuiltRollup, delta_source_rows: DataFrame
 ) -> None:
-    """Fold new source rows into the stored rollup, atomically (swap-write).
+    """Fold new source rows into the stored rollup, atomically (one
+    ``publish_dir``).
 
     `delta_source_rows` must be the same relation shape the rollup was
     built from (the metric view's filtered+joined source) restricted to
     the *new* rows — e.g. the latest date partition.
     """
     delta = _partial_agg(delta_source_rows, built)
+    recover_dir(built.path)
     old = spark.read.parquet(built.path)
-    _swap_write(merge_partials(old, delta, built), spark, built.path)
+    publish_dir(built.path, merge_partials(old, delta, built).write.parquet)
 
 
 def streaming_rollup(
@@ -99,12 +99,12 @@ def streaming_rollup(
         if batch_df.isEmpty():
             return
         delta = _partial_agg(batch_df, built)
-        if os.path.exists(built.path):
+        if recover_dir(built.path):
             old = batch_df.sparkSession.read.parquet(built.path)
             merged = merge_partials(old, delta, built)
         else:
             merged = delta
-        _swap_write(merged, batch_df.sparkSession, built.path)
+        publish_dir(built.path, merged.write.parquet)
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -161,7 +161,7 @@ def fold_retractions(
     of :func:`fold_increment`: fold one change batch's PRE-images (rows
     leaving the table: deletes + old versions of updates) and
     POST-images (inserts + new versions) into the stored rollup in one
-    swap-write, via
+    ``publish_dir``, via
 
         rollup(S ∪ ΔS⁺ ∖ ΔS⁻) = merge(rollup(S), rollup(ΔS⁺), −rollup(ΔS⁻))
 
@@ -196,7 +196,7 @@ def fold_retractions(
         *[F.col(d) for d in dims],
         *[(-F.col(c)).alias(c) for c in pcols],
     )
-    bootstrap = not os.path.exists(built.path)
+    bootstrap = not recover_dir(built.path)
     if bootstrap:
         merged = merge_partials(pos, neg, built)
     else:
@@ -234,38 +234,33 @@ def fold_retractions(
     # The witness count RIDES THE WRITE as an observed metric instead of
     # running as its own job over a persisted merge (guide §1.2: one pass
     # where two ran — the old shape was witness-scan job + write job +
-    # persist/unpersist). Safety is unchanged: the write goes to the swap
-    # TEMP dir first, the observation is read after that job finishes,
-    # and a dirty batch discards the temp dir without ever swapping — the
-    # stored state is untouched on refusal, exactly as before. The
-    # observation point sits ABOVE the zero-count prune so the witness
-    # sees every merged row, like the old standalone scan did.
-    import shutil
-    import uuid
-
+    # persist/unpersist). The observation is read after the write to the
+    # publish tmp dir finishes, and a dirty batch raises inside `write`,
+    # so publish_dir discards the tmp and the stored state is untouched
+    # on refusal. The observation point sits ABOVE the zero-count prune
+    # so the witness sees every merged row, like a standalone scan would.
     from pyspark.sql import Observation
 
     ob = Observation()
     observed = merged.observe(ob, F.count_if(bad).alias("n_bad"))
-    tmp = f"{built.path}.tmp-{uuid.uuid4().hex[:8]}"
-    observed.filter(F.col(count_col) != 0).write.mode("overwrite").parquet(tmp)
-    if int(ob.get["n_bad"]) > 0:
-        shutil.rmtree(tmp, ignore_errors=True)
-        where = (
-            f"no rollup state at {built.path!r} and the change batch"
-            if bootstrap
-            else f"the rollup state at {built.path!r} plus this change batch"
-        )
-        raise ValueError(
-            f"fold_retractions: {where} retracts rows that were never "
-            f"inserted (negative count partial, or zero count with "
-            f"surviving mass) — a changelog starting mid-history cannot "
-            f"be folded; build the rollup from a source snapshot first, "
-            f"then fold changes"
-        )
-    if os.path.exists(built.path):
-        shutil.rmtree(built.path)
-    os.replace(tmp, built.path)
+
+    def write(tmp: str) -> None:
+        observed.filter(F.col(count_col) != 0).write.parquet(tmp)
+        if int(ob.get["n_bad"]) > 0:
+            where = (
+                f"no rollup state at {built.path!r} and the change batch"
+                if bootstrap
+                else f"the rollup state at {built.path!r} plus this change batch"
+            )
+            raise ValueError(
+                f"fold_retractions: {where} retracts rows that were never "
+                f"inserted (negative count partial, or zero count with "
+                f"surviving mass) — a changelog starting mid-history cannot "
+                f"be folded; build the rollup from a source snapshot first, "
+                f"then fold changes"
+            )
+
+    publish_dir(built.path, write)
 
 
 def streaming_rollup_cdc(

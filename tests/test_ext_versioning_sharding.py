@@ -370,8 +370,6 @@ def test_neardup_registry_heals_crash_between_promotes(spark, tmp_path, monkeypa
     fresh ids anti-join reg_bands (which lacks the shard), not reg_sigs
     (which already has it). Without that, the shard's docs stay
     permanently band-undiscoverable and later near-dups pass dedup."""
-    from dbt_databricks_metrics_spark.operators import cdc as cdc_mod
-
     reg = str(tmp_path / "neardup_reg_crash")
     a = "the quick brown fox jumps over the lazy dog tonight " * 6
     b = "pack my box with five dozen liquor jugs right away " * 6
@@ -380,21 +378,20 @@ def test_neardup_registry_heals_crash_between_promotes(spark, tmp_path, monkeypa
 
     # shard 2: crash between the sigs promote and the bands promote
     shard2 = spark.createDataFrame([(2, b)], "doc_id BIGINT, text STRING")
-    real_promote = cdc_mod._promote_state_dir
+    real_publish = dedup.publish_dir
     calls = {"n": 0}
 
-    def crashing_promote(df, path):
+    def crashing_publish(path, write):
         calls["n"] += 1
-        if calls["n"] == 2:  # second promote of this fold = bands
+        if calls["n"] == 2:  # second publish of this fold = bands
             raise RuntimeError("simulated crash before bands promote")
-        return real_promote(df, path)
+        return real_publish(path, write)
 
-    # the fold imports _promote_state_dir from operators.cdc at call
-    # time, so patch it at its source module
-    monkeypatch.setattr(cdc_mod, "_promote_state_dir", crashing_promote)
+    # the fold calls the publish_dir name bound in ext.dedup
+    monkeypatch.setattr(dedup, "publish_dir", crashing_publish)
     with pytest.raises(RuntimeError, match="simulated crash"):
         dedup.neardup_against_registry(shard2, reg, threshold=0.8)
-    monkeypatch.setattr(cdc_mod, "_promote_state_dir", real_promote)
+    monkeypatch.setattr(dedup, "publish_dir", real_publish)
 
     # re-run the shard: doc 2 is already in sigs but must now be BANDED
     dedup.neardup_against_registry(shard2, reg, threshold=0.8)

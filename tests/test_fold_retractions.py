@@ -501,3 +501,48 @@ def test_float_partial_midhistory_witness_paths(spark, tmp_path):
             after=_rows(spark, [(9, "B", 7.0)]),
         )
     assert not os.path.exists(built.path)
+
+
+def test_refresh_cdc_after_crash_between_aside_and_promote(
+    spark, tmp_path, monkeypatch
+):
+    """A crash after a rebuild moved the live rollup out of its path but
+    before the new version took it must not cost the stored state: the
+    next insert-only refresh_cdc (which passes the mid-history check)
+    adopts the surviving version instead of bootstrapping a rollup from
+    that one batch."""
+    import os
+
+    initial = [(1, "A", 10.0), (2, "A", 20.0), (3, "B", 5.0)]
+    _rows(spark, initial).createOrReplaceTempView("ret_src")
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "wh"))
+    mv = eng.register(MetricViewSpec.from_yaml(SPEC, name="mv_ret"))
+    eng.refresh("mv_ret")
+    path = eng.catalog.get("mv_ret").state.rollups["by_seg"].path
+
+    def crash_on_promote(real):
+        def move(src, dst, *a, **k):
+            if dst == path:
+                raise OSError("simulated crash before the promote")
+            return real(src, dst, *a, **k)
+
+        return move
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash_on_promote(os.rename))
+        m.setattr(os, "replace", crash_on_promote(os.replace))
+        with pytest.raises(OSError, match="simulated crash"):
+            eng.refresh("mv_ret")
+
+    inserted = [(4, "B", 8.0), (5, "C", 2.0)]
+    eng.refresh_cdc("mv_ret", before=_rows(spark, []), after=_rows(spark, inserted))
+    df, route = mv.query_routed(["seg"], ["n", "cents"])
+    assert route == "rollup:by_seg"
+    got = {r["seg"]: (r["n"], r["cents"]) for r in df.collect()}
+
+    _rows(spark, initial + inserted).createOrReplaceTempView("ret_src")
+    eng2 = MetricEngine(spark, warehouse_dir=str(tmp_path / "wh2"))
+    mv2 = eng2.register(MetricViewSpec.from_yaml(SPEC, name="mv_ret"))
+    eng2.refresh("mv_ret")
+    df2, _ = mv2.query_routed(["seg"], ["n", "cents"])
+    assert got == {r["seg"]: (r["n"], r["cents"]) for r in df2.collect()}

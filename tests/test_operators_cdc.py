@@ -217,22 +217,22 @@ def test_cdc_apply_matches_python_reference(spark, feed):
 
 
 def test_promote_state_dir_crash_safe(spark, tmp_path):
-    """Swap-write leaves no tmp/old residue and a complete state dir at
+    """publish_dir leaves no tmp/old residue and a complete state dir at
     every step; orphaned __old asides from a simulated crash are swept."""
     import os
 
-    from dbt_databricks_metrics_spark.operators.cdc import _promote_state_dir
+    from dbt_databricks_metrics_spark.publish import publish_dir
 
     state = str(tmp_path / "state")
     df1 = spark.createDataFrame([(1, "a")], "k INT, v STRING")
-    _promote_state_dir(df1, state)
+    publish_dir(state, df1.write.parquet)
     assert spark.read.parquet(state).count() == 1
 
     # simulate a crash-after-promote leftover
     os.makedirs(f"{state}__old_deadbeef/x", exist_ok=True)
 
     df2 = spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING")
-    _promote_state_dir(df2, state)
+    publish_dir(state, df2.write.parquet)
     assert spark.read.parquet(state).count() == 2
     residue = [
         n
@@ -249,14 +249,11 @@ def test_restore_adopts_crash_orphaned_aside(spark, tmp_path):
     import os
     import time
 
-    from dbt_databricks_metrics_spark.operators.cdc import (
-        _promote_state_dir,
-        _restore_state_dir,
-    )
+    from dbt_databricks_metrics_spark.publish import publish_dir, recover_dir
 
     state = str(tmp_path / "state")
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k INT, v STRING")
-    _promote_state_dir(df1, state)
+    publish_dir(state, df1.write.parquet)
     # crash window: current state renamed aside, promote never happened
     os.rename(state, f"{state}__old_cafe0001")
     # plus a stale tmp from the same crash (aged past the sweep gate)
@@ -266,7 +263,7 @@ def test_restore_adopts_crash_orphaned_aside(spark, tmp_path):
     os.utime(f"{state}__tmp_cafe0001", (old_time, old_time))
     os.makedirs(f"{state}__tmp_beef0002/x", exist_ok=True)
 
-    _restore_state_dir(state)
+    assert recover_dir(state)
     assert {r["k"] for r in spark.read.parquet(state).collect()} == {1, 2}
 
     # a subsequent promote folds new data on the restored state, sweeps
@@ -275,7 +272,7 @@ def test_restore_adopts_crash_orphaned_aside(spark, tmp_path):
     df2 = spark.read.parquet(state).unionByName(
         spark.createDataFrame([(3, "c")], "k INT, v STRING")
     )
-    _promote_state_dir(df2, state)
+    publish_dir(state, df2.write.parquet)
     assert spark.read.parquet(state).count() == 3
     residue = [n for n in os.listdir(tmp_path) if "__old_" in n or "__tmp_" in n]
     assert residue == [os.path.basename(f"{state}__tmp_beef0002")]
@@ -290,25 +287,21 @@ def test_state_lock_serializes_promote_and_restore(spark, tmp_path):
     import threading
     import time
 
-    from dbt_databricks_metrics_spark.operators.cdc import (
-        _promote_state_dir,
-        _restore_state_dir,
-        _state_lock,
-    )
+    from dbt_databricks_metrics_spark.publish import _lock, publish_dir, recover_dir
 
     state = str(tmp_path / "locked_state")
     df = spark.createDataFrame([(1,)], "k LONG")
-    _promote_state_dir(df, state)
+    publish_dir(state, df.write.parquet)
     assert os.path.exists(state)
     assert os.path.exists(state + "__lock")
 
     order = []
 
     def contender():
-        with _state_lock(state):
+        with _lock(state):
             order.append("contender")
 
-    with _state_lock(state):
+    with _lock(state):
         t = threading.Thread(target=contender)
         t.start()
         time.sleep(0.3)
@@ -318,5 +311,5 @@ def test_state_lock_serializes_promote_and_restore(spark, tmp_path):
 
     # restore under the lock is a no-op when state exists and the lock
     # file does not confuse the aside scan
-    _restore_state_dir(state)
+    assert recover_dir(state)
     assert spark.read.parquet(state).count() == 1

@@ -41,6 +41,36 @@ def _rows(df):
     return sorted(tuple(norm(x) for x in r) for r in df.collect())
 
 
+def test_size_gate_keeps_toy_source_on_direct_grouping_sets(engine, monkeypatch):
+    """The two-level build gate reads Catalyst's size estimate through a
+    private JVM reach (``_jdf``). A Spark API break must fail here instead
+    of silently sending every build down the two-level path: the sf0.001
+    source estimates finite and under the 16 MiB gate, and its build runs
+    GROUPING SETS straight over the flat source, with no fine-grain
+    pre-aggregate beneath."""
+    from dbt_databricks_metrics_spark.plans.rollup import _estimated_bytes
+
+    rv = engine.catalog.get("mv_order_metrics")
+    flat = engine._compiler.baseline_projection(
+        rv.spec, engine._compiler.source_plan(rv.spec)
+    )
+    est = _estimated_bytes(flat)
+    assert isinstance(est, int) and 0 < est < 16 * 1024 * 1024
+
+    inputs = []
+    real = type(flat).groupingSets
+
+    def spy(self, *a, **k):
+        inputs.append(self)
+        return real(self, *a, **k)
+
+    monkeypatch.setattr(type(flat), "groupingSets", spy)
+    engine.refresh("mv_order_metrics")
+    assert len(inputs) == 1
+    assert not [c for c in inputs[0].columns if c.startswith("_p_")]
+    assert "Aggregate" not in str(inputs[0]._jdf.queryExecution().optimizedPlan())
+
+
 def test_routing_decisions(engine):
     mv = engine.metric_view("mv_order_metrics")
     # covered by revenue_by_segment (dims ⊆ {market_segment, order_status})

@@ -74,37 +74,41 @@ def test_compact_parquet_partitioned(spark, tmp_path):
 
 def test_compact_parquet_trailing_slash_and_stale_debris(spark, tmp_path):
     import os
+    import time
 
     from dbt_databricks_metrics_spark.sources.readers import compact_parquet
 
     p = str(tmp_path / "frag2")
     spark.range(5000).repartition(20).write.parquet(p)
-    # simulate debris from a previous crash + a trailing-slash caller
-    os.makedirs(p + "__compact_old")
-    os.makedirs(p + "__compact_tmp")
+    # simulate debris from a previous crash (a stale aside and a tmp aged
+    # past the publish sweep's gate) + a trailing-slash caller
+    os.makedirs(p + "__old_deadbeef")
+    os.makedirs(p + "__tmp_deadbeef")
+    aged = time.time() - 7200
+    os.utime(p + "__tmp_deadbeef", (aged, aged))
     n = compact_parquet(spark, p + "/", target_mb=256)
     assert n <= 4
     assert spark.read.parquet(p).count() == 5000
-    assert not os.path.exists(p + "__compact_old")
+    assert not os.path.exists(p + "__old_deadbeef")
+    assert not os.path.exists(p + "__tmp_deadbeef")
 
 
 def test_compact_parquet_crash_recovery(spark, tmp_path):
-    """A crash between the two swap renames leaves the data at
-    <path>__compact_old; the next run must restore it first."""
+    """A crash between the rename-aside and the promote leaves the data at
+    a <path>__old_ aside; the next run must restore it first."""
     import os
-    import shutil
 
     from dbt_databricks_metrics_spark.sources.readers import compact_parquet
 
     p = str(tmp_path / "crashy")
     spark.range(3000).repartition(12).write.parquet(p)
-    # simulate the mid-swap crash state: path moved to old, tmp half-baked
-    os.rename(p, p + "__compact_old")
-    os.makedirs(p + "__compact_tmp")
+    # simulate the mid-swap crash state: path moved aside, tmp half-baked
+    os.rename(p, p + "__old_cafe0001")
+    os.makedirs(p + "__tmp_cafe0001")
     n = compact_parquet(spark, p, target_mb=256)
     assert n >= 1
     assert spark.read.parquet(p).count() == 3000
-    assert not os.path.exists(p + "__compact_old")
+    assert not os.path.exists(p + "__old_cafe0001")
 
 
 def test_with_json_fields_explicit_schema(spark):

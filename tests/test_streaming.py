@@ -62,11 +62,12 @@ def test_fold_increment_equals_full_rebuild(engine, spark):
     import tempfile
 
     scratch = tempfile.mkdtemp(prefix="roll_inc_")
-    from dbt_databricks_metrics_spark.plans.rollup import BuiltRollup, _swap_write
+    from dbt_databricks_metrics_spark.plans.rollup import BuiltRollup
+    from dbt_databricks_metrics_spark.publish import publish_dir
 
     prefix_partials = srefresh._partial_agg(old_rows, built)
     scratch_path = os.path.join(scratch, "revenue_by_segment")
-    _swap_write(prefix_partials, spark, scratch_path)
+    publish_dir(scratch_path, prefix_partials.write.parquet)
     scratch_built = BuiltRollup(
         spec=built.spec, path=scratch_path, decompositions=built.decompositions
     )
