@@ -1035,15 +1035,14 @@ def main() -> None:
         .first()[0]
     )
 
-    # window-df skew-guard evidence (r11): the gram/shingle family's
+    # window-df hot-key evidence (r11): the gram/shingle family's
     # per-key count window cannot partial-aggregate, so every row of a
-    # hot boilerplate gram serializes through ONE sort task; the opt-in
-    # ``skew_guard`` pre-filters hot keys with a partial agg + broadcast
-    # (guide §2.5). Synthetic hot-gram corpus: every doc shares one
-    # boilerplate sentence (hot 5-grams, df == n_docs) beside a unique
-    # payload. Wall-clock on local[32] sits near the scheduling floor —
-    # the scale-invariant evidence is windowdf_max_group_rows_*: the
-    # largest window partition each shape sorts.
+    # hot boilerplate gram serializes through ONE sort task (guide
+    # §2.5). Synthetic hot-gram corpus: every doc shares one boilerplate
+    # sentence (hot 5-grams, df == n_docs) beside a unique payload.
+    # Wall-clock on local[32] sits near the scheduling floor — the
+    # scale-invariant evidence is windowdf_max_group_rows_plain: the
+    # largest window partition the operator sorts.
     from dbt_databricks_metrics_spark.ext.contamination import (
         _exploded_ngrams as _eng,
     )
@@ -1059,19 +1058,11 @@ def main() -> None:
             F.lit(" the same boilerplate footer appears in every single document "),
             F.sha2((F.col("id") + 7).cast("string"), 256),
         ).alias("text"),
-    ).localCheckpoint()  # pin the corpus: both entries time the operator
-    _GUARD_DF = 256
+    ).localCheckpoint()  # pin the corpus: the entry times the operator only
 
     timed(
         "ext_windowdf_guard_off",
         lambda: _gn_guard(guard_corpus, n=5, hash_ngrams=True)
-        .agg(F.sum("n_dup_grams"))
-        .collect(),
-        warm=True,
-    )
-    timed(
-        "ext_windowdf_guard_on",
-        lambda: _gn_guard(guard_corpus, n=5, hash_ngrams=True, skew_guard=_GUARD_DF)
         .agg(F.sum("n_dup_grams"))
         .collect(),
         warm=True,
@@ -1083,9 +1074,6 @@ def main() -> None:
         .count()
     )
     windowdf_max_group_plain = _gcnt.agg(F.max("count")).first()[0]
-    windowdf_max_group_guarded = (
-        _gcnt.filter(F.col("count") <= _GUARD_DF).agg(F.max("count")).first()[0]
-    )
     guard_corpus.unpersist()
 
     # bloom-pruning evidence: rows entering the semi-join shuffle with and
@@ -1247,10 +1235,6 @@ def main() -> None:
         "skew_max_task_rows_salted": skew_max_salted,
         "skew_balance_factor": round(skew_max_plain / max(skew_max_salted, 1), 1),
         "windowdf_max_group_rows_plain": windowdf_max_group_plain,
-        "windowdf_max_group_rows_guarded": windowdf_max_group_guarded,
-        "windowdf_guard_balance": round(
-            windowdf_max_group_plain / max(windowdf_max_group_guarded, 1), 1
-        ),
         "scaling_4x_time_ratio": scaling,
         "layout_scan_frac_secondary_linear": linear_frac,
         "layout_scan_frac_secondary_zorder": zorder_frac,

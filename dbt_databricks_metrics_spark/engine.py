@@ -284,8 +284,7 @@ class MetricView:
             return []
         spec = self.spec
         compiler = self._engine._compiler
-        src = compiler.source_plan(spec)
-        flat = compiler.baseline_projection(spec, src)
+        flat = compiler.baseline_projection(spec, compiler.source_plan(spec))
         existing: list[tuple[tuple[str, ...], tuple[str, ...], int]] = []
         if consider_existing and self._rv.state is not None:
             for b in self._rv.state.rollups.values():
@@ -304,9 +303,11 @@ class MetricView:
         if apply and choices:
             if self._rv.state is None:
                 self._rv.state = MaterializationState()
-            for r in to_rollup_specs(spec, choices, workload):
-                built = self._engine._rollups._build_aggregated(spec, r, src)
-                self._rv.state.rollups[r.name] = built
+            self._rv.state.rollups.update(
+                self._engine._rollups.build_aggregated(
+                    spec, to_rollup_specs(spec, choices, workload), flat
+                )
+            )
         return choices
 
     def _validate_having(

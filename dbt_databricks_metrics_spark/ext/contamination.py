@@ -75,7 +75,6 @@ def gram_novelty(
     id_col: str = "doc_id",
     text_col: str = "text",
     hash_ngrams: bool = False,
-    skew_guard: int | None = None,
 ) -> DataFrame:
     """Corpus-INTERNAL duplicate-n-gram fraction (the RefinedWeb /
     Gopher-repetition signal at corpus scope, not within-document):
@@ -92,20 +91,7 @@ def gram_novelty(
     than n words contribute their single partial gram (same convention
     as `ngram_contamination`); NULL-text documents surface with counts
     0 and NULL fraction — nothing disappears.
-
-    ``skew_guard`` (scale knob, off by default — results are identical
-    either way): corpus frequency above which a gram is treated as a
-    HOT key. The per-gram window cannot partial-aggregate, so every row
-    of a hot boilerplate gram otherwise serializes through ONE sort
-    task (guide §2.5); with the guard, a partial-aggregating pre-pass
-    finds the (tiny) over-threshold gram list, hot rows take their
-    frequency from a broadcast of that list, and the window only ever
-    sees grams with ≤ ``skew_guard`` rows. Opt-in because the pre-pass
-    costs ~1.5x on hot-key-free local fixtures (mostly-novel corpora
-    give the pre-aggregate nothing to collapse).
     """
-    if skew_guard is not None and skew_guard < 2:
-        raise ValueError(f"skew_guard must be >= 2, got {skew_guard}")
     # the per-gram document frequency comes from a WINDOW over the gram
     # key instead of a groupBy + join-back: the gram explode is computed
     # and shuffled exactly ONCE (the agg+join diamond re-derived it on
@@ -119,29 +105,10 @@ def gram_novelty(
     g = _exploded_ngrams(
         corpus, id_col, text_col, n, "doc_id", hash_ngrams
     ).filter(F.col("_ngram").isNotNull())
-    if skew_guard is not None:
-        hot = (
-            g.groupBy("_ngram")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > skew_guard)
-        )
-        with_df = (
-            g.join(F.broadcast(hot.select("_ngram")), "_ngram", "left_anti")
-            .select(
-                "doc_id",
-                F.count(F.lit(1))
-                .over(Window.partitionBy("_ngram"))
-                .alias("_df"),
-            )
-            .unionByName(
-                g.join(F.broadcast(hot), "_ngram").select("doc_id", "_df")
-            )
-        )
-    else:
-        with_df = g.select(
-            "doc_id",
-            F.count(F.lit(1)).over(Window.partitionBy("_ngram")).alias("_df"),
-        )
+    with_df = g.select(
+        "doc_id",
+        F.count(F.lit(1)).over(Window.partitionBy("_ngram")).alias("_df"),
+    )
     per_doc = with_df.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_grams"),
         F.count_if(F.col("_df") > 1).alias("n_dup_grams"),

@@ -413,7 +413,6 @@ def containment_pairs(
     k: int = 5,
     threshold: tuple[int, int] = (4, 5),
     max_df: int = 50,
-    skew_guard: bool = False,
 ) -> DataFrame:
     """ASYMMETRIC shingle containment C(A→B) = |A∩B| / |A| — the dedup
     signal Jaccard dilutes: a short document embedded verbatim inside a
@@ -437,17 +436,6 @@ def containment_pairs(
     float exists to diverge). Returns ordered pairs
     ``(id_a, id_b, shared, size_a, size_b)`` with id_a the CONTAINED
     side, both directions of every qualifying pair, all-integer.
-
-    ``skew_guard`` (scale knob, off by default — results are identical
-    either way): drop the stop-shingles via a partial-aggregating
-    pre-pass + broadcast anti-join INSTEAD of the per-shingle window.
-    The window cannot partial-aggregate, so every row of a hot
-    boilerplate shingle otherwise serializes through ONE sort task
-    (guide §2.5); the guarded shape collapses a hot shingle map-side,
-    broadcasts the (tiny, ≤ rows/max_df) over-``max_df`` key list, and
-    removes hot rows BEFORE any shuffle — after it, no shingle group
-    anywhere in the plan exceeds ``max_df`` rows. Opt-in because the
-    extra explode pass costs ~1.36x on hot-key-free local fixtures.
     """
     t_num, t_den = threshold
     if t_den <= 0 or t_num < 0:
@@ -477,25 +465,11 @@ def containment_pairs(
         F.col(id_col).alias("_id"),
         F.explode(char_shingles(text_col, k)).alias("_sh"),
     ).filter(F.col("_sh").isNotNull())
-    if skew_guard:
-        # guarded stop-shingle drop: partial-agg the shingle frequencies
-        # (a hot key collapses map-side), broadcast the over-max_df key
-        # list, anti-join it off the stream map-side — the survivors are
-        # exactly the old ``_df <= max_df`` event space and no shingle
-        # group downstream exceeds max_df rows
-        hot = (
-            sh.groupBy("_sh")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_df)
-            .select("_sh")
-        )
-        kept = sh.join(F.broadcast(hot), "_sh", "left_anti")
-    else:
-        kept = sh.select(
-            "_id",
-            "_sh",
-            F.count(F.lit(1)).over(Window.partitionBy("_sh")).alias("_df"),
-        ).filter(F.col("_df") <= max_df)
+    kept = sh.select(
+        "_id",
+        "_sh",
+        F.count(F.lit(1)).over(Window.partitionBy("_sh")).alias("_df"),
+    ).filter(F.col("_df") <= max_df)
     sized = kept.select(
         "_id",
         "_sh",

@@ -52,29 +52,15 @@ def ssjoin_pairs(
     k: int = 5,
     threshold: float = 0.8,
     tau_slack: float = 1e-6,
-    skew_guard: int | None = None,
 ) -> DataFrame:
     """All pairs with shingle-Jaccard ≥ τ — exact, via prefix filtering.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b: the same contract
     (and bit-identical values) as the brute-force
     ``dedup.ngram_jaccard_pairs``, without the O(n²) compare.
-
-    ``skew_guard`` (scale knob, off by default — results are identical
-    either way): document frequency above which a token is treated as a
-    HOT key. The per-token df window cannot partial-aggregate, so every
-    row of a hot boilerplate token otherwise serializes through ONE
-    sort task (guide §2.5); with the guard, a partial-aggregating
-    pre-pass finds the (tiny) over-threshold token list, hot rows take
-    their df from a broadcast of that list, and the window only ever
-    sees tokens with ≤ ``skew_guard`` rows. Opt-in because the pre-pass
-    costs an extra explode over the checkpointed shingle sets on
-    hot-key-free local fixtures.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0,1], got {threshold}")
-    if skew_guard is not None and skew_guard < 2:
-        raise ValueError(f"skew_guard must be >= 2, got {skew_guard}")
     tau = threshold - tau_slack
     sets = df.select(
         F.col(id_col).alias("_id"), char_shingles(text_col, k).alias("_sh")
@@ -89,29 +75,11 @@ def ssjoin_pairs(
     tok = sets.select("_id", F.explode("_sh").alias("_t")).filter(
         F.col("_t").isNotNull()
     )
-    if skew_guard is not None:
-        hot = (
-            tok.groupBy("_t")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > skew_guard)
-        )
-        with_df = (
-            tok.join(F.broadcast(hot.select("_t")), "_t", "left_anti")
-            .select(
-                "_id",
-                "_t",
-                F.count(F.lit(1)).over(Window.partitionBy("_t")).alias("_df"),
-            )
-            .unionByName(
-                tok.join(F.broadcast(hot), "_t").select("_id", "_t", "_df")
-            )
-        )
-    else:
-        with_df = tok.select(
-            "_id",
-            "_t",
-            F.count(F.lit(1)).over(Window.partitionBy("_t")).alias("_df"),
-        )
+    with_df = tok.select(
+        "_id",
+        "_t",
+        F.count(F.lit(1)).over(Window.partitionBy("_t")).alias("_df"),
+    )
     # per-doc tokens in global rarest-first order; prefix keeps the first
     # n - ceil(tau*n) + 1 of them
     ordered = (

@@ -80,7 +80,6 @@ def dedup_exact_substrings(
     min_len: int = 64,
     keep: str = "first",
     hash_fn: str = "xxhash64",
-    skew_guard: int | None = None,
 ) -> DataFrame:
     """Remove every duplicated substring of length >= ``min_len`` chars.
 
@@ -90,25 +89,9 @@ def dedup_exact_substrings(
     surviving segments in order. ``keep='first'`` exempts the first
     (id, pos) occurrence of each duplicated gram; ``keep='none'``
     removes all occurrences.
-
-    ``skew_guard`` (scale knob, off by default — results are identical
-    either way): occurrence count above which a fingerprint is treated
-    as a HOT key. The per-fp window cannot partial-aggregate, so every
-    row of a hot boilerplate fingerprint otherwise serializes through
-    ONE sort task (guide §2.5); with the guard, a partial-aggregating
-    pre-pass finds the (tiny, ≤ rows/threshold) hot-fp list, hot rows
-    take their count/exemplar from a broadcast of that list, and the
-    window only ever sees keys with ≤ ``skew_guard`` rows. The guard
-    pays one extra pass over the gram stream plus a fp-keyed aggregate
-    shuffle — measured ~1.4x on hot-key-free local fixtures, which is
-    why it is opt-in, exactly like AQE's own skew thresholds; at scale
-    it bounds the operator's critical path by the threshold instead of
-    by the hottest key.
     """
     if keep not in ("first", "none"):
         raise ValueError(f"keep must be 'first' or 'none', got {keep!r}")
-    if skew_guard is not None and skew_guard < 2:
-        raise ValueError(f"skew_guard must be >= 2, got {skew_guard}")
     # The dup-count and first-occurrence aggregates come from a WINDOW
     # over the fingerprint instead of a groupBy + self-join: the per-char
     # gram explode — the largest intermediate in this operator — is
@@ -122,36 +105,12 @@ def dedup_exact_substrings(
 
     w = Window.partitionBy("fp")
     grams = _gram_starts(docs, id_col, text_col, min_len, hash_fn)
-    if skew_guard is not None:
-        hot = (
-            grams.groupBy("fp")
-            .agg(
-                F.count(F.lit(1)).alias("_cnt"),
-                F.min(F.struct(F.col(id_col), F.col("pos"))).alias("_first"),
-            )
-            .filter(F.col("_cnt") > skew_guard)
-        )
-        cold = grams.join(F.broadcast(hot.select("fp")), "fp", "left_anti")
-        marked = cold.select(
-            F.col(id_col),
-            F.col("pos"),
-            F.count(F.lit(1)).over(w).alias("_cnt"),
-            F.min(F.struct(F.col(id_col), F.col("pos"))).over(w).alias("_first"),
-        ).unionByName(
-            # hot rows take the (identical) aggregates from the broadcast
-            # list — no window partition ever holds more than skew_guard
-            # rows; hot fps have _cnt > skew_guard >= 2, so all are dups
-            grams.join(F.broadcast(hot), "fp").select(
-                F.col(id_col), F.col("pos"), F.col("_cnt"), F.col("_first")
-            )
-        )
-    else:
-        marked = grams.select(
-            F.col(id_col),
-            F.col("pos"),
-            F.count(F.lit(1)).over(w).alias("_cnt"),
-            F.min(F.struct(F.col(id_col), F.col("pos"))).over(w).alias("_first"),
-        )
+    marked = grams.select(
+        F.col(id_col),
+        F.col("pos"),
+        F.count(F.lit(1)).over(w).alias("_cnt"),
+        F.min(F.struct(F.col(id_col), F.col("pos"))).over(w).alias("_first"),
+    )
     dup = marked.filter(F.col("_cnt") > 1)
     if keep == "first":
         dup = dup.filter(

@@ -38,6 +38,7 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass
+from typing import Mapping, Optional, Sequence
 
 # merge function applied when re-aggregating a partial column
 _AGG_FNS = {
@@ -88,6 +89,41 @@ class Decomposition:
     def trivial(self) -> bool:
         """True when finalize is just the single partial column."""
         return len(self.partials) == 1 and self.finalize == self.partials[0][1]
+
+
+def partial_columns(decs: Mapping[str, Decomposition]) -> dict[str, str]:
+    """The partial-state layout of measures decomposed together (measure
+    name -> ``Decomposition``): each stored partial column -> the source
+    expression that computes it, in table-column order. Rollup builds,
+    window grains and incremental folds all aggregate to this layout."""
+    out: dict[str, str] = {}
+    for dec in decs.values():
+        for p_expr, p_col in dec.partials:
+            out.setdefault(p_col, p_expr)
+    return out
+
+
+def merge_functions(
+    decs: Mapping[str, Decomposition], measures: Optional[Sequence[str]] = None
+) -> dict[str, str]:
+    """Partial column -> merge fn for *measures* (default: all of *decs*),
+    in the same column order as :func:`partial_columns`."""
+    out: dict[str, str] = {}
+    for name in decs if measures is None else measures:
+        for p_col, fn in decs[name].merges.items():
+            out.setdefault(p_col, fn)
+    return out
+
+
+def merge_columns(
+    decs: Mapping[str, Decomposition], measures: Optional[Sequence[str]] = None
+) -> list:
+    """The aggregate columns that re-aggregate the partial layout of
+    *measures* (default: all of *decs*), each aliased to its partial."""
+    return [
+        merge_column(fn, p_col).alias(p_col)
+        for p_col, fn in merge_functions(decs, measures).items()
+    ]
 
 
 def _find_matching_paren(s: str, open_idx: int) -> int:

@@ -711,10 +711,13 @@ class Runner:
         )
         df = self._call_model_fn(model, ctx)
         if not exists:
-            writer = df.write.mode("overwrite")
+            # the first full build publishes whole: a crash mid-write must
+            # not leave a partial `path` that the next run would take for
+            # existing state and extend incrementally
+            writer = df.write
             if model.partition_by:
                 writer = writer.partitionBy(*model.partition_by)
-            writer.parquet(path)
+            publish_dir(path, writer.parquet)
         elif model.incremental_strategy == "append":
             writer = df.write.mode("append")
             if model.partition_by:

@@ -23,8 +23,8 @@ is ≥ 63% of optimal). With linear scan costs:
 Spark-first cost model: every candidate grain's cardinality comes from
 ONE scan — ``groupingSets`` over the union of candidate grains +
 ``grouping_id()``, then a count per grain id (the same single-pass
-trick ``RollupManager._build_grouping_sets`` uses to BUILD rollups, run
-here without materializing the groups' contents). At 100 TB the advisor
+trick ``RollupManager.build_aggregated`` uses to BUILD several rollups,
+run here without materializing the groups' contents). At 100 TB the advisor
 costs one shuffle of the candidate-dim projection, not |candidates|
 scans.
 

@@ -32,7 +32,12 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import decompose_aggregate, merge_column
+from ..functions.aggregates import (
+    decompose_aggregate,
+    merge_column,
+    merge_functions,
+    partial_columns,
+)
 from ..specs import JoinSpec, Measure, MetricViewSpec, WindowClause
 
 
@@ -236,12 +241,23 @@ class QueryCompiler:
         (baseline snapshots / rollup tables store plain columns)."""
         return re.sub(r"\bsource\.", "", expr)
 
+    def flat_expr(self, spec: MetricViewSpec, expr: str) -> str:
+        """*expr* as it evaluates on the flat projection: no ``source.``
+        qualifier, snowflake paths at their leaf alias (``alias.col`` then
+        reads the struct column :meth:`baseline_projection` carries)."""
+        return self._rewrite_dim_expr(spec, self.strip_source_prefix(expr))
+
     def baseline_projection(self, spec: MetricViewSpec, src: DataFrame) -> DataFrame:
-        """Projection persisted as the ``unaggregated`` baseline snapshot.
+        """The flat projection of the (filtered, joined) source: persisted
+        as the ``unaggregated`` baseline snapshot and aggregated by every
+        rollup build.
 
         All base-source columns plus every declared dimension materialized
         under its name, so any (dims × measures) query — including window
         measures — expands against the snapshot without re-running joins.
+        Joined columns that measures read ride along as one struct per
+        join alias, so a measure's ``alias.col`` resolves as a field of
+        that struct exactly as it resolves on the join.
         """
         if spec.joins:
             base_names = src.select("source.*").columns
@@ -260,7 +276,19 @@ class QueryCompiler:
             F.expr(self._rewrite_dim_expr(spec, d.expr)).alias(d.name)
             for d in extra_dims
         ]
-        return src.select(*kept, *extra)
+        taken = set(base_names) | collide
+        aliases = {p[-1] for p in self._collect_join_paths(spec.joins)} - taken
+        fields: dict[str, list[str]] = {}
+        for m in spec.measures:
+            text = re.sub(r"'(?:[^'\\]|\\.)*'", "''", self.flat_expr(spec, m.expr))
+            for a, c in re.findall(r"(?<![\w.])([A-Za-z_]\w*)\.([A-Za-z_]\w*)", text):
+                if a in aliases and c not in fields.setdefault(a, []):
+                    fields[a].append(c)
+        joined = [
+            F.struct(*[F.col(f"{a}.{c}").alias(c) for c in cs]).alias(a)
+            for a, cs in fields.items()
+        ]
+        return src.select(*kept, *extra, *joined)
 
     def source_plan(self, spec: MetricViewSpec, source_df: Optional[DataFrame] = None) -> DataFrame:
         """(filtered, joined) source relation — the input to any expansion.
@@ -391,7 +419,7 @@ class QueryCompiler:
             assert source_df is not None
             base = source_df
             dim_expr = lambda d: d.name  # noqa: E731
-            meas_expr = self.strip_source_prefix
+            meas_expr = lambda e: self.flat_expr(spec, e)  # noqa: E731
         else:
             base = self.source_plan(spec, source_df=source_df)
             dim_expr = lambda d: self._rewrite_dim_expr(spec, d.expr)  # noqa: E731
@@ -514,7 +542,7 @@ class QueryCompiler:
             dim_exprs = {d: d for d in dims}
             order_expr = order_dim.name
             part_exprs = {p.name: p.name for p in extra_parts}
-            base_exprs = {m.name: self.strip_source_prefix(m.expr) for m in measures}
+            base_exprs = {m.name: self.flat_expr(spec, m.expr) for m in measures}
         else:
             dim_exprs = {d: self._rewrite_dim_expr(spec, spec.dimension(d).expr) for d in dims}
             order_expr = self._rewrite_dim_expr(spec, order_dim.expr)
@@ -537,13 +565,9 @@ class QueryCompiler:
             m.name: decompose_aggregate(base_exprs[m.name], prefix=f"_p_{m.name}")
             for m in measures
         }
-        partials: dict[str, str] = {}
-        needed: list[tuple[str, str, str]] = []
-        for dec in decs.values():
-            for p_expr, p_col in dec.partials:
-                if p_col not in partials:
-                    partials[p_col] = p_expr
-                    needed.append((p_expr, p_col, dec.merges[p_col]))
+        partials = partial_columns(decs)
+        fns = merge_functions(decs)
+        needed = [(e, c, fns[c]) for c, e in partials.items()]
         grain = grain_provider(grain_cols, needed) if grain_provider else None
         if grain is None:
             grain = base.groupBy(*[named(c) for c in grain_cols]).agg(
@@ -619,7 +643,7 @@ class QueryCompiler:
             dim_exprs = {d: d for d in dims}
             order_expr = order_dim.name
             part_exprs = {p.name: p.name for p in extra_parts}
-            base_expr = self.strip_source_prefix(measure.expr)
+            base_expr = self.flat_expr(spec, measure.expr)
         else:
             dim_exprs = {d: self._rewrite_dim_expr(spec, spec.dimension(d).expr) for d in dims}
             order_expr = self._rewrite_dim_expr(spec, order_dim.expr)

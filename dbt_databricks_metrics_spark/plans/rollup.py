@@ -36,10 +36,17 @@ import shutil
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.aggregates import Decomposition, decompose_aggregate, merge_column
+from ..functions.aggregates import (
+    Decomposition,
+    decompose_aggregate,
+    merge_column,
+    merge_columns,
+    merge_functions,
+    partial_columns,
+)
 from ..publish import publish_dir, recover_dir
 from ..specs import MetricViewSpec, RollupSpec
 from .compiler import (
@@ -117,10 +124,10 @@ class WindowGrainProvider:
         for built in candidates:
             if not need_dims <= set(built.spec.dimensions):
                 continue
+            fns = merge_functions(built.decompositions)
             stored: dict[str, tuple[str, str]] = {}
-            for dec in built.decompositions.values():
-                for e, c in dec.partials:
-                    stored.setdefault(self._norm(e), (c, dec.merges[c]))
+            for c, e in partial_columns(built.decompositions).items():
+                stored.setdefault(self._norm(e), (c, fns[c]))
             sel: Optional[list[tuple[str, str, str]]] = []
             for p_expr, p_col, fn in needed:
                 hit = stored.get(self._norm(p_expr))
@@ -227,9 +234,8 @@ class RollupManager:
         rollup_specs = spec.materialization.materialized_views
         aggregated = [r for r in rollup_specs if r.type == "aggregated"]
         # the source has at most TWO consumers: the baseline snapshot write
-        # and ONE aggregation pass (grouping sets batches every grain into a
-        # single job; a lone rollup is likewise one job). Cache only when
-        # both exist — caching for a single consumer just pays the
+        # and ONE aggregation pass over every grain. Cache only when both
+        # exist — caching for a single consumer just pays the
         # materialization cost with no reuse.
         writes_baseline = (
             any(r.type == "unaggregated" for r in rollup_specs) and not redundant_baseline
@@ -237,6 +243,7 @@ class RollupManager:
         cache = writes_baseline and bool(aggregated)
         if cache:
             src = src.cache()
+        flat = self.compiler.baseline_projection(spec, src)
         try:
             for r in rollup_specs:
                 if r.type == "unaggregated":
@@ -244,136 +251,106 @@ class RollupManager:
                         state.baseline = None  # router falls through to live
                         continue
                     path = self._path(spec.name, r.name)
-                    publish_dir(
-                        path, self.compiler.baseline_projection(spec, src).write.parquet
-                    )
+                    publish_dir(path, flat.write.parquet)
                     state.baseline = path
-            if len(aggregated) > 1:
-                # single source pass for ALL grains via GROUPING SETS
-                for name, built in self._build_grouping_sets(spec, aggregated, src).items():
-                    state.rollups[name] = built
-            else:
-                for r in aggregated:
-                    state.rollups[r.name] = self._build_aggregated(spec, r, src)
+            if aggregated:
+                state.rollups.update(self.build_aggregated(spec, aggregated, flat))
         finally:
             if cache:
                 src.unpersist()
         return state
 
-    def _build_grouping_sets(
-        self, spec: MetricViewSpec, rollups: list[RollupSpec], src: DataFrame
+    def build_aggregated(
+        self, spec: MetricViewSpec, rollups: list[RollupSpec], flat: DataFrame
     ) -> dict[str, BuiltRollup]:
-        """Build every aggregated rollup from ONE aggregation job.
+        """Build one or more aggregated rollups from ONE aggregation over
+        *flat* (:meth:`QueryCompiler.baseline_projection`): every dim is a
+        named column and measures read it through ``flat_expr``.
 
-        ``df.groupingSets`` computes all grains in a single scan +
-        shuffle; ``grouping_id()`` disambiguates which grain each output
-        row belongs to (a real NULL dim value and a rolled-up dim are
-        otherwise indistinguishable). Per-grain slices are then split to
-        their own tables. At 100 TB this turns N full scans into one.
+        The plan shape follows from the input:
+
+        * one grain — a plain ``groupBy`` written in one pass, no cache;
+        * several grains — ``groupingSets``, whose ``grouping_id()``
+          tells the grains apart (a real NULL dim value and a rolled-up
+          dim are otherwise indistinguishable), cached because each
+          grain's slice write reads it. At 100 TB this turns N full scans
+          into one.
+
+        Each write observes its own row count (the router's cost
+        estimate), so no extra count job runs.
         """
-        # flatten so every dim is a plain named column (same projection
-        # the baseline snapshot uses); measure exprs lose their `source.`
-        # qualifier accordingly
-        flat = self.compiler.baseline_projection(spec, src)
-        all_dims: list[str] = []
-        for r in rollups:
-            for d in r.dimensions:
-                if d not in all_dims:
-                    all_dims.append(d)
-
         decs_per_rollup: dict[str, dict[str, Decomposition]] = {}
-        partial_cols: dict[str, str] = {}
         for r in rollups:
             decs: dict[str, Decomposition] = {}
             for mname in r.measures:
                 m = spec.measure(mname)
-                expr = self.compiler.strip_source_prefix(m.expr)
-                dec = decompose_aggregate(expr, prefix=f"_p_{mname}")
+                dec = decompose_aggregate(
+                    self.compiler.flat_expr(spec, m.expr), prefix=f"_p_{mname}"
+                )
                 if dec is None:
                     raise QueryError(
                         f"rollup {r.name!r}: measure {mname!r} ({m.expr}) is not "
                         f"decomposable into partial states — serve it from baseline"
                     )
                 decs[mname] = dec
-                for p_expr, p_col in dec.partials:
-                    partial_cols[p_col] = p_expr
             decs_per_rollup[r.name] = decs
-
-        sets = [[d for d in all_dims if d in r.dimensions] for r in rollups]
-        merge_fns: dict[str, str] = {}
-        for decs in decs_per_rollup.values():
-            for dec in decs.values():
-                for c, fn in dec.merges.items():
-                    merge_fns.setdefault(c, fn)
-        out: dict[str, BuiltRollup] = {}
-        # cost-based switch for the two-level shape below: the fine-grain
-        # pre-aggregation adds one exchange, which only pays off when the
-        # source is large enough that Expand-duplicating it dominates.
-        # Catalyst's own size estimate (driver-side, no job) decides —
-        # the same statistic autoBroadcastJoinThreshold trusts. The
-        # measured break-even on this workload sits between an ~11 MiB
-        # estimate (600k-row pricing source: two-level 0.98×, a wash)
-        # and ~20 MiB (6M-row replica: 0.66×); 16 MiB splits them.
-        # Estimates are compressed-file-sized, so any real table is
-        # orders of magnitude above the constant — it only matters at
-        # toy scale, where the direct grouping sets avoid paying an
-        # extra job-floor exchange. Estimation failure falls back to
-        # two-level (the scale-safe default).
-        two_level_worthwhile = _estimated_bytes(flat) >= 16 * 1024 * 1024
-        if (
-            two_level_worthwhile
-            and all_dims
-            and all(sets)
-            and all(c in merge_fns for c in partial_cols)
-        ):
-            # Two-level aggregation (guide §1.2/§2.3): GROUPING SETS over
-            # the source Expand-duplicates every input row once per grain
-            # (G× rows into the hash aggregate — measured ~2x the
-            # single-grain aggregate's time on the 6M-row pricing
-            # replica). Instead, ONE aggregation at the union-of-dims
-            # FINE grain collapses the source without row duplication,
-            # and the grouping sets run over the (|dim-combination|-row)
-            # fine table with each partial's MERGE function — valid
-            # because partial states re-aggregate associatively by
-            # construction (the same property the router and the
-            # incremental folds rely on). A/B on the 6M-row pricing
-            # replica: 0.66×; on the (much smaller) order-metrics build
-            # the extra exchange costs ~0.1 s of local job floor — a
-            # small-scale artifact: the fine grain's cardinality is
-            # data-independent, so its collapse ratio (and the win) grows
-            # with the source. Per-grain cached re-aggregation (no
-            # grouping sets at all) was also tried and measured WORSE
-            # (serial re-agg jobs, 1.37× on order-metrics). Fallback to
-            # direct grouping sets for a zero-dimension grain: a
-            # global-aggregate set emits one row even on empty input,
-            # where the merge level would turn count-partials of an
-            # empty source into NULL instead of 0.
-            fine = flat.groupBy(*[F.col(d) for d in all_dims]).agg(
-                *[F.expr(e).alias(c) for c, e in partial_cols.items()]
-            )
-            grouped = fine.groupingSets(sets, *[F.col(d) for d in all_dims]).agg(
-                *[merge_column(merge_fns[c], c).alias(c) for c in partial_cols],
-                F.grouping_id().alias("_gid"),
-            )
+        union = {k: d for decs in decs_per_rollup.values() for k, d in decs.items()}
+        partials = [F.expr(e).alias(c) for c, e in partial_columns(union).items()]
+        if len(rollups) == 1:
+            r = rollups[0]
+            grouped = flat.groupBy(*[F.col(d) for d in r.dimensions]).agg(*partials)
+            slices = {r.name: grouped}
         else:
-            grouped = flat.groupingSets(sets, *[F.col(d) for d in all_dims]).agg(
-                *[F.expr(e).alias(c) for c, e in partial_cols.items()],
-                F.grouping_id().alias("_gid"),
-            )
-        # cache unconditionally (VERDICT r10 #2): the slice writes AND the
-        # one-job gid row-count below all re-read `grouped`; for a single
-        # rollup the uncached path recomputed the full aggregate per
-        # consumer
-        grouped = grouped.cache()
-        try:
-            # every grain's row count in ONE job over the cached grouping
-            # sets (the router's cost estimate) — the old per-rollup
-            # parquet read-back ran one count job per grain
-            gid_counts = {
-                int(row["_gid"]): int(row["count"])
-                for row in grouped.groupBy("_gid").count().collect()
-            }
+            all_dims = list(dict.fromkeys(d for r in rollups for d in r.dimensions))
+            sets = [[d for d in all_dims if d in r.dimensions] for r in rollups]
+            dims = [F.col(d) for d in all_dims]
+            # cost-based switch for the two-level shape below: the fine-grain
+            # pre-aggregation adds one exchange, which only pays off when the
+            # source is large enough that Expand-duplicating it dominates.
+            # Catalyst's own size estimate (driver-side, no job) decides —
+            # the same statistic autoBroadcastJoinThreshold trusts. The
+            # measured break-even on this workload sits between an ~11 MiB
+            # estimate (600k-row pricing source: two-level 0.98×, a wash)
+            # and ~20 MiB (6M-row replica: 0.66×); 16 MiB splits them.
+            # Estimates are compressed-file-sized, so any real table is
+            # orders of magnitude above the constant — it only matters at
+            # toy scale, where the direct grouping sets avoid paying an
+            # extra job-floor exchange. Estimation failure falls back to
+            # two-level (the scale-safe default).
+            if _estimated_bytes(flat) >= 16 * 1024 * 1024 and all(sets):
+                # Two-level aggregation (guide §1.2/§2.3): GROUPING SETS over
+                # the source Expand-duplicates every input row once per grain
+                # (G× rows into the hash aggregate — measured ~2x the
+                # single-grain aggregate's time on the 6M-row pricing
+                # replica). Instead, ONE aggregation at the union-of-dims
+                # FINE grain collapses the source without row duplication,
+                # and the grouping sets run over the (|dim-combination|-row)
+                # fine table with each partial's MERGE function — valid
+                # because partial states re-aggregate associatively by
+                # construction (the same property the router and the
+                # incremental folds rely on). A/B on the 6M-row pricing
+                # replica: 0.66×; on the (much smaller) order-metrics build
+                # the extra exchange costs ~0.1 s of local job floor — a
+                # small-scale artifact: the fine grain's cardinality is
+                # data-independent, so its collapse ratio (and the win) grows
+                # with the source. Per-grain cached re-aggregation (no
+                # grouping sets at all) was also tried and measured WORSE
+                # (serial re-agg jobs, 1.37× on order-metrics). Fallback to
+                # direct grouping sets for a zero-dimension grain: a
+                # global-aggregate set emits one row even on empty input,
+                # where the merge level would turn count-partials of an
+                # empty source into NULL instead of 0.
+                fine = flat.groupBy(*dims).agg(*partials)
+                grouped = fine.groupingSets(sets, *dims).agg(
+                    *merge_columns(union), F.grouping_id().alias("_gid")
+                )
+            else:
+                grouped = flat.groupingSets(sets, *dims).agg(
+                    *partials, F.grouping_id().alias("_gid")
+                )
+            grouped = grouped.cache()
             n = len(all_dims)
+            slices = {}
             for r in rollups:
                 # grouping_id: leftmost grouping column = most significant
                 # bit; bit set ⇔ column aggregated away in this grain
@@ -382,62 +359,30 @@ class RollupManager:
                     for i, d in enumerate(all_dims)
                     if d not in r.dimensions
                 )
-                decs = decs_per_rollup[r.name]
-                cols = list(r.dimensions) + [
-                    p for dec in decs.values() for _, p in dec.partials
-                ]
-                seen: set[str] = set()
-                cols = [c for c in cols if not (c in seen or seen.add(c))]
-                slice_df = grouped.filter(F.col("_gid") == gid).select(*cols)
+                cols = list(r.dimensions) + list(
+                    partial_columns(decs_per_rollup[r.name])
+                )
+                slices[r.name] = grouped.filter(F.col("_gid") == gid).select(*cols)
+        out: dict[str, BuiltRollup] = {}
+        try:
+            for r in rollups:
                 path = self._path(spec.name, r.name)
-                publish_dir(path, slice_df.write.parquet)
+                ob = Observation()
+                rows = slices[r.name].observe(ob, F.count(F.lit(1)).alias("n"))
+                publish_dir(path, rows.write.parquet)
                 out[r.name] = BuiltRollup(
                     spec=r,
                     path=path,
-                    decompositions=decs,
-                    n_rows=gid_counts.get(gid, 0),
+                    decompositions=decs_per_rollup[r.name],
+                    n_rows=int(ob.get["n"]),
                 )
         finally:
-            grouped.unpersist()
+            if len(rollups) > 1:
+                grouped.unpersist()
         return out
 
     def _path(self, mv_name: str, rollup_name: str) -> str:
         return os.path.join(self.storage_dir, mv_name, rollup_name)
-
-    def _build_aggregated(
-        self, spec: MetricViewSpec, r: RollupSpec, src: DataFrame
-    ) -> BuiltRollup:
-        decs: dict[str, Decomposition] = {}
-        partial_cols: dict[str, str] = {}  # col name -> source expr
-        for mname in r.measures:
-            m = spec.measure(mname)
-            dec = decompose_aggregate(m.expr, prefix=f"_p_{mname}")
-            if dec is None:
-                raise QueryError(
-                    f"rollup {r.name!r}: measure {mname!r} ({m.expr}) is not "
-                    f"decomposable into partial states — serve it from baseline"
-                )
-            decs[mname] = dec
-            for p_expr, p_col in dec.partials:
-                partial_cols[p_col] = p_expr
-        dim_cols = [
-            F.expr(self.compiler._rewrite_dim_expr(spec, spec.dimension(d).expr)).alias(d)
-            for d in r.dimensions
-        ]
-        agg_cols = [F.expr(e).alias(c) for c, e in partial_cols.items()]
-        rolled = src.groupBy(*dim_cols).agg(*agg_cols)
-        path = self._path(spec.name, r.name)
-        # the router's row-count cost estimate rides the write as an
-        # observed metric instead of a separate parquet read-back job
-        from pyspark.sql import Observation
-
-        ob = Observation()
-        publish_dir(
-            path, rolled.observe(ob, F.count(F.lit(1)).alias("n")).write.parquet
-        )
-        return BuiltRollup(
-            spec=r, path=path, decompositions=decs, n_rows=int(ob.get["n"])
-        )
 
     def drop(self, spec_name: str) -> None:
         d = os.path.join(self.storage_dir, spec_name)
@@ -608,15 +553,9 @@ class RollupManager:
                     for m in query.measures
                 ],
             )
-        agg_cols: list = []
-        seen: set[str] = set()
-        for mname in query.measures:
-            dec = built.decompositions[mname]
-            for p_col in dec.merges:
-                if p_col not in seen:
-                    seen.add(p_col)
-                    agg_cols.append(merge_column(dec.merges[p_col], p_col).alias(p_col))
-        merged = df.groupBy(*[F.col(d) for d in query.dimensions]).agg(*agg_cols)
+        merged = df.groupBy(*[F.col(d) for d in query.dimensions]).agg(
+            *merge_columns(built.decompositions, query.measures)
+        )
         out_cols = [F.col(d) for d in query.dimensions] + [
             F.expr(built.decompositions[m].finalize).alias(m) for m in query.measures
         ]

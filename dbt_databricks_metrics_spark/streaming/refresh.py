@@ -24,36 +24,25 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-from ..functions.aggregates import merge_column
+from ..functions.aggregates import merge_columns, partial_columns
 from ..plans.rollup import BuiltRollup
 from ..publish import publish_dir, recover_dir
 
 
 def _partial_agg(delta: DataFrame, built: BuiltRollup) -> DataFrame:
     """Aggregate a slice of source rows to the rollup's partial layout."""
-    partial_cols: dict[str, str] = {}
-    for dec in built.decompositions.values():
-        for p_expr, p_col in dec.partials:
-            partial_cols[p_col] = p_expr
     return delta.groupBy(*[F.col(d) for d in built.spec.dimensions]).agg(
-        *[F.expr(e).alias(c) for c, e in partial_cols.items()]
+        *[F.expr(e).alias(c) for c, e in partial_columns(built.decompositions).items()]
     )
 
 
 def merge_partials(old: DataFrame, delta_partials: DataFrame, built: BuiltRollup) -> DataFrame:
     """merge(rollup(S), rollup(ΔS)) — re-aggregate the union of partial
     states with each partial's merge function."""
-    merged_cols = []
-    seen: set[str] = set()
-    for dec in built.decompositions.values():
-        for p_col, fn in dec.merges.items():
-            if p_col not in seen:
-                seen.add(p_col)
-                merged_cols.append(merge_column(fn, p_col).alias(p_col))
     return (
         old.unionByName(delta_partials)
         .groupBy(*[F.col(d) for d in built.spec.dimensions])
-        .agg(*merged_cols)
+        .agg(*merge_columns(built.decompositions))
     )
 
 

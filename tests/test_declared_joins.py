@@ -191,3 +191,87 @@ materialization:
         return out
 
     assert rows(routed) == rows(live)
+
+
+JOINED_MEASURES_SPEC = """
+version: 0.1
+source: stg_orders
+joins:
+  - name: customer
+    source: stg_customers
+    on: source.customer_id = customer.customer_id
+    joins:
+      - name: nation
+        source: nation
+        on: customer.nation_id = nation.n_nationkey
+dimensions:
+  - name: market_segment
+    expr: customer.market_segment
+  - name: order_status
+    expr: order_status
+  - name: order_priority
+    expr: order_priority
+measures:
+  - name: total_revenue
+    expr: sum(source.total_price)
+  - name: total_balance
+    expr: sum(customer.account_balance)
+  - name: max_region
+    expr: max(customer.nation.n_regionkey)
+  - name: orders_with_balance
+    expr: count_if(customer.account_balance > 0)
+materialization:
+  materialized_views:
+    - name: snapshot
+      type: unaggregated
+    - name: by_segment_status
+      type: aggregated
+      dimensions: [market_segment, order_status]
+      measures: [total_revenue, total_balance, max_region]
+    - name: by_status
+      type: aggregated
+      dimensions: [order_status]
+      measures: [total_balance, orders_with_balance]
+"""
+
+
+@pytest.fixture(scope="module")
+def joined_measures_mv(engine):
+    mv = engine.register(
+        MetricViewSpec.from_yaml(JOINED_MEASURES_SPEC, name="mv_joined_measures")
+    )
+    engine.refresh("mv_joined_measures")
+    return mv
+
+
+def _rounded(df):
+    return sorted(
+        tuple(round(v, 4) if isinstance(v, float) else v for v in r)
+        for r in df.collect()
+    )
+
+
+@pytest.mark.parametrize(
+    "dims, measures, route",
+    [
+        (["market_segment"], ["total_balance", "max_region"], "rollup:by_segment_status"),
+        (["order_status"], ["total_balance"], "rollup:by_status"),
+        ([], ["orders_with_balance"], "rollup:by_status"),
+        (["order_priority"], ["total_balance", "max_region"], "baseline"),
+        (["market_segment"], ["orders_with_balance", "total_revenue"], "baseline"),
+    ],
+)
+def test_measures_over_joined_columns_route_like_live(
+    engine, joined_measures_mv, dims, measures, route
+):
+    """Measures that read joined columns (``customer.account_balance``,
+    the snowflake path ``customer.nation.n_regionkey``) build into
+    several aggregated rollups and the baseline snapshot, and every
+    route answers exactly like the live join."""
+    from dbt_databricks_metrics_spark.plans.compiler import MetricQuery
+
+    mv = joined_measures_mv
+    routed, got = mv.query_routed(dims, measures)
+    assert got == route
+    live = engine._compiler.compile(MetricQuery(mv.spec, tuple(dims), tuple(measures)))
+    assert _rounded(routed) == _rounded(live)

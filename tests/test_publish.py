@@ -275,3 +275,39 @@ def test_only_the_publish_module_renames_directories():
         if p.name != "publish.py" and pattern.search(p.read_text())
     )
     assert offenders == []
+
+
+def test_incremental_model_first_write_crash_leaves_no_state(spark, tmp_path):
+    """A crash in the middle of an ``incremental`` model's first full
+    write leaves no ``path``: the next run bootstraps the full set instead
+    of taking the partial table for existing state and extending it."""
+    from dbt_databricks_metrics_spark.models import ModelRegistry, Runner
+
+    reg = ModelRegistry()
+    seen = []
+
+    @reg.model("inc", materialized="incremental")
+    def inc(spark_, ref, ctx):
+        seen.append(ctx.is_incremental)
+        if ctx.is_incremental:
+            hi = ctx.existing().agg(F.max("id")).first()[0]
+            return spark_.range(hi + 1, hi + 3).select("id")
+        return spark_.range(10).select("id")
+
+    path = str(tmp_path / "inc")
+    real_parquet = DataFrameWriter.parquet
+
+    def crash(self, p, *a, **k):
+        # part of the table reaches disk, then the process dies
+        real_parquet(spark.range(4).select("id").write, p)
+        raise OSError("injected crash mid-write")
+
+    with pytest.MonkeyPatch.context() as m:
+        m.setattr(DataFrameWriter, "parquet", crash)
+        with pytest.raises(Exception, match="injected"):
+            Runner(spark, reg, warehouse_dir=str(tmp_path)).run()
+    assert not os.path.exists(path)
+    assert _debris(path) == []
+    out = Runner(spark, reg, warehouse_dir=str(tmp_path)).run()["inc"]
+    assert seen == [False, False]
+    assert sorted(r["id"] for r in out.collect()) == list(range(10))

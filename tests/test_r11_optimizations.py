@@ -1,19 +1,11 @@
 """Round-11 optimization pins.
 
-Two families:
-
-1. ``skew_guard`` (substr / gram_novelty / containment_pairs /
-   ssjoin_pairs): the guarded path must return EXACTLY the unguarded
-   result on corpora WITH hot keys (the guard re-derives the same
-   count/exemplar through a broadcast instead of a window partition),
-   and its plan must show the partial-agg + broadcast pre-filter so no
-   window partition ever exceeds the threshold (guide §2.5).
-2. Diamond cuts: ssjoin's candidate self-join reads ONE checkpointed
-   prefix table (the former repartition-for-stage-reuse never produced
-   a ReusedExchange — the planner broadcasts one side — and each side
-   recomputed the whole prefix pipeline); the IDF vectorizer's tf table
-   feeds its df-aggregate and the join probe from ONE checkpoint, and
-   its corpus count rides in the lazy plan instead of an eager job.
+Diamond cuts: ssjoin's candidate self-join reads ONE checkpointed
+prefix table (the former repartition-for-stage-reuse never produced a
+ReusedExchange — the planner broadcasts one side — and each side
+recomputed the whole prefix pipeline); the IDF vectorizer's tf table
+feeds its df-aggregate and the join probe from ONE checkpoint, and its
+corpus count rides in the lazy plan instead of an eager job.
 """
 
 from __future__ import annotations
@@ -44,100 +36,6 @@ def _hot_corpus(spark, n=400):
             F.sha2((F.col("id") + 7).cast("string"), 256),
         ).alias("text"),
     )
-
-
-# ---------------------------------------------------------------------------
-# skew_guard equivalence on hot-key corpora
-# ---------------------------------------------------------------------------
-
-
-def test_substr_skew_guard_equivalent_and_bounded(spark):
-    from dbt_databricks_metrics_spark.ext.substr import dedup_exact_substrings
-
-    docs = _hot_corpus(spark, 60)
-    base = dedup_exact_substrings(docs, min_len=48, keep="first")
-    guarded = dedup_exact_substrings(docs, min_len=48, keep="first", skew_guard=10)
-    assert _rows(base) == _rows(guarded)
-    # keep='none' exercises the other exemption path
-    b2 = dedup_exact_substrings(docs, min_len=48, keep="none")
-    g2 = dedup_exact_substrings(docs, min_len=48, keep="none", skew_guard=10)
-    assert _rows(b2) == _rows(g2)
-    plan = _plan(guarded)
-    # the guard's shape: a broadcast anti-join removes hot fps before the
-    # window, a broadcast inner join re-attaches their aggregates
-    assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
-    assert "Window" in plan  # cold keys still window (bounded groups)
-
-
-def test_gram_novelty_skew_guard_equivalent(spark):
-    from dbt_databricks_metrics_spark.ext.contamination import gram_novelty
-
-    docs = _hot_corpus(spark, 60)
-    for h in (False, True):
-        base = gram_novelty(docs, n=3, hash_ngrams=h)
-        guarded = gram_novelty(docs, n=3, hash_ngrams=h, skew_guard=10)
-        assert _rows(base) == _rows(guarded), f"hash_ngrams={h}"
-    plan = _plan(gram_novelty(docs, n=3, skew_guard=10))
-    assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
-
-
-def test_gram_novelty_skew_guard_null_text(spark):
-    from dbt_databricks_metrics_spark.ext.contamination import gram_novelty
-
-    docs = spark.createDataFrame(
-        [(1, "a b c d"), (2, None), (3, "a b c d"), (None, "a b c d")],
-        "doc_id long, text string",
-    )
-    assert _rows(gram_novelty(docs, n=3)) == _rows(
-        gram_novelty(docs, n=3, skew_guard=2)
-    )
-
-
-def test_containment_skew_guard_equivalent(spark):
-    from dbt_databricks_metrics_spark.ext.dedup import containment_pairs
-
-    docs = _hot_corpus(spark, 60)
-    base = containment_pairs(docs, k=5, threshold=(3, 5), max_df=10)
-    guarded = containment_pairs(
-        docs, k=5, threshold=(3, 5), max_df=10, skew_guard=True
-    )
-    assert _rows(base) == _rows(guarded)
-    # plan read from a FRESH (unexecuted) frame — an executed AQE plan
-    # prints final + initial trees and double-counts nodes
-    plan = _plan(
-        containment_pairs(docs, k=5, threshold=(3, 5), max_df=10, skew_guard=True)
-    )
-    assert "LeftAnti" in plan and "BroadcastHashJoin" in plan
-    # the guarded plan has ONE window left (the per-doc size), not two
-    import re
-
-    assert len(re.findall(r"^\(\d+\) Window\b", plan, re.M)) == 1, plan
-
-
-def test_ssjoin_skew_guard_equivalent(spark):
-    from dbt_databricks_metrics_spark.ext.ssjoin import ssjoin_pairs
-
-    docs = _hot_corpus(spark, 60)
-    base = ssjoin_pairs(docs, k=5, threshold=0.5)
-    guarded = ssjoin_pairs(docs, k=5, threshold=0.5, skew_guard=10)
-    assert _rows(base) == _rows(guarded)
-
-
-def test_skew_guard_rejects_degenerate_threshold(spark):
-    import pytest
-
-    from dbt_databricks_metrics_spark.ext.contamination import gram_novelty
-    from dbt_databricks_metrics_spark.ext.ssjoin import ssjoin_pairs
-    from dbt_databricks_metrics_spark.ext.substr import dedup_exact_substrings
-
-    docs = _hot_corpus(spark, 3)
-    for call in (
-        lambda: dedup_exact_substrings(docs, skew_guard=1),
-        lambda: gram_novelty(docs, skew_guard=0),
-        lambda: ssjoin_pairs(docs, skew_guard=1),
-    ):
-        with pytest.raises(ValueError):
-            call()
 
 
 # ---------------------------------------------------------------------------

@@ -366,3 +366,70 @@ def test_explain_route(spark, sf_dir, tmp_path_factory):
     )
     assert sroute.split("+grain:")[0] == exs["route"], (sroute, exs["route"])
     assert "split" in exs["reason"]
+
+
+def test_build_job_budget(engine, spark, tmp_path, monkeypatch):
+    """Jobs per aggregated-rollup build, counted per job group with AQE
+    off (AQE adds one map-stage job per shuffle and one per cache
+    materialization on top of these): one grain writes in ONE job with
+    no Expand in its plan; N grains in N jobs — the grouping sets run
+    inside the first slice write and every slice observes its own row
+    count, so no separate count job; ``advise_rollups(apply=True)``
+    builds its two advised grains in two."""
+    from dbt_databricks_metrics_spark.plans import rollup
+    from dbt_databricks_metrics_spark.plans.advisor import WorkloadQuery
+    from dbt_databricks_metrics_spark.plans.rollup import RollupManager
+
+    sc = spark.sparkContext
+    mgr = RollupManager(spark, engine._compiler, str(tmp_path))
+    plans = []
+    real_publish = rollup.publish_dir
+
+    def spy(path, write):
+        plans.append(str(write.__self__._df._jdf.queryExecution().optimizedPlan()))
+        return real_publish(path, write)
+
+    monkeypatch.setattr(rollup, "publish_dir", spy)
+
+    def jobs(label, fn):
+        sc.setJobGroup(label, label)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(label)), out
+
+    rv = engine.catalog.get("mv_order_metrics")
+    aggregated = [
+        r for r in rv.spec.materialization.materialized_views if r.type == "aggregated"
+    ]
+    flat = engine._compiler.baseline_projection(
+        rv.spec, engine._compiler.source_plan(rv.spec)
+    )
+    mv = engine.metric_view("mv_order_metrics")
+    wl = [
+        WorkloadQuery(("market_segment",), ("total_revenue",), weight=5),
+        WorkloadQuery(("order_year", "order_month"), ("total_orders",), weight=3),
+    ]
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try:
+        n1, one = jobs("budget_one", lambda: mgr.build_aggregated(rv.spec, aggregated[:1], flat))
+        n_all, many = jobs("budget_many", lambda: mgr.build_aggregated(rv.spec, aggregated, flat))
+        n_advise, _ = jobs(
+            "budget_advise",
+            lambda: mv.advise_rollups(wl, max_rollups=2, consider_existing=False),
+        )
+        n_apply, _ = jobs(
+            "budget_apply",
+            lambda: mv.advise_rollups(wl, max_rollups=2, apply=True, consider_existing=False),
+        )
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
+    assert len(aggregated) == 3
+    assert (n1, n_all, n_apply - n_advise) == (1, 3, 2)
+    assert "Expand" not in plans[0]
+    assert all("Expand" in p for p in plans[1:4])
+    built = rv.state.rollups
+    assert {k: b.n_rows for k, b in {**one, **many}.items()} == {
+        k: built[k].n_rows for k in built if not k.startswith("adv_")
+    }
