@@ -802,28 +802,12 @@ class MetricEngine:
         if rv.state is None:
             raise QueryError(f"metric view {name!r} has no materialized state to fold into")
         self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
-        delta = self._materialize_dims(rv.spec, delta_source_rows)
+        # the flat projection every rollup was built from
+        delta = self._compiler.baseline_projection(rv.spec, delta_source_rows)
         for built in rv.state.rollups.values():
             fold_increment(self.spark, built, delta)
         if rv.state.baseline:
-            self._compiler.baseline_projection(rv.spec, delta_source_rows).write.mode(
-                "append"
-            ).parquet(rv.state.baseline)
-
-    def _materialize_dims(self, spec: MetricViewSpec, df: DataFrame) -> DataFrame:
-        """Materialize any dimension whose NAME is not already a column
-        (dim exprs like ``o_orderstatus`` aliased ``order_status``) —
-        incremental folds group by dimension names. No-op for flattened
-        relations."""
-        from pyspark.sql import functions as F
-
-        for d in spec.dimensions:
-            if d.name not in df.columns:
-                df = df.withColumn(
-                    d.name,
-                    F.expr(self._compiler._rewrite_dim_expr(spec, d.expr)),
-                )
-        return df
+            delta.write.mode("append").parquet(rv.state.baseline)
 
     def refresh_cdc(
         self, name: str, before: DataFrame, after: DataFrame
@@ -859,8 +843,8 @@ class MetricEngine:
         for built in rv.state.rollups.values():
             validate_retractable(built)
         self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
-        b = self._materialize_dims(rv.spec, before)
-        a = self._materialize_dims(rv.spec, after)
+        b = self._compiler.baseline_projection(rv.spec, before)
+        a = self._compiler.baseline_projection(rv.spec, after)
         for built in rv.state.rollups.values():
             fold_retractions(self.spark, built, b, a)
 

@@ -76,6 +76,24 @@ def _identifier_tokens(sql: str) -> list[tuple[str, bool]]:
     return out
 
 
+def _sub_names(sql: str, subs: dict[str, str]) -> str:
+    """Replace each bare identifier of *sql* named in *subs*, in order,
+    outside single-quoted string literals; dotted-path members and
+    function names are left alone."""
+    parts = re.split(r"('(?:[^'\\]|\\.)*')", sql)
+    for i in range(0, len(parts), 2):  # odd parts are quoted literals
+        for name, new in subs.items():
+            parts[i] = re.sub(
+                rf"(?<![\w.]){re.escape(name)}(?![\w(])", lambda _m: new, parts[i]
+            )
+    return "".join(parts)
+
+
+# the flat projection's copy of a source column that a same-named
+# dimension replaces, kept for the measures that read the column
+SHADOWED = "__source_"
+
+
 _TIME_UNITS = frozenset(
     "microsecond millisecond second minute hour day week month quarter year "
     "microseconds milliseconds seconds minutes hours days weeks months quarters years".split()
@@ -241,11 +259,18 @@ class QueryCompiler:
         (baseline snapshots / rollup tables store plain columns)."""
         return re.sub(r"\bsource\.", "", expr)
 
-    def flat_expr(self, spec: MetricViewSpec, expr: str) -> str:
-        """*expr* as it evaluates on the flat projection: no ``source.``
-        qualifier, snowflake paths at their leaf alias (``alias.col`` then
-        reads the struct column :meth:`baseline_projection` carries)."""
-        return self._rewrite_dim_expr(spec, self.strip_source_prefix(expr))
+    def flat_expr(self, spec: MetricViewSpec, expr: str, flat: DataFrame) -> str:
+        """Measure *expr* as it evaluates on *flat* (the
+        :meth:`baseline_projection`): no ``source.`` qualifier, snowflake
+        paths at their leaf alias (``alias.col`` then reads the struct
+        column the projection carries), and a source column that a
+        same-named dimension replaces read from its ``SHADOWED`` copy —
+        so the measure aggregates what it aggregates live."""
+        out = self._rewrite_dim_expr(spec, self.strip_source_prefix(expr))
+        named = {t for t, call in _identifier_tokens(out) if not call}
+        shadow = [d.name for d in spec.dimensions if d.expr != d.name and d.name in named]
+        cols = flat.columns if shadow else ()  # a schema lookup: only when needed
+        return _sub_names(out, {n: SHADOWED + n for n in shadow if SHADOWED + n in cols})
 
     def baseline_projection(self, spec: MetricViewSpec, src: DataFrame) -> DataFrame:
         """The flat projection of the (filtered, joined) source: persisted
@@ -257,7 +282,9 @@ class QueryCompiler:
         measures — expands against the snapshot without re-running joins.
         Joined columns that measures read ride along as one struct per
         join alias, so a measure's ``alias.col`` resolves as a field of
-        that struct exactly as it resolves on the join.
+        that struct exactly as it resolves on the join; a source column
+        that a same-named dimension replaces and that a measure reads
+        rides along as ``SHADOWED + name`` (see :meth:`flat_expr`).
         """
         if spec.joins:
             base_names = src.select("source.*").columns
@@ -279,16 +306,22 @@ class QueryCompiler:
         taken = set(base_names) | collide
         aliases = {p[-1] for p in self._collect_join_paths(spec.joins)} - taken
         fields: dict[str, list[str]] = {}
+        read: set[str] = set()
         for m in spec.measures:
-            text = re.sub(r"'(?:[^'\\]|\\.)*'", "''", self.flat_expr(spec, m.expr))
+            text = self._rewrite_dim_expr(spec, self.strip_source_prefix(m.expr))
+            read |= {t for t, call in _identifier_tokens(text) if not call}
+            text = re.sub(r"'(?:[^'\\]|\\.)*'", "''", text)
             for a, c in re.findall(r"(?<![\w.])([A-Za-z_]\w*)\.([A-Za-z_]\w*)", text):
                 if a in aliases and c not in fields.setdefault(a, []):
                     fields[a].append(c)
+        shadowed = [
+            ref(n).alias(SHADOWED + n) for n in base_names if n in collide and n in read
+        ]
         joined = [
             F.struct(*[F.col(f"{a}.{c}").alias(c) for c in cs]).alias(a)
             for a, cs in fields.items()
         ]
-        return src.select(*kept, *extra, *joined)
+        return src.select(*kept, *extra, *shadowed, *joined)
 
     def source_plan(self, spec: MetricViewSpec, source_df: Optional[DataFrame] = None) -> DataFrame:
         """(filtered, joined) source relation — the input to any expansion.
@@ -369,17 +402,9 @@ class QueryCompiler:
         }
         if not subs:
             return self._rewrite_dim_expr(spec, where)
-        # substitute outside string literals only
-        parts = re.split(r"('(?:[^'\\]|\\.)*')", where)
-        for i, part in enumerate(parts):
-            if i % 2 == 1:
-                continue  # a quoted literal
-            for name, expr in subs.items():
-                part = re.sub(
-                    rf"(?<![\w.]){re.escape(name)}(?![\w(])", f"({expr})", part
-                )
-            parts[i] = part
-        return self._rewrite_dim_expr(spec, "".join(parts))
+        return self._rewrite_dim_expr(
+            spec, _sub_names(where, {n: f"({e})" for n, e in subs.items()})
+        )
 
     # ---------------- expansion ----------------
 
@@ -419,7 +444,7 @@ class QueryCompiler:
             assert source_df is not None
             base = source_df
             dim_expr = lambda d: d.name  # noqa: E731
-            meas_expr = lambda e: self.flat_expr(spec, e)  # noqa: E731
+            meas_expr = lambda e: self.flat_expr(spec, e, base)  # noqa: E731
         else:
             base = self.source_plan(spec, source_df=source_df)
             dim_expr = lambda d: self._rewrite_dim_expr(spec, d.expr)  # noqa: E731
@@ -542,7 +567,7 @@ class QueryCompiler:
             dim_exprs = {d: d for d in dims}
             order_expr = order_dim.name
             part_exprs = {p.name: p.name for p in extra_parts}
-            base_exprs = {m.name: self.flat_expr(spec, m.expr) for m in measures}
+            base_exprs = {m.name: self.flat_expr(spec, m.expr, base) for m in measures}
         else:
             dim_exprs = {d: self._rewrite_dim_expr(spec, spec.dimension(d).expr) for d in dims}
             order_expr = self._rewrite_dim_expr(spec, order_dim.expr)
@@ -643,7 +668,7 @@ class QueryCompiler:
             dim_exprs = {d: d for d in dims}
             order_expr = order_dim.name
             part_exprs = {p.name: p.name for p in extra_parts}
-            base_expr = self.flat_expr(spec, measure.expr)
+            base_expr = self.flat_expr(spec, measure.expr, base)
         else:
             dim_exprs = {d: self._rewrite_dim_expr(spec, spec.dimension(d).expr) for d in dims}
             order_expr = self._rewrite_dim_expr(spec, order_dim.expr)

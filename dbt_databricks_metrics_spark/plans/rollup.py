@@ -285,7 +285,7 @@ class RollupManager:
             for mname in r.measures:
                 m = spec.measure(mname)
                 dec = decompose_aggregate(
-                    self.compiler.flat_expr(spec, m.expr), prefix=f"_p_{mname}"
+                    self.compiler.flat_expr(spec, m.expr, flat), prefix=f"_p_{mname}"
                 )
                 if dec is None:
                     raise QueryError(

@@ -7,6 +7,7 @@ subset the rollup covers.
 
 from __future__ import annotations
 
+import shutil
 from itertools import combinations
 
 import pytest
@@ -411,6 +412,10 @@ def test_build_job_budget(engine, spark, tmp_path, monkeypatch):
         WorkloadQuery(("market_segment",), ("total_revenue",), weight=5),
         WorkloadQuery(("order_year", "order_month"), ("total_orders",), weight=3),
     ]
+    # the advisor applies into the shared engine's view: put its rollups,
+    # their storage and the AQE setting back afterwards
+    prior = dict(rv.state.rollups)
+    aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         n1, one = jobs("budget_one", lambda: mgr.build_aggregated(rv.spec, aggregated[:1], flat))
@@ -423,13 +428,122 @@ def test_build_job_budget(engine, spark, tmp_path, monkeypatch):
             "budget_apply",
             lambda: mv.advise_rollups(wl, max_rollups=2, apply=True, consider_existing=False),
         )
+        applied = {k: b for k, b in rv.state.rollups.items() if k not in prior}
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert len(aggregated) == 3
+        spark.conf.set("spark.sql.adaptive.enabled", aqe)
+        for k, b in rv.state.rollups.items():
+            if k not in prior:
+                shutil.rmtree(b.path, ignore_errors=True)
+        rv.state.rollups.clear()
+        rv.state.rollups.update(prior)
+    assert len(aggregated) == 3 and len(applied) == 2
     assert (n1, n_all, n_apply - n_advise) == (1, 3, 2)
     assert "Expand" not in plans[0]
     assert all("Expand" in p for p in plans[1:4])
-    built = rv.state.rollups
     assert {k: b.n_rows for k, b in {**one, **many}.items()} == {
-        k: built[k].n_rows for k in built if not k.startswith("adv_")
+        k: b.n_rows for k, b in prior.items()
     }
+
+
+def _shadowing_spec(rollups: str) -> str:
+    """A view whose ``total_price`` dimension replaces the same-named
+    source column (price banded to 100k) while its measures aggregate
+    the raw column."""
+    return f"""
+version: 0.1
+source: stg_orders
+dimensions:
+  - name: order_status
+    expr: order_status
+  - name: order_priority
+    expr: order_priority
+  - name: order_date
+    expr: order_date
+  - name: total_price
+    expr: round(total_price, -5)
+measures:
+  - name: revenue
+    expr: sum(total_price)
+  - name: big_orders
+    expr: count_if(total_price > 200000)
+  - name: t7
+    expr: sum(total_price)
+    window:
+      - order: order_date
+        range: trailing 7 day
+        semiadditive: last
+materialization:
+  materialized_views:
+    - name: snapshot
+      type: unaggregated
+    - name: by_status
+      type: aggregated
+      dimensions: [order_status, total_price]
+      measures: [revenue, big_orders]
+{rollups}"""
+
+
+@pytest.mark.parametrize("n_aggregated", [1, 2])
+def test_shadowed_source_column_reads_like_live(engine, n_aggregated):
+    """A dimension that replaces a source column of its own name does not
+    change what a measure reading that column aggregates: with one or
+    two aggregated rollups, every route (rollup, baseline, window over
+    the baseline) answers like live, which reads the raw column."""
+    from dbt_databricks_metrics_spark.plans.compiler import MetricQuery
+    from dbt_databricks_metrics_spark.specs import MetricViewSpec
+
+    extra = """    - name: by_priority
+      type: aggregated
+      dimensions: [order_priority]
+      measures: [revenue]
+""" if n_aggregated == 2 else ""
+    name = f"mv_shadow_{n_aggregated}"
+    spec = MetricViewSpec.from_yaml(_shadowing_spec(extra), name=name)
+    mv = engine.register(spec)
+    engine.refresh(name)
+    cases = [
+        (("order_status",), ("revenue", "big_orders"), "rollup:by_status"),
+        (("total_price",), ("revenue",), "rollup:by_status"),
+        (("order_priority",), ("revenue",),
+         "rollup:by_priority" if n_aggregated == 2 else "baseline"),
+        (("order_status",), ("t7",), "baseline"),
+    ]
+    for dims, measures, route in cases:
+        routed, got = mv.query_routed(list(dims), list(measures))
+        assert got == route, (dims, measures, got)
+        live = engine._compiler.compile(MetricQuery(spec, dims, measures))
+        assert _rows(routed) == _rows(live), (dims, measures)
+
+
+def test_shadowed_source_column_folds_like_live(spark, sf_dir, tmp_path):
+    """An incremental fold reads the same flat projection as the build:
+    the fold groups by the shadowing dimension and its measures still
+    aggregate the raw column, so the folded rollup equals live over the
+    full data."""
+    from pyspark.sql import functions as F
+
+    from dbt_databricks_metrics_spark.plans.compiler import MetricQuery
+    from dbt_databricks_metrics_spark.sources import load_table
+    from dbt_databricks_metrics_spark.specs import MetricViewSpec
+
+    full = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderstatus").alias("order_status"),
+        F.col("o_orderpriority").alias("order_priority"),
+        F.col("o_orderdate").cast("date").alias("order_date"),
+        F.col("o_totalprice").alias("total_price"),
+    )
+    yaml = _shadowing_spec("").replace("source: stg_orders", "source: shadow_src")
+    yaml = yaml[: yaml.index("    - name: snapshot")] + yaml[yaml.index("    - name: by_status"):]
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "wh"))
+    full.filter(F.col("order_date") < "1996-01-01").createOrReplaceTempView("shadow_src")
+    mv = eng.register(MetricViewSpec.from_yaml(yaml, name="mv_shadow_fold"))
+    eng.refresh("mv_shadow_fold")
+    eng.refresh_incremental(
+        "mv_shadow_fold", full.filter(F.col("order_date") >= "1996-01-01")
+    )
+    full.createOrReplaceTempView("shadow_src")
+    dims, measures = ("order_status", "total_price"), ("revenue", "big_orders")
+    routed, route = mv.query_routed(list(dims), list(measures))
+    assert route == "rollup:by_status"
+    live = eng._compiler.compile(MetricQuery(mv.spec, dims, measures))
+    assert _rows(routed) == _rows(live)
