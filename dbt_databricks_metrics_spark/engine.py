@@ -116,20 +116,14 @@ class MetricView:
         EXPLAINed query was never served, so the rollup advisor must not
         propose materializing for it — the explain_route contract)."""
         q = MetricQuery(self.spec, tuple(dimensions), tuple(measures), where=where)
-        df, route = self._engine._rollups.compile_routed(q, self._rv.state)
+        decision = self._engine._rollups.route(q, self._rv.state)
+        df, route = self._engine._rollups.compile_routed(decision)
         # the workload log records the STORAGE shape: derived measures
         # expand to their dependencies, so the rollup advisor proposes
         # materializing what routing actually needs (derived values are
         # never materializable)
         if log_workload:
-            from .plans.compiler import expand_derived
-
-            logged, _ = expand_derived(q)
-            shape = (
-                tuple(dimensions),
-                tuple(logged.measures),
-                tuple(getattr(q, "where_dims", ())),
-            )
+            shape = (tuple(dimensions), decision.query.measures, q.where_dims)
             with self._engine._query_log_lock:
                 from collections import Counter
 
@@ -151,95 +145,16 @@ class MetricView:
     ) -> dict:
         """Why a query routes where it does — the analyst-facing
         counterpart of ``query_routed``'s route string. Returns a dict:
-        ``route``, ``candidates`` (every rollup with its stored row count
-        and whether/why it was eligible), and ``reason`` (windowed
-        measures, unresolved WHERE columns, no covering rollup, …).
-        Pure metadata — nothing is executed or logged."""
+        ``route`` (``query_routed``'s string less any compile-time
+        ``+grain:`` suffix), ``candidates`` (every rollup with its stored
+        row count and whether/why it was eligible), and ``reason``
+        (windowed measures, unresolved WHERE columns, no covering rollup,
+        …). It reads the same :meth:`RollupManager.route` record that
+        ``query_routed`` compiles. Pure metadata — nothing is executed or
+        logged."""
         q = MetricQuery(self.spec, tuple(dimensions), tuple(measures), where=where)
-        # mirror compile_routed: derived measures route (and explain) via
-        # their dependency query, so the explained route string matches
-        # query_routed's for the same request
-        from .plans.compiler import expand_derived
-
-        requested = tuple(q.measures)
-        q, _derived_proj = expand_derived(q)
-        state = self._rv.state
-        spec = self.spec
-        need_dims = set(q.dimensions) | set(getattr(q, "where_dims", ()))
-        windowed = [m for m in q.measures if spec.measure(m).is_windowed]
-        candidates = []
-        if state is not None:
-            for b in state.rollups.values():
-                dims_ok = need_dims <= set(b.spec.dimensions)
-                meas_ok = set(q.measures) <= set(b.spec.measures)
-                why = (
-                    "eligible"
-                    if dims_ok and meas_ok and not windowed
-                    else "window measures never rollup-serve"
-                    if windowed
-                    else "missing dims: %s"
-                    % sorted(need_dims - set(b.spec.dimensions))
-                    if not dims_ok
-                    else "missing measures: %s"
-                    % sorted(set(q.measures) - set(b.spec.measures))
-                )
-                candidates.append(
-                    {
-                        "rollup": b.spec.name,
-                        "n_rows": b.n_rows,
-                        "dimensions": list(b.spec.dimensions),
-                        "status": why,
-                    }
-                )
-        route, best = self._engine._rollups.route(q, state)
-        if route == "rollup":
-            reason = (
-                f"smallest covering rollup ({best.n_rows} stored rows)"
-            )
-            route = f"rollup:{best.spec.name}"
-        elif windowed:
-            # mirror compile_routed's split-mixed path: a mixed plain+window
-            # query whose PLAIN subset has a covering rollup is served as
-            # 'rollup:<name>+<window route>' (the window side compiles on
-            # the fly and joins on the query dims). Any '+grain:...' suffix
-            # query_routed may add is a compile-time detail (which stored
-            # grain the window plan read) and is not predicted here.
-            plain = tuple(m for m in q.measures if not spec.measure(m).is_windowed)
-            split_name = None
-            if plain and state is not None:
-                pq = MetricQuery(spec, q.dimensions, plain, where=where)
-                proute, pbuilt = self._engine._rollups.route(pq, state)
-                if proute == "rollup":
-                    split_name = pbuilt.spec.name
-            if split_name is not None:
-                wroute = "baseline" if state.baseline else "live"
-                route = f"rollup:{split_name}+{wroute}"
-                reason = (
-                    f"mixed query split: plain measures from rollup "
-                    f"{split_name}, windowed measures {windowed} compile "
-                    f"on the fly and join on the query dims"
-                )
-            else:
-                reason = f"windowed measures {windowed} compile on the fly"
-        elif getattr(q, "where_unresolved", False):
-            reason = "WHERE references raw source columns (not dims)"
-        elif not candidates:
-            reason = "no rollups materialized"
-        else:
-            reason = "no rollup covers the requested dims+measures"
-        if _derived_proj is not None:
-            # name the DERIVED measures the caller asked for and the
-            # dependency measures expansion added — not the full expanded
-            # set (which mostly repeats plain requested measures, ADVICE r4)
-            derived = [
-                m for m in requested if self.spec.measure(m).derived
-            ]
-            added = [m for m in q.measures if m not in requested]
-            reason += (
-                f"; derived measures {derived} served from "
-                f"dependency measures (expansion added {added})"
-            )
-        return {"route": route, "reason": reason, "candidates": candidates}
+        r = self._engine._rollups.route(q, self._rv.state)
+        return {"route": r.label, "reason": r.reason, "candidates": list(r.candidates)}
 
     def observed_workload(self) -> list["WorkloadQuery"]:
         """The query shapes this view has actually served (recorded by
@@ -581,16 +496,6 @@ class MetricView:
                 F.col(m) / F.nullif(F.col(f"_total_{m}"), F.lit(0)),
             )
         return out.drop(*[f"_total_{m}" for m in measures])
-
-    def explain_routing(
-        self,
-        dimensions: Sequence[str],
-        measures: Sequence[str],
-        where: Optional[str] = None,
-    ) -> str:
-        q = MetricQuery(self.spec, tuple(dimensions), tuple(measures), where=where)
-        route, built = self._engine._rollups.route(q, self._rv.state)
-        return f"rollup:{built.spec.name}" if route == "rollup" else route
 
     def explain(
         self,

@@ -431,14 +431,18 @@ class QueryCompiler:
         a covering rollup) replaces the grain scan of the source.
         """
         inner, proj = expand_derived(query)
-        if proj is not None:
-            df = self.compile(
-                inner,
-                source_df=source_df,
-                flattened=flattened,
-                window_grain_provider=window_grain_provider,
-            )
-            return apply_derived(df, query, proj)
+        df = self.compile_storage(inner, source_df, flattened, window_grain_provider)
+        return df if proj is None else apply_derived(df, query, proj)
+
+    def compile_storage(
+        self,
+        query: MetricQuery,
+        source_df: Optional[DataFrame] = None,
+        flattened: bool = False,
+        window_grain_provider=None,
+    ) -> DataFrame:
+        """:meth:`compile` for a query with no derived measure (the
+        storage query :func:`expand_derived` returns)."""
         spec = query.spec
         if flattened:
             assert source_df is not None

@@ -76,6 +76,63 @@ class MaterializationState:
     rollups: dict[str, BuiltRollup] = field(default_factory=dict)
 
 
+def _cost(built: BuiltRollup) -> tuple:
+    """The router's cost order: fewest stored rows (recorded at build)
+    first, dim count as the fallback proxy."""
+    return (
+        built.n_rows if built.n_rows is not None else float("inf"),
+        len(built.spec.dimensions),
+    )
+
+
+def _ineligible(
+    built: BuiltRollup, query: MetricQuery, dims, measures
+) -> Optional[str]:
+    """Why *built* cannot serve *measures* grouped by *dims* under
+    *query*'s WHERE slice; None when it can. A slice is evaluated on the
+    rollup's stored dim columns before re-aggregation, so the rollup must
+    cover the slice's dims as well as the grouped ones; a WHERE naming
+    raw source columns can only run on live/baseline, where they exist."""
+    if query.where_unresolved:
+        return "WHERE references raw source columns (not dims)"
+    missing = sorted((set(dims) | set(query.where_dims)) - set(built.spec.dimensions))
+    if missing:
+        return f"missing dims: {missing}"
+    missing = sorted(set(measures) - set(built.spec.measures))
+    if missing:
+        return f"missing measures: {missing}"
+    return None
+
+
+@dataclass(frozen=True)
+class Route:
+    """One routing decision, made by :meth:`RollupManager.route`:
+    :meth:`RollupManager.compile_routed` compiles it and
+    ``MetricView.explain_route`` reports it."""
+
+    # the storage query: derived measures expanded to their dependencies
+    query: MetricQuery
+    # expand_derived's projection; None when no requested measure is derived
+    derived: Optional[dict]
+    state: Optional[MaterializationState]
+    # 'rollup' | 'baseline' | 'live'; for a split query, the window half's
+    source: str
+    # the rollup serving the query (source 'rollup') or, for a mixed
+    # plain+window query, its plain half (the split)
+    rollup: Optional[BuiltRollup]
+    reason: str
+    # one {rollup, n_rows, dimensions, status} dict per built rollup
+    candidates: tuple[dict, ...]
+
+    @property
+    def label(self) -> str:
+        """The route string, less any compile-time ``+grain:`` suffix."""
+        if self.rollup is None:
+            return self.source
+        name = f"rollup:{self.rollup.spec.name}"
+        return name if self.source == "rollup" else f"{name}+{self.source}"
+
+
 def _estimated_bytes(df: DataFrame) -> int:
     """Catalyst's driver-side size estimate of *df* (no job). A failed
     estimate reads as unbounded, the scale-safe side of a size gate."""
@@ -113,16 +170,9 @@ class WindowGrainProvider:
         return _re.sub(r"\s+", "", QueryCompiler.strip_source_prefix(expr)).lower()
 
     def __call__(self, grain_cols, needed):
-        if getattr(self.query, "where_unresolved", False):
-            return None  # WHERE references raw source columns — grain must scan them
-        need_dims = set(grain_cols) | set(getattr(self.query, "where_dims", ()))
-        candidates = sorted(
-            self.state.rollups.values(),
-            key=lambda b: (b.n_rows if b.n_rows is not None else float("inf"),
-                           len(b.spec.dimensions)),
-        )
-        for built in candidates:
-            if not need_dims <= set(built.spec.dimensions):
+        for built in sorted(self.state.rollups.values(), key=_cost):
+            # partials are matched by source expression below, not by name
+            if _ineligible(built, self.query, grain_cols, ()) is not None:
                 continue
             fns = merge_functions(built.decompositions)
             stored: dict[str, tuple[str, str]] = {}
@@ -394,72 +444,97 @@ class RollupManager:
 
     def route(
         self, query: MetricQuery, state: Optional[MaterializationState]
-    ) -> tuple[str, Optional[BuiltRollup]]:
-        """Pick the physical source for *query*: ('rollup'|'baseline'|'live').
+    ) -> Route:
+        """Decide the physical source for *query* — the one routing
+        decision every compile and explanation reads.
 
         Derived measures route on their DEPENDENCIES (the derived value
-        is never stored), so the expansion happens before eligibility."""
-        query, _ = expand_derived(query)
-        spec = query.spec
-        if state is None:
-            return "live", None
-        windowed = any(spec.measure(m).is_windowed for m in query.measures)
-        if not windowed and not getattr(query, "where_unresolved", False):
-            # a WHERE slice is evaluated on the rollup's stored dim columns
-            # before re-aggregation, so eligibility needs the rollup to
-            # cover the slice's dims as well as the grouped ones; a WHERE
-            # naming raw source columns (where_unresolved) can only run on
-            # live/baseline, where those columns exist
-            need_dims = set(query.dimensions) | set(getattr(query, "where_dims", ()))
-            candidates = [
-                b
-                for b in state.rollups.values()
-                if need_dims <= set(b.spec.dimensions)
-                and set(query.measures) <= set(b.spec.measures)
-            ]
-            if candidates:
-                # cost-based pick: fewest stored rows wins (recorded at
-                # build); dim count is the fallback proxy
-                best = min(
-                    candidates,
-                    key=lambda b: (
-                        b.n_rows if b.n_rows is not None else float("inf"),
-                        len(b.spec.dimensions),
-                    ),
-                )
-                return "rollup", best
-        if state.baseline:
-            return "baseline", None
-        return "live", None
+        is never stored), so the expansion happens before eligibility.
+        Window measures are never rollup-served (``README.md:431``), so
+        rollups are ranked for the plain measures only: a plain query
+        takes the cheapest eligible rollup; a mixed plain+window query
+        splits, its plain half from that rollup and its window half on
+        the fallback (baseline if present, else live)."""
+        storage, derived = expand_derived(query)
+        spec = storage.spec
+        plain = [m for m in storage.measures if not spec.measure(m).is_windowed]
+        windowed = [m for m in storage.measures if spec.measure(m).is_windowed]
+        built = list(state.rollups.values()) if state is not None else []
+        status = [
+            (_ineligible(b, storage, storage.dimensions, plain) or "eligible")
+            if plain
+            else "window measures never rollup-serve"
+            for b in built
+        ]
+        eligible = [b for b, st in zip(built, status) if st == "eligible"]
+        best = min(eligible, key=_cost) if eligible else None
+        source = "baseline" if state is not None and state.baseline else "live"
+        if best is not None and not windowed:
+            source = "rollup"
+            reason = f"smallest covering rollup ({best.n_rows} stored rows)"
+        elif best is not None:
+            reason = (
+                f"mixed query split: plain measures from rollup "
+                f"{best.spec.name}, windowed measures {windowed} compile "
+                f"on the fly and join on the query dims"
+            )
+        elif windowed:
+            reason = f"windowed measures {windowed} compile on the fly"
+        elif storage.where_unresolved:
+            reason = "WHERE references raw source columns (not dims)"
+        elif not built:
+            reason = "no rollups materialized"
+        else:
+            reason = "no rollup covers the requested dims+measures"
+        if derived is not None:
+            reason += (
+                f"; derived measures "
+                f"{[m for m in query.measures if spec.measure(m).derived]} "
+                f"served from dependency measures (expansion added "
+                f"{[m for m in storage.measures if m not in query.measures]})"
+            )
+        return Route(
+            query=storage,
+            derived=derived,
+            state=state,
+            source=source,
+            rollup=best,
+            reason=reason,
+            candidates=tuple(
+                {
+                    "rollup": b.spec.name,
+                    "n_rows": b.n_rows,
+                    "dimensions": list(b.spec.dimensions),
+                    "status": st,
+                }
+                for b, st in zip(built, status)
+            ),
+        )
 
-    def compile_routed(
-        self, query: MetricQuery, state: Optional[MaterializationState]
-    ) -> tuple[DataFrame, str]:
-        """Compile *query* against the best physical source; returns
-        (plan, route) where route ∈ {'rollup:<name>', 'baseline', 'live'}
-        (or 'rollup:<name>+<route>' for a split mixed query).
+    def compile_routed(self, route: Route) -> tuple[DataFrame, str]:
+        """Compile *route*; returns (plan, route string) where the string
+        is :attr:`Route.label` plus ``+grain:<rollups>`` when a window
+        plan read its grain from stored rollups.
 
-        Window measures are never rollup-served (``README.md:431``), but a
-        mixed query (plain + window measures) need not go fully live: the
-        plain measures route to a covering rollup and join on the query
-        dims with the on-the-fly window plan. At scale this replaces one of
-        the two full source scans with a |dim-combination|-row read.
-
-        Derived measures compile through their dependency query (every
-        route, including splits, is decided on the dependencies) and are
+        Derived measures compile through their dependency query and are
         projected post-aggregation.
         """
-        inner, proj = expand_derived(query)
-        if proj is not None:
-            df, route = self.compile_routed(inner, state)
-            return apply_derived(df, query, proj), route
-        route, built = self.route(query, state)
-        if route == "rollup":
-            assert built is not None
-            return self._compile_from_rollup(query, built), f"rollup:{built.spec.name}"
-        split = self._compile_split_mixed(query, state)
-        if split is not None:
-            return split
+        query = route.query
+        if route.source == "rollup":
+            df, label = self._compile_from_rollup(query, route.rollup), route.label
+        elif route.rollup is not None:
+            df, label = self._compile_split_mixed(route)
+        else:
+            df, label = self._compile_fallback(query, route.source, route.state)
+        if route.derived is not None:
+            df = apply_derived(df, query, route.derived)
+        return df, label
+
+    def _compile_fallback(
+        self, query: MetricQuery, source: str, state: Optional[MaterializationState]
+    ) -> tuple[DataFrame, str]:
+        """Compile on the baseline snapshot or the live source; window
+        grains read from a covering rollup when one stores them."""
         provider = None
         if (
             state is not None
@@ -467,49 +542,38 @@ class RollupManager:
             and any(query.spec.measure(m).is_windowed for m in query.measures)
         ):
             provider = WindowGrainProvider(self, query, state)
-
-        def _with_grain(r: str) -> str:
-            if provider and provider.used:
-                return f"{r}+grain:{','.join(provider.used)}"
-            return r
-
-        if route == "baseline":
-            assert state is not None and state.baseline
+        if source == "baseline":
             # the snapshot already has filter+joins applied and dims
             # materialized — expand in flattened mode (no re-join/re-filter)
             base = self.spark.read.parquet(state.baseline)
-            df = self.compiler.compile(
+            df = self.compiler.compile_storage(
                 query, source_df=base, flattened=True,
                 window_grain_provider=provider,
             )
-            return df, _with_grain("baseline")
-        df = self.compiler.compile(query, window_grain_provider=provider)
-        return df, _with_grain("live")
+        else:
+            df = self.compiler.compile_storage(query, window_grain_provider=provider)
+        if provider and provider.used:
+            return df, f"{source}+grain:{','.join(provider.used)}"
+        return df, source
 
-    def _compile_split_mixed(
-        self, query: MetricQuery, state: Optional[MaterializationState]
-    ) -> Optional[tuple[DataFrame, str]]:
-        """Split a mixed plain+window query when a rollup covers the plain
-        part; None when not applicable (not mixed, or no covering rollup).
+    def _compile_split_mixed(self, route: Route) -> tuple[DataFrame, str]:
+        """A mixed plain+window query: the plain measures re-aggregate
+        from ``route.rollup`` and join on the query dims with the
+        on-the-fly window plan. At scale this replaces one of the two full
+        source scans with a |dim-combination|-row read.
 
         Both sides group the same source by the same dims, so the dim-combo
         sets are identical — an inner null-safe equi-join reassembles the
         row. The rollup side is tiny (≤ |dim combos| rows) and broadcasts.
         """
-        if state is None:
-            return None
+        query = route.query
         spec = query.spec
         plain = tuple(m for m in query.measures if not spec.measure(m).is_windowed)
         windowed = tuple(m for m in query.measures if spec.measure(m).is_windowed)
-        if not plain or not windowed:
-            return None
         pq = MetricQuery(spec, query.dimensions, plain, where=query.where)
-        proute, pbuilt = self.route(pq, state)
-        if proute != "rollup":
-            return None
-        left = self._compile_from_rollup(pq, pbuilt).alias("_p")
+        left = self._compile_from_rollup(pq, route.rollup).alias("_p")
         wq = MetricQuery(spec, query.dimensions, windowed, where=query.where)
-        right, wroute = self.compile_routed(wq, state)
+        right, wroute = self._compile_fallback(wq, route.source, route.state)
         right = right.alias("_w")
         dims = list(query.dimensions)
         if dims:
@@ -526,7 +590,7 @@ class RollupManager:
                 for m in query.measures
             ],
         )
-        return out, f"rollup:{pbuilt.spec.name}+{wroute}"
+        return out, f"rollup:{route.rollup.spec.name}+{wroute}"
 
     def _compile_from_rollup(self, query: MetricQuery, built: BuiltRollup) -> DataFrame:
         """Re-aggregate partial states over the query's dimension subset.

@@ -19,6 +19,7 @@ from __future__ import annotations
 import math
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -273,101 +274,118 @@ def main() -> int:
     if paranoid:
         return run_paranoid(spark, sf_dir, only)
     failures = []
+    # per contract: [Spark seconds (build + collect), DuckDB-oracle seconds]
+    timings: dict[str, list[float]] = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
+        spent = timings[name] = [0.0, 0.0]
+        t0 = time.perf_counter()
         try:
-            df = fn(spark, sf_dir)
-            rows = [tuple(r) for r in df.collect()]
-            cols = df.columns
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"spark error: {e}"))
-            print(f"FAIL {name}: spark error: {e}")
-            continue
-        if name not in oracles:
-            print(f"ok   {name}: rows-only ({len(rows)} rows)")
-            continue
-        try:
-            if strict:
-                # VERDICT r5 #7: the driver fetches the oracle through a
-                # pandas/arrow path, where DuckDB HUGEINT/DECIMAL columns
-                # serialize differently from Spark int64/double and flip
-                # the value hash on IDENTICAL values (the entire r1-r5 red
-                # class). fetchall() hides this — Python ints compare fine
-                # — so the strict mirror must flag the TYPE, not the value.
-                rel = con.sql(oracles[name])
-                unstable = [
-                    (c, str(t))
-                    for c, t in zip(rel.columns, rel.types)
-                    if any(u in str(t).upper() for u in ("HUGEINT", "DECIMAL"))
-                ]
-                if unstable:
-                    failures.append((name, f"fetch-unstable oracle types: {unstable}"))
-                    print(
-                        f"FAIL {name}: oracle result types {unstable} are "
-                        f"fetch-unstable (driver would hash-mismatch); wrap "
-                        f"the aggregate in CAST(... AS BIGINT)"
-                    )
-                    continue
-            res = con.execute(oracles[name])
-            dcols = [d[0] for d in res.description]
-            drows = [tuple(r) for r in res.fetchall()]
-            if strict:
-                # ...and the VALUES through the arrow path must equal the
-                # fetchall() values (a representation divergence between
-                # the two fetch channels is exactly what a driver-side
-                # hash red looks like locally)
-                tbl = con.sql(oracles[name]).arrow()
-                arows = [
-                    tuple(row[c] for c in dcols)
-                    for row in tbl.to_pylist()
-                ]
-                if sorted(map(repr, arows)) != sorted(map(repr, drows)):
-                    failures.append((name, "arrow/fetchall representation divergence"))
-                    print(
-                        f"FAIL {name}: oracle values differ between the "
-                        f"arrow fetch and fetchall() — the driver's fetch "
-                        f"path would hash-mismatch"
-                    )
-                    continue
-        except Exception as e:  # noqa: BLE001
-            failures.append((name, f"duckdb error: {e}"))
-            print(f"FAIL {name}: duckdb error: {e}")
-            continue
-        if sorted(cols) != sorted(dcols):
-            failures.append((name, f"schema: {sorted(cols)} vs {sorted(dcols)}"))
-            print(f"FAIL {name}: schema {sorted(cols)} vs {sorted(dcols)}")
-            continue
-        if len(rows) != len(drows):
-            failures.append((name, f"rowcount {len(rows)} vs {len(drows)}"))
-            print(f"FAIL {name}: rowcount {len(rows)} vs {len(drows)}")
-            continue
-        sidx = [cols.index(c) for c in sorted(cols)]
-        didx = [dcols.index(c) for c in sorted(cols)]
+            try:
+                df = fn(spark, sf_dir)
+                rows = [tuple(r) for r in df.collect()]
+                cols = df.columns
+                spent[0] = time.perf_counter() - t0
+            except Exception as e:  # noqa: BLE001
+                failures.append((name, f"spark error: {e}"))
+                print(f"FAIL {name}: spark error: {e}")
+                continue
+            if name not in oracles:
+                print(f"ok   {name}: rows-only ({len(rows)} rows)")
+                continue
+            t0 = time.perf_counter()
+            try:
+                if strict:
+                    # VERDICT r5 #7: the driver fetches the oracle through a
+                    # pandas/arrow path, where DuckDB HUGEINT/DECIMAL columns
+                    # serialize differently from Spark int64/double and flip
+                    # the value hash on IDENTICAL values (the entire r1-r5 red
+                    # class). fetchall() hides this — Python ints compare fine
+                    # — so the strict mirror must flag the TYPE, not the value.
+                    rel = con.sql(oracles[name])
+                    unstable = [
+                        (c, str(t))
+                        for c, t in zip(rel.columns, rel.types)
+                        if any(u in str(t).upper() for u in ("HUGEINT", "DECIMAL"))
+                    ]
+                    if unstable:
+                        failures.append((name, f"fetch-unstable oracle types: {unstable}"))
+                        print(
+                            f"FAIL {name}: oracle result types {unstable} are "
+                            f"fetch-unstable (driver would hash-mismatch); wrap "
+                            f"the aggregate in CAST(... AS BIGINT)"
+                        )
+                        continue
+                res = con.execute(oracles[name])
+                dcols = [d[0] for d in res.description]
+                drows = [tuple(r) for r in res.fetchall()]
+                if strict:
+                    # ...and the VALUES through the arrow path must equal the
+                    # fetchall() values (a representation divergence between
+                    # the two fetch channels is exactly what a driver-side
+                    # hash red looks like locally)
+                    tbl = con.sql(oracles[name]).arrow()
+                    arows = [
+                        tuple(row[c] for c in dcols)
+                        for row in tbl.to_pylist()
+                    ]
+                    if sorted(map(repr, arows)) != sorted(map(repr, drows)):
+                        failures.append((name, "arrow/fetchall representation divergence"))
+                        print(
+                            f"FAIL {name}: oracle values differ between the "
+                            f"arrow fetch and fetchall() — the driver's fetch "
+                            f"path would hash-mismatch"
+                        )
+                        continue
+                spent[1] = time.perf_counter() - t0
+            except Exception as e:  # noqa: BLE001
+                failures.append((name, f"duckdb error: {e}"))
+                print(f"FAIL {name}: duckdb error: {e}")
+                continue
+            if sorted(cols) != sorted(dcols):
+                failures.append((name, f"schema: {sorted(cols)} vs {sorted(dcols)}"))
+                print(f"FAIL {name}: schema {sorted(cols)} vs {sorted(dcols)}")
+                continue
+            if len(rows) != len(drows):
+                failures.append((name, f"rowcount {len(rows)} vs {len(drows)}"))
+                print(f"FAIL {name}: rowcount {len(rows)} vs {len(drows)}")
+                continue
+            sidx = [cols.index(c) for c in sorted(cols)]
+            didx = [dcols.index(c) for c in sorted(cols)]
 
-        def _conv(v):
-            if hasattr(v, "isoformat"):
-                return v.isoformat()[:19]
-            if isinstance(v, list):
-                return tuple(v)
-            from decimal import Decimal
+            def _conv(v):
+                if hasattr(v, "isoformat"):
+                    return v.isoformat()[:19]
+                if isinstance(v, list):
+                    return tuple(v)
+                from decimal import Decimal
 
-            if isinstance(v, Decimal):
-                return float(v)
-            return v
+                if isinstance(v, Decimal):
+                    return float(v)
+                return v
 
-        def _key(t):
-            return tuple(str(norm(x)) for x in t)
+            def _key(t):
+                return tuple(str(norm(x)) for x in t)
 
-        s = sorted((tuple(_conv(r[i]) for i in sidx) for r in rows), key=_key)
-        d = sorted((tuple(_conv(r[i]) for i in didx) for r in drows), key=_key)
-        bad = [i for i, (a, b) in enumerate(zip(s, d)) if not compare(a, b)]
-        if bad:
-            i = bad[0]
-            failures.append((name, f"{len(bad)} value mismatches"))
-            print(f"FAIL {name}: {len(bad)} mismatched rows; first:\n  spark={s[i]}\n  duck ={d[i]}")
-        else:
-            print(f"ok   {name}: {len(rows)} rows match")
+            s = sorted((tuple(_conv(r[i]) for i in sidx) for r in rows), key=_key)
+            d = sorted((tuple(_conv(r[i]) for i in didx) for r in drows), key=_key)
+            bad = [i for i, (a, b) in enumerate(zip(s, d)) if not compare(a, b)]
+            if bad:
+                i = bad[0]
+                failures.append((name, f"{len(bad)} value mismatches"))
+                print(f"FAIL {name}: {len(bad)} mismatched rows; first:\n  spark={s[i]}\n  duck ={d[i]}")
+            else:
+                print(f"ok   {name}: {len(rows)} rows match")
+        finally:
+            if not spent[0]:
+                spent[0] = time.perf_counter() - t0
+            print(f"time {name}: spark {spent[0]:.2f}s duckdb {spent[1]:.2f}s")
+
+    slowest = sorted(timings.items(), key=lambda kv: -sum(kv[1]))[:5]
+    print("\nslowest contracts (spark s, duckdb s):")
+    for name, (sp, dk) in slowest:
+        print(f"  {name}: {sp:.2f} {dk:.2f}")
 
     if not only:
         ent = entrymod.entry(spark)

@@ -135,12 +135,15 @@ def test_advise_apply_routes_and_matches_live(engine):
     for q in WORKLOAD:
         df, route = mv.query_routed(list(q.dimensions), list(q.measures))
         assert route.startswith("rollup:adv_"), (q, route)
-        live = mv._engine._rollups.compile_routed(
-            __import__(
-                "dbt_databricks_metrics_spark.plans.compiler",
-                fromlist=["MetricQuery"],
-            ).MetricQuery(mv.spec, q.dimensions, q.measures),
-            None,
+        rollups = mv._engine._rollups
+        live = rollups.compile_routed(
+            rollups.route(
+                __import__(
+                    "dbt_databricks_metrics_spark.plans.compiler",
+                    fromlist=["MetricQuery"],
+                ).MetricQuery(mv.spec, q.dimensions, q.measures),
+                None,
+            )
         )[0]
         got = {
             tuple(r[d] for d in q.dimensions): tuple(

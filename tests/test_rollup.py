@@ -76,32 +76,32 @@ def test_routing_decisions(engine):
     mv = engine.metric_view("mv_order_metrics")
     # covered by revenue_by_segment (dims ⊆ {market_segment, order_status})
     assert (
-        mv.explain_routing(["market_segment"], ["total_revenue"])
+        mv.explain_route(["market_segment"], ["total_revenue"])["route"]
         == "rollup:revenue_by_segment"
     )
     assert (
-        mv.explain_routing(["market_segment", "order_status"], ["total_revenue", "total_orders"])
+        mv.explain_route(["market_segment", "order_status"], ["total_revenue", "total_orders"])["route"]
         == "rollup:revenue_by_segment"
     )
     assert (
-        mv.explain_routing(["order_year", "order_month"], ["total_revenue"])
+        mv.explain_route(["order_year", "order_month"], ["total_revenue"])["route"]
         == "rollup:monthly_revenue"
     )
     # mv_order_metrics' source is a materialized table with plain dims →
     # its `baseline` snapshot would be a byte-identical copy; the build
     # skips it and uncovered queries serve from the live table at the
     # same cost (route = 'live')
-    assert mv.explain_routing(["market_segment"], ["max_order_value"]) == "live"
-    assert mv.explain_routing(["order_priority"], ["total_revenue"]) == "live"
+    assert mv.explain_route(["market_segment"], ["max_order_value"])["route"] == "live"
+    assert mv.explain_route(["order_priority"], ["total_revenue"])["route"] == "live"
     # window measures never routed to rollups (README.md:431)
-    assert mv.explain_routing(["market_segment"], ["trailing_7d_revenue"]) == "live"
+    assert mv.explain_route(["market_segment"], ["trailing_7d_revenue"])["route"] == "live"
 
     # mv_orders_simple's source is a VIEW (recomputed per read) → its
     # baseline snapshot is a real cache and uncovered queries route to it
     simple = engine.metric_view("mv_orders_simple")
-    assert simple.explain_routing(["order_status"], ["order_count"]) == "rollup:orders_by_status"
-    assert simple.explain_routing(["order_priority"], ["total_revenue"]) == "baseline"
-    assert simple.explain_routing(["order_status"], ["avg_order_value"]) == "baseline"
+    assert simple.explain_route(["order_status"], ["order_count"])["route"] == "rollup:orders_by_status"
+    assert simple.explain_route(["order_priority"], ["total_revenue"])["route"] == "baseline"
+    assert simple.explain_route(["order_status"], ["avg_order_value"])["route"] == "baseline"
 
 
 def test_non_decomposable_measures_never_routed(engine):
@@ -111,7 +111,7 @@ def test_non_decomposable_measures_never_routed(engine):
     mv = engine.metric_view("mv_order_metrics")
     # plain measure over the same dims routes...
     assert (
-        mv.explain_routing(["market_segment"], ["total_revenue"])
+        mv.explain_route(["market_segment"], ["total_revenue"])["route"]
         == "rollup:revenue_by_segment"
     )
     # ...but mixing in a non-decomposable measure forces live
@@ -120,7 +120,7 @@ def test_non_decomposable_measures_never_routed(engine):
         ["median_order_value"],
         ["distinct_customers", "total_revenue"],
     ):
-        assert mv.explain_routing(["market_segment"], measures) == "live", measures
+        assert mv.explain_route(["market_segment"], measures)["route"] == "live", measures
     df, route = mv.query_routed(["market_segment"], ["distinct_customers"])
     assert route == "live"
     import pyspark.sql.functions as F
@@ -367,6 +367,83 @@ def test_explain_route(spark, sf_dir, tmp_path_factory):
     )
     assert sroute.split("+grain:")[0] == exs["route"], (sroute, exs["route"])
     assert "split" in exs["reason"]
+
+
+def test_raw_where_candidates_name_the_skip(engine):
+    """A WHERE naming a raw source column skips every rollup; each
+    candidate's status says so instead of reading "eligible"."""
+    mv = engine.metric_view("mv_order_metrics")
+    ex = mv.explain_route(["market_segment"], ["total_revenue"], where="total_price > 1000")
+    assert ex["route"] == "live"
+    assert "raw source columns" in ex["reason"]
+    assert ex["candidates"]
+    for c in ex["candidates"]:
+        assert c["status"] == "WHERE references raw source columns (not dims)", c
+
+
+@pytest.fixture(scope="module")
+def derived_view(engine):
+    from dbt_databricks_metrics_spark.specs import MetricViewSpec
+
+    from .test_derived_measures import SPEC_YAML
+
+    if "mv_derived" not in engine.catalog.names():
+        engine.register(MetricViewSpec.from_yaml(SPEC_YAML, name="mv_derived"))
+        engine.refresh("mv_derived")
+    return engine.metric_view("mv_derived")
+
+
+@pytest.mark.parametrize(
+    "view,dims,measures,where",
+    [
+        pytest.param("mv_order_metrics", ["market_segment"], ["total_revenue"], None,
+                     id="covered"),
+        pytest.param("mv_order_metrics", ["order_priority"], ["total_revenue"], None,
+                     id="uncovered_dim"),
+        pytest.param("mv_order_metrics", ["market_segment"], ["trailing_7d_revenue"], None,
+                     id="window_only"),
+        pytest.param("mv_order_metrics", ["market_segment"],
+                     ["total_revenue", "trailing_7d_revenue"], None, id="mixed"),
+        pytest.param("mv_order_metrics", ["market_segment"], ["total_revenue"],
+                     "total_price > 1000", id="raw_where"),
+        pytest.param("mv_derived", ["market_segment"], ["aov_cents"], None, id="derived"),
+        pytest.param("mv_order_metrics", ["market_segment"], ["total_revenue"],
+                     "order_status = 'F'", id="dim_where"),
+    ],
+)
+def test_explain_route_agrees_with_query_routed(engine, derived_view, view, dims,
+                                                measures, where):
+    mv = engine.metric_view(view)
+    ex = mv.explain_route(dims, measures, where=where)
+    _, route = mv.query_routed(dims, measures, where=where, log_workload=False)
+    assert route.split("+grain:")[0] == ex["route"], (route, ex)
+
+
+def test_query_routed_expands_derived_once(engine, derived_view, monkeypatch):
+    """One routing decision per query: the workload log, the router and
+    the compile all read one expansion of the derived measures."""
+    from dbt_databricks_metrics_spark.plans import compiler, rollup
+
+    calls = []
+    real = compiler.expand_derived
+
+    def spy(q):
+        calls.append(q.measures)
+        return real(q)
+
+    monkeypatch.setattr(compiler, "expand_derived", spy)
+    monkeypatch.setattr(rollup, "expand_derived", spy)
+    mv = engine.metric_view("mv_order_metrics")
+    for view, dims, measures, want in (
+        (mv, ["market_segment"], ["total_revenue"], "rollup:revenue_by_segment"),
+        (mv, ["market_segment"], ["max_order_value"], "live"),
+        (derived_view, ["market_segment"], ["aov_cents"], "rollup:seg_base"),
+        (derived_view, ["order_year"], ["aov_cents"], "live"),
+    ):
+        calls.clear()
+        _, route = view.query_routed(dims, measures)
+        assert route == want
+        assert calls == [tuple(measures)], (measures, calls)
 
 
 def test_build_job_budget(engine, spark, tmp_path, monkeypatch):
