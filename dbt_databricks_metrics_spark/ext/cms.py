@@ -79,16 +79,6 @@ def cms_build(
     return pairs.groupBy("row_j", "bucket").agg(F.count(F.lit(1)).alias("n"))
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Sum per-cell counts — partial sketches add like rollup partials."""
-    if not sketches:
-        raise ValueError("cms_merge needs at least one sketch")
-    out = sketches[0]
-    for s in sketches[1:]:
-        out = out.unionByName(s)
-    return out.groupBy("row_j", "bucket").agg(F.sum("n").alias("n"))
-
-
 def cms_estimate(
     sketch: DataFrame,
     queries: DataFrame,
@@ -129,56 +119,3 @@ def doc_tokens(
 def error_bound(n_total: int, width: int) -> int:
     """The classic CMS overshoot bound e*N/width, as an integer."""
     return int(math.ceil(math.e * n_total / width))
-
-
-def cms_fold_stream(
-    spark,
-    source_dir: str,
-    out_path: str,
-    checkpoint_dir: str,
-    item_col: str = "token",
-    depth: int = DEFAULT_DEPTH,
-    width: int = DEFAULT_WIDTH,
-    seed: int = 0,
-    schema=None,
-):
-    """Maintain a CMS from an append-only parquet item stream.
-
-    The mergeability that lets partial sketches add is exactly what a
-    streaming fold needs: each micro-batch is sketched independently and
-    cell-summed into the stored sketch (read, merge, swap-write — the
-    same pattern ``streaming/refresh.streaming_rollup`` uses for rollup
-    partials). `availableNow` gives scheduled-batch semantics; state on
-    disk stays ≤ depth*width rows forever, whatever the stream's volume.
-    Returns the streaming query (caller awaits termination, then reads
-    the sketch at *out_path*).
-
-    Sketch promotion is the crash-safe rename-based
-    ``publish.publish_dir`` and therefore LOCAL-POSIX-FS ONLY: the old
-    sketch is renamed aside and deleted only after the new one is
-    promoted, so a crash mid-swap never loses all state. Object stores
-    need a transactional table format instead.
-    """
-    from ..publish import publish_dir, recover_dir
-
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        delta = cms_build(batch_df, item_col, depth, width, seed)
-        if recover_dir(out_path):
-            merged = cms_merge(s.read.parquet(out_path), delta)
-        else:
-            merged = delta
-        publish_dir(out_path, merged.write.parquet)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

@@ -30,7 +30,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..publish import publish_dir, recover_dir
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -50,21 +49,6 @@ def exact_dedup(
     return (
         with_fp.join(keep, [ "_fp", id_col], "inner")  # semi-join on (fp, min id)
         .drop("_fp")
-    )
-
-
-def exact_duplicate_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(fingerprint, n_docs, doc_ids) for every duplicated normalized text."""
-    return (
-        df.withColumn("_fp", F.xxhash64(normalized_text(text_col)))
-        .groupBy(F.col("_fp").alias("fingerprint"))
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -96,23 +80,6 @@ def char_shingles(text_col: str, k: int = 5) -> Column:
                     F.lit(1), F.greatest(F.length(t) - F.lit(k - 1), F.lit(1))
                 ),
                 lambda i: t.substr(i, F.lit(k)),
-            )
-        ),
-    )
-
-
-def word_shingles(text_col: str, k: int = 3) -> Column:
-    """Distinct word k-grams of the normalized text — the shingle unit most
-    document-dedup pipelines use (char shingles catch reformatting; word
-    shingles catch copied passages)."""
-    return _bind_once(
-        F.split(_norm_col(text_col), " "),
-        lambda toks: F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1), F.greatest(F.size(toks) - F.lit(k - 1), F.lit(1))
-                ),
-                lambda i: F.array_join(F.slice(toks, i, k), " "),
             )
         ),
     )
@@ -707,87 +674,6 @@ def dedup_paragraphs(
     return _reassembled(docs, paras, kept, id_col, sep, "text_dedup")
 
 
-def drop_common_paragraphs(
-    docs: DataFrame,
-    min_df: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    sep: str = "\n",
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """RefinedWeb-style line/paragraph boilerplate removal (Penedo et
-    al. 2023, public): DROP every paragraph that occurs in >= *min_df*
-    distinct documents (site chrome repeats everywhere; real content
-    doesn't), keeping all other paragraphs in place. Complements
-    :func:`dedup_paragraphs` (keep-first): keep-first preserves one copy
-    of boilerplate; the document-frequency rule removes it everywhere.
-
-    Same scale shape as dedup_paragraphs: fingerprint-keyed df-count
-    (one count-distinct aggregate over (fp, doc)), anti-join of
-    paragraphs against the common set, doc-keyed reassembly.
-
-    Returns one row per INPUT document — ``(id, n_paras, n_paras_kept,
-    text_clean)``.
-    """
-    if min_df < 2:
-        raise ValueError(f"min_df must be >= 2, got {min_df}")
-    paras = _exploded_paragraphs(docs, id_col, text_col, sep, hash_fn)
-    common = (
-        paras.select("fp", id_col)
-        .distinct()
-        .groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") >= min_df)
-        .select("fp")
-    )
-    kept = paras.join(common, "fp", "left_anti")
-    return _reassembled(docs, paras, kept, id_col, sep, "text_clean")
-
-
-def dedup_against_registry(
-    new_docs: DataFrame,
-    registry_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Incremental exact dedup against a persistent fingerprint REGISTRY —
-    the batch-shard complement of ``streaming/dedup``'s state-store
-    variant (public pattern: every crawl pipeline keeps a seen-hash set).
-
-    The registry stores ``(fingerprint, doc_id)`` — 8-byte fingerprints of
-    the corpus so far, ~3 orders of magnitude smaller than the text — so
-    an arriving shard dedups with ONE anti-join against it and never
-    rescans the corpus. Within-shard dups collapse keep-lowest-id first;
-    survivors' fingerprints fold into the registry via the crash-safe
-    rename-aside publish (``publish.publish_dir`` — LOCAL POSIX FS only;
-    use a transactional table format on object stores).
-
-    Returns the kept rows of *new_docs* (recomputed via a semi-join
-    against the updated registry, so the returned plan does not depend on
-    the pre-swap state). Ids must be globally unique across shards.
-    """
-    spark = new_docs.sparkSession
-    with_fp = new_docs.withColumn(
-        "_fp", F.xxhash64(normalized_text(text_col))
-    )
-    batch_first = with_fp.groupBy("_fp").agg(F.min(id_col).alias(id_col))
-    # recover_dir adopts a crash-orphaned aside; a plain existence probe
-    # would read the registry as empty and the publish sweep would then
-    # discard all prior-shard fingerprints
-    if recover_dir(registry_path):
-        old = spark.read.parquet(registry_path)
-        fresh = batch_first.join(old.select("_fp"), "_fp", "left_anti")
-        updated = old.unionByName(fresh)
-    else:
-        fresh = batch_first
-        updated = fresh
-    publish_dir(registry_path, updated.write.parquet)
-    reg = spark.read.parquet(registry_path)
-    return new_docs.join(
-        reg.select(F.col(id_col)), id_col, "left_semi"
-    )
-
-
 def keep_best_in_cluster(
     df: DataFrame,
     clusters: DataFrame,
@@ -851,203 +737,4 @@ def keep_best_in_cluster(
         F.expr("_best DIV 1000000000000").alias("kept_tokens"),
         "cluster_size",
         (F.col("cluster_size") - 1).alias("n_removed"),
-    )
-
-
-def _banded_keys(sig_col: Column, num_perm: int, bands: int) -> Column:
-    """array<struct<band,key>> of LSH band hashes for a signature."""
-    rows = num_perm // bands
-    return F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.element_at(sig_col, b * rows + r + 1)
-                            for r in range(rows)
-                        ],
-                    )
-                ).alias("key"),
-            )
-            for b in range(bands)
-        ]
-    )
-
-
-def neardup_against_registry(
-    new_docs: DataFrame,
-    registry_path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_perm: int = 128,
-    bands: int = 32,
-    threshold: float = 0.8,
-) -> DataFrame:
-    """Incremental NEAR-dup dedup of an arriving shard against a
-    persistent MinHash registry — the banded complement of
-    ``dedup_against_registry`` (which is exact-match only). This is how
-    a crawl pipeline keeps near-dedup incremental: the corpus so far is
-    represented by its band keys + signatures (~num_perm·8 bytes/doc,
-    text never retained), an arriving shard probes the band table with
-    one equi-join, and survivors fold back in.
-
-    Cross-shard verification estimates Jaccard as the fraction of
-    agreeing signature positions (unbiased, stderr ≈ √(s(1−s)/num_perm)
-    ≈ 0.035 at s=0.8, num_perm=128 — the standard estimator once raw
-    text is gone); within-shard dedup uses the exact-shingle verify
-    (``minhash_dedup``) since the shard's text is at hand. Keep rule:
-    within-shard lowest id wins, and any survivor matching a registered
-    doc is dropped (the registry is older by construction).
-
-    Registry layout: ``<path>/sigs`` (id, sig) and ``<path>/bands``
-    (id, band, key), each folded with the crash-safe rename-aside
-    publish (``publish.publish_dir`` — LOCAL POSIX FS only). Sigs
-    promote BEFORE bands, and EACH fold derives its fresh ids by
-    anti-joining its OWN registry side (sigs vs reg_sigs, bands vs
-    reg_bands) — so a crash between the two promotes leaves an
-    under-banded shard whose band rows ARE re-folded on re-run (the
-    shard ids are absent from reg_bands even though reg_sigs already
-    has them; anti-joining reg_sigs there would yield an empty band
-    fold and leave the docs permanently band-undiscoverable). A doc is
-    never band-discoverable without its verification signature.
-
-    Returns the kept rows of *new_docs*. Ids must be globally unique
-    across shards.
-    """
-    import os
-
-    spark = new_docs.sparkSession
-    sigs_path = os.path.join(registry_path, "sigs")
-    bands_path = os.path.join(registry_path, "bands")
-    recover_dir(sigs_path)
-    has_bands = recover_dir(bands_path)
-
-    survivors = minhash_dedup(
-        new_docs, id_col, text_col, k, num_perm, bands, threshold
-    )
-    sh = survivors.select(
-        F.col(id_col),
-        minhash_signature(char_shingles(text_col, k), num_perm).alias("_sig"),
-    ).localCheckpoint(eager=True)  # signatures are reused three times below
-    shard_bands = sh.select(
-        F.col(id_col),
-        F.explode(_banded_keys(F.col("_sig"), num_perm, bands)).alias("bk"),
-    ).select(F.col(id_col), F.col("bk.band"), F.col("bk.key"))
-
-    if has_bands:
-        reg_bands = spark.read.parquet(bands_path)
-        reg_sigs = spark.read.parquet(sigs_path)
-        cand = (
-            shard_bands.join(
-                reg_bands.select(
-                    F.col(id_col).alias("_old_id"), "band", "key"
-                ),
-                ["band", "key"],
-            )
-            .select(F.col(id_col), F.col("_old_id"))
-            .distinct()
-        )
-        agree = F.size(
-            F.filter(
-                F.zip_with(
-                    F.col("_sig"), F.col("_old_sig"), lambda a, b: a == b
-                ),
-                lambda x: x,
-            )
-        )
-        matched = (
-            cand.join(sh, id_col)
-            .join(
-                reg_sigs.select(
-                    F.col(id_col).alias("_old_id"),
-                    F.col("_sig").alias("_old_sig"),
-                ),
-                "_old_id",
-            )
-            .filter(agree >= int(threshold * num_perm))
-            .select(id_col)
-            .distinct()
-        )
-        kept_ids = sh.select(id_col).join(matched, id_col, "left_anti")
-    else:
-        reg_sigs = None
-        kept_ids = sh.select(id_col)
-
-    # cut lineage to the pre-swap registry files: everything promoted or
-    # returned below must not lazily re-read sigs/bands after the swap
-    # replaces them (shard-sized id/sig tables, cheap to pin)
-    kept_ids = kept_ids.localCheckpoint(eager=True)
-    kept_sigs = sh.join(kept_ids, id_col, "left_semi")
-    if reg_sigs is not None:
-        fresh_sigs = kept_sigs.join(
-            reg_sigs.select(id_col), id_col, "left_anti"
-        ).localCheckpoint(eager=True)
-        new_sigs = reg_sigs.unionByName(fresh_sigs)
-        # band-side fresh ids anti-join reg_bands (NOT reg_sigs): after a
-        # crash between the sigs and bands promotes, the shard ids are
-        # already in reg_sigs but missing from reg_bands — this is the
-        # re-run that heals them (docstring crash-ordering contract)
-        fresh_band_ids = kept_ids.join(
-            reg_bands.select(id_col).distinct(), id_col, "left_anti"
-        )
-        new_bands = reg_bands.unionByName(
-            shard_bands.join(fresh_band_ids, id_col, "left_semi")
-        ).localCheckpoint(eager=True)
-    else:
-        new_sigs = kept_sigs
-        new_bands = shard_bands.join(kept_ids, id_col, "left_semi")
-    # sigs first (see docstring crash-ordering contract); the bands fold
-    # was pinned above, so replacing sigs_path cannot invalidate it
-    publish_dir(sigs_path, new_sigs.write.parquet)
-    publish_dir(bands_path, new_bands.write.parquet)
-    return new_docs.join(kept_ids, id_col, "left_semi")
-
-
-def neardup_fold_stream(
-    spark,
-    source_dir: str,
-    registry_path: str,
-    kept_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 5,
-    num_perm: int = 128,
-    bands: int = 32,
-    threshold: float = 0.8,
-    schema=None,
-):
-    """Streaming near-dedup: fold an append-only parquet document stream
-    through :func:`neardup_against_registry`, appending each micro-batch's
-    survivors to *kept_dir* — the always-on form of the shard loop (a
-    crawl drops files, the stream near-dedups them against everything
-    ever seen, state = band keys + signatures, never text).
-
-    ``availableNow`` gives scheduled-batch semantics; per-batch work is
-    batch×registry band-join-sized. Registry promotion inherits
-    ``neardup_against_registry``'s crash contract (LOCAL POSIX FS only,
-    single writer). Returns the streaming query (caller awaits
-    termination, then reads survivors at *kept_dir*).
-    """
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        kept = neardup_against_registry(
-            batch_df, registry_path, id_col, text_col,
-            k, num_perm, bands, threshold,
-        )
-        kept.write.mode("append").parquet(kept_dir)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )

@@ -160,22 +160,6 @@ def drift_report_exact(
     )
 
 
-def psi(
-    df_a: DataFrame,
-    df_b: DataFrame,
-    col: str,
-    lo: float,
-    hi: float,
-    bins: int = 20,
-    eps: float = 1e-6,
-) -> DataFrame:
-    """One row: (psi, ks_binned) — the drift scores."""
-    rep = drift_report(df_a, df_b, col, lo, hi, bins, eps)
-    return rep.agg(
-        F.sum("psi_term").alias("psi"), F.max("cdf_gap").alias("ks_binned")
-    )
-
-
 def welch_t(
     df: DataFrame,
     group_col: str,

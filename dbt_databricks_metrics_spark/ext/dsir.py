@@ -115,24 +115,3 @@ def dsir_weights(
         F.count("_lr").alias("n_features"),
         F.sum("_lr").alias("log_weight"),
     )
-
-
-def dsir_select(
-    raw: DataFrame,
-    target: DataFrame,
-    k: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    hash_fn: str = "xxhash64",
-    n_buckets: int = 10_000,
-    alpha: float = 0.5,
-) -> DataFrame:
-    """The k most target-like raw documents (all raw columns + the
-    weight), ties broken by id. ``orderBy().limit()`` compiles to
-    TakeOrderedAndProject — per-partition heaps, no global sort."""
-    w = dsir_weights(raw, target, id_col, text_col, hash_fn, n_buckets, alpha)
-    return (
-        raw.join(w, id_col)
-        .orderBy(F.desc("log_weight"), F.col(id_col))
-        .limit(k)
-    )

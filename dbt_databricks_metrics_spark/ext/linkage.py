@@ -85,38 +85,3 @@ def blocked_fuzzy_pairs(
         .filter(F.col("dist") <= F.lit(max_dist))
         .select("name_a", "name_b", "dist", "n_a", "n_b")
     )
-
-
-def blocked_fuzzy_join(
-    left: DataFrame,
-    right: DataFrame,
-    left_col: str,
-    right_col: str,
-    max_dist: int = 2,
-    block_expr_left: Optional[Column] = None,
-    block_expr_right: Optional[Column] = None,
-) -> DataFrame:
-    """Cross-table fuzzy equi-join on near-matching names.
-
-    Returns every (left row, right row) pair whose names share a block
-    and are within *max_dist* edits, plus the distance — the linkage
-    step that conforms a dirty feed against a clean dimension.
-    """
-    lb = (
-        block_expr_left
-        if block_expr_left is not None
-        else _default_block(F.col(left_col))
-    )
-    rb = (
-        block_expr_right
-        if block_expr_right is not None
-        else _default_block(F.col(right_col))
-    )
-    l = left.withColumn("_block", lb)
-    r = right.withColumn("_block", rb)
-    return (
-        l.join(r, "_block")
-        .withColumn("dist", F.levenshtein(F.col(left_col), F.col(right_col)))
-        .filter(F.col("dist") <= F.lit(max_dist))
-        .drop("_block")
-    )

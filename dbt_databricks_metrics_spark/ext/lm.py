@@ -27,11 +27,7 @@ Scale shape (100 TB posture):
   shuffle keys are bigrams and doc ids, never full text. The bigram
   table is corpus-sized-vocabulary, NOT corpus-sized; for web-scale
   corpora it stays orders of magnitude smaller than the input and the
-  join is a plain shuffle-hash join (or broadcast, if the model was
-  trained on a sample — pass a pre-filtered ``min_count`` model).
-* ``min_count`` prunes hapax bigrams from the model (classic LM
-  practice) which bounds the model table and removes the long tail of
-  single-occurrence keys.
+  join is a plain shuffle-hash join.
 
 Documents with fewer than 2 tokens have no bigram events; they surface
 with ``n_bigrams = 0`` and NULL score (callers decide their fate —
@@ -74,110 +70,72 @@ def _bigram_col(text_col: str) -> Column:
     return _bind_once(_token_col(text_col), _bigrams_of)
 
 
-def train_bigram_lm(
-    df: DataFrame, text_col: str = "text", min_count: int = 1
-) -> DataFrame:
-    """Bigram event counts over the corpus: (w1, w2, c).
-
-    ``min_count`` drops rare bigrams from the model (they fall back to
-    the smoothing mass at scoring time), bounding the model table.
-    """
-    grams = df.select(F.explode(_bigram_col(text_col)).alias("bigram"))
-    counts = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("c"))
-    if min_count > 1:
-        counts = counts.filter(F.col("c") >= min_count)
-    return counts.select(
-        F.split_part(F.col("bigram"), F.lit(" "), F.lit(1)).alias("w1"),
-        F.split_part(F.col("bigram"), F.lit(" "), F.lit(2)).alias("w2"),
-        "c",
-    )
-
-
 def lm_doc_scores(
     df: DataFrame,
-    lm: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
     alpha: float = 0.5,
-    materialize_model: bool = True,
 ) -> DataFrame:
-    """Per-document mean log-probability under the bigram LM.
+    """Per-document mean log-probability under the bigram LM trained on
+    *df* itself (self-scoring: outlier docs — templated spam,
+    wrong-language, gibberish — land in the distribution tails; CCNet's
+    bucketing move). Returns ``(id, n_bigrams, avg_logp, ppl)``.
 
-    With ``lm=None`` the model is trained on *df* itself (self-scoring:
-    outlier docs — templated spam, wrong-language, gibberish — land in
-    the distribution tails; CCNet's bucketing move). Returns
-    ``(id, n_bigrams, avg_logp, ppl)``.
-
-    ``materialize_model`` localCheckpoints the self-trained counts so the
-    corpus-wide bigram explode runs once, not three times (the model
-    feeds the context totals AND the scoring join). The checkpointed
-    blocks live in executor storage until the DataFrame is garbage
-    collected — long-lived sessions scoring MANY corpora in a loop
-    should pass ``False`` (recompute) or manage the model DataFrame
-    themselves via ``train_bigram_lm``.
+    The trained counts are localCheckpointed so the corpus-wide bigram
+    explode runs once, not three times (the model feeds the context
+    totals AND the scoring join). The checkpointed blocks live in
+    executor storage until the DataFrame is garbage collected.
     """
-    self_trained = lm is None
-    if self_trained:
-        # ONE corpus pass trains the model AND counts the vocabulary:
-        # each document explodes its bigrams (kind 0) and its distinct
-        # tokens (kind 1) together; the (kind, key) count aggregate is
-        # the bigram model where kind = 0 and — because groupBy already
-        # de-duplicates keys — the vocabulary rows where kind = 1, so
-        # count_distinct over a SECOND full corpus explode disappears
-        # (guide §1.2: remove a whole pass before tuning anything in it).
-        # Counting each doc's DISTINCT tokens keeps the kind-1 fan-out
-        # sub-linear while leaving the global distinct set identical.
-        both = df.select(
-            F.explode(
-                _bind_once(
-                    _token_col(text_col),
-                    lambda toks: F.concat(
-                        F.transform(
-                            _bigrams_of(toks),
-                            lambda b: F.struct(
-                                F.lit(0).alias("kind"), b.alias("key")
-                            ),
-                        ),
-                        F.transform(
-                            F.array_distinct(toks),
-                            lambda t: F.struct(
-                                F.lit(1).alias("kind"), t.alias("key")
-                            ),
+    # ONE corpus pass trains the model AND counts the vocabulary:
+    # each document explodes its bigrams (kind 0) and its distinct
+    # tokens (kind 1) together; the (kind, key) count aggregate is
+    # the bigram model where kind = 0 and — because groupBy already
+    # de-duplicates keys — the vocabulary rows where kind = 1, so
+    # count_distinct over a SECOND full corpus explode disappears
+    # (guide §1.2: remove a whole pass before tuning anything in it).
+    # Counting each doc's DISTINCT tokens keeps the kind-1 fan-out
+    # sub-linear while leaving the global distinct set identical.
+    both = df.select(
+        F.explode(
+            _bind_once(
+                _token_col(text_col),
+                lambda toks: F.concat(
+                    F.transform(
+                        _bigrams_of(toks),
+                        lambda b: F.struct(
+                            F.lit(0).alias("kind"), b.alias("key")
                         ),
                     ),
-                )
-            ).alias("e")
-        )
-        counts = both.groupBy(
-            F.col("e.kind").alias("kind"), F.col("e.key").alias("key")
-        ).agg(F.count(F.lit(1)).alias("c"))
-        if materialize_model:
-            counts = counts.localCheckpoint(eager=True)
-        lm = counts.filter(F.col("kind") == 0).select(
-            F.split_part(F.col("key"), F.lit(" "), F.lit(1)).alias("w1"),
-            F.split_part(F.col("key"), F.lit(" "), F.lit(2)).alias("w2"),
-            "c",
-        )
-        if materialize_model:
-            # re-materialize the bigram slice on its own: the scoring
-            # join's build-side size estimate must reflect the MODEL, not
-            # the combined (model + vocabulary) table — a doubled
-            # estimate flips the broadcast join to sort-merge right at
-            # the threshold (measured 3x on the 4x-scale corpus). This
-            # pass reads the already-checkpointed counts, not the corpus.
-            lm = lm.localCheckpoint(eager=True)
-        vocab_n = (
-            counts.filter(F.col("kind") == 1)
-            .agg(F.count(F.lit(1)).alias("v"))
-        )
-    else:
-        # With an external model, V must come from the MODEL (its w1 ∪ w2
-        # vocabulary), not from the batch being scored — otherwise the
-        # same document's score would depend on what it is scored
-        # alongside.
-        vocab_n = lm.select(
-            F.explode(F.array(F.col("w1"), F.col("w2"))).alias("tok")
-        ).agg(F.count_distinct("tok").alias("v"))
+                    F.transform(
+                        F.array_distinct(toks),
+                        lambda t: F.struct(
+                            F.lit(1).alias("kind"), t.alias("key")
+                        ),
+                    ),
+                ),
+            )
+        ).alias("e")
+    )
+    counts = both.groupBy(
+        F.col("e.kind").alias("kind"), F.col("e.key").alias("key")
+    ).agg(F.count(F.lit(1)).alias("c"))
+    counts = counts.localCheckpoint(eager=True)
+    lm = counts.filter(F.col("kind") == 0).select(
+        F.split_part(F.col("key"), F.lit(" "), F.lit(1)).alias("w1"),
+        F.split_part(F.col("key"), F.lit(" "), F.lit(2)).alias("w2"),
+        "c",
+    )
+    # re-materialize the bigram slice on its own: the scoring
+    # join's build-side size estimate must reflect the MODEL, not
+    # the combined (model + vocabulary) table — a doubled
+    # estimate flips the broadcast join to sort-merge right at
+    # the threshold (measured 3x on the 4x-scale corpus). This
+    # pass reads the already-checkpointed counts, not the corpus.
+    lm = lm.localCheckpoint(eager=True)
+    vocab_n = (
+        counts.filter(F.col("kind") == 1)
+        .agg(F.count(F.lit(1)).alias("v"))
+    )
     # context totals over the TRAINED event space
     ctx = lm.groupBy("w1").agg(F.sum("c").alias("c_ctx"))
 

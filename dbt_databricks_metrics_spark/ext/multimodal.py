@@ -40,26 +40,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image | audio | video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("mime", T.StringType(), True),
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -123,67 +103,6 @@ def extract_features(media: DataFrame, decode_stub: bool = True) -> DataFrame:
             )
 
     return media.mapInPandas(batches, schema=FEATURE_SCHEMA)
-
-
-def resize_images(
-    media: DataFrame, width: int, height: int, decode_stub: bool = True
-) -> DataFrame:
-    """image binary → resized binary (stub passes bytes through and
-    rewrites the metadata — the real kernel decodes/resizes/encodes)."""
-
-    out_schema = MEDIA_SCHEMA
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError("image codec not available — stubbed")
-            meta = pdf["meta"].map(
-                lambda m: {
-                    "mime": (m or {}).get("mime"),
-                    "width": width,
-                    "height": height,
-                    "duration_ms": (m or {}).get("duration_ms"),
-                }
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "content": pdf["content"],
-                    "meta": meta,
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, schema=out_schema
-    )
-
-
-def sample_video_frames(
-    media: DataFrame, every_ms: int = 1000, decode_stub: bool = True
-) -> DataFrame:
-    """video binary → one row per sampled frame timestamp (stub emits the
-    frame schedule from duration_ms without decoding)."""
-    schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_ts_ms", T.LongType(), False),
-            T.StructField("frame", T.BinaryType(), True),
-        ]
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if not decode_stub:
-                raise NotImplementedError("video codec not available — stubbed")
-            rows = []
-            for _, r in pdf.iterrows():
-                dur = (r["meta"] or {}).get("duration_ms") or 0
-                for ts in range(0, int(dur), every_ms):
-                    rows.append((r["media_id"], ts, None))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_ts_ms", "frame"])
-
-    return media.filter(F.col("kind") == "video").mapInPandas(batches, schema=schema)
 
 
 def media_from_documents(documents: DataFrame) -> DataFrame:
@@ -401,8 +320,7 @@ RESIZED_SCHEMA = T.StructType(
 
 
 def resize_images_real(media: DataFrame, width: int, height: int) -> DataFrame:
-    """REAL image resize (the de-stubbed counterpart of
-    :func:`resize_images` for decodable formats): decode PNG / GIF /
+    """REAL image resize for decodable formats: decode PNG / GIF /
     BMP / PPM to the RGB raster, nearest-neighbor resample to
     width x height, and re-encode as a top-down 24bpp BMP — so the
     output is itself a decodable image (thumbnail pipelines chain).
@@ -2994,8 +2912,7 @@ SAMPLED_FRAME_SCHEMA = T.StructType(
 
 
 def sample_mjpeg_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL video frame sampling (the de-stubbed counterpart of
-    :func:`sample_video_frames` for MJPEG/AVI): decode the container,
+    """REAL video frame sampling for MJPEG/AVI: decode the container,
     timestamp frame i at ``i * usec_per_frame // 1000`` ms, and keep
     the FIRST frame of each ``every_ms`` bucket — the standard
     "one thumbnail per second" shape of a training-data pipeline.

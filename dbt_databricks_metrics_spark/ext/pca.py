@@ -1,39 +1,28 @@
-"""Distributed PCA over embedding columns ([EXT]) — the dimensionality
-step that precedes clustering / IVF / quantization in large embedding
-pipelines (public algorithm: covariance eigendecomposition).
+"""Distributed covariance over embedding columns ([EXT]) — the moment
+pass of PCA, the dimensionality step that precedes clustering / IVF /
+quantization in large embedding pipelines (public algorithm: covariance
+eigendecomposition).
 
-Scale shape (100 TB posture), the classic two-phase design:
-
-1. **Distributed moment pass** — mean vector and scatter matrix
-   ``X^T X``. Each Arrow batch computes its d×d partial with ONE numpy
-   gemm (``mapInPandas``: this is the documented exception where a
-   Python kernel beats expressions — elementwise SQL would explode d²
-   values per ROW, ~4096× data amplification at d=64, while the gemm
-   emits d²+d+1 numbers per BATCH). The shuffle carries one flattened
-   row per batch, regardless of corpus size.
-2. **Driver eigendecomposition** — the d×d covariance (a few KB) is
-   eigensolved with numpy; only model-sized data ever reaches the
-   driver.
-
-``pca_transform`` projects vectors onto the top-k components with pure
-array expressions (codegen; k×d multiply-adds per row, no shuffle).
+Scale shape (100 TB posture): mean vector and scatter matrix ``X^T X``
+in one distributed pass. Each Arrow batch computes its d×d partial with
+ONE numpy gemm (``mapInPandas``: this is the documented exception where
+a Python kernel beats expressions — elementwise SQL would explode d²
+values per ROW, ~4096× data amplification at d=64, while the gemm emits
+d²+d+1 numbers per BATCH). The shuffle carries one flattened row per
+batch, regardless of corpus size; only model-sized data (the d×d
+covariance, a few KB) ever reaches the driver.
 
 Determinism: the scatter partials depend on row batching, so raw
 covariance entries carry float summation jitter; ``covariance_matrix``
 rounds to a caller-set number of decimals (default 6) making the
 distributed pass engine-reproducible — the contract oracle recomputes
-the same rounded matrix in SQL. Eigenvectors have a sign ambiguity;
-``pca_fit`` fixes each component's sign so its largest-magnitude entry
-is positive (the standard convention).
+the same rounded matrix in SQL.
 """
 
 from __future__ import annotations
 
-from typing import NamedTuple
-
 import numpy as np
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -130,62 +119,3 @@ def covariance_matrix(
         for j in range(dim)
     ]
     return spark.createDataFrame(rows, "i INT, j INT, cov DOUBLE")
-
-
-class PCAModel(NamedTuple):
-    mean: "np.ndarray"  # (d,)
-    components: "np.ndarray"  # (k, d) rows = principal axes
-    explained_variance: "np.ndarray"  # (k,)
-
-
-def pca_fit(
-    df: DataFrame, k: int, vec_col: str = "embedding", dim: int = 64
-) -> PCAModel:
-    """Top-*k* principal components from the distributed moment pass +
-    driver-side eigendecomposition of the d×d covariance."""
-    if not 1 <= k <= dim:
-        raise ValueError(f"need 1 <= k <= {dim}, got {k}")
-    n, s, ss = _collect_moments(df, vec_col, dim)
-    mu = s / n
-    cov = ss / n - np.outer(mu, mu)
-    vals, vecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(vals)[::-1][:k]
-    comps = vecs[:, order].T  # (k, d)
-    # sign convention: largest-|entry| positive per component
-    for r in range(comps.shape[0]):
-        m = np.argmax(np.abs(comps[r]))
-        if comps[r, m] < 0:
-            comps[r] = -comps[r]
-    return PCAModel(mean=mu, components=comps, explained_variance=vals[order])
-
-
-def pca_transform(
-    df: DataFrame,
-    model: PCAModel,
-    vec_col: str = "embedding",
-    out_col: str = "pca",
-) -> DataFrame:
-    """Project onto the model's components: pure array expressions
-    (k×d multiply-adds per row, whole-stage codegen, no shuffle)."""
-    mean = [float(x) for x in model.mean]
-    comps = [[float(x) for x in row] for row in model.components]
-    centered = F.zip_with(
-        F.col(vec_col).cast("array<double>"),
-        F.array(*[F.lit(m) for m in mean]),
-        lambda x, m: x - m,
-    )
-    proj = F.array(
-        *[
-            F.aggregate(
-                F.zip_with(
-                    centered,
-                    F.array(*[F.lit(c) for c in row]),
-                    lambda x, w: x * w,
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            )
-            for row in comps
-        ]
-    )
-    return df.withColumn(out_col, proj)

@@ -226,22 +226,6 @@ def source_reputation(
     )
 
 
-def gate_by_source(
-    documents: DataFrame,
-    reputation: DataFrame,
-    source_col: str = "source",
-) -> DataFrame:
-    """Keep only documents from sources the reputation report kept.
-
-    Broadcast semi-join on the (tiny) source dimension — map-only on the
-    corpus side.
-    """
-    keep = reputation.filter(F.col("keep")).select(
-        F.col("source").alias(source_col)
-    )
-    return documents.join(F.broadcast(keep), source_col, "left_semi")
-
-
 def curation_v2_stats(
     documents: DataFrame,
     min_quality: float = 0.5,

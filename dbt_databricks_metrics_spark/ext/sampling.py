@@ -6,10 +6,9 @@ partitioning, any run — so `rand()` (per-task RNG) is out. Everything
 here derives a bucket in [0, MODULUS) from a stable key column and keeps
 a row iff its bucket clears the configured threshold:
 
-* ``deterministic_sample`` — Bernoulli(fraction) per row
-* ``stratified_sample``    — per-stratum fractions (the data-mixing
+* ``stratified_sample`` — per-stratum fractions (the data-mixing
   primitive: up/down-weight languages, sources, domains)
-* ``train_test_split``     — disjoint, exhaustive split by weight vector
+* ``train_test_split``  — disjoint, exhaustive split by weight vector
 
 All are map-only filters (no shuffle, no state); the strata thresholds
 compile to a CASE expression, never a join.
@@ -67,18 +66,6 @@ def _threshold(fraction: float) -> int:
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
     return int(round(fraction * MODULUS))
-
-
-def deterministic_sample(
-    df: DataFrame,
-    fraction: float,
-    key_col: str = "doc_id",
-    salt: int = 0,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """Keep ~fraction of rows, deterministically by key."""
-    _check_multiplicative_key(df, key_col, hash_fn)
-    return df.filter(bucket(key_col, salt, hash_fn) < F.lit(_threshold(fraction)))
 
 
 def stratified_sample(

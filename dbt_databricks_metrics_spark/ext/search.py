@@ -15,7 +15,6 @@ embarrassingly parallel either way.
 from __future__ import annotations
 
 import math
-from typing import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -29,20 +28,6 @@ def _tokens(text_col: str) -> Column:
             r"\s+",
         )
     )
-
-
-def term_document_frequencies(
-    docs: DataFrame, terms: Sequence[str], text_col: str = "text"
-) -> dict[str, int]:
-    """df_t for each query term, in one aggregate pass."""
-    toks = _tokens(text_col)
-    row = docs.agg(
-        *[
-            F.count_if(F.array_contains(toks, t.lower())).alias(f"df_{i}")
-            for i, t in enumerate(terms)
-        ]
-    ).first()
-    return {t: int(row[f"df_{i}"]) for i, t in enumerate(terms)}
 
 
 def idf(n_docs: int, df_t: int) -> float:
@@ -370,32 +355,6 @@ def rerank_top_k(
     )
 
 
-def phrase_positions(
-    docs: DataFrame,
-    terms: Sequence[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Positional postings ``(id, tok, pos)`` for exactly the phrase's
-    terms, 1-based positions.
-
-    The filter to phrase terms happens in the same map stage as the
-    explode, so only the (few) matching postings ever reach a shuffle.
-    At 100 TB this is the ad-hoc form of a prebuilt positional inverted
-    index — a ``(tok, id, pos)`` table bucketed by ``tok`` — which this
-    function's output schema matches on purpose: swap ``phrase_positions``
-    for a pushed-down scan of that table and ``phrase_search`` below is
-    unchanged.
-    """
-    toks = _all_tokens(text_col)
-    return (
-        docs.select(F.col(id_col), F.posexplode(toks).alias("pos", "tok"))
-        .filter(F.col("tok").isin([t.lower() for t in terms]))
-        # 1-based positions (matches SQL generate_subscripts semantics)
-        .select(F.col(id_col), F.col("tok"), (F.col("pos") + 1).alias("pos"))
-    )
-
-
 def phrase_search(
     docs: DataFrame,
     phrase: str,
@@ -414,10 +373,8 @@ def phrase_search(
     adjacency join — Manning, Raghavan & Schütze, IIR ch. 2 — is the
     right plan only when the index already EXISTS as a table; built
     ad-hoc it costs one corpus scan PER TERM, since the per-term posting
-    branches share no exchange Catalyst can reuse. That plan is
-    :func:`phrase_search_indexed`, fed by a prebuilt
-    :func:`phrase_positions` table.) Counts are integers, so ranking is
-    bit-reproducible across engines.
+    branches share no exchange Catalyst can reuse.) Counts are integers,
+    so ranking is bit-reproducible across engines.
     """
     terms = [t for t in phrase.lower().split() if t]
     if not terms:
@@ -441,44 +398,6 @@ def phrase_search(
         docs.select(F.col(id_col), _all_tokens(text_col).alias("_t"))
         .select(F.col(id_col), cnt.cast("bigint").alias("n_phrase"))
         .filter(F.col("n_phrase") > 0)
-        .orderBy(F.desc("n_phrase"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def phrase_search_indexed(
-    postings: DataFrame,
-    terms: Sequence[str],
-    k: int = 10,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Phrase matching over a PREBUILT positional index (the
-    :func:`phrase_positions` schema — at scale, a ``(tok, id, pos)``
-    table bucketed by ``tok`` so the term filters prune at the scan).
-
-    An n-term phrase anchors on its first term's postings and chains
-    n−1 equi-joins on ``(id, pos + i)``; rare-term postings are small,
-    so these are broadcast/partitioned hash joins over index rows —
-    never a corpus scan. Same output contract as :func:`phrase_search`.
-    """
-    terms = [t.lower() for t in terms if t]
-    if not terms:
-        raise ValueError("empty phrase")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    anchor = (
-        postings.filter(F.col("tok") == terms[0])
-        .select(F.col(id_col), F.col("pos"))
-    )
-    for i, t in enumerate(terms[1:], start=1):
-        nxt = (
-            postings.filter(F.col("tok") == t)
-            .select(F.col(id_col), (F.col("pos") - i).alias("pos"))
-        )
-        anchor = anchor.join(nxt, [id_col, "pos"])
-    return (
-        anchor.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("n_phrase"))
         .orderBy(F.desc("n_phrase"), F.col(id_col))
         .limit(k)
     )

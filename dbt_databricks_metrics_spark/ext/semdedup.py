@@ -12,8 +12,9 @@ a semantic partition that callers often already have (the same
 clusters drive curation / mixing decisions).
 
 Pipeline: `kmeans_fit` → assign → self-join scoped by `cluster_id` →
-pairs with cosine ≥ τ → keep the lowest id per duplicate group (greedy,
-same keeper rule as `dedup.exact_dedup`).
+pairs with cosine ≥ τ (``id_a < id_b``, so dropping every ``id_b`` keeps
+the lowest id per duplicate group, the keeper rule of
+`dedup.exact_dedup`).
 
 Scale shape (100 TB posture): the pair join's key is `cluster_id`, so
 the shuffle moves each vector once; per-cluster fan-out is |cluster|²
@@ -91,22 +92,3 @@ def semantic_dup_pairs(
         )
         .filter(F.col("cosine") >= F.lit(float(threshold)))
     )
-
-
-def semantic_dedup(
-    df: DataFrame,
-    n_clusters: int = 8,
-    n_iter: int = 2,
-    threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: DataFrame | None = None,
-) -> DataFrame:
-    """Drop every vector that has a ≥ τ within-cluster neighbor with a
-    LOWER id (greedy keeper = lowest id, matching ``dedup.exact_dedup``).
-    Returns the surviving rows of *df*."""
-    pairs = semantic_dup_pairs(
-        df, n_clusters, n_iter, threshold, id_col, vec_col, centroids
-    )
-    doomed = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(doomed, id_col, "left_anti")

@@ -662,7 +662,8 @@ class Runner:
                 self.spark.sql(f"DROP TABLE IF EXISTS {model.name}")
                 writer.option("path", path).saveAsTable(model.name)
                 return self.spark.table(model.name)
-            writer.parquet(path)
+            # a crash mid-write must leave the previous table, not a partial one
+            publish_dir(path, writer.parquet)
             df = self.spark.read.parquet(path)
         df.createOrReplaceTempView(model.name)
         return df

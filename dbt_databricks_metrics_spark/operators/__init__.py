@@ -1,1 +1,1 @@
-from .salted import distinct_count_salted, salted_aggregate, salted_join, with_salt  # noqa: F401
+from .salted import distinct_count_salted, salted_join, with_salt  # noqa: F401

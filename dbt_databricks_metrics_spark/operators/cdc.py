@@ -33,8 +33,6 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..publish import publish_dir, recover_dir
-
 UPSERT = "upsert"
 DELETE = "delete"
 
@@ -101,72 +99,3 @@ def cdc_apply(
     untouched = base.join(changed_keys, key_cols, "left_anti")
     upserts = last.filter(F.col(op_col) == UPSERT).select(*base.columns)
     return untouched.unionByName(upserts)
-
-
-def cdc_fold_stream(
-    spark,
-    source_dir: str,
-    state_path: str,
-    checkpoint_dir: str,
-    key_cols: Sequence[str],
-    seq_col: str,
-    op_col: str = "op",
-    tiebreak_cols: Sequence[str] = (),
-    schema=None,
-):
-    """Maintain CDC state from an append-only change-feed directory.
-
-    The state is the LAST CHANGE per key — including delete tombstones,
-    which is what makes out-of-order delivery safe across micro-batches:
-    an older upsert arriving after a delete loses the per-key
-    ``latest_changes`` race against the stored tombstone instead of
-    resurrecting the key. Each fold is
-    ``state' = latest_changes(state ∪ batch)`` (one window over
-    state+batch — both keyed-entity-sized, never feed-history-sized),
-    published with ``publish.publish_dir``. Read the current table with
-    :func:`cdc_post_image`. `availableNow` gives scheduled-batch
-    semantics.
-
-    State publication is rename-based and therefore LOCAL-POSIX-FS ONLY
-    (object stores need a transactional table format instead —
-    Delta/Iceberg state tables at cluster scale): a crash mid-publish
-    leaves either the old or the new state on disk — never neither (see
-    ``publish.publish_dir``).
-    """
-    if schema is None:
-        schema = spark.read.parquet(source_dir).schema
-    stream = spark.readStream.schema(schema).parquet(source_dir)
-
-    def fold(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        s = batch_df.sparkSession
-        if recover_dir(state_path):
-            merged = s.read.parquet(state_path).unionByName(batch_df)
-        else:
-            merged = batch_df
-        new_state = latest_changes(merged, key_cols, seq_col, tiebreak_cols)
-        publish_dir(state_path, new_state.write.parquet)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def cdc_post_image(
-    spark,
-    state_path: str,
-    op_col: str = "op",
-    drop_cols: Sequence[str] = (),
-) -> DataFrame:
-    """The current table from folded CDC state: surviving upserts with
-    tombstones and change metadata dropped."""
-    recover_dir(state_path)
-    state = spark.read.parquet(state_path)
-    out = state.filter(F.col(op_col) == UPSERT).drop(op_col)
-    for c in drop_cols:
-        out = out.drop(c)
-    return out

@@ -13,13 +13,6 @@ key land on one task) and order-insensitive collects. Two remedies:
   with every salt value, and the join key becomes (key, salt) — the hot
   key's rows spread over S tasks. Deterministic salting (hash of a row id)
   keeps runs reproducible.
-
-* **Two-stage salted aggregation** (:func:`salted_aggregate`) — for
-  aggregations whose per-key state is large (e.g. ``collect_set``,
-  exact ``count(distinct)``): stage 1 aggregates (key, salt) partials,
-  stage 2 merges per key. For plain sums/counts this is equivalent to
-  what Spark's partial agg already does — use it only for heavy-state
-  aggs.
 """
 
 from __future__ import annotations
@@ -56,32 +49,6 @@ def salted_join(
     )
     out = fact_salted.join(dim_exploded, [on, "_salt"], how)
     return out.drop("_salt")
-
-
-def salted_aggregate(
-    df: DataFrame,
-    keys: Sequence[str],
-    salt_buckets: int = 16,
-    **named_aggs: tuple[str, str],
-) -> DataFrame:
-    """Two-stage aggregation for heavy-state aggregates under skew.
-
-    named_aggs: output_name=(stage1_expr, stage2_expr) where stage2_expr
-    references the stage-1 output by name, e.g.::
-
-        salted_aggregate(df, ["k"],
-            uniq=("collect_set(v)", "size(array_distinct(flatten(collect_list(uniq))))"))
-    """
-    salted = df.withColumn(
-        "_salt",
-        F.pmod(F.xxhash64(*[F.col(k).cast("string") for k in keys], F.monotonically_increasing_id()), F.lit(salt_buckets)),
-    )
-    stage1 = salted.groupBy(*[F.col(k) for k in keys], F.col("_salt")).agg(
-        *[F.expr(s1).alias(name) for name, (s1, _s2) in named_aggs.items()]
-    )
-    return stage1.groupBy(*[F.col(k) for k in keys]).agg(
-        *[F.expr(s2).alias(name) for name, (_s1, s2) in named_aggs.items()]
-    )
 
 
 def distinct_count_salted(

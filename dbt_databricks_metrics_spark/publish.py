@@ -1,9 +1,9 @@
 """Crash-safe publish of a state directory (LOCAL POSIX FS only).
 
-Every state writer — rollup builds and folds, incremental-model merges,
-SCD2 snapshots, CDC/CMS/dedup registries, compaction — replaces its
-directory through :func:`publish_dir`, and every reader that decides
-between reading and bootstrapping asks :func:`recover_dir` first.
+Every state writer — rollup builds and folds, table models,
+incremental-model merges, SCD2 snapshots — replaces its directory
+through :func:`publish_dir`, and every reader that decides between
+reading and bootstrapping asks :func:`recover_dir` first.
 
 Protocol: write ``<path>__tmp_<token>`` → take the ``<path>__lock``
 flock → rename the live dir aside to ``<path>__old_<token>`` → promote

@@ -8,13 +8,10 @@ DAG / metric-view layers are storage-agnostic, and all writes support
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from ..publish import publish_dir, recover_dir
-
 
 _FORMATS = ("parquet", "csv", "json", "orc")
 
@@ -38,60 +35,6 @@ def read_source(
     if fmt == "csv":
         options = {"header": "true", **({} if schema is not None else {"inferSchema": "true"}), **options}
     return reader.options(**options).format(fmt).load(path)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_mb: int = 256,
-    partition_by: Sequence[str] = (),
-) -> int:
-    """Small-file compaction: rewrite a parquet dir into ~``target_mb``
-    files, published with the crash-safe ``publish.publish_dir``: readers
-    see either the old or the new layout, never a mix, and a crash at any
-    step leaves a complete version that the next run (or any
-    ``recover_dir`` reader) adopts. Readers racing the rename window
-    itself can observe a missing path for an instant — a transactional
-    table format is the answer when even that is unacceptable.
-
-    The operational counterpart of the Runner's REBALANCE-on-write: long-
-    running ingestion (streaming folds, incremental appends) accretes
-    small files; at cluster scale the scan's task-scheduling overhead
-    then dominates I/O. Returns the number of files after compaction.
-
-    Partitioned layouts: pass the same ``partition_by`` the table was
-    written with — rows are rebalanced on those keys so each partition
-    value lands in few writers (AQE still splits skewed values).
-    """
-    import os
-
-    recover_dir(path)
-    df = spark.read.parquet(path)
-    size = sum(
-        os.path.getsize(os.path.join(root, f))
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
-    n_out = int(max(1, -(-size // (target_mb * 1024 * 1024))))  # ceil
-    if partition_by:
-        # hash on the partition keys into n_out tasks: each task writes
-        # only the values it holds, so total files stay ~n_out. The
-        # explicit count means NO AQE coalescing or skew-splitting here:
-        # a single hot value concentrates in one task/file — acceptable
-        # for an offline compaction pass, by design.
-        writer = df.repartition(n_out, *partition_by).write.partitionBy(
-            *partition_by
-        )
-    else:
-        writer = df.coalesce(n_out).write
-    publish_dir(path, writer.parquet)
-    return sum(
-        1
-        for root, _, files in os.walk(path)
-        for f in files
-        if f.endswith(".parquet")
-    )
 
 
 def write_sink(

@@ -15,7 +15,10 @@ place:
 * :func:`streaming_rollup` — Structured Streaming form: `readStream` over
   an append-only directory, `trigger(availableNow=True)`, `foreachBatch`
   folding each micro-batch with the same merge — exactly-once per batch
-  via the checkpoint dir.
+  via the checkpoint dir; the package's one `foreachBatch` fold.
+* :func:`fold_retractions` — the upsert/delete-aware batch fold: merge
+  the NEGATED partials of a change batch's pre-images with its
+  post-images' partials (``MetricEngine.refresh_cdc`` calls it).
 """
 
 from __future__ import annotations
@@ -250,58 +253,3 @@ def fold_retractions(
             )
 
     publish_dir(built.path, write)
-
-
-def streaming_rollup_cdc(
-    spark: SparkSession,
-    built: BuiltRollup,
-    changelog_dir: str,
-    checkpoint_dir: str,
-    schema=None,
-    op_col: str = "op",
-    image_col: str = "image",
-    max_files_per_trigger: int | None = None,
-):
-    """Maintain a rollup from a Debezium-style CHANGE LOG with Structured
-    Streaming: each row is one change image — ``op`` ∈ insert/delete/
-    update_before/update_after and ``image`` ∈ before/after marks which
-    side of the fold the row belongs to (inserts and update_after are
-    post-images; deletes and update_before are pre-images). Each
-    micro-batch folds through :func:`fold_retractions` (negated
-    pre-image partials), so the maintained state tracks upserts AND
-    deletes — the append-only :func:`streaming_rollup` cannot.
-    Exactly-once per batch via the checkpoint; ``availableNow`` gives
-    the scheduled-catch-up semantics.
-
-    The caller's log schema stays free-form: rows where
-    ``image_col = 'before'`` retract, everything else folds forward —
-    pass a projection upstream if the log encodes ops differently.
-    """
-    if schema is None:
-        schema = spark.read.parquet(changelog_dir).schema
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = reader.parquet(changelog_dir)
-    payload_cols = [c for c in stream.columns if c not in (op_col, image_col)]
-
-    def fold(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        # a NULL image would match NEITHER filter below and the change
-        # would be silently lost — refuse the batch instead
-        if not batch_df.filter(F.col(image_col).isNull()).isEmpty():
-            raise ValueError(
-                f"streaming_rollup_cdc: NULL {image_col!r} in change batch "
-                f"{batch_id} — every log row must be marked before/after"
-            )
-        before = batch_df.filter(F.col(image_col) == "before").select(*payload_cols)
-        after = batch_df.filter(F.col(image_col) != "before").select(*payload_cols)
-        fold_retractions(batch_df.sparkSession, built, before, after)
-
-    return (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )

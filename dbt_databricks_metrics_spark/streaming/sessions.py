@@ -1,79 +1,17 @@
-"""Streaming sessionization + windowed aggregation over event streams.
+"""Stateful sessionization and dedup over event streams.
 
 Structured Streaming counterparts of ``ext/sessionize.py``:
 
-* :func:`session_window_stats` — `F.session_window` (gap-merged sessions,
-  usable in batch AND streaming) with a watermark for late/out-of-order
-  events.
-* :func:`streaming_tumbling_counts` — watermarked tumbling-window agg.
-
-In streaming mode the watermark bounds state: sessions/windows older than
-the watermark are finalized and emitted; later events beyond it are
-dropped — the standard late-data contract.
+* :func:`stateful_sessionizer` — gap-based sessions folded in
+  ``applyInPandasWithState`` state, emitted when a successor event
+  closes them.
+* :func:`streaming_dedup` — exactly-once event dedup; a watermark bounds
+  the per-key state in streaming mode.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-
-def session_window_stats(
-    events: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-) -> DataFrame:
-    """Per-(user, session-window) aggregates via `F.session_window`.
-
-    Works identically on batch DataFrames (no watermark applied) and
-    streams (`readStream` input → append-mode emission after watermark).
-    """
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.session_window(F.col(ts_col), gap).alias("sw"), F.col(user_col))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("total_value"),
-            F.min(ts_col).alias("session_start"),
-            F.max(ts_col).alias("session_end"),
-        )
-        .select(
-            user_col,
-            F.col("sw.start").alias("window_start"),
-            F.col("sw.end").alias("window_end"),
-            "n_events",
-            "total_value",
-            "session_start",
-            "session_end",
-        )
-    )
-
-
-def streaming_tumbling_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "1 hour",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Watermarked tumbling-window event counts (append-mode compatible)."""
-    src = events
-    if events.isStreaming:
-        src = events.withWatermark(ts_col, watermark)
-    return (
-        src.groupBy(F.window(F.col(ts_col), window).alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), F.sum("value").alias("total_value"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "total_value",
-        )
-    )
 
 
 def stateful_sessionizer(

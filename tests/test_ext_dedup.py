@@ -42,7 +42,6 @@ def docs_with_dups(docs):
 
 def test_exact_dedup_no_dups_is_identity(docs):
     assert dedup.exact_dedup(docs).count() == docs.count()
-    assert dedup.exact_duplicate_groups(docs).count() == 0
 
 
 def test_exact_dedup_case_whitespace(spark, docs):
@@ -58,10 +57,6 @@ def test_exact_dedup_case_whitespace(spark, docs):
     kept = dedup.exact_dedup(u)
     assert kept.count() == docs.count()
     assert kept.filter(F.col("doc_id") >= 20000).count() == 0
-    groups = dedup.exact_duplicate_groups(u)
-    assert groups.count() == 20
-    row = groups.orderBy("doc_ids").first()
-    assert len(row["doc_ids"]) == 2
 
 
 def test_ngram_jaccard_pairs_finds_near_dups(docs_with_dups):
@@ -264,80 +259,6 @@ class TestParagraphDedup:
         for r in out:
             if r["cid"] >= 50:
                 assert r["n_paras_kept"] == 0 and r["text_dedup"] == ""
-
-    def test_drop_common_paragraphs(self, spark):
-        from dbt_databricks_metrics_spark.ext.dedup import drop_common_paragraphs
-
-        rows = [
-            (1, "footer\nalpha"),
-            (2, "footer\nbeta\nfooter"),  # repeats within one doc: df=1 per doc
-            (3, "footer\ngamma"),
-            (4, "alpha\ndelta"),  # alpha df=2 < 3 -> kept
-        ]
-        docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-        got = {
-            r["doc_id"]: r
-            for r in drop_common_paragraphs(docs, min_df=3, hash_fn="md5").collect()
-        }
-        assert got[1]["text_clean"] == "alpha"
-        assert got[2]["text_clean"] == "beta"
-        assert got[3]["text_clean"] == "gamma"
-        assert got[4]["text_clean"] == "alpha\ndelta"
-        assert got[2]["n_paras"] == 3 and got[2]["n_paras_kept"] == 1
-
-    def test_drop_common_validates_min_df(self, spark):
-        from dbt_databricks_metrics_spark.ext.dedup import drop_common_paragraphs
-
-        docs = spark.createDataFrame([(1, "x")], "doc_id BIGINT, text STRING")
-        with pytest.raises(ValueError, match="min_df"):
-            drop_common_paragraphs(docs, min_df=1)
-
-    def test_dedup_against_registry_incremental(self, spark, tmp_path):
-        from dbt_databricks_metrics_spark.ext.dedup import dedup_against_registry
-
-        reg = str(tmp_path / "registry")
-        shard1 = spark.createDataFrame(
-            [(1, "alpha"), (2, "beta"), (3, "ALPHA  ")],  # 3 normalizes onto 1
-            "doc_id BIGINT, text STRING",
-        )
-        kept1 = {r["doc_id"] for r in dedup_against_registry(shard1, reg).collect()}
-        assert kept1 == {1, 2}
-        shard2 = spark.createDataFrame(
-            [(10, "beta"), (11, "gamma"), (12, "gamma")],
-            "doc_id BIGINT, text STRING",
-        )
-        kept2 = {r["doc_id"] for r in dedup_against_registry(shard2, reg).collect()}
-        assert kept2 == {11}  # beta known from shard1; 12 loses to 11 in-shard
-        # registry now holds 3 fingerprints; replay of shard1 keeps nothing new
-        kept1b = {r["doc_id"] for r in dedup_against_registry(
-            spark.createDataFrame([(20, "alpha")], "doc_id BIGINT, text STRING"), reg
-        ).collect()}
-        assert kept1b == set()
-        assert spark.read.parquet(reg).count() == 3
-
-    def test_dedup_against_registry_restores_crashed_promote(self, spark, tmp_path):
-        """A crash between rename-aside and promote leaves only an __old_
-        aside; the next fold must adopt it instead of treating the
-        registry as empty (which would re-admit every known duplicate and
-        then sweep away the only surviving copy) — ADVICE r3 (medium)."""
-        import os
-
-        from dbt_databricks_metrics_spark.ext.dedup import dedup_against_registry
-
-        reg = str(tmp_path / "registry")
-        shard1 = spark.createDataFrame(
-            [(1, "alpha"), (2, "beta")], "doc_id BIGINT, text STRING"
-        )
-        dedup_against_registry(shard1, reg).collect()
-        # simulate the crash window: state renamed aside, promote never ran
-        os.rename(reg, reg + "__old_deadbeef")
-        shard2 = spark.createDataFrame(
-            [(10, "alpha"), (11, "gamma")], "doc_id BIGINT, text STRING"
-        )
-        kept = {r["doc_id"] for r in dedup_against_registry(shard2, reg).collect()}
-        assert kept == {11}  # alpha known from shard1 — NOT re-admitted
-        assert spark.read.parquet(reg).count() == 3
-        assert not [p for p in os.listdir(tmp_path) if "__old_" in p]
 
 
 def test_containment_pairs_snippet_in_document(spark):

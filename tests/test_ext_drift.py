@@ -8,17 +8,24 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_databricks_metrics_spark.ext.drift import drift_report, psi, welch_t
+from dbt_databricks_metrics_spark.ext.drift import drift_report, welch_t
 
 
 def _df(spark, vals, col="x"):
     return spark.createDataFrame([(float(v),) for v in vals], [col])
 
 
+def _scores(a, b, col, lo, hi, bins):
+    """PSI (sum of psi_term) and binned KS (max cdf_gap) of drift_report."""
+    return drift_report(a, b, col, lo, hi, bins=bins).agg(
+        F.sum("psi_term").alias("psi"), F.max("cdf_gap").alias("ks_binned")
+    ).first()
+
+
 def test_identical_distributions_score_zero(spark):
     vals = [i % 10 for i in range(1000)]
     a, b = _df(spark, vals), _df(spark, vals)
-    row = psi(a, b, "x", 0, 10, bins=10).first()
+    row = _scores(a, b, "x", 0, 10, bins=10)
     assert row["psi"] == pytest.approx(0.0, abs=1e-12)
     assert row["ks_binned"] == pytest.approx(0.0, abs=1e-12)
 
@@ -27,7 +34,7 @@ def test_shifted_distribution_scores_high(spark):
     rng = random.Random(7)
     a = _df(spark, [rng.gauss(0, 1) for _ in range(4000)])
     b = _df(spark, [rng.gauss(1.5, 1) for _ in range(4000)])
-    row = psi(a, b, "x", -4, 6, bins=20).first()
+    row = _scores(a, b, "x", -4, 6, bins=20)
     assert row["psi"] > 0.25  # "shifted" per the rule of thumb
     assert 0.4 < row["ks_binned"] < 0.9  # true KS for 1.5 sigma ~ 0.55
 
@@ -50,7 +57,7 @@ def test_psi_matches_duckdb(spark, sf_dir, duck):
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     a = ev.filter("event_type = 'click'")
     b = ev.filter("event_type = 'purchase'")
-    got = psi(a, b, "value", 0, 100, bins=10).first()
+    got = _scores(a, b, "value", 0, 100, bins=10)
     exp = duck.execute("""
         WITH binned AS (
           SELECT least(greatest(CAST(floor(value / 10.0) AS INT), 0), 9) AS bin,
@@ -102,9 +109,9 @@ def test_welch_t_symmetry_and_null_effect(spark):
 def test_validation(spark):
     a = _df(spark, [1, 2])
     with pytest.raises(ValueError, match="bins"):
-        psi(a, a, "x", 0, 1, bins=1)
+        drift_report(a, a, "x", 0, 1, bins=1)
     with pytest.raises(ValueError, match="hi > lo"):
-        psi(a, a, "x", 5, 5)
+        drift_report(a, a, "x", 5, 5)
 
 
 def test_embedding_drift_identical_and_orthogonal(spark):

@@ -29,14 +29,13 @@ def test_weights_prefer_target_language(spark, docs):
 
 def test_md5_and_xxhash_modes_agree_on_ranking(spark, docs):
     target = docs.filter(F.col("lang") == "en")
-    top_md5 = {
-        r["doc_id"]
-        for r in dsir.dsir_select(docs, target, 50, hash_fn="md5").collect()
-    }
-    top_xx = {
-        r["doc_id"]
-        for r in dsir.dsir_select(docs, target, 50, hash_fn="xxhash64").collect()
-    }
+
+    def top50(hash_fn):
+        w = dsir.dsir_weights(docs, target, hash_fn=hash_fn)
+        top = w.orderBy(F.desc("log_weight"), "doc_id").limit(50)
+        return {r["doc_id"] for r in top.collect()}
+
+    top_md5, top_xx = top50("md5"), top50("xxhash64")
     # bucketed hashing perturbs individual weights but not the signal:
     # the two top-50 selections overlap heavily
     assert len(top_md5 & top_xx) >= 40
@@ -57,18 +56,6 @@ def test_empty_and_null_text_get_null_weight(spark):
     assert rows[2]["n_features"] == 0 and rows[2]["log_weight"] is None
     assert rows[3]["n_features"] == 0 and rows[3]["log_weight"] is None
     assert rows[1]["log_weight"] is not None
-
-
-def test_dsir_select_keeps_raw_columns_and_orders(spark, docs):
-    target = docs.filter(F.col("lang") == "en")
-    sel = dsir.dsir_select(docs, target, 10)
-    rows = sel.collect()
-    assert len(rows) == 10
-    ws = [r["log_weight"] for r in rows]
-    assert ws == sorted(ws, reverse=True)
-    assert {"doc_id", "text", "lang", "source", "log_weight"} <= set(
-        sel.columns
-    )
 
 
 def test_dsir_unknown_hash_fn(spark, docs):

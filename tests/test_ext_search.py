@@ -49,12 +49,19 @@ def test_keyword_search_vs_oracle(docs, duck):
     assert_df_matches_oracle(df, duck, ORACLE)
 
 
-def test_rarer_terms_score_higher(docs):
-    n = docs.count()
-    dfs = search.term_document_frequencies(docs, ["spark", "the"])
+def test_rarer_terms_score_higher(spark):
+    df = spark.createDataFrame(
+        [(1, "rare"), (2, "common"), (3, "common word"), (4, "common again")],
+        "doc_id long, text string",
+    )
+    got = {
+        r["doc_id"]: r["score"]
+        for r in search.keyword_search(df, "rare common", k=10).collect()
+    }
     # idf must be monotone decreasing in document frequency
-    if dfs["spark"] < dfs["the"]:
-        assert search.idf(n, dfs["spark"]) > search.idf(n, dfs["the"])
+    assert got[1] > got[2] == got[3] == got[4] > 0
+    assert got[1] == pytest.approx(search.idf(4, 1), abs=1e-6)
+    assert got[2] == pytest.approx(search.idf(4, 3), abs=1e-6)
 
 
 def test_no_match_excluded(spark):

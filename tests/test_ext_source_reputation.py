@@ -53,18 +53,6 @@ def test_flags_are_integer_cross_multiplications(spark, docs):
     assert not row["keep"]
 
 
-def test_gate_by_source_keeps_only_kept(spark, docs):
-    rep = pipeline.source_reputation(docs)
-    gated = pipeline.gate_by_source(docs, rep)
-    kept_sources = {
-        r["source"] for r in rep.filter(F.col("keep")).collect()
-    }
-    got_sources = {r["source"] for r in gated.select("source").distinct().collect()}
-    assert got_sources == kept_sources
-    n_expected = docs.filter(F.col("source").isin(list(kept_sources))).count()
-    assert gated.count() == n_expected
-
-
 def test_quality_micro_matches_rowwise_round(spark, docs):
     rep = pipeline.source_reputation(docs)
     scored = ts.with_quality_score(docs)

@@ -200,29 +200,6 @@ def test_shard_plan_validates_n_shards(spark):
         packing.shard_plan(df, 0)
 
 
-def test_phrase_search_indexed_matches_scan(spark):
-    df = spark.createDataFrame(
-        [
-            (1, "big red fox big red fox jumps"),
-            (2, "big red herring and a big red fox"),
-            (3, "red fox big"),
-            (4, "Big, RED fox!"),
-        ],
-        "doc_id BIGINT, text STRING",
-    )
-    terms = ["big", "red", "fox"]
-    post = search.phrase_positions(df, terms)
-    via_index = {
-        r["doc_id"]: r["n_phrase"]
-        for r in search.phrase_search_indexed(post, terms, k=10).collect()
-    }
-    via_scan = {
-        r["doc_id"]: r["n_phrase"]
-        for r in search.phrase_search(df, "big red fox", k=10).collect()
-    }
-    assert via_index == via_scan == {1: 2, 2: 1, 4: 1}
-
-
 # ------------------------------------------------- incremental + budget
 
 
@@ -282,126 +259,6 @@ def test_select_token_budget_whole_corpus_when_budget_large(spark):
         "doc_id BIGINT, score INT, text STRING",
     )
     assert select_token_budget(df, 10_000, "score").count() == 6
-
-
-# ------------------------------------------------ near-dup registry
-
-
-def test_neardup_registry_across_shards(spark, tmp_path):
-    reg = str(tmp_path / "neardup_reg")
-    long_a = "the quick brown fox jumps over the lazy dog " * 6
-    long_b = "pack my box with five dozen liquor jugs today " * 6
-    shard1 = spark.createDataFrame(
-        [(1, long_a), (2, long_b)], "doc_id BIGINT, text STRING"
-    )
-    kept1 = dedup.neardup_against_registry(shard1, reg, threshold=0.8)
-    assert sorted(r["doc_id"] for r in kept1.collect()) == [1, 2]
-
-    # shard 2: a near-copy of doc 1 (tiny suffix edit), one fresh doc,
-    # and an in-shard near-dup pair (4 ~ 5, keep-lowest-id)
-    fresh = "sphinx of black quartz judge my vow immediately " * 6
-    shard2 = spark.createDataFrame(
-        [
-            (3, long_a + " tail edit"),
-            (4, fresh),
-            (5, fresh + " x"),
-        ],
-        "doc_id BIGINT, text STRING",
-    )
-    kept2 = dedup.neardup_against_registry(shard2, reg, threshold=0.8)
-    assert sorted(r["doc_id"] for r in kept2.collect()) == [4]
-
-    # re-running the same shard is idempotent: 4 is now registered, so
-    # it survives as an exact registry match?? no — 4 matches itself in
-    # the registry and is dropped; uniqueness of ids across folds holds
-    kept2b = dedup.neardup_against_registry(shard2, reg, threshold=0.8)
-    assert kept2b.count() == 0
-
-
-def test_neardup_registry_unrelated_docs_survive(spark, tmp_path):
-    reg = str(tmp_path / "neardup_reg2")
-    d1 = spark.createDataFrame(
-        [(10, "alpha beta gamma delta epsilon zeta " * 8)],
-        "doc_id BIGINT, text STRING",
-    )
-    dedup.neardup_against_registry(d1, reg)
-    d2 = spark.createDataFrame(
-        [(11, "one two three four five six seven eight " * 8)],
-        "doc_id BIGINT, text STRING",
-    )
-    kept = dedup.neardup_against_registry(d2, reg)
-    assert [r["doc_id"] for r in kept.collect()] == [11]
-
-
-def test_neardup_fold_stream_matches_shard_loop(spark, tmp_path):
-    """Streaming the corpus through the near-dup registry keeps exactly
-    the unique docs a manual shard loop would keep."""
-    a = "the quick brown fox jumps over the lazy dog tonight " * 5
-    b = "pack my box with five dozen liquor jugs right away " * 5
-    c = "sphinx of black quartz judge my vow this instant ok " * 5
-    src = str(tmp_path / "nd_src")
-    spark.createDataFrame(
-        [(1, a), (2, b)], "doc_id BIGINT, text STRING"
-    ).write.mode("overwrite").parquet(src)
-    spark.createDataFrame(
-        [(3, a + " tiny edit"), (4, c)], "doc_id BIGINT, text STRING"
-    ).write.mode("append").parquet(src)
-
-    kept_dir = str(tmp_path / "nd_kept")
-    q = dedup.neardup_fold_stream(
-        spark,
-        src,
-        str(tmp_path / "nd_reg"),
-        kept_dir,
-        str(tmp_path / "nd_ckpt"),
-        threshold=0.8,
-    )
-    assert q.awaitTermination(300)
-    kept = {r["doc_id"] for r in spark.read.parquet(kept_dir).collect()}
-    # doc 3 near-duplicates doc 1 (drops whichever batch ordering put it
-    # after 1's fold — availableNow folds files in order); 1, 2, 4 stay
-    assert 1 in kept and 2 in kept and 4 in kept
-    assert 3 not in kept
-
-
-def test_neardup_registry_heals_crash_between_promotes(spark, tmp_path, monkeypatch):
-    """ADVICE r4: a crash AFTER the sigs promote but BEFORE the bands
-    promote must be healed by re-running the shard — the band fold's
-    fresh ids anti-join reg_bands (which lacks the shard), not reg_sigs
-    (which already has it). Without that, the shard's docs stay
-    permanently band-undiscoverable and later near-dups pass dedup."""
-    reg = str(tmp_path / "neardup_reg_crash")
-    a = "the quick brown fox jumps over the lazy dog tonight " * 6
-    b = "pack my box with five dozen liquor jugs right away " * 6
-    shard1 = spark.createDataFrame([(1, a)], "doc_id BIGINT, text STRING")
-    dedup.neardup_against_registry(shard1, reg, threshold=0.8)
-
-    # shard 2: crash between the sigs promote and the bands promote
-    shard2 = spark.createDataFrame([(2, b)], "doc_id BIGINT, text STRING")
-    real_publish = dedup.publish_dir
-    calls = {"n": 0}
-
-    def crashing_publish(path, write):
-        calls["n"] += 1
-        if calls["n"] == 2:  # second publish of this fold = bands
-            raise RuntimeError("simulated crash before bands promote")
-        return real_publish(path, write)
-
-    # the fold calls the publish_dir name bound in ext.dedup
-    monkeypatch.setattr(dedup, "publish_dir", crashing_publish)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        dedup.neardup_against_registry(shard2, reg, threshold=0.8)
-    monkeypatch.setattr(dedup, "publish_dir", real_publish)
-
-    # re-run the shard: doc 2 is already in sigs but must now be BANDED
-    dedup.neardup_against_registry(shard2, reg, threshold=0.8)
-
-    # a near-copy of doc 2 must be discovered through the band index
-    shard3 = spark.createDataFrame(
-        [(3, b + " tail")], "doc_id BIGINT, text STRING"
-    )
-    kept3 = dedup.neardup_against_registry(shard3, reg, threshold=0.8)
-    assert kept3.count() == 0, "near-dup of the crash-healed doc survived"
 
 
 def test_keep_best_rejects_out_of_range_ids(spark):

@@ -140,49 +140,6 @@ def test_engine_refresh_cdc_end_to_end(spark, tmp_path):
     assert got == {"A": (2, 3000), "B": (2, 1000)}
 
 
-def test_streaming_rollup_cdc_availablenow(spark, tmp_path):
-    from dbt_databricks_metrics_spark.streaming.refresh import (
-        streaming_rollup_cdc,
-    )
-
-    initial = _rows(spark, [(1, "A", 10.0), (2, "B", 5.0)])
-    initial.createOrReplaceTempView("ret_src")
-    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "whs"))
-    mv = eng.register(MetricViewSpec.from_yaml(SPEC, name="mv_ret"))
-    eng.refresh("mv_ret")
-    built = eng.catalog.get("mv_ret").state.rollups["by_seg"]
-
-    # Debezium-style change log: update row 1 (10 -> 15), delete row 2,
-    # insert row 3
-    log = spark.createDataFrame(
-        [
-            ("update_before", "before", 1, "A", 10.0),
-            ("update_after", "after", 1, "A", 15.0),
-            ("delete", "before", 2, "B", 5.0),
-            ("insert", "after", 3, "C", 4.0),
-        ],
-        "op string, image string, id long, seg string, price double",
-    )
-    logdir = str(tmp_path / "changelog")
-    log.write.parquet(logdir)
-    q = streaming_rollup_cdc(
-        spark, built, logdir, str(tmp_path / "ckpt")
-    )
-    q.awaitTermination(120)
-
-    folded = spark.read.parquet(built.path)
-    dec = built.decompositions
-    got = {
-        r["seg"]: (r["n"], r["cents"])
-        for r in folded.select(
-            "seg",
-            F.expr(dec["n"].finalize).alias("n"),
-            F.expr(dec["cents"].finalize).alias("cents"),
-        ).collect()
-    }
-    assert got == {"A": (1, 1500), "C": (1, 400)}  # B fully retracted
-
-
 def test_fold_retractions_requires_count_star(spark, tmp_path):
     # review fix: count_if/count(col) partials can be 0 for LIVE groups —
     # pruning on them would delete real data; a count(*) partial is the
@@ -254,51 +211,6 @@ materialization:
         )
     # the sum-family rollup was NOT folded (atomic refusal)
     assert spark.read.parquet(ok_built.path).collect() == before_fold
-
-
-def test_streaming_cdc_rejects_null_image_and_bootstraps(spark, tmp_path):
-    import shutil
-
-    from dbt_databricks_metrics_spark.streaming.refresh import (
-        streaming_rollup_cdc,
-    )
-
-    _rows(spark, [(1, "A", 10.0)]).createOrReplaceTempView("ret_src")
-    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "whn"))
-    eng.register(MetricViewSpec.from_yaml(SPEC, name="mv_ret"))
-    eng.refresh("mv_ret")
-    built = eng.catalog.get("mv_ret").state.rollups["by_seg"]
-
-    # bootstrap: missing rollup path must not kill the stream
-    shutil.rmtree(built.path)
-    log = spark.createDataFrame(
-        [("insert", "after", 1, "A", 10.0), ("insert", "after", 2, "B", 4.0)],
-        "op string, image string, id long, seg string, price double",
-    )
-    d1 = str(tmp_path / "log1")
-    log.write.parquet(d1)
-    q = streaming_rollup_cdc(spark, built, d1, str(tmp_path / "ck1"))
-    q.awaitTermination(120)
-    dec = built.decompositions
-    got = {
-        r["seg"]: r["n"]
-        for r in spark.read.parquet(built.path)
-        .select("seg", F.expr(dec["n"].finalize).alias("n"))
-        .collect()
-    }
-    assert got == {"A": 1, "B": 1}
-
-    # NULL image: the batch is refused, not silently dropped
-    bad = spark.createDataFrame(
-        [(None, None, 3, "C", 1.0)],
-        "op string, image string, id long, seg string, price double",
-    )
-    d2 = str(tmp_path / "log2")
-    bad.write.parquet(d2)
-    q2 = streaming_rollup_cdc(spark, built, d2, str(tmp_path / "ck2"))
-    with pytest.raises(Exception, match="NULL 'image'|StreamingQueryException"):
-        q2.awaitTermination(120)
-        raise RuntimeError(str(q2.exception()))
 
 
 def test_fold_retractions_refuses_midhistory_bootstrap(spark, tmp_path):

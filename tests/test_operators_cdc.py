@@ -92,73 +92,6 @@ def test_latest_changes_one_row_per_key(spark, sf_dir):
     assert last.count() == ev.select("user_id").distinct().count()
 
 
-def test_cdc_fold_stream_out_of_order(spark, tmp_path):
-    """Streaming fold over an out-of-order feed: tombstones stop stale
-    upserts from resurrecting keys; post-image == batch apply of the
-    whole feed."""
-    import time
-
-    from dbt_databricks_metrics_spark.operators.cdc import (
-        cdc_fold_stream,
-        cdc_post_image,
-    )
-
-    cols = "id long, name string, val double, seq long, op string, change_id long"
-    # batch 1 (arrives first): newer changes, including a delete of id 2
-    first = spark.createDataFrame(
-        [
-            (1, "new", 2.0, 10, "upsert", 1),
-            (2, None, None, 12, "delete", 2),
-            (3, "c", 3.0, 5, "upsert", 3),
-        ],
-        cols,
-    )
-    # batch 2 (arrives later): OLDER seq for ids 1 and 2 — must lose
-    second = spark.createDataFrame(
-        [
-            (1, "stale", 1.0, 9, "upsert", 4),
-            (2, "zombie", 9.0, 11, "upsert", 5),
-            (4, "d", 4.0, 1, "upsert", 6),
-        ],
-        cols,
-    )
-    src = str(tmp_path / "cdc_src")
-    first.coalesce(1).write.mode("overwrite").parquet(src)
-    state = str(tmp_path / "cdc_state")
-    q1 = cdc_fold_stream(
-        spark, src, state, str(tmp_path / "ck"), ["id"], "seq",
-        tiebreak_cols=["change_id"],
-    )
-    assert q1.awaitTermination(300)
-    time.sleep(1.1)  # parquet mtime granularity: make the append a new file
-    second.coalesce(1).write.mode("append").parquet(src)
-    q2 = cdc_fold_stream(
-        spark, src, state, str(tmp_path / "ck"), ["id"], "seq",
-        tiebreak_cols=["change_id"],
-    )
-    assert q2.awaitTermination(300)
-
-    got = {
-        (r["id"], r["name"], r["val"])
-        for r in cdc_post_image(
-            spark, state, drop_cols=["seq", "change_id"]
-        ).collect()
-    }
-    # id 1 keeps 'new' (stale seq 9 < 10); id 2 stays deleted (zombie 11 < 12)
-    assert got == {(1, "new", 2.0), (3, "c", 3.0), (4, "d", 4.0)}
-
-    # equivalence with one-shot batch apply over the full feed
-    full = first.unionByName(second)
-    base = spark.createDataFrame([], "id long, name string, val double")
-    want = {
-        (r["id"], r["name"], r["val"])
-        for r in cdc_apply(
-            base, full, ["id"], "seq", tiebreak_cols=["change_id"]
-        ).collect()
-    }
-    assert got == want
-
-
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 

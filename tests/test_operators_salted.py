@@ -1,4 +1,4 @@
-"""Salted join / aggregation correctness: salting must never change
+"""Salted join / distinct-count correctness: salting must never change
 results, only data distribution."""
 
 from __future__ import annotations
@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 
 from dbt_databricks_metrics_spark.operators.salted import (
     distinct_count_salted,
-    salted_aggregate,
     salted_join,
 )
 from dbt_databricks_metrics_spark.sources import load_table
@@ -52,28 +51,6 @@ def test_salted_join_inner(spark, sf_dir, skewed):
         skewed, c, on="cust", salt_buckets=4, how="inner", fact_id_cols=["o_orderkey"]
     ).count()
     assert plain_n == salted_n
-
-
-def test_salted_aggregate_collect_set(spark, sf_dir, skewed):
-    expected = {
-        r["cust"]: r["u"]
-        for r in skewed.groupBy("cust")
-        .agg(F.size(F.collect_set("o_orderstatus")).alias("u"))
-        .collect()
-    }
-    got = {
-        r["cust"]: r["uniq"]
-        for r in salted_aggregate(
-            skewed,
-            ["cust"],
-            salt_buckets=8,
-            uniq=(
-                "collect_set(o_orderstatus)",
-                "size(array_distinct(flatten(collect_list(uniq))))",
-            ),
-        ).collect()
-    }
-    assert expected == got
 
 
 def test_distinct_count_salted(spark, sf_dir, skewed):

@@ -106,7 +106,9 @@ def test_sampling_partition_invariance_property(spark, keys):
     df7 = spark.createDataFrame([(k,) for k in keys], "doc_id long").repartition(7)
     pick = lambda df: {
         r["doc_id"]
-        for r in sampling.deterministic_sample(df, 0.4, key_col="doc_id").collect()
+        for r in sampling.train_test_split(df, (0.4, 0.6), ("keep", "drop"))
+        .filter("split = 'keep'")
+        .collect()
     }
     assert pick(df1) == pick(df7)
 

@@ -2,7 +2,7 @@
 
 Every state writer replaces its directory through ``publish_dir``; these
 tests inject a failure at each step of the protocol — the tmp write, the
-rename-aside, the promote and the aside delete — into four of its
+rename-aside, the promote and the aside delete — into three of its
 callers, then check that ``recover_dir`` finds a complete old or new
 version and that the next successful publish leaves no debris.
 """
@@ -142,78 +142,41 @@ class _FoldRetractions(_RollupBuild):
             self.publish()
 
 
-class _CdcFoldStream:
-    """A ``cdc_fold_stream`` micro-batch over a second change file."""
-
-    SCHEMA = "id long, v string, seq long, op string"
+class _TableModel:
+    """A non-bucketed ``table`` model rebuilt by ``Runner.run``."""
 
     def __init__(self, spark, tmp_path: Path):
+        from dbt_databricks_metrics_spark.models import ModelRegistry
+
         self.spark = spark
-        self.src = str(tmp_path / "feed")
-        self.ckpt = str(tmp_path / "ckpt")
-        self.path = str(tmp_path / "state")
-        self._append([(1, "a", 1, "upsert"), (2, "b", 1, "upsert")])
-        self._run()
-        self._append([(1, "a2", 2, "upsert"), (2, None, 2, "delete")])
+        self.reg = ModelRegistry()
+        self.n = 3
 
-    def _append(self, rows):
-        self.spark.createDataFrame(rows, self.SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(self.src)
+        @self.reg.model("tbl", materialized="table")
+        def tbl(spark_, ref):
+            return spark_.range(self.n).select("id")
 
-    def _run(self):
-        from dbt_databricks_metrics_spark.operators.cdc import cdc_fold_stream
-
-        q = cdc_fold_stream(
-            self.spark, self.src, self.path, self.ckpt, ["id"], "seq",
-            schema=self.SCHEMA,
-        )
-        q.awaitTermination(120)
-        assert not q.isActive
-
-    publish = _run
-
-    def retry(self, committed: bool):
-        # the failed micro-batch never reached the checkpoint's commit log,
-        # so the restart replays it; a latest-change fold is idempotent
-        self._run()
-
-    def read(self):
-        return sorted(
-            tuple(r) for r in self.spark.read.parquet(self.path).collect()
-        )
-
-
-class _Compaction:
-    """``compact_parquet`` of a 20-file table; versions differ in layout."""
-
-    def __init__(self, spark, tmp_path: Path):
-        self.spark = spark
-        self.path = str(tmp_path / "frag")
-        spark.range(2000).repartition(20).write.parquet(self.path)
+        self.wh = str(tmp_path / "wh")
+        self.path = os.path.join(self.wh, "tbl")
+        self.publish()
+        self.n = 5
 
     def publish(self):
-        from dbt_databricks_metrics_spark.sources.readers import compact_parquet
+        from dbt_databricks_metrics_spark.models import Runner
 
-        compact_parquet(self.spark, self.path)
+        Runner(self.spark, self.reg, warehouse_dir=self.wh).run()
 
     def retry(self, committed: bool):
-        self.publish()
+        self.publish()  # a table model is rebuilt in full
 
     def read(self):
-        n_files = sum(
-            f.endswith(".parquet") for _, _, fs in os.walk(self.path) for f in fs
-        )
-        ids = sorted(r[0] for r in self.spark.read.parquet(self.path).collect())
-        assert ids == list(range(2000))
-        return n_files
+        return sorted(r[0] for r in self.spark.read.parquet(self.path).collect())
 
 
 CALLERS = {
     "rollup_build": _RollupBuild,
     "fold_retractions": _FoldRetractions,
-    "cdc_fold_stream": _CdcFoldStream,
-    "compact_parquet": _Compaction,
+    "table_model": _TableModel,
 }
 
 
@@ -243,26 +206,18 @@ def test_publish_to_trailing_slash_path(spark, tmp_path):
     """A state path given with a trailing ``/`` publishes beside itself:
     renaming the dir into its own ``__old_`` child failed with EINVAL and
     left the lock and tmp dirs inside the live state."""
-    from dbt_databricks_metrics_spark.ext.dedup import dedup_against_registry
-
-    schema = "doc_id long, text string"
-    reg = str(tmp_path / "reg")
-    first = spark.createDataFrame(
-        [(1, "alpha doc"), (2, "beta doc"), (3, "alpha doc")], schema
-    )
-    second = spark.createDataFrame([(4, "Alpha  doc"), (5, "gamma doc")], schema)
-    kept1 = {r["doc_id"] for r in dedup_against_registry(first, reg + "/").collect()}
-    kept2 = {r["doc_id"] for r in dedup_against_registry(second, reg + "/").collect()}
-    assert (kept1, kept2) == ({1, 2}, {5})
-    assert sorted(r["doc_id"] for r in spark.read.parquet(reg).collect()) == [1, 2, 5]
-    assert sorted(os.listdir(tmp_path)) == ["reg", "reg__lock"]
-    assert not [n for n in os.listdir(reg) if "__" in n]
-
     from dbt_databricks_metrics_spark.publish import publish_dir, recover_dir
 
-    publish_dir(reg + "/", spark.range(3).write.parquet)
+    reg = str(tmp_path / "reg")
+    for n in (2, 3):  # bootstrap, then replace
+        publish_dir(reg + "/", spark.range(n).write.parquet)
+        assert recover_dir(reg + "/")
+        assert sorted(os.listdir(tmp_path)) == ["reg", "reg__lock"]
+        assert not [x for x in os.listdir(reg) if "__" in x]
+        assert spark.read.parquet(reg).count() == n
+    # a crash between the rename-aside and the promote leaves only the aside
+    os.rename(reg, reg + "__old_crashed")
     assert recover_dir(reg + "/")
-    assert sorted(os.listdir(tmp_path)) == ["reg", "reg__lock"]
     assert spark.read.parquet(reg).count() == 3
 
 

@@ -102,42 +102,6 @@ def test_streaming_rollup_availablenow(engine, spark, tmp_path):
     assert _rows(spark.read.parquet(out_path)) == full
 
 
-def test_session_window_stats_batch(spark, sf_dir):
-    """F.session_window session count ≈ the lag-based sessionize count
-    (identical gap semantics on microsecond data)."""
-    from dbt_databricks_metrics_spark.ext import sessionize
-
-    ev = load_table(spark, sf_dir, "events")
-    sw = ssessions.session_window_stats(ev, gap="30 minutes")
-    lag_based = sessionize.session_stats(ev, gap_minutes=30)
-    assert sw.count() == lag_based.count()
-    # totals conserved
-    a = sw.agg(F.sum("n_events")).first()[0]
-    b = ev.count()
-    assert a == b
-
-
-def test_streaming_session_window(spark, sf_dir, tmp_path):
-    """Same aggregation through an actual readStream (availableNow)."""
-    ev = load_table(spark, sf_dir, "events")
-    src_dir = str(tmp_path / "ev_src")
-    ev.write.mode("overwrite").parquet(src_dir)
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    out = ssessions.session_window_stats(stream, gap="30 minutes", watermark="1 hour")
-    q = (
-        out.writeStream.format("memory")
-        .queryName("sess_stream")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT count(*) FROM sess_stream").first()[0]
-    batch = ssessions.session_window_stats(ev, gap="30 minutes").count()
-    assert got == batch
-
-
 def test_stateful_sessionizer_matches_batch(spark, sf_dir, tmp_path):
     """applyInPandasWithState sessionizer: closed sessions emitted by the
     stream must equal the batch sessionize result minus each user's final
