@@ -147,14 +147,21 @@ class MetricView:
         counterpart of ``query_routed``'s route string. Returns a dict:
         ``route`` (``query_routed``'s string less any compile-time
         ``+grain:`` suffix), ``candidates`` (every rollup with its stored
-        row count and whether/why it was eligible), and ``reason``
+        row count and whether/why it was eligible), ``reason``
         (windowed measures, unresolved WHERE columns, no covering rollup,
-        …). It reads the same :meth:`RollupManager.route` record that
-        ``query_routed`` compiles. Pure metadata — nothing is executed or
-        logged."""
+        …) and ``serving`` (``tier``: ``driver`` when the serving rollup
+        is answered on the driver with no Spark job, else ``spark``; its
+        stored ``n_rows``; the row ``bound`` of the driver tier). It reads
+        the same :meth:`RollupManager.route` record that ``query_routed``
+        compiles. Nothing is executed or logged."""
         q = MetricQuery(self.spec, tuple(dimensions), tuple(measures), where=where)
         r = self._engine._rollups.route(q, self._rv.state)
-        return {"route": r.label, "reason": r.reason, "candidates": list(r.candidates)}
+        return {
+            "route": r.label,
+            "reason": r.reason,
+            "candidates": list(r.candidates),
+            "serving": dict(r.serving),
+        }
 
     def observed_workload(self) -> list["WorkloadQuery"]:
         """The query shapes this view has actually served (recorded by
@@ -706,11 +713,13 @@ class MetricEngine:
         rv = self.catalog.get(name)
         if rv.state is None:
             raise QueryError(f"metric view {name!r} has no materialized state to fold into")
-        self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
         # the flat projection every rollup was built from
         delta = self._compiler.baseline_projection(rv.spec, delta_source_rows)
-        for built in rv.state.rollups.values():
-            fold_increment(self.spark, built, delta)
+        try:
+            for built in rv.state.rollups.values():
+                fold_increment(self.spark, built, delta)
+        finally:
+            self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
         if rv.state.baseline:
             delta.write.mode("append").parquet(rv.state.baseline)
 
@@ -747,11 +756,13 @@ class MetricEngine:
 
         for built in rv.state.rollups.values():
             validate_retractable(built)
-        self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
         b = self._compiler.baseline_projection(rv.spec, before)
         a = self._compiler.baseline_projection(rv.spec, after)
-        for built in rv.state.rollups.values():
-            fold_retractions(self.spark, built, b, a)
+        try:
+            for built in rv.state.rollups.values():
+                fold_retractions(self.spark, built, b, a)
+        finally:
+            self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
 
     def refresh_all(self) -> None:
         self._refresh_many(

@@ -24,6 +24,10 @@ pre-aggregation before windowing) and incremental refresh (fold new
 partitions into partials). It is the Spark-native analogue of what the
 Databricks warehouse does inside its metric-view optimizer.
 
+Partials merge in Spark with :func:`merge_column`, or on the driver with
+its Arrow counterpart :func:`merge_table` when a rollup is small enough
+to serve from there (``plans/rollup.py``).
+
 Implementation: a small tokenizer finds the *outermost* aggregate calls in
 the measure's SQL expression (nested parens consumed, string literals
 skipped) and replaces each with references to generated partial columns.
@@ -70,6 +74,67 @@ def merge_column(fn: str, col: str):
     if fn == "hll_union":
         return F.hll_union_agg(F.col(col))
     return {"sum": F.sum, "min": F.min, "max": F.max}[fn](F.col(col))
+
+
+def arrow_merge_exact(fn: str, typ) -> bool:
+    """Whether :func:`merge_table` merges a partial column of Arrow type
+    *typ* with *fn* the way :func:`merge_column` does in Spark: ``sum``
+    over integers, doubles and decimals that keep Spark's +10 digits of
+    headroom under 38; ``min``/``max`` over integers, decimals, strings
+    and dates. Double ``min``/``max`` is excluded because Arrow skips NaN
+    where Spark's ``max`` returns it; sketches have no Arrow merge."""
+    import pyarrow as pa
+
+    if fn == "sum":
+        return (
+            pa.types.is_integer(typ)
+            or pa.types.is_float64(typ)
+            or (pa.types.is_decimal128(typ) and typ.precision + 10 <= 38)
+        )
+    if fn in ("min", "max"):
+        return (
+            pa.types.is_integer(typ)
+            or pa.types.is_decimal128(typ)
+            or pa.types.is_string(typ)
+            or pa.types.is_date32(typ)
+        )
+    return False
+
+
+def merge_table(table, dims: Sequence[str], fns: Mapping[str, str]):
+    """The Arrow counterpart of ``groupBy(dims).agg(merge_columns)``:
+    re-aggregate the partial columns of *table* (partial column -> merge
+    fn, each :func:`arrow_merge_exact`) per *dims* combination, with
+    Spark's result types. Integer sums run as ``decimal128(38, 0)`` and
+    cast back to int64 checked, so an overflow raises as Spark's ANSI
+    ``sum`` does instead of wrapping; a decimal(p, s) sum comes back as
+    Spark's decimal(p + 10, s). With no *dims* the result is one row,
+    NULL over empty input, like a global aggregate."""
+    import pyarrow as pa
+
+    cols = {d: table.column(d) for d in dims}
+    for p_col, fn in fns.items():
+        col, typ = table.column(p_col), table.schema.field(p_col).type
+        if fn == "sum" and pa.types.is_integer(typ):
+            col = col.cast(pa.decimal128(38, 0))
+        elif fn == "sum" and pa.types.is_decimal128(typ):
+            col = col.cast(pa.decimal128(typ.precision + 10, typ.scale))
+        cols[p_col] = col
+    merged = pa.table(cols).group_by(list(dims), use_threads=False).aggregate(
+        [(p_col, fn) for p_col, fn in fns.items()]
+    )
+    out = {d: merged.column(d) for d in dims}
+    for p_col, fn in fns.items():
+        col = merged.column(f"{p_col}_{fn}")
+        if fn == "sum" and pa.types.is_integer(table.schema.field(p_col).type):
+            try:
+                col = col.cast(pa.int64(), safe=True)
+            except pa.ArrowInvalid as e:
+                raise OverflowError(
+                    f"sum of partial column {p_col!r} overflows bigint"
+                ) from e
+        out[p_col] = col
+    return pa.table(out)
 
 
 @dataclass(frozen=True)

@@ -22,6 +22,18 @@ Routing rules (``README.md:424-431``):
 3. otherwise the baseline snapshot if present;
 4. otherwise the live source.
 
+Serving tier of a routed rollup: one of at most ``DRIVER_MAX_ROWS``
+stored rows, whose merges Arrow does exactly
+(``functions/aggregates.arrow_merge_exact``) and whose columns are all
+string, integer, double, decimal, date or boolean, is loaded once per
+publish into a ``pyarrow.Table`` plus one ``LocalRelation`` DataFrame of
+it, and served from the driver with no Spark job: the WHERE slice is a
+Spark filter on the ``LocalRelation`` (returning row ids), the merge an
+Arrow ``group_by`` (``merge_table``), and the result a ``LocalRelation``
+whose finalize expressions are a Spark ``select``. Any other rollup is a
+cached Spark scan re-aggregated by Spark. The route string is
+``rollup:<name>`` either way; ``explain_route`` reports the tier.
+
 Refresh (= ``scripts/refresh_metric_views.py`` semantics, O5 in SURVEY §2.7)
 recomputes each rollup and publishes it with ``publish.publish_dir`` so
 readers never see a half-written table; ``CREATE OR REPLACE`` of an
@@ -41,10 +53,12 @@ from pyspark.sql import functions as F
 
 from ..functions.aggregates import (
     Decomposition,
+    arrow_merge_exact,
     decompose_aggregate,
     merge_column,
     merge_columns,
     merge_functions,
+    merge_table,
     partial_columns,
 )
 from ..publish import publish_dir, recover_dir
@@ -56,6 +70,52 @@ from .compiler import (
     apply_derived,
     expand_derived,
 )
+
+
+# A multi-grain build takes the two-level shape (fine-grain pre-aggregate,
+# then grouping sets over it) when Catalyst estimates its flat input at
+# this size or more (see build_aggregated).
+TWO_LEVEL_MIN_BYTES = 16 * 1024 * 1024
+# A rollup of at most this many stored rows is served from the driver
+# (module docstring). Measured on 4 cores, warm, a 2-dim rollup of N
+# rows (exact cover / one-dim merge / sliced merge, driver vs Spark ms):
+# N=4000 35/32/49 vs 58/103/98; N=8000 51/30/52 vs 54/90/95; N=16000
+# 82/42/80 vs 76/83/92. The exact cover, which ships all N rows through
+# the LocalRelation, crosses over first, between 8k and 16k rows; the
+# bound sits at half of that.
+DRIVER_MAX_ROWS = 4096
+# row-id column of a driver-served rollup's LocalRelation
+_RID = "__rid"
+
+
+def _driver_type(typ) -> bool:
+    """Arrow column types that round-trip a ``LocalRelation`` as the
+    Spark types a parquet read of the rollup gives."""
+    import pyarrow as pa
+
+    return (
+        pa.types.is_string(typ)
+        or pa.types.is_integer(typ)
+        or pa.types.is_float64(typ)
+        or pa.types.is_decimal128(typ)
+        or pa.types.is_date32(typ)
+        or pa.types.is_boolean(typ)
+    )
+
+
+@dataclass(frozen=True)
+class _Loaded:
+    """One published rollup as read for serving: a ``LocalRelation`` of
+    ``table`` (plus a ``_RID`` row-id column) when driver-served, else a
+    cached parquet scan and no table. Immutable, so serving needs no
+    lock."""
+
+    df: DataFrame
+    table: Optional[object] = None  # pyarrow.Table
+
+    @property
+    def tier(self) -> str:
+        return "spark" if self.table is None else "driver"
 
 
 @dataclass
@@ -123,6 +183,8 @@ class Route:
     reason: str
     # one {rollup, n_rows, dimensions, status} dict per built rollup
     candidates: tuple[dict, ...]
+    # {tier: 'driver' | 'spark', n_rows, bound} of the serving rollup
+    serving: dict
 
     @property
     def label(self) -> str:
@@ -187,7 +249,7 @@ class WindowGrainProvider:
                 sel.append((p_col, hit[0], fn))
             if sel is None:
                 continue
-            df = self.mgr._read_rollup(built)
+            df = self.mgr._read_rollup(built).df
             if self.query.where:
                 df = df.filter(F.expr(self.query.where))
             if set(built.spec.dimensions) == set(grain_cols):
@@ -220,32 +282,65 @@ class RollupManager:
         self.spark = spark
         self.compiler = compiler
         self.storage_dir = storage_dir
-        # rollup tables are tiny by construction (|dim combinations| rows)
-        # — keep them cached in memory so a routed query costs no file
-        # listing / schema inference / scan. Guarded by a lock: refreshes
-        # of different views may run concurrently (engine._refresh_many).
+        # rollup tables are small by construction (|dim combinations|
+        # rows): each is read once per publish and kept, so a routed query
+        # costs no file listing / schema inference / scan. Loads and
+        # invalidations hold the lock (refreshes of different views may
+        # run concurrently, engine._refresh_many); reads of a loaded entry
+        # take none.
         import threading
 
-        self._df_cache: dict[str, DataFrame] = {}
+        self._loaded: dict[str, _Loaded] = {}
         self._cache_lock = threading.Lock()
 
-    def _read_rollup(self, built: BuiltRollup) -> DataFrame:
-        with self._cache_lock:
-            df = self._df_cache.get(built.path)
-            if df is None:
-                recover_dir(built.path)
-                df = self.spark.read.parquet(built.path).cache()
-                self._df_cache[built.path] = df
-        return df
+    def _read_rollup(self, built: BuiltRollup) -> _Loaded:
+        loaded = self._loaded.get(built.path)
+        if loaded is None:
+            with self._cache_lock:
+                loaded = self._loaded.get(built.path)
+                if loaded is None:
+                    recover_dir(built.path)
+                    loaded = self._load(built)
+                    self._loaded[built.path] = loaded
+        return loaded
+
+    def _load(self, built: BuiltRollup) -> _Loaded:
+        """The serving tier of *built* (module docstring), read from its
+        published directory."""
+        if built.n_rows is not None and built.n_rows <= DRIVER_MAX_ROWS:
+            import pyarrow as pa
+            import pyarrow.dataset as pads
+
+            data = pads.dataset(built.path, format="parquet")
+            types = {f.name: f.type for f in data.schema}
+            if all(map(_driver_type, types.values())) and all(
+                arrow_merge_exact(fn, types[c])
+                for c, fn in merge_functions(built.decompositions).items()
+            ):
+                # nullable like a parquet read in Spark; no file metadata
+                schema = pa.schema([pa.field(n, t) for n, t in types.items()])
+                table = data.to_table().cast(schema)
+                rid = pa.array(range(table.num_rows), pa.int64())
+                df = self.spark.createDataFrame(table.append_column(_RID, rid))
+                return _Loaded(df, table)
+        return _Loaded(self.spark.read.parquet(built.path).cache())
 
     def _invalidate(self, path_prefix: str) -> None:
+        """Drop the loaded rollups at or under *path_prefix*. Writers call
+        it AFTER they publish: a read between an earlier drop and the
+        publish would load the old version for good."""
         with self._cache_lock:
-            stale = [p for p in self._df_cache if p.startswith(path_prefix)]
+            stale = [
+                p for p in self._loaded
+                if p == path_prefix or p.startswith(path_prefix + os.sep)
+            ]
             for p in stale:
-                try:
-                    self._df_cache.pop(p).unpersist()
-                except Exception:
-                    pass
+                loaded = self._loaded.pop(p)
+                if loaded.table is None:
+                    try:
+                        loaded.df.unpersist()
+                    except Exception:
+                        pass
 
     # ---------------- build / refresh ----------------
 
@@ -273,7 +368,6 @@ class RollupManager:
         state = state or MaterializationState()
         if not spec.materialization:
             return state
-        self._invalidate(os.path.join(self.storage_dir, spec.name))
         src = self.compiler.source_plan(spec)
         redundant_baseline = (
             source_is_materialized
@@ -367,7 +461,7 @@ class RollupManager:
             # toy scale, where the direct grouping sets avoid paying an
             # extra job-floor exchange. Estimation failure falls back to
             # two-level (the scale-safe default).
-            if _estimated_bytes(flat) >= 16 * 1024 * 1024 and all(sets):
+            if _estimated_bytes(flat) >= TWO_LEVEL_MIN_BYTES and all(sets):
                 # Two-level aggregation (guide §1.2/§2.3): GROUPING SETS over
                 # the source Expand-duplicates every input row once per grain
                 # (G× rows into the hash aggregate — measured ~2x the
@@ -420,6 +514,7 @@ class RollupManager:
                 ob = Observation()
                 rows = slices[r.name].observe(ob, F.count(F.lit(1)).alias("n"))
                 publish_dir(path, rows.write.parquet)
+                self._invalidate(path)
                 out[r.name] = BuiltRollup(
                     spec=r,
                     path=path,
@@ -436,9 +531,9 @@ class RollupManager:
 
     def drop(self, spec_name: str) -> None:
         d = os.path.join(self.storage_dir, spec_name)
-        self._invalidate(d)
         if os.path.exists(d):
             shutil.rmtree(d)
+        self._invalidate(d)
 
     # ---------------- routing ----------------
 
@@ -493,6 +588,9 @@ class RollupManager:
                 f"served from dependency measures (expansion added "
                 f"{[m for m in storage.measures if m not in query.measures]})"
             )
+        serving = {"tier": "spark", "n_rows": None, "bound": DRIVER_MAX_ROWS}
+        if best is not None:
+            serving.update(tier=self._read_rollup(best).tier, n_rows=best.n_rows)
         return Route(
             query=storage,
             derived=derived,
@@ -509,6 +607,7 @@ class RollupManager:
                 }
                 for b, st in zip(built, status)
             ),
+            serving=serving,
         )
 
     def compile_routed(self, route: Route) -> tuple[DataFrame, str]:
@@ -597,30 +696,50 @@ class RollupManager:
 
         The rollup table's dim columns are already named — no expression
         re-evaluation; merging is ``sum``/``min``/``max`` of partial
-        columns, then each measure's finalize expression.
+        columns (in Spark, or in Arrow for a driver-served rollup), then
+        each measure's finalize expression as a Spark ``select``.
         """
-        df = self._read_rollup(built)
-        if query.where:
-            # rollup tables store every dim under its declared name, so the
-            # slice filters stored rows directly — before re-aggregation,
-            # which is what makes slicing on a non-grouped dim correct
-            df = df.filter(F.expr(query.where))
-        if set(query.dimensions) == set(built.spec.dimensions):
-            # exact cover: stored rows are already at the query grain — no
-            # re-aggregation, the plan is a single-stage projection with
-            # zero exchanges (matters at any scale: no shuffle, no codegen
-            # for an aggregate).
-            return df.select(
-                *[F.col(d) for d in query.dimensions],
-                *[
-                    F.expr(built.decompositions[m].finalize).alias(m)
-                    for m in query.measures
-                ],
-            )
-        merged = df.groupBy(*[F.col(d) for d in query.dimensions]).agg(
-            *merge_columns(built.decompositions, query.measures)
+        loaded = self._read_rollup(built)
+        dims = list(query.dimensions)
+        # exact cover: stored rows are already at the query grain — no
+        # re-aggregation, the plan is a single-stage projection with zero
+        # exchanges (matters at any scale: no shuffle, no codegen for an
+        # aggregate)
+        exact = set(dims) == set(built.spec.dimensions)
+        if loaded.table is not None and not exact:
+            merged = self._merge_on_driver(loaded, query, built)
+        else:
+            merged = loaded.df
+            if query.where:
+                # rollup tables store every dim under its declared name, so
+                # the slice filters stored rows directly — before
+                # re-aggregation, which is what makes slicing on a
+                # non-grouped dim correct
+                merged = merged.filter(F.expr(query.where))
+            if not exact:
+                merged = merged.groupBy(*[F.col(d) for d in dims]).agg(
+                    *merge_columns(built.decompositions, query.measures)
+                )
+        return merged.select(
+            *[F.col(d) for d in dims],
+            *[F.expr(built.decompositions[m].finalize).alias(m) for m in query.measures],
         )
-        out_cols = [F.col(d) for d in query.dimensions] + [
-            F.expr(built.decompositions[m].finalize).alias(m) for m in query.measures
-        ]
-        return merged.select(*out_cols)
+
+    def _merge_on_driver(
+        self, loaded: _Loaded, query: MetricQuery, built: BuiltRollup
+    ) -> DataFrame:
+        """Re-aggregate a driver-served rollup with no Spark job: the WHERE
+        slice runs as a Spark filter on the ``LocalRelation`` (so it keeps
+        Spark semantics) and returns row ids, the merge is an Arrow
+        ``group_by``, and the merged partials come back as a
+        ``LocalRelation``."""
+        table = loaded.table
+        if query.where:
+            import pyarrow as pa
+
+            rows = loaded.df.filter(F.expr(query.where)).select(_RID).collect()
+            table = table.take(pa.array([r[0] for r in rows], pa.int64()))
+        merged = merge_table(
+            table, query.dimensions, merge_functions(built.decompositions, query.measures)
+        )
+        return self.spark.createDataFrame(merged)

@@ -28,6 +28,10 @@ def engine(spark, sf_dir, tmp_path_factory):
 
 
 def _rows(df):
+    return _norm_rows(df.collect())
+
+
+def _norm_rows(rows):
     import math
 
     def norm(v):
@@ -39,7 +43,7 @@ def _rows(df):
             return round(v, max(0, 10 - int(math.log10(abs(v)))))
         return str(v)
 
-    return sorted(tuple(norm(x) for x in r) for r in df.collect())
+    return sorted(tuple(norm(x) for x in r) for r in rows)
 
 
 def test_size_gate_keeps_toy_source_on_direct_grouping_sets(engine, monkeypatch):
@@ -352,6 +356,23 @@ def test_explain_route(spark, sf_dir, tmp_path_factory):
     assert exm["route"] in ("baseline", "live")
     assert any("missing dims" in c["status"] for c in exm["candidates"])
 
+    # the serving tier: the route string is the same on either tier
+    from dbt_databricks_metrics_spark.plans import rollup
+
+    n_rows = mv._rv.state.rollups["revenue_by_segment"].n_rows
+    bound = rollup.DRIVER_MAX_ROWS
+    assert ex["serving"] == {"tier": "driver", "n_rows": n_rows, "bound": bound}
+    assert exm["serving"] == {"tier": "spark", "n_rows": None, "bound": bound}
+    try:
+        rollup.DRIVER_MAX_ROWS = n_rows - 1
+        eng._rollups._invalidate(eng._rollups.storage_dir)
+        over = mv.explain_route(["market_segment"], ["total_revenue"])
+    finally:
+        rollup.DRIVER_MAX_ROWS = bound
+        eng._rollups._invalidate(eng._rollups.storage_dir)
+    assert over["route"] == ex["route"]
+    assert over["serving"] == {"tier": "spark", "n_rows": n_rows, "bound": n_rows - 1}
+
     # agrees with the actual routing decision
     _, route = mv.query_routed(["market_segment"], ["total_revenue"])
     assert route == ex["route"]
@@ -624,3 +645,184 @@ def test_shadowed_source_column_folds_like_live(spark, sf_dir, tmp_path):
     assert route == "rollup:by_status"
     live = eng._compiler.compile(MetricQuery(mv.spec, dims, measures))
     assert _rows(routed) == _rows(live)
+
+
+def _jobs(spark, label, fn):
+    """(Spark jobs *fn* ran, its result), counted in job group *label*."""
+    sc = spark.sparkContext
+    sc.setJobGroup(label, label)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(label)), out
+
+
+@pytest.mark.parametrize(
+    "dims,measures,where",
+    [
+        pytest.param(["market_segment", "order_status"], ["total_revenue", "total_orders"],
+                     None, id="exact_cover"),
+        pytest.param(["market_segment"], ["total_revenue"], None, id="merge"),
+        pytest.param(["market_segment"], ["total_revenue"], "order_status = 'F'",
+                     id="slice_on_merged_dim"),
+        pytest.param([], ["total_revenue", "total_orders"], None, id="no_dims"),
+    ],
+)
+def test_driver_served_query_runs_no_job(engine, spark, dims, measures, where):
+    """A routed query over a rollup under ``DRIVER_MAX_ROWS`` runs no
+    Spark job, its build included, and equals the live answer."""
+    from dbt_databricks_metrics_spark.plans.compiler import MetricQuery
+
+    mv = engine.metric_view("mv_order_metrics")
+    assert mv.explain_route(dims, measures, where=where)["serving"]["tier"] == "driver"
+    n, rows = _jobs(spark, f"driver_{len(dims)}_{where is None}",
+                    lambda: mv.query(dims, measures, where=where).collect())
+    assert n == 0
+    live = engine._compiler.compile(MetricQuery(mv.spec, tuple(dims), tuple(measures),
+                                                where=where))
+    assert _norm_rows(rows) == _rows(live)
+
+
+def test_driver_served_measure_sql_runs_no_job(engine, spark):
+    n, rows = _jobs(spark, "driver_sql", lambda: engine.sql(
+        "SELECT market_segment, MEASURE(total_revenue) AS revenue "
+        "FROM mv_order_metrics WHERE order_status = 'F' GROUP BY market_segment"
+    ).collect())
+    assert n == 0
+    ref = engine.metric_view("mv_order_metrics").query(
+        ["market_segment"], ["total_revenue"], where="order_status = 'F'")
+    assert _norm_rows(rows) == _rows(ref)
+
+
+def test_rollup_over_the_bound_serves_from_spark(engine, spark, monkeypatch):
+    """One row over ``DRIVER_MAX_ROWS`` the same rollup serves through
+    Spark: same route, Spark jobs, equal values."""
+    from dbt_databricks_metrics_spark.plans import rollup
+
+    mv = engine.metric_view("mv_order_metrics")
+    mgr = engine._rollups
+    n_rows = mv._rv.state.rollups["revenue_by_segment"].n_rows
+    shape = (["market_segment"], ["total_revenue", "total_orders"])
+    monkeypatch.setattr(rollup, "DRIVER_MAX_ROWS", n_rows)
+    mgr._invalidate(mgr.storage_dir)
+    df, route = mv.query_routed(*shape)
+    n_driver, driver = _jobs(spark, "bound_at", df.collect)
+    monkeypatch.setattr(rollup, "DRIVER_MAX_ROWS", n_rows - 1)
+    mgr._invalidate(mgr.storage_dir)
+    try:
+        assert mv.explain_route(*shape)["serving"]["tier"] == "spark"
+        df_s, route_s = mv.query_routed(*shape)
+        n_spark, spark_rows = _jobs(spark, "bound_over", df_s.collect)
+    finally:
+        mgr._invalidate(mgr.storage_dir)
+    assert route == route_s == "rollup:revenue_by_segment"
+    assert n_driver == 0 and n_spark > 0
+    assert df.schema == df_s.schema
+    assert _norm_rows(driver) == _norm_rows(spark_rows)
+
+
+_TOY_YAML = """
+version: 0.1
+source: {src}
+dimensions:
+  - name: k
+    expr: k
+  - name: s
+    expr: s
+measures:
+  - name: total
+    expr: sum(v)
+  - name: n
+    expr: count(*)
+materialization:
+  schedule: every 1 hours
+  mode: relaxed
+  materialized_views:
+    - name: by_k_s
+      type: aggregated
+      dimensions: [k, s]
+      measures: [total, n]
+"""
+
+
+def _toy_view(spark, tmp_path, name, rows):
+    """A retractable view over temp view ``<name>_src`` (``k``, ``s``,
+    ``v bigint``) with one rollup at (k, s), built from *rows*."""
+    from dbt_databricks_metrics_spark.specs import MetricViewSpec
+
+    src = f"{name}_src"
+    spark.createDataFrame(rows, "k string, s string, v bigint").createOrReplaceTempView(src)
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "wh"))
+    mv = eng.register(MetricViewSpec.from_yaml(_TOY_YAML.format(src=src), name=name))
+    eng.refresh(name)
+    return eng, mv
+
+
+@pytest.mark.parametrize("writer", ["refresh_cdc", "refresh_incremental", "refresh"])
+def test_read_during_refresh_serves_the_new_rollup(spark, tmp_path, monkeypatch, writer):
+    """A routed read that lands while a refresh is writing serves the old
+    rollup, and every read after the refresh serves the new one: the
+    loaded rollup is dropped after the publish, not before it."""
+    from dbt_databricks_metrics_spark.plans import rollup
+    from dbt_databricks_metrics_spark.streaming import refresh as folds
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), "k string, s string, v bigint")
+
+    name = f"mv_race_{writer}"
+    eng, mv = _toy_view(spark, tmp_path, name, [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+
+    def read():
+        return {r["k"]: r["total"] for r in mv.query(["k"], ["total"]).collect()}
+
+    assert read() == {"A": 30, "B": 5}
+    module = rollup if writer == "refresh" else folds
+    real = module.publish_dir
+    seen = []
+
+    def publish_after_a_read(path, write):
+        seen.append(read())
+        real(path, write)
+
+    monkeypatch.setattr(module, "publish_dir", publish_after_a_read)
+    if writer == "refresh_cdc":
+        eng.refresh_cdc(name, rows(("A", "y", 20)), rows(("A", "y", 25), ("B", "y", 7)))
+    elif writer == "refresh_incremental":
+        eng.refresh_incremental(name, rows(("A", "y", 5), ("B", "y", 7)))
+    else:
+        rows(("A", "x", 10), ("A", "y", 25), ("B", "x", 5), ("B", "y", 7)) \
+            .createOrReplaceTempView(f"{name}_src")
+        eng.refresh(name)
+    assert seen == [{"A": 30, "B": 5}]
+    assert read() == {"A": 35, "B": 12}
+
+
+def test_fresh_read_after_refresh_cdc_runs_no_job(spark, tmp_path):
+    """The read after a CDC fold reloads the rollup on the driver and
+    re-aggregates it there: no Spark job."""
+    eng, mv = _toy_view(spark, tmp_path, "mv_fresh_read",
+                        [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    before = spark.createDataFrame([("A", "y", 20)], "k string, s string, v bigint")
+    after = spark.createDataFrame([("A", "y", 25), ("B", "y", 7)], "k string, s string, v bigint")
+    eng.refresh_cdc("mv_fresh_read", before, after)
+    n, rows = _jobs(spark, "fresh_read",
+                    lambda: mv.query(["k"], ["total", "n"]).collect())
+    assert n == 0
+    assert sorted(tuple(r) for r in rows) == [("A", 35, 2), ("B", 12, 2)]
+
+
+def test_invalidate_matches_whole_path_components(spark, tmp_path):
+    """Refreshing ``mv_sales`` must not drop ``mv_sales_star``'s loaded
+    rollups."""
+    import os
+
+    from dbt_databricks_metrics_spark.plans import rollup
+
+    mgr = rollup.RollupManager(spark, None, str(tmp_path))
+    keep = os.path.join(str(tmp_path), "mv_sales_star", "r")
+    drop = os.path.join(str(tmp_path), "mv_sales", "r")
+    for p in (keep, drop):
+        mgr._loaded[p] = rollup._Loaded(spark.range(1))
+    mgr._invalidate(os.path.join(str(tmp_path), "mv_sales"))
+    assert list(mgr._loaded) == [keep]
