@@ -151,9 +151,14 @@ class MetricView:
         (windowed measures, unresolved WHERE columns, no covering rollup,
         …) and ``serving`` (``tier``: ``driver`` when the serving rollup
         is answered on the driver with no Spark job, else ``spark``; its
-        stored ``n_rows``; the row ``bound`` of the driver tier). It reads
-        the same :meth:`RollupManager.route` record that ``query_routed``
-        compiles. Nothing is executed or logged."""
+        ``n_rows`` as stored now, which a fold may have changed since the
+        build-time count in ``candidates``; the row ``bound`` of the
+        driver tier). It reads the same :meth:`RollupManager.route`
+        record that ``query_routed`` compiles. No query runs and nothing
+        is logged, but to report the tier the serving rollup is loaded as
+        a routed query would load it, once per publish: a driver-tier
+        load reads the parquet files, a Spark-tier load caches a parquet
+        scan whose schema inference may run a Spark job."""
         q = MetricQuery(self.spec, tuple(dimensions), tuple(measures), where=where)
         r = self._engine._rollups.route(q, self._rv.state)
         return {

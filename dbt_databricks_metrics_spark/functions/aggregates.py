@@ -76,50 +76,66 @@ def merge_column(fn: str, col: str):
     return {"sum": F.sum, "min": F.min, "max": F.max}[fn](F.col(col))
 
 
-def arrow_merge_exact(fn: str, typ) -> bool:
-    """Whether :func:`merge_table` merges a partial column of Arrow type
-    *typ* with *fn* the way :func:`merge_column` does in Spark: ``sum``
-    over integers, doubles and decimals that keep Spark's +10 digits of
-    headroom under 38; ``min``/``max`` over integers, decimals, strings
-    and dates. Double ``min``/``max`` is excluded because Arrow skips NaN
-    where Spark's ``max`` returns it; sketches have no Arrow merge."""
+def _arrow_sum_type(typ):
+    """The Arrow type :func:`merge_table` sums a partial column of type
+    *typ* in, or None when it cannot sum it the way Spark does: integers
+    as ``decimal128(38, 0)`` (cast back to int64 checked, so an overflow
+    raises as Spark's ANSI ``sum`` does instead of wrapping), doubles as
+    they are, a decimal(p, s) as Spark's decimal(p + 10, s) result."""
     import pyarrow as pa
 
-    if fn == "sum":
-        return (
-            pa.types.is_integer(typ)
-            or pa.types.is_float64(typ)
-            or (pa.types.is_decimal128(typ) and typ.precision + 10 <= 38)
-        )
-    if fn in ("min", "max"):
-        return (
-            pa.types.is_integer(typ)
-            or pa.types.is_decimal128(typ)
-            or pa.types.is_string(typ)
-            or pa.types.is_date32(typ)
-        )
-    return False
+    if pa.types.is_integer(typ):
+        return pa.decimal128(38, 0)
+    if pa.types.is_float64(typ):
+        return typ
+    if pa.types.is_decimal128(typ) and typ.precision + 10 <= 38:
+        return pa.decimal128(typ.precision + 10, typ.scale)
+    return None
+
+
+def arrow_servable(schema, fns: Mapping[str, str]) -> bool:
+    """Whether a rollup of Arrow *schema* whose partial columns merge
+    with *fns* (partial column -> merge fn) can be served by
+    :func:`merge_table` with Spark's answers: every column is a string,
+    integer, double, decimal, date or boolean (types that round-trip a
+    ``LocalRelation`` as the Spark types a parquet read gives); every
+    ``sum`` has an Arrow sum type; every ``min``/``max`` is over an
+    integer, decimal, string or date. Double ``min``/``max`` is refused
+    because Arrow skips NaN where Spark's ``max`` returns it; sketches
+    and timestamps have no Arrow merge here."""
+    import pyarrow as pa
+
+    types = {f.name: f.type for f in schema}
+    plain = (
+        pa.types.is_string, pa.types.is_integer, pa.types.is_float64,
+        pa.types.is_decimal128, pa.types.is_date32, pa.types.is_boolean,
+    )
+    ordered = (
+        pa.types.is_integer, pa.types.is_decimal128, pa.types.is_string,
+        pa.types.is_date32,
+    )
+    if not all(any(t(typ) for t in plain) for typ in types.values()):
+        return False
+    return all(
+        _arrow_sum_type(types[p_col]) is not None if fn == "sum"
+        else fn in ("min", "max") and any(t(types[p_col]) for t in ordered)
+        for p_col, fn in fns.items()
+    )
 
 
 def merge_table(table, dims: Sequence[str], fns: Mapping[str, str]):
     """The Arrow counterpart of ``groupBy(dims).agg(merge_columns)``:
     re-aggregate the partial columns of *table* (partial column -> merge
-    fn, each :func:`arrow_merge_exact`) per *dims* combination, with
-    Spark's result types. Integer sums run as ``decimal128(38, 0)`` and
-    cast back to int64 checked, so an overflow raises as Spark's ANSI
-    ``sum`` does instead of wrapping; a decimal(p, s) sum comes back as
-    Spark's decimal(p + 10, s). With no *dims* the result is one row,
-    NULL over empty input, like a global aggregate."""
+    fn, the pair :func:`arrow_servable`) per *dims* combination, with
+    Spark's result types (sums in :func:`_arrow_sum_type`). With no
+    *dims* the result is one row, NULL over empty input, like a global
+    aggregate."""
     import pyarrow as pa
 
     cols = {d: table.column(d) for d in dims}
     for p_col, fn in fns.items():
-        col, typ = table.column(p_col), table.schema.field(p_col).type
-        if fn == "sum" and pa.types.is_integer(typ):
-            col = col.cast(pa.decimal128(38, 0))
-        elif fn == "sum" and pa.types.is_decimal128(typ):
-            col = col.cast(pa.decimal128(typ.precision + 10, typ.scale))
-        cols[p_col] = col
+        col = table.column(p_col)
+        cols[p_col] = col.cast(_arrow_sum_type(col.type)) if fn == "sum" else col
     merged = pa.table(cols).group_by(list(dims), use_threads=False).aggregate(
         [(p_col, fn) for p_col, fn in fns.items()]
     )

@@ -23,9 +23,9 @@ Routing rules (``README.md:424-431``):
 4. otherwise the live source.
 
 Serving tier of a routed rollup: one of at most ``DRIVER_MAX_ROWS``
-stored rows, whose merges Arrow does exactly
-(``functions/aggregates.arrow_merge_exact``) and whose columns are all
-string, integer, double, decimal, date or boolean, is loaded once per
+stored rows (counted from its parquet footers when it is loaded), whose
+merges and column types Arrow serves with Spark's answers
+(``functions/aggregates.arrow_servable``), is loaded once per
 publish into a ``pyarrow.Table`` plus one ``LocalRelation`` DataFrame of
 it, and served from the driver with no Spark job: the WHERE slice is a
 Spark filter on the ``LocalRelation`` (returning row ids), the merge an
@@ -53,7 +53,7 @@ from pyspark.sql import functions as F
 
 from ..functions.aggregates import (
     Decomposition,
-    arrow_merge_exact,
+    arrow_servable,
     decompose_aggregate,
     merge_column,
     merge_columns,
@@ -88,21 +88,6 @@ DRIVER_MAX_ROWS = 4096
 _RID = "__rid"
 
 
-def _driver_type(typ) -> bool:
-    """Arrow column types that round-trip a ``LocalRelation`` as the
-    Spark types a parquet read of the rollup gives."""
-    import pyarrow as pa
-
-    return (
-        pa.types.is_string(typ)
-        or pa.types.is_integer(typ)
-        or pa.types.is_float64(typ)
-        or pa.types.is_decimal128(typ)
-        or pa.types.is_date32(typ)
-        or pa.types.is_boolean(typ)
-    )
-
-
 @dataclass(frozen=True)
 class _Loaded:
     """One published rollup as read for serving: a ``LocalRelation`` of
@@ -111,6 +96,9 @@ class _Loaded:
     lock."""
 
     df: DataFrame
+    # stored rows, counted at load: a fold changes them but not the
+    # build-time BuiltRollup.n_rows
+    n_rows: int
     table: Optional[object] = None  # pyarrow.Table
 
     @property
@@ -307,32 +295,32 @@ class RollupManager:
     def _load(self, built: BuiltRollup) -> _Loaded:
         """The serving tier of *built* (module docstring), read from its
         published directory."""
-        if built.n_rows is not None and built.n_rows <= DRIVER_MAX_ROWS:
-            import pyarrow as pa
-            import pyarrow.dataset as pads
+        import pyarrow as pa
+        import pyarrow.dataset as pads
 
-            data = pads.dataset(built.path, format="parquet")
-            types = {f.name: f.type for f in data.schema}
-            if all(map(_driver_type, types.values())) and all(
-                arrow_merge_exact(fn, types[c])
-                for c, fn in merge_functions(built.decompositions).items()
-            ):
-                # nullable like a parquet read in Spark; no file metadata
-                schema = pa.schema([pa.field(n, t) for n, t in types.items()])
-                table = data.to_table().cast(schema)
-                rid = pa.array(range(table.num_rows), pa.int64())
-                df = self.spark.createDataFrame(table.append_column(_RID, rid))
-                return _Loaded(df, table)
-        return _Loaded(self.spark.read.parquet(built.path).cache())
+        data = pads.dataset(built.path, format="parquet")
+        n_rows = data.count_rows()  # footers only
+        if n_rows <= DRIVER_MAX_ROWS and arrow_servable(
+            data.schema, merge_functions(built.decompositions)
+        ):
+            # nullable like a parquet read in Spark; no file metadata
+            schema = pa.schema([pa.field(f.name, f.type) for f in data.schema])
+            table = data.to_table().cast(schema)
+            rid = pa.array(range(table.num_rows), pa.int64())
+            df = self.spark.createDataFrame(table.append_column(_RID, rid))
+            return _Loaded(df, n_rows, table)
+        return _Loaded(self.spark.read.parquet(built.path).cache(), n_rows)
 
-    def _invalidate(self, path_prefix: str) -> None:
-        """Drop the loaded rollups at or under *path_prefix*. Writers call
-        it AFTER they publish: a read between an earlier drop and the
-        publish would load the old version for good."""
+    def _invalidate(self, path_prefix: str, keep: frozenset = frozenset()) -> None:
+        """Drop the loaded rollups at or under *path_prefix*, except the
+        paths in *keep*. Writers call it AFTER they publish: a read
+        between an earlier drop and the publish would load the old
+        version for good."""
         with self._cache_lock:
             stale = [
                 p for p in self._loaded
-                if p == path_prefix or p.startswith(path_prefix + os.sep)
+                if (p == path_prefix or p.startswith(path_prefix + os.sep))
+                and p not in keep
             ]
             for p in stale:
                 loaded = self._loaded.pop(p)
@@ -367,6 +355,7 @@ class RollupManager:
         """
         state = state or MaterializationState()
         if not spec.materialization:
+            self._drop_unrouted(spec.name, state)
             return state
         src = self.compiler.source_plan(spec)
         redundant_baseline = (
@@ -402,7 +391,16 @@ class RollupManager:
         finally:
             if cache:
                 src.unpersist()
+        self._drop_unrouted(spec.name, state)
         return state
+
+    def _drop_unrouted(self, mv_name: str, state: MaterializationState) -> None:
+        """Drop the loaded rollups of *mv_name* that *state* does not
+        route to: those a re-registered spec no longer declares."""
+        self._invalidate(
+            os.path.join(self.storage_dir, mv_name),
+            keep=frozenset(b.path for b in state.rollups.values()),
+        )
 
     def build_aggregated(
         self, spec: MetricViewSpec, rollups: list[RollupSpec], flat: DataFrame
@@ -590,7 +588,8 @@ class RollupManager:
             )
         serving = {"tier": "spark", "n_rows": None, "bound": DRIVER_MAX_ROWS}
         if best is not None:
-            serving.update(tier=self._read_rollup(best).tier, n_rows=best.n_rows)
+            loaded = self._read_rollup(best)
+            serving.update(tier=loaded.tier, n_rows=loaded.n_rows)
         return Route(
             query=storage,
             derived=derived,

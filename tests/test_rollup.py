@@ -812,6 +812,47 @@ def test_fresh_read_after_refresh_cdc_runs_no_job(spark, tmp_path):
     assert sorted(tuple(r) for r in rows) == [("A", 35, 2), ("B", 12, 2)]
 
 
+def test_rollup_folded_past_the_bound_serves_from_spark(spark, tmp_path, monkeypatch):
+    """The driver tier's bound reads the rows the published rollup holds,
+    not the build-time count a fold leaves unchanged: once a fold grows
+    the rollup past the bound it serves from Spark."""
+    from dbt_databricks_metrics_spark.plans import rollup
+
+    monkeypatch.setattr(rollup, "DRIVER_MAX_ROWS", 3)
+    eng, mv = _toy_view(spark, tmp_path, "mv_fold_grow",
+                        [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    assert mv.explain_route(["k"], ["total"])["serving"] == {
+        "tier": "driver", "n_rows": 3, "bound": 3}
+    eng.refresh_incremental("mv_fold_grow", spark.createDataFrame(
+        [("B", "y", 7), ("C", "x", 1)], "k string, s string, v bigint"))
+    assert mv._rv.state.rollups["by_k_s"].n_rows == 3  # build-time count
+    assert mv.explain_route(["k"], ["total"])["serving"] == {
+        "tier": "spark", "n_rows": 5, "bound": 3}
+    rows = {r["k"]: r["total"] for r in mv.query(["k"], ["total"]).collect()}
+    assert rows == {"A": 30, "B": 12, "C": 1}
+
+
+def test_refresh_drops_rollups_the_new_spec_no_longer_declares(spark, tmp_path):
+    """Re-registering a view without one of its rollups and refreshing
+    it leaves no loaded table of the dropped rollup behind."""
+    from dbt_databricks_metrics_spark.specs import MetricViewSpec
+
+    eng, mv = _toy_view(spark, tmp_path, "mv_respec",
+                        [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    mv.query(["k"], ["total"]).collect()
+    old = mv._rv.state.rollups["by_k_s"].path
+    assert old in eng._rollups._loaded
+    yaml = _TOY_YAML.format(src="mv_respec_src").replace(
+        "name: by_k_s", "name: by_k").replace("dimensions: [k, s]", "dimensions: [k]")
+    mv = eng.register(MetricViewSpec.from_yaml(yaml, name="mv_respec"))
+    eng.refresh("mv_respec")
+    df, route = mv.query_routed(["k"], ["total"])
+    assert route == "rollup:by_k"
+    assert sorted(tuple(r) for r in df.collect()) == [("A", 30), ("B", 5)]
+    assert old not in eng._rollups._loaded
+    assert list(eng._rollups._loaded) == [mv._rv.state.rollups["by_k"].path]
+
+
 def test_invalidate_matches_whole_path_components(spark, tmp_path):
     """Refreshing ``mv_sales`` must not drop ``mv_sales_star``'s loaded
     rollups."""
@@ -823,6 +864,6 @@ def test_invalidate_matches_whole_path_components(spark, tmp_path):
     keep = os.path.join(str(tmp_path), "mv_sales_star", "r")
     drop = os.path.join(str(tmp_path), "mv_sales", "r")
     for p in (keep, drop):
-        mgr._loaded[p] = rollup._Loaded(spark.range(1))
+        mgr._loaded[p] = rollup._Loaded(spark.range(1), 1)
     mgr._invalidate(os.path.join(str(tmp_path), "mv_sales"))
     assert list(mgr._loaded) == [keep]
