@@ -151,9 +151,8 @@ class MetricView:
         (windowed measures, unresolved WHERE columns, no covering rollup,
         …) and ``serving`` (``tier``: ``driver`` when the serving rollup
         is answered on the driver with no Spark job, else ``spark``; its
-        ``n_rows`` as stored now, which a fold may have changed since the
-        build-time count in ``candidates``; the row ``bound`` of the
-        driver tier). It reads the same :meth:`RollupManager.route`
+        ``n_rows`` as counted from its files when loaded; the row
+        ``bound`` of the driver tier). It reads the same :meth:`RollupManager.route`
         record that ``query_routed`` compiles. No query runs and nothing
         is logged, but to report the tier the serving rollup is loaded as
         a routed query would load it, once per publish: a driver-tier

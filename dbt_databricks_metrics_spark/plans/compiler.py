@@ -9,13 +9,21 @@ chooses. Here the expansion produces a DataFrame plan built entirely from
 Catalyst plays the role the Databricks SQL warehouse plays for the
 reference.
 
+There is one expansion, over a *flat projection* of that source
+(:meth:`QueryCompiler.baseline_projection`): every dimension is a column
+under its name, measures read it through :meth:`QueryCompiler.flat_expr`,
+and the query's WHERE filters it as written. The live route projects the
+source at query time; the baseline route reads the persisted projection;
+rollup builds and folds aggregate the same projection. Catalyst pushes a
+WHERE through the projection into the scans.
+
 Window measures (``models/schema.yml:92-103``, ``README.md:250-278``)
 compile to Spark ``Window`` range frames + a semiadditive-last reduction
-(``F.max_by``). Scale path: when the base aggregate decomposes into partial
-states the plan pre-aggregates to the (dims × order) grain *before*
-windowing, so the window sort touches |dims × dates| rows instead of raw
-source rows — the difference between sorting ~2k rows and ~600k at sf0.1,
-and between gigabytes and terabytes at 100 TB.
+(``F.max_by``). When the base aggregate decomposes into partial states
+the plan pre-aggregates to the (dims × order) grain *before* windowing,
+so the window sort touches |dims × dates| rows instead of raw source
+rows — the difference between sorting ~2k rows and ~600k at sf0.1, and
+between gigabytes and terabytes at 100 TB.
 
 Declared joins (``README.md:282-300``) compile to left equi-joins with the
 base relation aliased ``source`` and each join by its name; snowflake
@@ -92,6 +100,10 @@ def _sub_names(sql: str, subs: dict[str, str]) -> str:
 # the flat projection's copy of a source column that a same-named
 # dimension replaces, kept for the measures that read the column
 SHADOWED = "__source_"
+
+
+# semiadditive reduction of a window measure's frame values
+_REDUCE_BY = {"last": F.max_by, "first": F.min_by}
 
 
 _TIME_UNITS = frozenset(
@@ -286,6 +298,11 @@ class QueryCompiler:
         that a same-named dimension replaces and that a measure reads
         rides along as ``SHADOWED + name`` (see :meth:`flat_expr`).
         """
+        return self._project(spec, src, [m.expr for m in spec.measures])
+
+    def _project(self, spec: MetricViewSpec, src: DataFrame, reads: Sequence[str]) -> DataFrame:
+        """:meth:`baseline_projection` carrying the joined fields and
+        shadowed columns that the expressions *reads* name."""
         if spec.joins:
             base_names = src.select("source.*").columns
             ref = lambda n: F.col(f"source.{n}")  # noqa: E731
@@ -307,8 +324,8 @@ class QueryCompiler:
         aliases = {p[-1] for p in self._collect_join_paths(spec.joins)} - taken
         fields: dict[str, list[str]] = {}
         read: set[str] = set()
-        for m in spec.measures:
-            text = self._rewrite_dim_expr(spec, self.strip_source_prefix(m.expr))
+        for expr in reads:
+            text = self._rewrite_dim_expr(spec, self.strip_source_prefix(expr))
             read |= {t for t, call in _identifier_tokens(text) if not call}
             text = re.sub(r"'(?:[^'\\]|\\.)*'", "''", text)
             for a, c in re.findall(r"(?<![\w.])([A-Za-z_]\w*)\.([A-Za-z_]\w*)", text):
@@ -343,7 +360,7 @@ class QueryCompiler:
     ) -> DataFrame:
         for j in joins:
             right = self.resolve(j.source).alias(j.name)
-            on = F.expr(self._rewrite_join_paths(j.on))
+            on = F.expr(j.on)  # references the parent alias and its own name
             # declared joins are left joins: unmatched source rows survive
             # with null dimension values (README.md:282-300 grammar).
             df = df.join(right, on, "left")
@@ -378,113 +395,61 @@ class QueryCompiler:
             expr = re.sub(rf"\b{dotted}", f"{p[-1]}.", expr)
         return expr
 
-    def _rewrite_join_paths(self, on: str) -> str:
-        return on  # join `on` already references parent alias / own name
-
-    def where_predicate(
-        self, spec: MetricViewSpec, where: str, flattened: bool
-    ) -> str:
-        """Rewrite a query-time WHERE so it evaluates on the base relation.
-
-        Each bare dimension name is substituted with its declared expression
-        (parenthesized), so slicing works on derived dims (``order_year =
-        1995`` → ``(CAST(year(order_date) AS INT)) = 1995``) and Catalyst
-        can still push the predicate into the scan. Flattened relations
-        (baseline snapshots, rollup tables) already materialize every dim
-        under its name — no substitution needed there.
-        """
-        if flattened:
-            return where
-        subs = {
-            d.name: d.expr
-            for d in spec.dimensions
-            if d.expr != d.name
-        }
-        if not subs:
-            return self._rewrite_dim_expr(spec, where)
-        return self._rewrite_dim_expr(
-            spec, _sub_names(where, {n: f"({e})" for n, e in subs.items()})
-        )
-
     # ---------------- expansion ----------------
 
-    def compile(
-        self,
-        query: MetricQuery,
-        source_df: Optional[DataFrame] = None,
-        flattened: bool = False,
-        window_grain_provider: Optional[
-            Callable[[list[str], list[tuple[str, str, str]]], Optional[DataFrame]]
-        ] = None,
-    ) -> DataFrame:
-        """Expand the query against the (filtered, joined) source.
-
-        With ``flattened=True`` *source_df* is a pre-resolved relation
-        (baseline snapshot): filter and joins are already applied, every
-        dimension exists as a plain column, and ``source.`` qualifiers in
-        measure expressions are dropped.
-
-        *window_grain_provider*, when given, is consulted before each
-        window-measure grain aggregation with ``(grain_cols, needed)``
-        where needed = [(partial_source_expr, partial_col, merge_fn)];
-        returning a DataFrame with those columns (e.g. re-aggregated from
-        a covering rollup) replaces the grain scan of the source.
-        """
+    def compile(self, query: MetricQuery) -> DataFrame:
+        """Expand *query* on the live source (:meth:`compile_storage`),
+        then project its derived measures."""
         inner, proj = expand_derived(query)
-        df = self.compile_storage(inner, source_df, flattened, window_grain_provider)
+        df = self.compile_storage(inner)
         return df if proj is None else apply_derived(df, query, proj)
 
     def compile_storage(
         self,
         query: MetricQuery,
-        source_df: Optional[DataFrame] = None,
-        flattened: bool = False,
+        flat: Optional[DataFrame] = None,
         window_grain_provider=None,
     ) -> DataFrame:
         """:meth:`compile` for a query with no derived measure (the
-        storage query :func:`expand_derived` returns)."""
+        storage query :func:`expand_derived` returns).
+
+        Expands over *flat*, a flat projection of the view's (filtered,
+        joined) source: the persisted baseline snapshot when given, else
+        the live :meth:`baseline_projection`, which then also carries the
+        joined ``alias.col`` fields the query's WHERE reads. Dimensions
+        are its columns, so they group, slice and window by name.
+
+        *window_grain_provider*, when given, is consulted before each
+        window-measure grain aggregation with ``(grain_cols, needed)``
+        where needed = [(partial_expr, partial_col, merge_fn)];
+        returning a DataFrame with those columns (e.g. re-aggregated from
+        a covering rollup) replaces the grain aggregation of *flat*.
+        """
         spec = query.spec
-        if flattened:
-            assert source_df is not None
-            base = source_df
-            dim_expr = lambda d: d.name  # noqa: E731
-            meas_expr = lambda e: self.flat_expr(spec, e, base)  # noqa: E731
-        else:
-            base = self.source_plan(spec, source_df=source_df)
-            dim_expr = lambda d: self._rewrite_dim_expr(spec, d.expr)  # noqa: E731
-            meas_expr = lambda e: self._rewrite_dim_expr(spec, e)  # noqa: E731
+        if flat is None:
+            reads = [m.expr for m in spec.measures] + [query.where or ""]
+            flat = self._project(spec, self.source_plan(spec), reads)
+        base = flat
         if query.where:
-            base = base.filter(
-                F.expr(self.where_predicate(spec, query.where, flattened=flattened))
-            )
-        dim_cols = [
-            F.expr(dim_expr(spec.dimension(d))).alias(d) for d in query.dimensions
-        ]
+            base = base.filter(F.expr(self._rewrite_dim_expr(spec, query.where)))
+        dims = list(query.dimensions)
         plain = [spec.measure(m) for m in query.measures if not spec.measure(m).is_windowed]
         windowed = [spec.measure(m) for m in query.measures if spec.measure(m).is_windowed]
 
         result: Optional[DataFrame] = None
-        if plain or not windowed:
-            agg_cols = [F.expr(meas_expr(m.expr)).alias(m.name) for m in plain]
-            result = base.groupBy(*dim_cols).agg(*agg_cols) if agg_cols else None
-            if result is None and not windowed:
-                raise QueryError("no measures to compute")
+        if plain:
+            result = base.groupBy(*[F.col(d) for d in dims]).agg(
+                *[F.expr(self.flat_expr(spec, m.expr, base)).alias(m.name) for m in plain]
+            )
 
-        for group in self._group_shareable_windows(spec, windowed, flattened):
-            if len(group) > 1:
+        for shared, group in self._group_shareable_windows(spec, windowed):
+            if shared:
                 wdf = self._window_measures_shared(
-                    spec, base, list(query.dimensions), group, flattened=flattened,
-                    grain_provider=window_grain_provider,
+                    spec, base, dims, group, window_grain_provider
                 )
             else:
-                wdf = self._window_measure(
-                    spec, base, list(query.dimensions), group[0], flattened=flattened,
-                    grain_provider=window_grain_provider,
-                )
-            if result is None:
-                result = wdf
-            else:
-                result = self._join_on_dims(result, wdf, list(query.dimensions))
+                wdf = self._window_measure(spec, base, dims, group[0], window_grain_provider)
+            result = wdf if result is None else self._join_on_dims(result, wdf, dims)
 
         assert result is not None
         # present columns in query order
@@ -508,8 +473,9 @@ class QueryCompiler:
     # ---------------- window measures ----------------
 
     def _window_frame_info(self, spec: MetricViewSpec, m: Measure):
-        """(frame_clause, order_dim_name, sorted current-part names) or
-        None when the measure's window shape is unsupported for sharing."""
+        """(order dim name, sorted current-part names) of a measure with
+        one fixed-length frame, or None (no single frame, or a calendar-unit
+        trailing window)."""
         frames = [w for w in m.windows if w.kind in ("trailing", "cumulative")]
         if len(frames) != 1:
             return None
@@ -524,31 +490,49 @@ class QueryCompiler:
         return (frame.order, parts)
 
     def _group_shareable_windows(
-        self, spec: MetricViewSpec, windowed: list[Measure], flattened: bool
-    ) -> list[list[Measure]]:
-        """Batch window measures that share (order dim, current-partition
-        keys) and decompose into partials — they can share one grain
+        self, spec: MetricViewSpec, windowed: list[Measure]
+    ) -> list[tuple[bool, list[Measure]]]:
+        """(shared, measures) batches: window measures that decompose
+        into partials and share (order dim, current-partition keys) go
+        together through :meth:`_window_measures_shared` — one grain
         aggregation and one window sort (Catalyst reuses the exchange+sort
-        for multiple window functions over the same partitioning)."""
+        for multiple window functions over the same partitioning); every
+        other window measure is its own unshared batch."""
         groups: dict = {}
-        order: list = []
         for m in windowed:
-            expr = (
-                self.strip_source_prefix(m.expr)
-                if flattened
-                else self._rewrite_dim_expr(spec, m.expr)
-            )
             info = self._window_frame_info(spec, m)
-            key = (
-                info
-                if info is not None and decompose_aggregate(expr, "_probe") is not None
-                else ("__solo__", m.name)
+            shared = (
+                info is not None
+                and decompose_aggregate(self.strip_source_prefix(m.expr), "_probe") is not None
             )
-            if key not in groups:
-                groups[key] = []
-                order.append(key)
-            groups[key].append(m)
-        return [groups[k] for k in order]
+            groups.setdefault((shared, info if shared else m.name), []).append(m)
+        return [(shared, ms) for (shared, _key), ms in groups.items()]
+
+    @staticmethod
+    def _grain(
+        base: DataFrame, grain_cols: list[str], partials: dict[str, str],
+        fns: dict[str, str], grain_provider,
+    ) -> DataFrame:
+        """The (partition × order) grain of *partials* (partial column ->
+        expression): read from *grain_provider* when it serves them, else
+        aggregated from *base*."""
+        needed = [(e, c, fns[c]) for c, e in partials.items()]
+        grain = grain_provider(grain_cols, needed) if grain_provider else None
+        if grain is None:
+            grain = base.groupBy(*[F.col(c) for c in grain_cols]).agg(
+                *[F.expr(e).alias(c) for c, e in partials.items()]
+            )
+        return grain
+
+    @staticmethod
+    def _partition_cols(dims: list[str], order: str, currents: Sequence[str]) -> list[str]:
+        """Columns that partition a window: query dims + ``current``
+        orders. The frame's own order dimension never partitions — when
+        the query groups by it, each group is a single order value and
+        the semiadditive-last reduction returns that frame's value."""
+        return [d for d in dims if d != order] + [
+            p for p in currents if p not in dims and p != order
+        ]
 
     def _window_measures_shared(
         self,
@@ -556,52 +540,26 @@ class QueryCompiler:
         base: DataFrame,
         dims: list[str],
         measures: list[Measure],
-        flattened: bool = False,
         grain_provider=None,
     ) -> DataFrame:
-        """N window measures over one shared grain: one grain aggregation
-        carrying the union of partial states, one window partitioning
-        (frames may differ per measure — Spark shares the sort), one
-        semiadditive-last reduction producing all N columns."""
+        """N decomposable window measures over one shared grain: one
+        grain aggregation carrying the union of partial states, one
+        window partitioning (frames may differ per measure — Spark shares
+        the sort), one semiadditive-last reduction producing all N
+        columns. The grain pre-aggregation is the scale path: the window
+        sort runs over grain rows, not source rows, or over a covering
+        rollup's partials read through *grain_provider*."""
         order_name, part_names = self._window_frame_info(spec, measures[0])
-        order_dim = spec.dimension(order_name)
-        extra_parts = [spec.dimension(p) for p in part_names]
-
-        if flattened:
-            dim_exprs = {d: d for d in dims}
-            order_expr = order_dim.name
-            part_exprs = {p.name: p.name for p in extra_parts}
-            base_exprs = {m.name: self.flat_expr(spec, m.expr, base) for m in measures}
-        else:
-            dim_exprs = {d: self._rewrite_dim_expr(spec, spec.dimension(d).expr) for d in dims}
-            order_expr = self._rewrite_dim_expr(spec, order_dim.expr)
-            part_exprs = {p.name: self._rewrite_dim_expr(spec, p.expr) for p in extra_parts}
-            base_exprs = {m.name: self._rewrite_dim_expr(spec, m.expr) for m in measures}
-
-        part_cols = [d for d in dims if d != order_dim.name] + [
-            p.name for p in extra_parts if p.name not in dims and p.name != order_dim.name
-        ]
-        grain_cols = part_cols + [order_dim.name]
-
-        def named(name: str) -> Column:
-            if name in dim_exprs:
-                return F.expr(dim_exprs[name]).alias(name)
-            if name == order_dim.name:
-                return F.expr(order_expr).alias(name)
-            return F.expr(part_exprs[name]).alias(name)
-
+        part_cols = self._partition_cols(dims, order_name, part_names)
+        grain_cols = part_cols + [order_name]
         decs = {
-            m.name: decompose_aggregate(base_exprs[m.name], prefix=f"_p_{m.name}")
+            m.name: decompose_aggregate(
+                self.flat_expr(spec, m.expr, base), prefix=f"_p_{m.name}"
+            )
             for m in measures
         }
-        partials = partial_columns(decs)
         fns = merge_functions(decs)
-        needed = [(e, c, fns[c]) for c, e in partials.items()]
-        grain = grain_provider(grain_cols, needed) if grain_provider else None
-        if grain is None:
-            grain = base.groupBy(*[named(c) for c in grain_cols]).agg(
-                *[F.expr(e).alias(c) for c, e in partials.items()]
-            )
+        grain = self._grain(base, grain_cols, partial_columns(decs), fns, grain_provider)
 
         # emit every measure's window merges in ONE projection: Catalyst
         # groups window functions by (partition, order) spec, so differing
@@ -614,14 +572,13 @@ class QueryCompiler:
         for m in measures:
             frame = [w for w in m.windows if w.kind in ("trailing", "cumulative")][0]
             semis[m.name] = frame.semiadditive
-            w = self._build_window(grain, part_cols, order_dim.name, frame)
+            w = self._build_window(grain, part_cols, order_name, frame)
             dec = decs[m.name]
-            finalize = dec.finalize
+            renames = {p_col: f"_w_{m.name}_{p_col}" for p_col in dec.merges}
             for p_col, fn in dec.merges.items():
-                merged_col = f"_w_{m.name}_{p_col}"
-                win_exprs.append(merge_column(fn, p_col).over(w).alias(merged_col))
-                finalize = finalize.replace(p_col, merged_col)
-            finalizes[m.name] = finalize
+                win_exprs.append(merge_column(fn, p_col).over(w).alias(renames[p_col]))
+            # whole identifiers only: `_p_m_1` is a prefix of `_p_m_10`
+            finalizes[m.name] = _sub_names(dec.finalize, renames)
         valued = grain.select("*", *win_exprs)
         val_cols = [f"_wval_{m.name}" for m in measures]
         valued = valued.select(
@@ -629,10 +586,9 @@ class QueryCompiler:
             *[F.expr(finalizes[m.name]).alias(vc) for vc, m in zip(val_cols, measures)],
         )
 
-        reduce_by = {"last": F.max_by, "first": F.min_by}
         return valued.groupBy(*[F.col(d) for d in dims]).agg(
             *[
-                reduce_by[semis[m.name]](vc, F.col(order_dim.name)).alias(m.name)
+                _REDUCE_BY[semis[m.name]](vc, F.col(order_name)).alias(m.name)
                 for vc, m in zip(val_cols, measures)
             ]
         )
@@ -643,10 +599,11 @@ class QueryCompiler:
         base: DataFrame,
         dims: list[str],
         measure: Measure,
-        flattened: bool = False,
         grain_provider=None,
     ) -> DataFrame:
-        """Compile one window measure to ``dims + [measure.name]``.
+        """Compile one window measure that :meth:`_window_measures_shared`
+        does not take — a calendar-unit trailing window, or an aggregate
+        that does not decompose — to ``dims + [measure.name]``.
 
         Semantics (README.md:250-278): evaluate the aggregate over ordered
         frames along the ``order`` dimension within each query-dim
@@ -658,56 +615,20 @@ class QueryCompiler:
         cumulative) defines the ordered frame.
         """
         frame_clauses = [w for w in measure.windows if w.kind in ("trailing", "cumulative")]
-        current_clauses = [w for w in measure.windows if w.kind == "current"]
         if len(frame_clauses) != 1:
             raise QueryError(
                 f"measure {measure.name!r}: need exactly one trailing/cumulative window "
                 f"clause, got {len(frame_clauses)}"
             )
         frame = frame_clauses[0]
-        order_dim = spec.dimension(frame.order)
-        extra_parts = [spec.dimension(w.order) for w in current_clauses]
-
-        if flattened:
-            dim_exprs = {d: d for d in dims}
-            order_expr = order_dim.name
-            part_exprs = {p.name: p.name for p in extra_parts}
-            base_expr = self.flat_expr(spec, measure.expr, base)
-        else:
-            dim_exprs = {d: self._rewrite_dim_expr(spec, spec.dimension(d).expr) for d in dims}
-            order_expr = self._rewrite_dim_expr(spec, order_dim.expr)
-            part_exprs = {p.name: self._rewrite_dim_expr(spec, p.expr) for p in extra_parts}
-            base_expr = self._rewrite_dim_expr(spec, measure.expr)
-
-        # columns that partition the window: query dims + `current` orders.
-        # The frame's own order dimension never partitions — when the query
-        # groups by it, each group is a single order value and the
-        # semiadditive-last reduction returns that frame's value.
-        part_cols = [d for d in dims if d != order_dim.name] + [
-            p.name for p in extra_parts if p.name not in dims and p.name != order_dim.name
-        ]
-        grain_cols = part_cols + [order_dim.name]
-
+        order = frame.order
+        currents = [w.order for w in measure.windows if w.kind == "current"]
+        part_cols = self._partition_cols(dims, order, currents)
+        grain_cols = part_cols + [order]
+        base_expr = self.flat_expr(spec, measure.expr, base)
         dec = decompose_aggregate(base_expr, prefix=f"_p_{measure.name}")
 
-        def named(name: str) -> Column:
-            if name in dim_exprs:
-                return F.expr(dim_exprs[name]).alias(name)
-            if name == order_dim.name:
-                return F.expr(order_expr).alias(name)
-            return F.expr(part_exprs[name]).alias(name)
-
-        def _grain_from(provider) -> Optional[DataFrame]:
-            if provider is None or dec is None:
-                return None
-            needed = [(e, c, dec.merges[c]) for e, c in dec.partials]
-            return provider(grain_cols, needed)
-
-        calendar_trailing = (
-            frame.kind == "trailing"
-            and frame.trailing_parts[1] in ("month", "quarter", "year")
-        )
-        if calendar_trailing:
+        if frame.kind == "trailing" and frame.trailing_parts[1] in ("month", "quarter", "year"):
             if dec is None:
                 raise QueryError(
                     f"measure {measure.name!r}: calendar-unit trailing windows "
@@ -720,17 +641,16 @@ class QueryCompiler:
             # scale.
             n, unit = frame.trailing_parts
             months = n * {"month": 1, "quarter": 3, "year": 12}[unit]
-            grain = _grain_from(grain_provider)
-            if grain is None:
-                grain = base.groupBy(*[named(c) for c in grain_cols]).agg(
-                    *[F.expr(p_expr).alias(p_col) for p_expr, p_col in dec.partials]
-                )
+            grain = self._grain(
+                base, grain_cols, partial_columns({measure.name: dec}), dec.merges,
+                grain_provider,
+            )
             left = grain.select(
                 *[F.col(c).alias(f"_l_{c}") for c in grain_cols]
             )
             cond = (
-                (F.col(order_dim.name) > F.add_months(F.col(f"_l_{order_dim.name}"), -months))
-                & (F.col(order_dim.name) <= F.col(f"_l_{order_dim.name}"))
+                (F.col(order) > F.add_months(F.col(f"_l_{order}"), -months))
+                & (F.col(order) <= F.col(f"_l_{order}"))
             )
             for p in part_cols:
                 cond = cond & F.col(f"_l_{p}").eqNullSafe(F.col(p))
@@ -741,37 +661,16 @@ class QueryCompiler:
                 *[merge_column(fn, p_col).alias(p_col) for p_col, fn in dec.merges.items()]
             )
             valued = windowed.withColumn("_wval", F.expr(dec.finalize))
-        elif dec is not None:
-            # SCALE PATH: pre-aggregate to the (partition × order) grain so
-            # the window sort runs over grain rows, not raw source rows —
-            # or, better, read the grain from a covering rollup's partials.
-            grain = _grain_from(grain_provider)
-            if grain is None:
-                grain = base.groupBy(*[named(c) for c in grain_cols]).agg(
-                    *[F.expr(p_expr).alias(p_col) for p_expr, p_col in dec.partials]
-                )
-            w = self._build_window(grain, part_cols, order_dim.name, frame)
-            merged = grain
-            for p_col, fn in dec.merges.items():
-                merged = merged.withColumn(p_col, merge_column(fn, p_col).over(w))
-            valued = merged.withColumn("_wval", F.expr(dec.finalize))
         else:
-            # fallback: window directly over source rows (range frames treat
-            # equal order values as peers, so no grain agg is required for
-            # correctness — only for scale).
-            enriched = base.select(
-                "*", *[named(c) for c in grain_cols if c not in base.columns]
-            )
-            w = self._build_window(enriched, part_cols, order_dim.name, frame)
-            valued = enriched.withColumn("_wval", F.expr(base_expr).over(w))
+            # a non-decomposable aggregate windows the rows themselves
+            # (range frames treat equal order values as peers, so no grain
+            # aggregation is needed for correctness — only for scale)
+            w = self._build_window(base, part_cols, order, frame)
+            valued = base.withColumn("_wval", F.expr(base_expr).over(w))
 
-        reduce_by = {"last": F.max_by, "first": F.min_by}
-        out = valued.groupBy(*[F.col(d) for d in dims]).agg(
-            reduce_by[frame.semiadditive]("_wval", F.col(order_dim.name)).alias(
-                measure.name
-            )
+        return valued.groupBy(*[F.col(d) for d in dims]).agg(
+            _REDUCE_BY[frame.semiadditive]("_wval", F.col(order)).alias(measure.name)
         )
-        return out
 
     @staticmethod
     def _order_key(df: DataFrame, order_col: str) -> tuple[Column, int]:

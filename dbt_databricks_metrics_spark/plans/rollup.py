@@ -96,8 +96,7 @@ class _Loaded:
     lock."""
 
     df: DataFrame
-    # stored rows, counted at load: a fold changes them but not the
-    # build-time BuiltRollup.n_rows
+    # stored rows, counted from the published files at load
     n_rows: int
     table: Optional[object] = None  # pyarrow.Table
 
@@ -112,7 +111,8 @@ class BuiltRollup:
     path: str
     # measure name -> its decomposition (partial col layout in the table)
     decompositions: dict[str, Decomposition] = field(default_factory=dict)
-    # row count recorded at build time — the router's cost estimate
+    # stored row count, observed by the build's and each fold's write —
+    # the router's cost estimate
     n_rows: Optional[int] = None
 
 
@@ -125,7 +125,7 @@ class MaterializationState:
 
 
 def _cost(built: BuiltRollup) -> tuple:
-    """The router's cost order: fewest stored rows (recorded at build)
+    """The router's cost order: fewest stored rows (``n_rows``)
     first, dim count as the fallback proxy."""
     return (
         built.n_rows if built.n_rows is not None else float("inf"),
@@ -640,16 +640,10 @@ class RollupManager:
             and any(query.spec.measure(m).is_windowed for m in query.measures)
         ):
             provider = WindowGrainProvider(self, query, state)
-        if source == "baseline":
-            # the snapshot already has filter+joins applied and dims
-            # materialized — expand in flattened mode (no re-join/re-filter)
-            base = self.spark.read.parquet(state.baseline)
-            df = self.compiler.compile_storage(
-                query, source_df=base, flattened=True,
-                window_grain_provider=provider,
-            )
-        else:
-            df = self.compiler.compile_storage(query, window_grain_provider=provider)
+        # the snapshot is the flat projection, persisted (no re-join or
+        # re-filter); live projects the source at query time
+        flat = self.spark.read.parquet(state.baseline) if source == "baseline" else None
+        df = self.compiler.compile_storage(query, flat, window_grain_provider=provider)
         if provider and provider.used:
             return df, f"{source}+grain:{','.join(provider.used)}"
         return df, source

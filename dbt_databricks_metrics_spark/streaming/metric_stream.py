@@ -161,36 +161,25 @@ def streaming_metric_view(
                 f"{missing} that are not in the requested set"
             )
 
-    if comp is not None:
-        # batch parity: the SAME source assembly as the batch compiler —
-        # spec.filter first, then the declared join tree (left joins,
-        # alias-per-level). Every piece is stateless, so it composes
-        # ahead of the watermark; the static sides are dim tables Spark
-        # broadcasts under the usual threshold.
-        src = comp.source_plan(spec, source_df=source)
-    else:
-        src = source
-        if spec.filter:  # batch parity: compiler applies the spec-level
-            # filter before aggregation (plans/compiler.py source_plan);
-            # stateless, so stream-safe ahead of the watermark (ADVICE r7)
-            src = src.filter(F.expr(spec.filter))
-    if src.isStreaming and watermark is not None:
-        src = src.withWatermark(ts_col, watermark)
+    # batch parity: the SAME source assembly and flat projection as the
+    # batch compiler — spec.filter first, then the declared join tree
+    # (left joins, alias-per-level), then every dimension as a column and
+    # each measure read through flat_expr. Every piece is stateless, so
+    # it composes ahead of the watermark; the static sides are dim tables
+    # Spark broadcasts under the usual threshold.
+    if comp is None:
+        comp = QueryCompiler(resolve)  # no joins: nothing to resolve
+    flat = comp.baseline_projection(spec, comp.source_plan(spec, source_df=source))
+    if flat.isStreaming and watermark is not None:
+        flat = flat.withWatermark(ts_col, watermark)
     win = (
         F.window(F.col(ts_col), window_duration, slide)
         if slide
         else F.window(F.col(ts_col), window_duration)
     )
-    def _jexpr(expr: str) -> str:
-        # snowflake dotted paths flatten to the leaf join alias, exactly
-        # as the batch compiler rewrites them — for DIMS and MEASURES
-        # alike (batch parity: compile() rewrites measure exprs too)
-        return comp._rewrite_dim_expr(spec, expr) if comp is not None else expr
-
-    grouped = src.groupBy(
-        win.alias("_w"),
-        *[F.expr(_jexpr(dim_by_name[n].expr)).alias(n) for n in dim_names],
-    ).agg(*[F.expr(_jexpr(m.expr)).alias(m.name) for m in plain])
+    grouped = flat.groupBy(win.alias("_w"), *[F.col(n) for n in dim_names]).agg(
+        *[F.expr(comp.flat_expr(spec, m.expr, flat)).alias(m.name) for m in plain]
+    )
     out = grouped.select(
         F.col("_w.start").alias("window_start"),
         F.col("_w.end").alias("window_end"),

@@ -23,7 +23,7 @@ place:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,6 +37,14 @@ def _partial_agg(delta: DataFrame, built: BuiltRollup) -> DataFrame:
     return delta.groupBy(*[F.col(d) for d in built.spec.dimensions]).agg(
         *[F.expr(e).alias(c) for c, e in partial_columns(built.decompositions).items()]
     )
+
+
+def _publish_counted(built: BuiltRollup, rows: DataFrame) -> None:
+    """Publish *rows* as *built*'s rollup and set its ``n_rows`` from a
+    row count that rides the write (no extra job)."""
+    ob = Observation()
+    publish_dir(built.path, rows.observe(ob, F.count(F.lit(1)).alias("n")).write.parquet)
+    built.n_rows = int(ob.get["n"])
 
 
 def merge_partials(old: DataFrame, delta_partials: DataFrame, built: BuiltRollup) -> DataFrame:
@@ -62,7 +70,7 @@ def fold_increment(
     delta = _partial_agg(delta_source_rows, built)
     recover_dir(built.path)
     old = spark.read.parquet(built.path)
-    publish_dir(built.path, merge_partials(old, delta, built).write.parquet)
+    _publish_counted(built, merge_partials(old, delta, built))
 
 
 def streaming_rollup(
@@ -96,7 +104,7 @@ def streaming_rollup(
             merged = merge_partials(old, delta, built)
         else:
             merged = delta
-        publish_dir(built.path, merged.write.parquet)
+        _publish_counted(built, merged)
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -231,10 +239,14 @@ def fold_retractions(
     # so publish_dir discards the tmp and the stored state is untouched
     # on refusal. The observation point sits ABOVE the zero-count prune
     # so the witness sees every merged row, like a standalone scan would.
-    from pyspark.sql import Observation
-
+    # The stored row count rides the same observation: the rows the
+    # zero-count prune below keeps.
     ob = Observation()
-    observed = merged.observe(ob, F.count_if(bad).alias("n_bad"))
+    observed = merged.observe(
+        ob,
+        F.count_if(bad).alias("n_bad"),
+        F.count_if(F.col(count_col) != 0).alias("n_rows"),
+    )
 
     def write(tmp: str) -> None:
         observed.filter(F.col(count_col) != 0).write.parquet(tmp)
@@ -253,3 +265,4 @@ def fold_retractions(
             )
 
     publish_dir(built.path, write)
+    built.n_rows = int(ob.get["n_rows"])

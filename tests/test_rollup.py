@@ -812,10 +812,45 @@ def test_fresh_read_after_refresh_cdc_runs_no_job(spark, tmp_path):
     assert sorted(tuple(r) for r in rows) == [("A", 35, 2), ("B", 12, 2)]
 
 
+def test_refresh_cdc_fold_job_budget(spark, tmp_path):
+    """A CDC fold of one rollup runs 5 Spark jobs; counting the rows it
+    stores rides the write and adds none."""
+    eng, _mv = _toy_view(spark, tmp_path, "mv_fold_budget",
+                         [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    before = spark.createDataFrame([("B", "x", 5)], "k string, s string, v bigint")
+    after = spark.createDataFrame([("C", "x", 1), ("C", "y", 2)], "k string, s string, v bigint")
+    n, _ = _jobs(spark, "cdc_fold", lambda: eng.refresh_cdc("mv_fold_budget", before, after))
+    assert n == 5
+
+
+def test_folds_update_candidate_n_rows(spark, tmp_path):
+    """After a CDC fold that deletes one group and inserts two, and an
+    incremental fold that adds one more, the router's stored-row count
+    (``explain_route``'s candidates) equals the rows the rollup holds."""
+    eng, mv = _toy_view(spark, tmp_path, "mv_fold_rows",
+                        [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    built = mv._rv.state.rollups["by_k_s"]
+
+    def candidate_rows():
+        (cand,) = mv.explain_route(["k"], ["total"])["candidates"]
+        return cand["n_rows"]
+
+    eng.refresh_cdc(
+        "mv_fold_rows",
+        spark.createDataFrame([("B", "x", 5)], "k string, s string, v bigint"),
+        spark.createDataFrame([("C", "x", 1), ("C", "y", 2)], "k string, s string, v bigint"),
+    )
+    assert candidate_rows() == spark.read.parquet(built.path).count() == 4
+    eng.refresh_incremental(
+        "mv_fold_rows",
+        spark.createDataFrame([("D", "x", 3)], "k string, s string, v bigint"),
+    )
+    assert candidate_rows() == spark.read.parquet(built.path).count() == 5
+
+
 def test_rollup_folded_past_the_bound_serves_from_spark(spark, tmp_path, monkeypatch):
-    """The driver tier's bound reads the rows the published rollup holds,
-    not the build-time count a fold leaves unchanged: once a fold grows
-    the rollup past the bound it serves from Spark."""
+    """The driver tier's bound reads the rows the published rollup holds:
+    once a fold grows the rollup past the bound it serves from Spark."""
     from dbt_databricks_metrics_spark.plans import rollup
 
     monkeypatch.setattr(rollup, "DRIVER_MAX_ROWS", 3)
@@ -825,7 +860,7 @@ def test_rollup_folded_past_the_bound_serves_from_spark(spark, tmp_path, monkeyp
         "tier": "driver", "n_rows": 3, "bound": 3}
     eng.refresh_incremental("mv_fold_grow", spark.createDataFrame(
         [("B", "y", 7), ("C", "x", 1)], "k string, s string, v bigint"))
-    assert mv._rv.state.rollups["by_k_s"].n_rows == 3  # build-time count
+    assert mv._rv.state.rollups["by_k_s"].n_rows == 5  # counted by the fold
     assert mv.explain_route(["k"], ["total"])["serving"] == {
         "tier": "spark", "n_rows": 5, "bound": 3}
     rows = {r["k"]: r["total"] for r in mv.query(["k"], ["total"]).collect()}

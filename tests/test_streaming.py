@@ -100,6 +100,7 @@ def test_streaming_rollup_availablenow(engine, spark, tmp_path):
     )
     q.awaitTermination(120)
     assert _rows(spark.read.parquet(out_path)) == full
+    assert stream_built.n_rows == spark.read.parquet(out_path).count()
 
 
 def test_stateful_sessionizer_matches_batch(spark, sf_dir, tmp_path):

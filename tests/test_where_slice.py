@@ -262,6 +262,20 @@ def test_slice_plan_quality_pushdown_and_pruning(engine):
     scan2 = next(l for l in plan2.splitlines() if "FileScan" in l)
     assert "order_status" in scan2.split("DataFilters:")[1].split("]")[0], scan2
 
+    # a slice of a joined view reaches the fact's scan through the joins
+    star = engine._compiler.compile(
+        MetricQuery(
+            engine.metric_view("mv_sales_star").spec,
+            ("region_name", "order_year"), ("revenue",),
+            where="return_flag = 'A'",
+        )
+    )
+    plan3 = star._jdf.queryExecution().executedPlan().toString()
+    scan3 = next(
+        l for l in plan3.splitlines() if "FileScan" in l and "lineitem" in l
+    )
+    assert "l_returnflag" in scan3.split("DataFilters:")[1].split("]")[0], scan3
+
 
 def test_slice_through_snowflake_join_paths(engine, duck):
     """Slices over snowflake dims: the WHERE references dims whose exprs
@@ -286,6 +300,34 @@ def test_slice_through_snowflake_join_paths(engine, duck):
         LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
         LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
         WHERE r.r_name = 'EUROPE' AND year(o.o_orderdate) >= 1995
+        GROUP BY 1
+        """,
+    )
+
+
+def test_slice_on_joined_column_path(engine, duck):
+    """A WHERE naming a joined column by its join alias (``part.brand``,
+    not a declared dimension) slices the live expansion, beside a measure
+    that reads another column of the same join (``part.retail_price``)."""
+    mv = engine.metric_view("mv_sales_star")
+    df = mv.query(
+        ["nation_name"], ["revenue", "line_count", "retail_value"],
+        where="part.brand = 'Brand#12'",
+    )
+    assert_df_matches_oracle(
+        df,
+        duck,
+        """
+        SELECT n.n_name AS nation_name,
+               sum(l.l_extendedprice * (1 - l.l_discount)) AS revenue,
+               count(*) AS line_count,
+               sum(l.l_quantity * p.p_retailprice) AS retail_value
+        FROM lineitem l
+        LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
+        LEFT JOIN customer c ON o.o_custkey = c.c_custkey
+        LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
+        LEFT JOIN part p ON l.l_partkey = p.p_partkey
+        WHERE p.p_brand = 'Brand#12'
         GROUP BY 1
         """,
     )

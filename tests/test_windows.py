@@ -342,3 +342,53 @@ def test_two_window_measures_one_query(engine, duck):
         JOIN cum ON plain.market_segment = cum.market_segment
         """,
     )
+
+
+_WIDE = " + ".join(f"sum(total_price * {k})" for k in range(1, 12))
+
+
+@pytest.mark.parametrize("measures", [["wide", "cum"], ["wide"]], ids=["shared", "alone"])
+def test_window_measure_with_eleven_partials(engine, duck, measures):
+    """A window measure of 11 aggregates decomposes into partials
+    ``_p_wide_0`` … ``_p_wide_10``, so ``_p_wide_1`` is a prefix of
+    ``_p_wide_10``: each windowed partial is renamed as a whole
+    identifier in the finalize, alone or sharing the frame with another
+    measure."""
+    mv = engine.register(
+        MetricViewSpec.from_yaml(
+            f"""
+version: 0.1
+source: fct_orders
+dimensions:
+  - name: order_status
+    expr: order_status
+  - name: order_date
+    expr: order_date
+measures:
+  - name: wide
+    expr: {_WIDE}
+    window:
+      - order: order_date
+        range: cumulative
+        semiadditive: last
+  - name: cum
+    expr: sum(total_price)
+    window:
+      - order: order_date
+        range: cumulative
+        semiadditive: last
+""",
+            name="mv_wide_window",
+        )
+    )
+    df = mv.query(["order_status"], measures)
+    cols = {"wide": f"{_WIDE} AS wide", "cum": "sum(total_price) AS cum"}
+    assert_df_matches_oracle(
+        df,
+        duck,
+        f"""
+        WITH fct AS ({FCT_ORDERS_SQL})
+        SELECT order_status, {", ".join(cols[m] for m in measures)}
+        FROM fct GROUP BY 1
+        """,
+    )
