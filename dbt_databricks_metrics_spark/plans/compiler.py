@@ -300,6 +300,23 @@ class QueryCompiler:
         """
         return self._project(spec, src, [m.expr for m in spec.measures])
 
+    def _reads(
+        self, spec: MetricViewSpec, exprs: Sequence[str], aliases: set[str]
+    ) -> tuple[set[str], dict[str, list[str]]]:
+        """(bare names, ``{join alias: [fields]}``) that *exprs* read,
+        snowflake paths taken at their leaf alias; only *aliases* count
+        as join aliases."""
+        fields: dict[str, list[str]] = {}
+        read: set[str] = set()
+        for expr in exprs:
+            text = self._rewrite_dim_expr(spec, self.strip_source_prefix(expr))
+            read |= {t for t, call in _identifier_tokens(text) if not call}
+            text = re.sub(r"'(?:[^'\\]|\\.)*'", "''", text)
+            for a, c in re.findall(r"(?<![\w.])([A-Za-z_]\w*)\.([A-Za-z_]\w*)", text):
+                if a in aliases and c not in fields.setdefault(a, []):
+                    fields[a].append(c)
+        return read, fields
+
     def _project(self, spec: MetricViewSpec, src: DataFrame, reads: Sequence[str]) -> DataFrame:
         """:meth:`baseline_projection` carrying the joined fields and
         shadowed columns that the expressions *reads* name."""
@@ -322,15 +339,7 @@ class QueryCompiler:
         ]
         taken = set(base_names) | collide
         aliases = {p[-1] for p in self._collect_join_paths(spec.joins)} - taken
-        fields: dict[str, list[str]] = {}
-        read: set[str] = set()
-        for expr in reads:
-            text = self._rewrite_dim_expr(spec, self.strip_source_prefix(expr))
-            read |= {t for t, call in _identifier_tokens(text) if not call}
-            text = re.sub(r"'(?:[^'\\]|\\.)*'", "''", text)
-            for a, c in re.findall(r"(?<![\w.])([A-Za-z_]\w*)\.([A-Za-z_]\w*)", text):
-                if a in aliases and c not in fields.setdefault(a, []):
-                    fields[a].append(c)
+        read, fields = self._reads(spec, reads, aliases)
         shadowed = [
             ref(n).alias(SHADOWED + n) for n in base_names if n in collide and n in read
         ]
@@ -339,6 +348,19 @@ class QueryCompiler:
             for a, cs in fields.items()
         ]
         return src.select(*kept, *extra, *shadowed, *joined)
+
+    def uncarried_fields(self, spec: MetricViewSpec, where: Optional[str]) -> list[str]:
+        """The joined ``alias.col`` fields *where* reads that the
+        :meth:`baseline_projection` does not carry (it carries only the
+        fields measures read), so a slice on them can only run live."""
+        if not spec.joins or not where:
+            return []
+        aliases = {p[-1] for p in self._collect_join_paths(spec.joins)}
+        _, carried = self._reads(spec, [m.expr for m in spec.measures], aliases)
+        _, wanted = self._reads(spec, [where], aliases)
+        return [
+            f"{a}.{c}" for a, cs in wanted.items() for c in cs if c not in carried.get(a, ())
+        ]
 
     def source_plan(self, spec: MetricViewSpec, source_df: Optional[DataFrame] = None) -> DataFrame:
         """(filtered, joined) source relation — the input to any expansion.

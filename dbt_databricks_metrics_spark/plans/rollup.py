@@ -547,7 +547,8 @@ class RollupManager:
         rollups are ranked for the plain measures only: a plain query
         takes the cheapest eligible rollup; a mixed plain+window query
         splits, its plain half from that rollup and its window half on
-        the fallback (baseline if present, else live)."""
+        the fallback: the baseline if present and it carries every joined
+        field the WHERE reads, else live."""
         storage, derived = expand_derived(query)
         spec = storage.spec
         plain = [m for m in storage.measures if not spec.measure(m).is_windowed]
@@ -579,6 +580,14 @@ class RollupManager:
             reason = "no rollups materialized"
         else:
             reason = "no rollup covers the requested dims+measures"
+        lacking = (
+            self.compiler.uncarried_fields(spec, storage.where)
+            if source == "baseline"
+            else []
+        )
+        if lacking:
+            source = "live"
+            reason += f"; the baseline snapshot does not carry {lacking}"
         if derived is not None:
             reason += (
                 f"; derived measures "

@@ -42,18 +42,19 @@ is single-quote-literal aware; WITH shapes it doesn't cover (CTE
 column-alias lists, recursive CTEs) fall through to plain ``spark.sql``
 untouched, except that any statement containing a ``MEASURE(`` token
 outside the supported shapes is refused with the front-end's clear error
-(never handed to Spark, which has no such function). MEASURE() CTEs
-register under session-unique temp names that are dropped before
-returning — CTE names never leak into or shadow the session catalog, and
-a CTE whose name collides with a metric view shadows the view for the
-rest of the statement (SQL scoping).
+(never handed to Spark, which has no such function). A CTE whose name
+collides with a metric view shadows the view for the rest of
+the statement (SQL scoping).
 
-Reference rewriting (r9, ADVICE r8): a MEASURE-CTE name is rewritten to
-its unique temp view ONLY where it stands in table position (after
-FROM/JOIN or a comma in a FROM list), with the declared name re-injected
-as the table alias — so ``rev.market_segment`` keeps resolving, and a
-column/alias that merely shares a CTE's name is never touched. See
-:func:`_rewrite_table_refs`.
+Name resolution is Spark's: each MEASURE() CTE registers under a
+session-unique temp view (dropped before returning, so nothing leaks into
+the session catalog) and stays in the WITH clause as ``name AS (SELECT *
+FROM <temp view>)`` beside the plain CTEs, so the plain final statement
+reaches ``spark.sql`` as written and Catalyst scopes every reference —
+aliases, joins, subqueries, inner-WITH shadowing. The one place outside
+that WITH clause is a MEASURE() statement's own WHERE/HAVING, which
+compiles through ``F.expr``: its subqueries are handed the declarations
+(:func:`_with_subqueries`).
 """
 
 from __future__ import annotations
@@ -102,10 +103,6 @@ _EXPLAIN_RE = re.compile(
     r"^\s*explain(?:\s+(formatted|extended|codegen|cost|simple))?\s+(?=\S)",
     re.IGNORECASE,
 )
-
-# identifiers (possibly dot-qualified — matched as ONE token so `db.rev`
-# never half-matches a CTE named `rev`) plus the three structural symbols
-_SQL_TOKEN_RE = re.compile(r"[A-Za-z_][\w.]*|[(),]")
 
 # any character that can OPEN a special region — a C-speed pre-scan that
 # lets _split_literals skip its per-character walk for the common
@@ -308,261 +305,6 @@ def _split_select_alias(item: str) -> tuple[str, Optional[str]]:
         return item, None
     return item[: am.end(1)].strip(), alias
 
-# words that may directly follow a table reference WITHOUT being its alias;
-# when one of these (or ',' / ')' / end-of-text) follows a rewritten CTE
-# reference, the declared CTE name is injected as the alias
-_POST_TABLE_KEYWORDS = frozenset(
-    "as on using where group order having limit window qualify union except "
-    "intersect minus join inner left right full cross natural anti semi "
-    "lateral tablesample pivot unpivot distribute cluster sort".split()
-)
-
-# clause keywords that END a FROM list at the current nesting depth (a
-# top-level comma after one of these is a select/group/order item separator,
-# not another table reference)
-_FROM_LIST_TERMINATORS = frozenset(
-    "where group having order limit window qualify union except intersect "
-    "minus select distribute cluster sort".split()
-)
-
-# SQL special forms whose argument lists contain a FROM *keyword* that does
-# NOT introduce a table reference: EXTRACT(YEAR FROM x), TRIM(BOTH c FROM
-# x), SUBSTRING(s FROM 2 FOR 3), OVERLAY(s PLACING t FROM 1), POSITION(a IN
-# b) (kept for symmetry with the standard's FROM-bearing forms)
-_EXPR_FROM_FUNCS = frozenset("extract trim substring overlay position".split())
-
-
-def _skip_balanced(tokens: list, j: int) -> int:
-    """Given ``tokens[j] == '('``, return the index just past its
-    matching ``')'``, or ``-1`` when the group never closes (callers
-    treat unbalanced input as shape-not-recognized)."""
-    d2, j = 1, j + 1
-    while j < len(tokens) and d2:
-        if tokens[j][3] == "(":
-            d2 += 1
-        elif tokens[j][3] == ")":
-            d2 -= 1
-        j += 1
-    return j if d2 == 0 else -1
-
-
-def _rewrite_table_refs(sql_text: str, alias: dict[str, str]) -> str:
-    """Rewrite references to earlier MEASURE-CTE names to their unique temp
-    views — ONLY in table position (after FROM/JOIN, or after a comma inside
-    a FROM list), re-aliasing the temp view to the declared name
-    (``FROM rev`` → ``FROM <uniq> AS rev``) unless the user supplied their
-    own alias. Qualified column references (``rev.market_segment``) then
-    resolve through the injected alias, and bare identifiers elsewhere —
-    column aliases or columns that happen to share a CTE name — are never
-    touched (ADVICE r8: the previous rewrite-every-identifier pass both
-    missed ``rev.x`` and corrupted coincidental names). String literals,
-    quoted identifiers, and comments are skipped wholesale.
-
-    A CTE referenced in a position this scanner does not recognize as a
-    table slot keeps its declared name and surfaces as Spark's ordinary
-    "table not found" — never a silent wrong answer.
-
-    Inner ``WITH`` clauses SHADOW (review r10 #2): a subquery may declare
-    its own CTE with the same name as an outer MEASURE-CTE, and SQL
-    scoping says the inner declaration wins inside that subquery — so the
-    scanner records ``<name> AS (`` declarations that follow a nested
-    ``WITH`` and suppresses rewriting of those names at that depth and
-    deeper, until the enclosing paren closes."""
-    if not alias:
-        return sql_text
-    lower_alias = {k.lower(): v for k, v in alias.items()}
-    parts = _split_literals(sql_text)
-    # one token stream over the syntactic (even) parts — comments/strings
-    # between tokens are transparent to the state machine AND to the
-    # alias-lookahead (``FROM rev /* c */ r`` keeps the user alias).
-    # BACKTICK-QUOTED identifiers, however, ARE tokens (review r9 #3): a
-    # quoted table name must consume the expected-table slot (``FROM `t`
-    # JOIN rev`` — rev still rewrites) and a quoted alias must be visible
-    # to the lookahead (``FROM rev `r``` — no injection). They are never
-    # rewritten themselves: a quoted name never matches a CTE.
-    tokens: list[tuple[int, int, int, str]] = []  # (part, start, end, text)
-    for idx, part in enumerate(parts):
-        if idx % 2:
-            if part.startswith("`"):
-                tokens.append((idx, 0, len(part), part))
-            continue
-        for tm in _SQL_TOKEN_RE.finditer(part):
-            tokens.append((idx, tm.start(), tm.end(), tm.group()))
-    edits: dict[int, list[tuple[int, int, str]]] = {}
-    depth = 0
-    in_from: dict[int, bool] = {}  # per-paren-depth "inside a FROM list"
-    expr_from: dict[int, bool] = {}  # depth opened by EXTRACT(/TRIM(/… —
-    # a FROM keyword at that depth is expression syntax, not a table slot
-    shadow: dict[int, set[str]] = {}  # depth → names an inner WITH at
-    # that depth declares; they suppress rewriting at that depth and
-    # deeper (SQL scoping, review r10 #2) until the paren closes
-    cte_decl: dict[int, bool] = {}  # depth → between WITH and its SELECT
-    pending_open: dict[int, str] = {}  # token index of a declaration's
-    # body '(' → declared name; activation is DEFERRED to the body's
-    # CLOSE (review r10 pass 3 #3): inside its own body the name still
-    # resolves to the OUTER scope (non-recursive SQL), so suppression
-    # must start only after the body ends
-    active_pending: dict[int, list[str]] = {}  # depth → names whose body
-    # is currently open at depth+1; moved into shadow[depth] on close
-    expecting = False  # the next word token is a table reference
-    expect_depth = 0
-    prev_word = ""  # last word token, for the special-form-( lookbehind
-    for t_i, (p_i, s, e, tok) in enumerate(tokens):
-        low = tok.lower()
-        if tok == "(":
-            nm = pending_open.pop(t_i, None)
-            if nm is not None:
-                active_pending.setdefault(depth, []).append(nm)
-            rearm = expecting and depth == expect_depth
-            depth += 1
-            if rearm:
-                # a parenthesized relation: its FIRST token may itself be
-                # a table reference — `FROM (rev JOIN cust ON …)` — or a
-                # subquery's SELECT (consumed harmlessly by the expecting
-                # branch below, which never matches a CTE name). in_from
-                # is NOT set here — the expecting branch arms it lazily
-                # once the first inner token proves this is a relation
-                # list, not a subquery (ADVICE r9 #1: `FROM (rev, cust) j`
-                # must rewrite BOTH comma-joined relations, while commas
-                # inside a subquery's select list stay item separators).
-                expect_depth = depth
-            elif prev_word in _EXPR_FROM_FUNCS:
-                expr_from[depth] = True
-            prev_word = ""
-            continue
-        if tok == ")":
-            in_from.pop(depth, None)
-            expr_from.pop(depth, None)
-            shadow.pop(depth, None)  # inner-WITH scope ends with its paren
-            cte_decl.pop(depth, None)
-            active_pending.pop(depth, None)
-            depth -= 1
-            if depth in active_pending:
-                # a declaration's body just closed — its name shadows
-                # from here to the end of this WITH's scope
-                shadow.setdefault(depth, set()).update(
-                    active_pending.pop(depth)
-                )
-            prev_word = ""
-            continue
-        if tok == ",":
-            if in_from.get(depth):
-                expecting, expect_depth = True, depth
-            prev_word = ""
-            continue
-        if expecting and depth == expect_depth:
-            if low == "lateral":
-                prev_word = low
-                continue  # still expecting the table reference
-            expecting = False
-            if low == "with":
-                # `FROM (WITH …)` — a subquery with its own CTEs; arm the
-                # declaration capture so those names shadow at this depth
-                cte_decl[depth] = True
-            if low not in ("select", "values", "with") and not in_from.get(
-                depth
-            ):
-                # first token inside a parenthesized relation slot is an
-                # identifier — this depth is a relation list, so a later
-                # comma here re-arms the table slot (ADVICE r9 #1:
-                # `FROM (rev, cust) j` rewrites BOTH). SELECT/WITH open a
-                # subquery and VALUES an inline table: their commas are
-                # item/row separators, never table slots.
-                in_from[depth] = True
-            uniq = lower_alias.get(low)
-            if uniq and any(
-                low in shadow.get(d2, ()) for d2 in range(depth + 1)
-            ):
-                uniq = None  # an inner WITH re-declared this name — SQL
-                # scoping: the inner CTE wins inside its subquery
-            if uniq:
-                nxt = (
-                    tokens[t_i + 1][3].lower() if t_i + 1 < len(tokens) else None
-                )
-                user_alias = nxt is not None and nxt not in ("(", ")", ",") and (
-                    nxt == "as" or nxt not in _POST_TABLE_KEYWORDS
-                )
-                if nxt == "tablesample":
-                    # Spark's grammar puts the sample clause BEFORE the
-                    # table alias — inject the declared name AFTER the
-                    # sample's closing paren instead, unless the user
-                    # aliased there themselves (review r9 pass 3)
-                    repl = uniq
-                    j = t_i + 2  # the sample clause's opening paren
-                    if j < len(tokens) and tokens[j][3] == "(":
-                        j = _skip_balanced(tokens, j)
-                        after = (
-                            tokens[j][3].lower()
-                            if 0 <= j < len(tokens)
-                            else None
-                        )
-                        post_alias = after is not None and after not in (
-                            "(", ")", ",",
-                        ) and (after == "as" or after not in _POST_TABLE_KEYWORDS)
-                        if j != -1 and not post_alias:
-                            close = tokens[j - 1]
-                            edits.setdefault(close[0], []).append(
-                                (close[2], close[2], f" {tok}")
-                            )
-                elif user_alias:
-                    repl = uniq
-                else:
-                    repl = f"{uniq} AS {tok}"
-                edits.setdefault(p_i, []).append((s, e, repl))
-            prev_word = low
-            continue
-        if cte_decl.get(depth):
-            # a declared name is a bare identifier OR a backtick-quoted
-            # one (`` `rev` `` declares rev — strip the quotes, review
-            # r10 pass 2 #1); the declaration shape is `<name> AS (` or
-            # `<name> (col, …) AS (` (column-alias list)
-            decl = (
-                low[1:-1].strip().lower()
-                if tok.startswith("`")
-                else (low if re.fullmatch(r"[A-Za-z_]\w*", tok) else None)
-            )
-            if decl and decl not in ("with", "select"):
-                j = t_i + 1
-                if j < len(tokens) and tokens[j][3] == "(":
-                    # maybe a column-alias list — skip the balanced group
-                    j = _skip_balanced(tokens, j)
-                if (
-                    j != -1
-                    and j + 1 < len(tokens)
-                    and tokens[j][3].lower() == "as"
-                    and tokens[j + 1][3] == "("
-                ):
-                    # an inner CTE declaration — registered against its
-                    # BODY's '(' so shadowing activates at body CLOSE
-                    pending_open[j + 1] = decl
-            if low == "select":
-                cte_decl[depth] = False  # the WITH's final statement
-        if low == "from" and not expr_from.get(depth):
-            expecting, expect_depth = True, depth
-            in_from[depth] = True
-        elif low == "join":
-            expecting, expect_depth = True, depth
-            in_from[depth] = True
-        elif low == "lateral":
-            # LATERAL VIEW attaches AFTER every relation in the FROM
-            # clause; commas beyond it separate its generated-column
-            # aliases (`… LATERAL VIEW posexplode(m) x AS k, v`), never
-            # another table reference
-            in_from[depth] = False
-        elif low == "with":
-            # a nested WITH outside a table slot (scalar subquery, IN (…))
-            # still declares shadowing CTEs at this depth
-            cte_decl[depth] = True
-        elif low in _FROM_LIST_TERMINATORS:
-            in_from[depth] = False
-        prev_word = low
-    for p_i, part_edits in edits.items():
-        text = parts[p_i]
-        for s, e, repl in sorted(part_edits, reverse=True):
-            text = text[:s] + repl + text[e:]
-        parts[p_i] = text
-    return "".join(parts)
-
 
 def _split_top_level(s: str) -> list[str]:
     """Split on commas at paren depth 0 — counting structure over the
@@ -624,16 +366,10 @@ def _parse_ctes(text: str) -> tuple[list[tuple[str, str]], str]:
                 f"expected '<name> AS (...)' in WITH clause at: {s[i:i+40]!r}"
             )
         name = s[i + m.start(1):i + m.end(1)]
-        if not re.fullmatch(r"[A-Za-z_]\w*", name):
-            # the masked match can cover a backtick-quoted name (its `_`
-            # filler looks like an identifier) — that shape is not this
-            # thin parser's; raise so the caller falls through to plain
-            # spark.sql, keeping the 'a quoted name never matches a CTE'
-            # invariant (review r10 pass 2 #3)
-            raise MeasureSQLError(
-                f"quoted CTE name {name!r} is not supported by the "
-                f"MEASURE() front-end"
-            )
+        if not re.fullmatch(r"[A-Za-z_]\w*|`[^`]+`", name):
+            # the masked match also covers a string literal (its `_`
+            # filler looks like an identifier) — not a CTE name
+            raise MeasureSQLError(f"expected a CTE name, got {name!r}")
         j = i + m.end()  # first char inside the body
         depth, k = 1, j
         while k < len(masked) and depth:
@@ -663,14 +399,14 @@ def _measure_view_target(
 ) -> Optional[str]:
     """The registered metric view a statement addresses in the documented
     MEASURE() shape, else None (→ plain Spark SQL). *shadowed* names
-    (earlier CTEs in the same statement) win over same-named catalog
-    entries, as SQL scoping requires."""
+    (earlier CTEs in the same statement, lower-cased) win over same-named
+    catalog entries, as SQL scoping requires."""
     mq = _match_query(text)
     if not mq:
         return None
     _, grp = mq
     view = grp("view").split(".")[-1]
-    if view in shadowed:
+    if view.lower() in shadowed:
         return None
     return view if view in engine.catalog.names() else None
 
@@ -690,12 +426,35 @@ def _refuse_stray_measure(engine: "MetricEngine", text: str) -> None:
         )
 
 
+def _with_subqueries(text: str, decls: Sequence[str]) -> str:
+    """*text* with ``WITH <decls>`` opening each outermost ``(SELECT``
+    subquery (found over the literal-masked copy). A MEASURE() statement's
+    WHERE/HAVING compiles through ``F.expr``, outside the statement's WITH
+    clause, so this is how a subquery there reads an earlier CTE."""
+    if not decls:
+        return text
+    head = "WITH " + ", ".join(decls) + " "
+    out, last, depth, outer = [], 0, 0, None
+    for m in re.finditer(r"\((\s*select\b)?|\)", _mask_literals(text), re.IGNORECASE):
+        if m.group() == ")":
+            depth -= 1
+            if depth == outer:
+                outer = None  # the outermost subquery closed
+            continue
+        if m.group(1) and outer is None:
+            outer = depth
+            out += [text[last:m.start() + 1], head]
+            last = m.start() + 1
+        depth += 1
+    return "".join(out) + text[last:]
+
+
 def execute_sql(engine: "MetricEngine", text: str) -> DataFrame:
-    """Universal SQL entry point (module docstring): MEASURE() CTEs run
-    through the metric compiler (routing applies) and register as temp
-    views under session-unique names — references are rewritten, so CTE
-    names never leak into or clobber the session catalog; everything
-    else delegates to ``spark.sql``."""
+    """Universal SQL entry point (module docstring): each MEASURE() CTE
+    runs through the metric compiler (routing applies), registers under a
+    session-unique temp view and stays in the WITH clause as ``name AS
+    (SELECT * FROM <temp view>)``; the plain statement then goes to
+    ``spark.sql`` as written, so Spark resolves every CTE reference."""
     import uuid
 
     original = text
@@ -738,48 +497,50 @@ def execute_sql(engine: "MetricEngine", text: str) -> DataFrame:
         return engine.spark.sql(original)
 
     spark = engine.spark
-    seen: set[str] = set()  # CTE names shadow catalog objects downstream
-    alias: dict[str, str] = {}  # declared CTE name → unique temp view
-    plain: list[tuple[str, str]] = []
+    seen: set[str] = set()  # CTE names (lower-cased) shadow catalog objects
+    decls: list[str] = []  # the WITH clause Spark sees: `name AS (body)` each
+    plain: list[str] = []  # names of the plain-SQL CTEs
     registered: list[str] = []
     cte_routes: list[str] = []  # "cte <name>: <route>" provenance lines
 
     try:
         for name, body in ctes:
-            body = _rewrite_table_refs(body, alias)
             if _measure_view_target(engine, body, frozenset(seen)):
-                uniq = f"_mv_cte_{name}_{uuid.uuid4().hex[:8]}"
+                uniq = f"_mv_cte_{uuid.uuid4().hex}"
                 # an EXPLAINed composition never serves its CTEs either —
                 # keep them out of the advisor's workload log too
                 cte_df, route = _compile_measure_query(
-                    engine, body, log_workload=explain_mode is None
+                    engine, _with_subqueries(body, decls),
+                    log_workload=explain_mode is None,
                 )
                 cte_df.createOrReplaceTempView(uniq)
                 registered.append(uniq)
-                alias[name] = uniq
                 cte_routes.append(f"cte {name}: {route}")
+                body = f"SELECT * FROM {uniq}"
             else:
                 _refuse_stray_measure(engine, body)
-                plain.append((name, body))
-            seen.add(name)
-        final = _rewrite_table_refs(final, alias)
+                plain.append(name)
+            # a newline closes the body so a trailing line comment in it
+            # cannot swallow the paren
+            decls.append(f"{name} AS ({body}\n)")
+            seen.add(name.strip("`").lower())
         if _measure_view_target(engine, final, frozenset(seen)):
             if plain:
                 raise MeasureSQLError(
-                    f"plain-SQL CTEs {[n for n, _ in plain]} cannot feed a "
+                    f"plain-SQL CTEs {plain} cannot feed a "
                     f"MEASURE() final statement — make the final statement "
                     f"plain SQL over the MEASURE() CTEs instead"
                 )
             return execute_measure_sql(
-                engine, final, explain_mode=explain_mode,
-                route_prefix=cte_routes,
+                engine, _with_subqueries(final, decls),
+                explain_mode=explain_mode, route_prefix=cte_routes,
             )
         _refuse_stray_measure(engine, final)
-        if plain:
-            final = (
-                "WITH " + ", ".join(f"{n} AS ({b})" for n, b in plain)
-                + " " + final
-            )
+        # with no MEASURE() CTE there is nothing to substitute: Spark gets
+        # the statement as written
+        final = (
+            "WITH " + ", ".join(decls) + " " + final if registered else text.strip()
+        )
         if explain_mode and cte_routes:
             # VERDICT r8 #5: a plain-SQL final over MEASURE() CTEs keeps
             # the per-CTE routing provenance — the temp views inline into

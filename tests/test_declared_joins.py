@@ -275,3 +275,64 @@ def test_measures_over_joined_columns_route_like_live(
     assert got == route
     live = engine._compiler.compile(MetricQuery(mv.spec, tuple(dims), tuple(measures)))
     assert _rounded(routed) == _rounded(live)
+
+
+# the snapshot's join structs carry only the joined fields measures read
+SNAPSHOT_JOIN_SPEC = """
+version: 0.1
+source: stg_orders
+joins:
+  - name: cust
+    source: stg_customers
+    on: source.customer_id = cust.customer_id
+    joins:
+      - name: nat
+        source: nation
+        on: cust.nation_id = nat.n_nationkey
+dimensions:
+  - name: order_status
+    expr: order_status
+measures:
+  - name: rev
+    expr: sum(total_price)
+  - name: balance
+    expr: sum(cust.account_balance)
+materialization:
+  materialized_views:
+    - name: snapshot
+      type: unaggregated
+"""
+
+
+@pytest.fixture(scope="module")
+def snapshot_join_mv(engine):
+    mv = engine.register(MetricViewSpec.from_yaml(SNAPSHOT_JOIN_SPEC, name="mv_snapshot_join"))
+    engine.refresh("mv_snapshot_join")
+    return mv
+
+
+@pytest.mark.parametrize(
+    "where, route",
+    [
+        ("cust.nat.n_name = 'NATION_19'", "live"),
+        ("cust.market_segment = 'BUILDING'", "live"),
+        ("cust.account_balance > 0", "baseline"),
+        (None, "baseline"),
+    ],
+)
+def test_where_on_joined_field_routes_where_it_resolves(
+    engine, snapshot_join_mv, where, route
+):
+    """A WHERE on a joined field no measure reads is not in the baseline
+    snapshot, so it runs live; one on a carried field stays on the
+    snapshot. Either way the answer is the live one."""
+    from dbt_databricks_metrics_spark.plans.compiler import MetricQuery
+
+    mv = snapshot_join_mv
+    routed, got = mv.query_routed(["order_status"], ["rev"], where=where)
+    assert got == route
+    live = engine._compiler.compile(
+        MetricQuery(mv.spec, ("order_status",), ("rev",), where=where)
+    )
+    assert _rounded(routed) == _rounded(live)
+    assert _rounded(routed)

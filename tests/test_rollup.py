@@ -695,6 +695,22 @@ def test_driver_served_measure_sql_runs_no_job(engine, spark):
     assert _norm_rows(rows) == _rows(ref)
 
 
+def test_driver_served_measure_cte_runs_no_job(engine, spark):
+    """A plain final over a driver-served MEASURE() CTE: the CTE reads its
+    temp view, which Spark inlines, so the warm statement runs no job."""
+    text = (
+        "WITH rev AS (SELECT market_segment, MEASURE(total_revenue) AS revenue "
+        "FROM mv_order_metrics WHERE order_status = 'F' GROUP BY market_segment) "
+        "SELECT * FROM rev"
+    )
+    engine.sql(text).collect()
+    n, rows = _jobs(spark, "driver_cte", lambda: engine.sql(text).collect())
+    assert n == 0
+    ref = engine.metric_view("mv_order_metrics").query(
+        ["market_segment"], ["total_revenue"], where="order_status = 'F'")
+    assert _norm_rows(rows) == _rows(ref)
+
+
 def test_rollup_over_the_bound_serves_from_spark(engine, spark, monkeypatch):
     """One row over ``DRIVER_MAX_ROWS`` the same rollup serves through
     Spark: same route, Spark jobs, equal values."""

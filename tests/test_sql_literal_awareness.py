@@ -2,9 +2,9 @@
 #1/#2): clause keywords, commas, and parens inside string literals,
 quoted identifiers, or comments must never mis-split a statement — the
 clause regex and the top-level splitter run over a literal-MASKED copy
-and slice payloads from the original by span. Plus the two ADVICE items
-riding the same file: parenthesized comma-joins rewrite every relation,
-and ORDER BY accepts NULLS FIRST/LAST and plain scalar expressions.
+and slice payloads from the original by span. Plus the ADVICE items
+riding the same file: comma-joins over MEASURE() CTEs, and ORDER BY
+accepts NULLS FIRST/LAST and plain scalar expressions.
 
 Every live test here round-trips against the DuckDB oracle at the same
 exactness bar the driver applies.
@@ -25,7 +25,6 @@ from dbt_databricks_metrics_spark.sql_frontend import (
     _mask_literals,
     _match_query,
     _measure_calls,
-    _rewrite_table_refs,
     _split_select_alias,
     _split_top_level,
     _strip_measure_calls,
@@ -237,30 +236,8 @@ def test_order_by_limit_stays_one_takeordered(engine):
 
 
 # ---------------------------------------------------------------------------
-# rewrite: parenthesized comma-join (ADVICE r9 #1)
+# comma-joins over MEASURE() CTEs (ADVICE r9 #1)
 # ---------------------------------------------------------------------------
-
-
-def test_rewrite_parenthesized_comma_join():
-    alias = {"rev": "_u_rev", "cust": "_u_cust"}
-    out = _rewrite_table_refs("SELECT * FROM (rev, cust) j", alias)
-    assert out == "SELECT * FROM (_u_rev AS rev, _u_cust AS cust) j"
-    # subquery select-list commas stay item separators
-    out = _rewrite_table_refs("SELECT * FROM (SELECT a, rev FROM t) s", alias)
-    assert "_u_" not in out
-    # VALUES rows are never table slots
-    out = _rewrite_table_refs("SELECT * FROM (VALUES (rev), (cust)) t", alias)
-    assert "_u_" not in out
-    # an inner WITH is a subquery, not a relation list — AND its CTE
-    # declarations SHADOW same-named outer MEASURE-CTEs (review r10 #2:
-    # SQL scoping says the inner `rev` wins inside the subquery, so
-    # rewriting `FROM rev` there would silently swap in the outer rows)
-    out = _rewrite_table_refs(
-        "SELECT * FROM (WITH rev AS (SELECT 1 AS a), cust AS (SELECT 2 AS a)"
-        " SELECT * FROM rev) s",
-        alias,
-    )
-    assert "_u_rev" not in out and "_u_cust" not in out
 
 
 def test_rewrite_comma_join_live(engine, duck):
@@ -299,8 +276,7 @@ def test_paren_comma_join_fails_loudly(engine):
     """ADVICE r9 #1 epilogue: Spark's grammar has NO parenthesized
     comma-join — `FROM (a, b)` is a parse error against plain tables too
     (verified: `SELECT * FROM (t1, t2)` → PARSE_SYNTAX_ERROR). The
-    rewriter now rewrites BOTH relations (no more half-rewritten text in
-    the error), and the statement fails loudly at Spark's parser — the
+    statement fails loudly at Spark's parser — the
     documented-unsupported-shape arm of the advice."""
     from pyspark.errors.exceptions.captured import ParseException
 
@@ -464,21 +440,6 @@ def test_backslash_escaped_quote_in_literal(engine, duck):
     )
 
 
-def test_rewrite_shadow_scope_ends_with_subquery():
-    """Review r10 #2: the inner-WITH shadow applies only inside its
-    subquery — the same name in table position AFTER the paren closes
-    still rewrites to the MEASURE-CTE temp view."""
-    alias = {"rev": "_u_rev"}
-    out = _rewrite_table_refs(
-        "SELECT * FROM (WITH rev AS (SELECT 1 AS a) SELECT * FROM rev) s"
-        " JOIN rev ON s.a = rev.a",
-        alias,
-    )
-    inner, outer = out.split(" JOIN ", 1)
-    assert "_u_rev" not in inner  # shadowed inside the subquery
-    assert outer.startswith("_u_rev AS rev")  # rewritten outside it
-
-
 def test_inner_with_shadowing_returns_inner_rows(engine):
     """Live: a subquery's own CTE named like a MEASURE-CTE must win
     inside that subquery (SQL scoping) — the statement returns the inner
@@ -609,23 +570,6 @@ def test_parse_ctes_backslash_literal_body():
 # ---------------------------------------------------------------------------
 
 
-def test_rewrite_shadowing_covers_collist_and_backtick_names():
-    """Pass-2 #1: an inner CTE declared with a column-alias list
-    (`rev (one) AS (...)`) or a backtick-quoted name (`` `rev` AS
-    (...) ``) shadows the outer MEASURE-CTE just like the bare shape."""
-    alias = {"rev": "_u_rev"}
-    out = _rewrite_table_refs(
-        "SELECT * FROM (WITH rev (one) AS (SELECT 1) SELECT * FROM rev) s",
-        alias,
-    )
-    assert "_u_rev" not in out
-    out = _rewrite_table_refs(
-        "SELECT * FROM (WITH `rev` AS (SELECT 1 AS a) SELECT * FROM rev) s",
-        alias,
-    )
-    assert "_u_rev" not in out
-
-
 def test_order_guard_allows_struct_field_access(engine):
     """Pass-2 #2: `expr.field` ends in an identifier preceded by `.` —
     a struct-field access, never an alias; the guard must not fire."""
@@ -649,9 +593,9 @@ def test_order_guard_allows_struct_field_access(engine):
 
 
 def test_backtick_cte_name_falls_through_to_spark(engine):
-    """Pass-2 #3: a backtick-quoted CTE name is not the thin parser's
-    shape — the whole statement falls through to plain spark.sql and
-    runs there (the 'a quoted name never matches a CTE' invariant)."""
+    """A backtick-quoted plain CTE name (declared and referenced): with no
+    MEASURE() CTE the statement reaches spark.sql as written and runs
+    there."""
     rows = engine.sql(
         "WITH `rev` AS (SELECT 1 AS a) SELECT * FROM `rev`"
     ).collect()
@@ -731,51 +675,9 @@ def test_unterminated_comment_error_reaches_user(engine):
         )
 
 
-def test_outer_cte_visible_inside_inner_body():
-    """Pass-3 #3: inside an inner CTE's OWN body the declared name still
-    resolves to the OUTER scope (non-recursive SQL) — shadowing starts
-    only after the body closes."""
-    alias = {"rev": "_u_rev"}
-    out = _rewrite_table_refs(
-        "SELECT * FROM (WITH rev AS (SELECT * FROM rev WHERE k > 0)"
-        " SELECT * FROM rev) t",
-        alias,
-    )
-    body, final = out.split(" WHERE k > 0)", 1)
-    assert "_u_rev AS rev" in body  # body's FROM rev = the OUTER CTE
-    assert "_u_rev" not in final  # final's FROM rev = the inner CTE
-
-
 # ---------------------------------------------------------------------------
-# exhaustive shape matrices for the r10 scoping + guard invariants
+# exhaustive shape matrix for the ORDER BY alias guard
 # ---------------------------------------------------------------------------
-
-
-@pytest.mark.parametrize("decl", ["rev", "other"])
-@pytest.mark.parametrize("collist", [False, True])
-@pytest.mark.parametrize("backtick", [False, True])
-def test_shadowing_matrix(decl, collist, backtick):
-    """Every inner-declaration shape × name combination obeys SQL
-    scoping: the inner body sees the OUTER name; the inner final SELECT
-    sees the inner declaration (shadow iff same name); outside the
-    subquery the outer name always rewrites."""
-    alias = {"rev": "_u_rev"}
-    name = f"`{decl}`" if backtick else decl
-    cols = " (a)" if collist else ""
-    sql = (
-        f"SELECT * FROM (WITH {name}{cols} AS (SELECT * FROM rev)"
-        f" SELECT * FROM rev) s JOIN rev r2 ON 1 = 1"
-    )
-    out = _rewrite_table_refs(sql, alias)
-    body_ref = out.split("AS (SELECT * FROM ", 1)[1].split(")", 1)[0]
-    assert body_ref == "_u_rev AS rev"  # body ref = outer scope, always
-    inner_final = out.split(") SELECT * FROM ", 1)[1].split(")", 1)[0]
-    if decl == "rev":
-        assert inner_final == "rev"  # shadowed by the declaration
-    else:
-        assert inner_final == "_u_rev AS rev"  # no shadowing — rewrites
-    outside = out.rsplit(" JOIN ", 1)[1]
-    assert outside.startswith("_u_rev")  # outside the subquery, always
 
 
 _GUARD_OK_EXPRS = [
