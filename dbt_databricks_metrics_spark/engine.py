@@ -739,8 +739,13 @@ class MetricEngine:
         exactly; min/max/sketch rollups are refused
         (``streaming/refresh.py::fold_retractions``). Baseline snapshots
         are append-only and cannot retract — a view with a baseline is
-        refused (drop it or rebuild)."""
-        from .streaming.refresh import fold_retractions
+        refused (drop it or rebuild). When both frames already live on
+        the driver (``isLocal()``, e.g. made from a ``pyarrow.Table`` or
+        pandas frame), a rollup served from the driver folds there with
+        no Spark job and stays resident
+        (``streaming/refresh.py::fold_retractions_on_driver``); every
+        other rollup takes the Spark fold."""
+        from .streaming.refresh import fold_retractions, fold_retractions_on_driver
 
         rv = self.catalog.get(name)
         if rv.state is None:
@@ -760,13 +765,16 @@ class MetricEngine:
 
         for built in rv.state.rollups.values():
             validate_retractable(built)
+        local = before.isLocal() and after.isLocal()
         b = self._compiler.baseline_projection(rv.spec, before)
         a = self._compiler.baseline_projection(rv.spec, after)
-        try:
-            for built in rv.state.rollups.values():
+        for built in rv.state.rollups.values():
+            if local and fold_retractions_on_driver(self._rollups, built, b, a):
+                continue
+            try:
                 fold_retractions(self.spark, built, b, a)
-        finally:
-            self._rollups._invalidate(os.path.join(self._rollups.storage_dir, name))
+            finally:
+                self._rollups._invalidate(built.path)
 
     def refresh_all(self) -> None:
         self._refresh_many(

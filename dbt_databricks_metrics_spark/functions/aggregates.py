@@ -153,6 +153,31 @@ def merge_table(table, dims: Sequence[str], fns: Mapping[str, str]):
     return pa.table(out)
 
 
+def row_contribution(p_expr: str) -> Optional[str]:
+    """The per-row SQL expression whose sum over a group equals the
+    partial *p_expr* over that group, so a fold can add or retract source
+    rows without aggregating them: ``sum(x)`` → ``x``, ``count(*)`` →
+    ``1``, ``count(x)`` → ``if(x IS NULL, 0, 1)``, ``count_if(p)`` →
+    ``if(p, 1, 0)``. None for any other partial, and for a
+    multi-argument ``count``."""
+    m = re.fullmatch(r"(sum|count_if|count)\((.*)\)", p_expr.strip(), re.DOTALL)
+    if not m:
+        return None
+    fn, arg = m.group(1), m.group(2).strip()
+    if fn == "sum":
+        return arg
+    if fn == "count_if":
+        return f"if({arg}, 1, 0)"
+    if arg in ("*", "1"):
+        return "1"
+    depth = 0
+    for c in re.sub(r"'(?:[^'\\]|\\.)*'|\"(?:[^\"\\]|\\.)*\"", "''", arg):
+        depth += (c == "(") - (c == ")")
+        if c == "," and depth == 0:
+            return None  # count(a, b) counts rows where every argument is set
+    return f"if(({arg}) IS NULL, 0, 1)"
+
+
 @dataclass(frozen=True)
 class Decomposition:
     """Partial-state plan for one measure expression.
@@ -197,12 +222,20 @@ def merge_functions(
 
 
 def merge_columns(
-    decs: Mapping[str, Decomposition], measures: Optional[Sequence[str]] = None
+    decs: Mapping[str, Decomposition],
+    measures: Optional[Sequence[str]] = None,
+    types: Optional[Mapping] = None,
 ) -> list:
     """The aggregate columns that re-aggregate the partial layout of
-    *measures* (default: all of *decs*), each aliased to its partial."""
+    *measures* (default: all of *decs*), each aliased to its partial.
+    Writers of stored state pass *types* (partial column -> Spark type,
+    the type the partial's own aggregate gives it) to cast each merge back
+    to it: Spark's ``sum`` widens a ``decimal(p, s)`` to ``decimal(p + 10,
+    s)`` at every re-aggregation, checked under ANSI, so an overflow
+    raises."""
     return [
-        merge_column(fn, p_col).alias(p_col)
+        (merge_column(fn, p_col) if types is None
+         else merge_column(fn, p_col).cast(types[p_col])).alias(p_col)
         for p_col, fn in merge_functions(decs, measures).items()
     ]
 

@@ -30,8 +30,10 @@ publish into a ``pyarrow.Table`` plus one ``LocalRelation`` DataFrame of
 it, and served from the driver with no Spark job: the WHERE slice is a
 Spark filter on the ``LocalRelation`` (returning row ids), the merge an
 Arrow ``group_by`` (``merge_table``), and the result a ``LocalRelation``
-whose finalize expressions are a Spark ``select``. Any other rollup is a
-cached Spark scan re-aggregated by Spark. The route string is
+whose finalize expressions are a Spark ``select``. A CDC fold of a
+driver-local batch replaces that table in place of the reload
+(``streaming/refresh.py::fold_retractions_on_driver``). Any other rollup
+is a cached Spark scan re-aggregated by Spark. The route string is
 ``rollup:<name>`` either way; ``explain_route`` reports the tier.
 
 Refresh (= ``scripts/refresh_metric_views.py`` semantics, O5 in SURVEY §2.7)
@@ -103,6 +105,16 @@ class _Loaded:
     @property
     def tier(self) -> str:
         return "spark" if self.table is None else "driver"
+
+
+def resident_table(spark: SparkSession, table) -> _Loaded:
+    """The driver-tier record of the ``pyarrow.Table`` *table*: one
+    ``LocalRelation`` of it plus a ``_RID`` row-id column. Both the load
+    from disk and a driver fold's write-through build it here."""
+    import pyarrow as pa
+
+    rid = pa.array(range(table.num_rows), pa.int64())
+    return _Loaded(spark.createDataFrame(table.append_column(_RID, rid)), table.num_rows, table)
 
 
 @dataclass
@@ -305,11 +317,27 @@ class RollupManager:
         ):
             # nullable like a parquet read in Spark; no file metadata
             schema = pa.schema([pa.field(f.name, f.type) for f in data.schema])
-            table = data.to_table().cast(schema)
-            rid = pa.array(range(table.num_rows), pa.int64())
-            df = self.spark.createDataFrame(table.append_column(_RID, rid))
-            return _Loaded(df, n_rows, table)
+            return resident_table(self.spark, data.to_table().cast(schema))
         return _Loaded(self.spark.read.parquet(built.path).cache(), n_rows)
+
+    def resident(self, built: BuiltRollup) -> Optional[_Loaded]:
+        """*built*'s driver-tier record, loaded if it is not yet; None
+        when it serves from Spark or has no stored version."""
+        if not recover_dir(built.path):
+            return None
+        loaded = self._read_rollup(built)
+        return loaded if loaded.table is not None else None
+
+    def install(self, built: BuiltRollup, loaded: _Loaded) -> None:
+        """Serve *loaded*, the driver-tier record of the table a fold just
+        published for *built*, in place of the one it replaced; a fold
+        that grew the rollup past ``DRIVER_MAX_ROWS`` drops it instead, so
+        the next read loads the rollup for the Spark tier."""
+        with self._cache_lock:
+            if loaded.n_rows <= DRIVER_MAX_ROWS:
+                self._loaded[built.path] = loaded
+            else:
+                self._loaded.pop(built.path, None)
 
     def _invalidate(self, path_prefix: str, keep: frozenset = frozenset()) -> None:
         """Drop the loaded rollups at or under *path_prefix*, except the
@@ -483,8 +511,9 @@ class RollupManager:
                 # where the merge level would turn count-partials of an
                 # empty source into NULL instead of 0.
                 fine = flat.groupBy(*dims).agg(*partials)
+                types = {f.name: f.dataType for f in fine.schema}
                 grouped = fine.groupingSets(sets, *dims).agg(
-                    *merge_columns(union), F.grouping_id().alias("_gid")
+                    *merge_columns(union, types=types), F.grouping_id().alias("_gid")
                 )
             else:
                 grouped = flat.groupingSets(sets, *dims).agg(

@@ -247,12 +247,32 @@ def _strip_comments(s: str) -> str:
     ).strip()
 
 
+def _mask_parens(s: str) -> str:
+    """Same-LENGTH copy of *s* with the inside of every outermost
+    balanced ``( … )`` span overwritten by ``_`` filler, like
+    :func:`_mask_literals` does for literals: a subquery's own ``GROUP
+    BY``/``ORDER BY``/``LIMIT`` must not end the statement's clause.
+    Run it over the literal-masked copy, where no quoted paren is left."""
+    out = list(s)
+    depth = start = 0
+    for i, c in enumerate(s):
+        if c == "(":
+            if depth == 0:
+                start = i
+            depth += 1
+        elif c == ")" and depth:
+            depth -= 1
+            if depth == 0:
+                out[start + 1:i] = "_" * (i - start - 1)
+    return "".join(out)
+
+
 def _match_query(text: str):
-    """``_QUERY_RE`` over the literal-masked copy of *text*. Returns
-    ``(match, grp)`` where ``grp(name)`` slices the ORIGINAL text by the
-    masked match's span — payloads keep their literals intact — or
-    ``None`` when the shape doesn't match."""
-    m = _QUERY_RE.match(_mask_literals(text))
+    """``_QUERY_RE`` over the literal- and paren-masked copy of *text*.
+    Returns ``(match, grp)`` where ``grp(name)`` slices the ORIGINAL text
+    by the masked match's span — payloads keep their literals and
+    subqueries intact — or ``None`` when the shape doesn't match."""
+    m = _QUERY_RE.match(_mask_parens(_mask_literals(text)))
     if not m:
         return None
 

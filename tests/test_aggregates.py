@@ -70,3 +70,20 @@ def test_no_aggregate_not_decomposable():
 def test_nested_parens_in_strings():
     d = decompose_aggregate("count_if(status = 'a(b)')", "_p")
     assert d is not None and d.partials[0][0] == "count_if(status = 'a(b)')"
+
+
+def test_row_contribution():
+    """The per-row form of each retractable partial; a multi-argument
+    ``count`` (rows where every argument is set) and ``min``/``max``
+    have none, so their rollups fold through Spark."""
+    from dbt_databricks_metrics_spark.functions.aggregates import row_contribution
+
+    assert row_contribution("sum(price * qty)") == "price * qty"
+    assert row_contribution("count(*)") == "1"
+    assert row_contribution("count(1)") == "1"
+    assert row_contribution("count(amount)") == "if((amount) IS NULL, 0, 1)"
+    assert row_contribution("count(concat(a, ','))") == "if((concat(a, ',')) IS NULL, 0, 1)"
+    assert row_contribution("count_if(amount > 10)") == "if(amount > 10, 1, 0)"
+    assert row_contribution("count(a, b)") is None
+    assert row_contribution("count(concat('(', a), b)") is None
+    assert row_contribution("max(price)") is None

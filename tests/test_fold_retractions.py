@@ -458,3 +458,246 @@ def test_refresh_cdc_after_crash_between_aside_and_promote(
     eng2.refresh("mv_ret")
     df2, _ = mv2.query_routed(["seg"], ["n", "cents"])
     assert got == {r["seg"]: (r["n"], r["cents"]) for r in df2.collect()}
+
+
+# ---------------------------------------------------------------------------
+# the driver tier: batches whose frames live on the driver fold into a
+# driver-served rollup with no Spark job
+
+
+def _local(spark, data, schema="id long, seg string, price double"):
+    """*data* as a frame made from a ``pyarrow.Table``, so ``isLocal()``
+    holds and ``refresh_cdc`` folds it on the driver."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    target = to_arrow_schema(spark.createDataFrame([], schema).schema)
+    cols = list(zip(*data)) if data else [()] * len(target)
+    return spark.createDataFrame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, target)], schema=target))
+
+
+def _debris(path):
+    import os
+
+    base = os.path.basename(path)
+    return [n for n in os.listdir(os.path.dirname(path))
+            if n.startswith((f"{base}__tmp_", f"{base}__old_"))]
+
+
+def test_driver_fold_refuses_midhistory_and_keeps_the_resident_rollup(spark, tmp_path):
+    """A mid-history batch (a negative count, or a zero count with
+    leftover integer mass) is refused on the driver tier by the same rule
+    as the Spark fold; the stored rollup, its row count and the resident
+    table are untouched and no temp directory is left. The resident
+    table staying the same object shows the refusal never reached the
+    Spark fold, whose callers drop it."""
+    _rows(spark, [(1, "A", 10.0)]).createOrReplaceTempView("ret_src")
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "whd"))
+    mv = eng.register(MetricViewSpec.from_yaml(SPEC, name="mv_retd"))
+    eng.refresh("mv_retd")
+    built = eng.catalog.get("mv_retd").state.rollups["by_seg"]
+    assert mv.explain_route(["seg"], ["n"])["serving"]["tier"] == "driver"
+    resident = eng._rollups._loaded[built.path]
+    n_rows = built.n_rows
+    snapshot = sorted(tuple(r) for r in spark.read.parquet(built.path).collect())
+
+    for before, after in (([(9, "B", 5.0)], []), ([(9, "B", 5.0)], [(9, "B", 7.0)])):
+        with pytest.raises(ValueError, match="mid-history"):
+            eng.refresh_cdc("mv_retd", _local(spark, before), _local(spark, after))
+        assert eng._rollups._loaded[built.path] is resident
+        assert built.n_rows == n_rows
+        assert snapshot == sorted(
+            tuple(r) for r in spark.read.parquet(built.path).collect())
+        assert _debris(built.path) == []
+
+    eng.refresh_cdc("mv_retd", _local(spark, [(1, "A", 10.0)]),
+                    _local(spark, [(1, "A", 12.0)]))
+    assert eng._rollups._loaded[built.path] is not resident
+    got = {r["seg"]: (r["n"], r["cents"])
+           for r in mv.query(["seg"], ["n", "cents"]).collect()}
+    assert got == {"A": (1, 1200)}
+
+
+WIDE_SPEC = """
+version: 0.1
+source: {src}
+dimensions:
+  - name: seg
+    expr: seg
+  - name: st
+    expr: st
+measures:
+  - name: n
+    expr: count(*)
+  - name: cents
+    expr: sum(cents)
+  - name: amt
+    expr: sum(amount)
+  - name: n_amt
+    expr: count(amount)
+  - name: big
+    expr: count_if(amount > 10)
+  - name: avg_amt
+    expr: avg(amount)
+materialization:
+  materialized_views:
+    - name: by_seg_st
+      type: aggregated
+      dimensions: [seg, st]
+      measures: [n, cents, amt, n_amt, big, avg_amt]
+"""
+WIDE_SCHEMA = "id long, seg string, st string, cents long, amount decimal(12,2)"
+
+
+def test_driver_fold_stores_what_the_spark_fold_stores(spark, tmp_path):
+    """The same change batches folded on the driver and by Spark leave
+    byte-identical rollups (sorted rows, Spark-read schema, ``n_rows``)
+    over every per-row partial form (``sum``, ``count(*)``,
+    ``count(x)``, ``count_if``, ``avg``'s pair), NULL dims and values and
+    a decimal sum; both equal a rebuild."""
+    from decimal import Decimal as D
+
+    rows = {
+        1: (1, "A", "x", 100, D("5.00")),
+        2: (2, "A", "y", 250, None),
+        3: (3, None, "x", 75, D("12.50")),
+        4: (4, "B", "x", 40, D("11.00")),
+    }
+    batches = [
+        # update 2 (value set), delete 4 (B's only row), insert a NULL-dim row
+        ([rows[2], rows[4]], [(2, "A", "y", 300, D("20.00")), (5, None, None, 10, None)]),
+        # update the NULL-seg row into A, insert B back
+        ([(3, None, "x", 75, D("12.50"))], [(3, "A", "x", 80, D("9.99")), (6, "B", "y", 1, D("0.01"))]),
+        # an empty batch
+        ([], []),
+    ]
+    dumps = {}
+    for tier in ("driver", "spark"):
+        src = f"wide_src_{tier}"
+        spark.createDataFrame(list(rows.values()), WIDE_SCHEMA).createOrReplaceTempView(src)
+        eng = MetricEngine(spark, warehouse_dir=str(tmp_path / tier))
+        mv = eng.register(MetricViewSpec.from_yaml(WIDE_SPEC.format(src=src), name="mv_wide"))
+        eng.refresh("mv_wide")
+        built = mv._rv.state.rollups["by_seg_st"]
+        mv.query(["seg"], ["n"]).collect()
+        resident = eng._rollups._loaded[built.path]
+        for before, after in batches:
+            if tier == "driver":
+                b, a = _local(spark, before, WIDE_SCHEMA), _local(spark, after, WIDE_SCHEMA)
+            else:
+                b = spark.createDataFrame(before, WIDE_SCHEMA)
+                a = spark.createDataFrame(after, WIDE_SCHEMA)
+            eng.refresh_cdc("mv_wide", b, a)
+        # the driver fold replaced the resident table; the Spark fold dropped it
+        assert (eng._rollups._loaded.get(built.path) not in (None, resident)) == (
+            tier == "driver")
+        stored = spark.read.parquet(built.path)
+        dumps[tier] = (stored.schema.simpleString(), built.n_rows,
+                       sorted(map(repr, map(tuple, stored.collect()))))
+        assert mv.explain_route(["seg"], ["n"])["serving"]["tier"] == "driver"
+    assert dumps["driver"] == dumps["spark"]
+    assert "_p_amt_0:decimal(22,2)" in dumps["driver"][0]
+
+    final = dict(rows)
+    for before, after in batches:
+        for r in before:
+            final.pop(r[0])
+        for r in after:
+            final[r[0]] = r
+    spark.createDataFrame(list(final.values()), WIDE_SCHEMA).createOrReplaceTempView("wide_src_re")
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "rebuild"))
+    mv = eng.register(MetricViewSpec.from_yaml(WIDE_SPEC.format(src="wide_src_re"), name="mv_wide"))
+    eng.refresh("mv_wide")
+    built = mv._rv.state.rollups["by_seg_st"]
+    stored = spark.read.parquet(built.path)
+    assert (stored.schema.simpleString(), built.n_rows,
+            sorted(map(repr, map(tuple, stored.collect())))) == dumps["driver"]
+
+
+DEC_SPEC = """
+version: 0.1
+source: {src}
+dimensions:
+  - name: k
+    expr: k
+measures:
+  - name: total
+    expr: sum(v)
+  - name: n
+    expr: count(*)
+materialization:
+  materialized_views:
+    - name: by_k
+      type: aggregated
+      dimensions: [k]
+      measures: [total, n]
+"""
+
+
+@pytest.mark.parametrize("fold", ["refresh_cdc", "refresh_cdc_local", "refresh_incremental"])
+def test_folds_keep_stored_decimal_types(spark, tmp_path, fold):
+    """A fold stores each partial in the type a rebuild gives it: a
+    ``sum`` over ``decimal(12,2)`` stays ``decimal(22,2)`` instead of
+    widening by 10 digits per fold (to ``(32,2)``, then ``(38,2)``), so
+    the query's result type and the driver serving tier hold too."""
+    from decimal import Decimal as D
+
+    schema = "k string, v decimal(12,2)"
+    src = f"dec_src_{fold}"
+    data = [("A", D("1.50")), ("B", D("2.25"))]
+    spark.createDataFrame(data, schema).createOrReplaceTempView(src)
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "wh"))
+    mv = eng.register(MetricViewSpec.from_yaml(DEC_SPEC.format(src=src), name="mv_dec"))
+    eng.refresh("mv_dec")
+    path = mv._rv.state.rollups["by_k"].path
+    stored, query = spark.read.parquet(path).schema, mv.query(["k"], ["total"]).schema
+    assert "_p_total_0:decimal(22,2)" in stored.simpleString()
+
+    def frame(rows):
+        if fold == "refresh_cdc_local":
+            return _local(spark, rows, schema)
+        return spark.createDataFrame(rows, schema)
+
+    for i in range(2):
+        new = ("C", D(f"{i + 1}.00"))
+        if fold == "refresh_incremental":
+            eng.refresh_incremental("mv_dec", frame([new]))
+            data.append(new)
+        else:
+            eng.refresh_cdc("mv_dec", frame([data[0]]), frame([new]))
+            data[0] = new
+    assert spark.read.parquet(path).schema == stored
+    assert mv.query(["k"], ["total"]).schema == query
+    assert mv.explain_route(["k"], ["total"])["serving"]["tier"] == "driver"
+    folded = sorted(tuple(r) for r in mv.query(["k"], ["total", "n"]).collect())
+
+    spark.createDataFrame(data, schema).createOrReplaceTempView(src)
+    eng.refresh("mv_dec")
+    assert spark.read.parquet(path).schema == stored
+    assert sorted(tuple(r) for r in mv.query(["k"], ["total", "n"]).collect()) == folded
+
+
+def test_two_level_build_keeps_decimal_partial_types(spark, tmp_path, monkeypatch):
+    """The two-level build merges its fine-grain partials once more; each
+    grain still stores the type a one-grain build stores."""
+    from decimal import Decimal as D
+
+    from dbt_databricks_metrics_spark.plans import rollup
+
+    monkeypatch.setattr(rollup, "TWO_LEVEL_MIN_BYTES", 0)
+    spec = DEC_SPEC.format(src="dec_src_2l").replace(
+        "dimensions:\n  - name: k\n    expr: k\n",
+        "dimensions:\n  - name: k\n    expr: k\n  - name: s\n    expr: s\n",
+    ) + (
+        "    - name: by_k_s\n      type: aggregated\n"
+        "      dimensions: [k, s]\n      measures: [total, n]\n"
+    )
+    spark.createDataFrame([("A", "x", D("1.50")), ("B", "y", D("2.25"))],
+                          "k string, s string, v decimal(12,2)").createOrReplaceTempView("dec_src_2l")
+    eng = MetricEngine(spark, warehouse_dir=str(tmp_path / "wh"))
+    mv = eng.register(MetricViewSpec.from_yaml(spec, name="mv_dec2"))
+    eng.refresh("mv_dec2")
+    assert sorted(mv._rv.state.rollups) == ["by_k", "by_k_s"]
+    for built in mv._rv.state.rollups.values():
+        assert "_p_total_0:decimal(22,2)" in spark.read.parquet(built.path).schema.simpleString()

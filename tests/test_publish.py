@@ -25,14 +25,22 @@ def _inject(m: pytest.MonkeyPatch, step: str, path: str) -> None:
     """Make the publish of *path* raise at *step*."""
     tmp_prefix, old_prefix = f"{path}__tmp_", f"{path}__old_"
     if step == "write":
-        real_parquet = DataFrameWriter.parquet
+        import pyarrow.parquet as papq
+
+        real_parquet, real_write_table = DataFrameWriter.parquet, papq.write_table
 
         def parquet(self, p, *a, **k):
             real_parquet(self, p, *a, **k)  # leave a complete tmp behind
             if p.startswith(tmp_prefix):
                 raise OSError("injected failure after the tmp write")
 
+        def write_table(table, where, *a, **k):
+            real_write_table(table, where, *a, **k)
+            if str(where).startswith(tmp_prefix):
+                raise OSError("injected failure after the tmp write")
+
         m.setattr(DataFrameWriter, "parquet", parquet)
+        m.setattr(papq, "write_table", write_table)
     elif step in ("aside", "promote"):
         real_rename = os.rename
 
@@ -142,6 +150,33 @@ class _FoldRetractions(_RollupBuild):
             self.publish()
 
 
+class _DriverFold(_RollupBuild):
+    """One CDC change batch made from Arrow tables, folded by
+    ``refresh_cdc`` on the driver and published by the pyarrow writer."""
+
+    def __init__(self, spark, tmp_path: Path):
+        super().__init__(spark, tmp_path)
+        self.built = self.eng.catalog.get("mv_pub").state.rollups["by_seg"]
+        self.mgr = self.eng._rollups
+        assert self.mgr.resident(self.built) is not None
+
+    def _fold(self, before, after):
+        import pyarrow as pa
+
+        def frame(rows):
+            cols = list(zip(*rows)) if rows else [(), (), ()]
+            return self.spark.createDataFrame(pa.table({
+                "id": pa.array(cols[0], pa.int64()),
+                "seg": pa.array(cols[1], pa.string()),
+                "price": pa.array(cols[2], pa.float64()),
+            }))
+
+        self.eng.refresh_cdc("mv_pub", frame(before), frame(after))
+
+    publish = _FoldRetractions.publish
+    retry = _FoldRetractions.retry
+
+
 class _TableModel:
     """A non-bucketed ``table`` model rebuilt by ``Runner.run``."""
 
@@ -176,6 +211,7 @@ class _TableModel:
 CALLERS = {
     "rollup_build": _RollupBuild,
     "fold_retractions": _FoldRetractions,
+    "driver_fold": _DriverFold,
     "table_model": _TableModel,
 }
 
@@ -200,6 +236,28 @@ def test_publish_failure_leaves_a_complete_version(spark, tmp_path, caller, step
     assert new != old
     assert after_failure == (new if committed else old)
     assert _debris(sc.path) == []
+
+
+@pytest.mark.parametrize("step", STEPS)
+def test_driver_fold_failure_keeps_the_resident_rollup_committed(spark, tmp_path, step):
+    """The resident table of a driver-folded rollup always serves the
+    committed version: a publish that fails before its promote leaves the
+    resident table and ``n_rows`` as they were, one that fails after it
+    (the aside delete) installs the new table before it raises."""
+    sc = _DriverFold(spark, tmp_path)
+    resident, n_rows = sc.mgr._loaded[sc.built.path], sc.built.n_rows
+    with pytest.MonkeyPatch.context() as m:
+        _inject(m, step, sc.path)
+        with pytest.raises(Exception, match="injected"):
+            sc.publish()
+    loaded = sc.mgr._loaded[sc.built.path]
+    if step == "aside_delete":
+        assert loaded is not resident and sc.built.n_rows == loaded.n_rows == 3
+    else:
+        assert loaded is resident and sc.built.n_rows == n_rows == 2
+    assert [d for d in _debris(sc.path) if "__tmp_" in d] == []
+    sc.mgr.resident(sc.built)  # adopts an aside the failed promote left
+    assert sorted(tuple(d.values()) for d in loaded.table.to_pylist()) == sc.read()
 
 
 def test_publish_to_trailing_slash_path(spark, tmp_path):

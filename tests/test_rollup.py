@@ -775,15 +775,32 @@ def _toy_view(spark, tmp_path, name, rows):
     return eng, mv
 
 
-@pytest.mark.parametrize("writer", ["refresh_cdc", "refresh_incremental", "refresh"])
+def _arrow_rows(spark, *rows):
+    """A (``k``, ``s``, ``v bigint``) batch made from a ``pyarrow.Table``:
+    a frame whose rows already live on the driver (``isLocal()``)."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [(), (), ()]
+    return spark.createDataFrame(pa.table({
+        "k": pa.array(cols[0], pa.string()),
+        "s": pa.array(cols[1], pa.string()),
+        "v": pa.array(cols[2], pa.int64()),
+    }))
+
+
+@pytest.mark.parametrize(
+    "writer", ["refresh_cdc", "refresh_cdc_local", "refresh_incremental", "refresh"])
 def test_read_during_refresh_serves_the_new_rollup(spark, tmp_path, monkeypatch, writer):
     """A routed read that lands while a refresh is writing serves the old
     rollup, and every read after the refresh serves the new one: the
-    loaded rollup is dropped after the publish, not before it."""
+    loaded rollup is dropped (or, after a driver fold, replaced) after
+    the publish, not before it."""
     from dbt_databricks_metrics_spark.plans import rollup
     from dbt_databricks_metrics_spark.streaming import refresh as folds
 
     def rows(*r):
+        if writer == "refresh_cdc_local":
+            return _arrow_rows(spark, *r)
         return spark.createDataFrame(list(r), "k string, s string, v bigint")
 
     name = f"mv_race_{writer}"
@@ -802,7 +819,7 @@ def test_read_during_refresh_serves_the_new_rollup(spark, tmp_path, monkeypatch,
         real(path, write)
 
     monkeypatch.setattr(module, "publish_dir", publish_after_a_read)
-    if writer == "refresh_cdc":
+    if writer.startswith("refresh_cdc"):
         eng.refresh_cdc(name, rows(("A", "y", 20)), rows(("A", "y", 25), ("B", "y", 7)))
     elif writer == "refresh_incremental":
         eng.refresh_incremental(name, rows(("A", "y", 5), ("B", "y", 7)))
@@ -837,6 +854,34 @@ def test_refresh_cdc_fold_job_budget(spark, tmp_path):
     after = spark.createDataFrame([("C", "x", 1), ("C", "y", 2)], "k string, s string, v bigint")
     n, _ = _jobs(spark, "cdc_fold", lambda: eng.refresh_cdc("mv_fold_budget", before, after))
     assert n == 5
+
+
+def test_refresh_cdc_driver_fold_job_budget(spark, tmp_path):
+    """A CDC batch made from Arrow tables folds into a driver-served
+    rollup with no Spark job, and the fresh read after it runs none
+    either: the fold publishes with pyarrow and installs the merged table
+    as the resident rollup, which equals the published one."""
+    eng, mv = _toy_view(spark, tmp_path, "mv_driver_fold",
+                        [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    built = mv._rv.state.rollups["by_k_s"]
+    mv.query(["k"], ["total"]).collect()
+    old = eng._rollups._loaded[built.path]
+    schema = spark.read.parquet(built.path).schema  # as Spark wrote it
+    before = _arrow_rows(spark, ("B", "x", 5))
+    after = _arrow_rows(spark, ("C", "x", 1), ("C", "y", 2), ("A", "x", 4))
+    n_fold, _ = _jobs(spark, "driver_fold",
+                      lambda: eng.refresh_cdc("mv_driver_fold", before, after))
+    n_read, rows = _jobs(spark, "driver_fold_read",
+                         lambda: mv.query(["k"], ["total", "n"]).collect())
+    assert (n_fold, n_read) == (0, 0)
+    assert sorted(tuple(r) for r in rows) == [("A", 34, 3), ("C", 3, 2)]
+    loaded = eng._rollups._loaded[built.path]
+    assert loaded is not old and loaded.tier == "driver"
+    stored = spark.read.parquet(built.path)
+    assert loaded.n_rows == built.n_rows == stored.count() == 4
+    assert stored.schema == schema
+    assert sorted(tuple(r) for r in stored.collect()) == sorted(
+        tuple(d.values()) for d in loaded.table.to_pylist())
 
 
 def test_folds_update_candidate_n_rows(spark, tmp_path):
@@ -881,6 +926,40 @@ def test_rollup_folded_past_the_bound_serves_from_spark(spark, tmp_path, monkeyp
         "tier": "spark", "n_rows": 5, "bound": 3}
     rows = {r["k"]: r["total"] for r in mv.query(["k"], ["total"]).collect()}
     assert rows == {"A": 30, "B": 12, "C": 1}
+
+
+def test_rollup_cdc_folded_past_the_bound_serves_from_spark(spark, tmp_path, monkeypatch):
+    """A driver fold that grows the rollup past the bound publishes it
+    and leaves it to the Spark tier instead of installing it."""
+    from dbt_databricks_metrics_spark.plans import rollup
+
+    monkeypatch.setattr(rollup, "DRIVER_MAX_ROWS", 3)
+    eng, mv = _toy_view(spark, tmp_path, "mv_cdc_grow",
+                        [("A", "x", 10), ("A", "y", 20), ("B", "x", 5)])
+    built = mv._rv.state.rollups["by_k_s"]
+    assert mv.explain_route(["k"], ["total"])["serving"]["tier"] == "driver"
+    n, _ = _jobs(spark, "cdc_grow", lambda: eng.refresh_cdc(
+        "mv_cdc_grow", _arrow_rows(spark, ("A", "x", 10)),
+        _arrow_rows(spark, ("A", "x", 11), ("B", "y", 7), ("C", "x", 1))))
+    assert n == 0  # folded on the driver
+    assert built.path not in eng._rollups._loaded
+    assert built.n_rows == 5
+    assert mv.explain_route(["k"], ["total"])["serving"] == {
+        "tier": "spark", "n_rows": 5, "bound": 3}
+    rows = {r["k"]: r["total"] for r in mv.query(["k"], ["total"]).collect()}
+    assert rows == {"A": 31, "B": 12, "C": 1}
+
+
+def test_estimated_bytes_reads_the_private_estimate(spark):
+    """``_estimated_bytes`` reaches Catalyst's estimate through ``_jdf``;
+    on a Spark API break it would read as unbounded (``1 << 62``) and
+    silently switch the build shape. A small frame must estimate finite
+    and small."""
+    from dbt_databricks_metrics_spark.plans.rollup import _estimated_bytes
+
+    for df in (spark.range(100), _arrow_rows(spark, ("A", "x", 1))):
+        est = _estimated_bytes(df)
+        assert isinstance(est, int) and 0 < est < 1 << 20
 
 
 def test_refresh_drops_rollups_the_new_spec_no_longer_declares(spark, tmp_path):

@@ -279,3 +279,23 @@ def test_measure_statement_subquery_reads_earlier_cte(engine, spark, stmt, cte):
     assert isinstance(want, list) and want, want
     tail = f", {cte} AS ({stmt}) SELECT * FROM {cte}" if cte else f" {stmt}"
     assert _outcome(lambda: engine.sql(f"WITH rev AS ({REV}){tail}")) == want
+
+
+def test_subquery_clauses_stay_inside_the_subquery(engine, spark):
+    """A WHERE subquery with its own ORDER BY and LIMIT, followed by the
+    statement's GROUP BY: the subquery's clauses stay inside it, and the
+    rows equal plain ``spark.sql`` over reference temp views."""
+    top2 = "SELECT market_segment FROM rev ORDER BY revenue DESC LIMIT 2"
+    stmt = f"{_N} WHERE market_segment IN ({top2}) GROUP BY market_segment"
+    engine.sql(REV).createOrReplaceTempView("rev")
+    engine.sql(f"{_N} GROUP BY market_segment").createOrReplaceTempView("n_ref")
+    try:
+        want = _outcome(lambda: spark.sql(
+            f"SELECT * FROM n_ref WHERE market_segment IN ({top2})"))
+        got = _outcome(lambda: engine.sql(stmt))
+    finally:
+        spark.catalog.dropTempView("rev")
+        spark.catalog.dropTempView("n_ref")
+    assert isinstance(want, list) and len(want) == 2, want
+    assert got == want
+    assert _outcome(lambda: engine.sql(f"WITH rev AS ({REV}) {stmt}")) == want
