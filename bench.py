@@ -205,19 +205,22 @@ def main() -> None:
 
     # IVM evidence: folding a 1000-row CDC batch into the segment rollup
     # (|rollup| + |delta| rows) vs rebuilding the view's rollups from the
-    # source. before == after -> numerically a no-op, so later queries are
-    # unaffected, but the fold pays its full cost (2 partial aggs + merge
-    # + swap-write).
-    def _ivm_fold():
-        from dbt_databricks_metrics_spark.streaming.refresh import (
-            fold_retractions,
-        )
+    # source. The fold pays its full cost (2 partial aggs + merge +
+    # swap-write) into a copy of the rollup at a scratch path, so the
+    # stored rollup that later entries read stays as built.
+    from dataclasses import replace
 
-        built = eng.catalog.get("mv_order_metrics").state.rollups[
-            "revenue_by_segment"
-        ]
+    from dbt_databricks_metrics_spark.streaming.refresh import fold_retractions
+
+    ivm_built = eng.catalog.get("mv_order_metrics").state.rollups["revenue_by_segment"]
+    ivm_copy = replace(
+        ivm_built, path=os.path.join(_scratch_dir("bench_ivm_"), "revenue_by_segment")
+    )
+    shutil.copytree(ivm_built.path, ivm_copy.path)
+
+    def _ivm_fold():
         batch = eng.ref("fct_orders").limit(1000)
-        fold_retractions(spark, built, batch, batch)
+        fold_retractions(spark, ivm_copy, batch, batch)
 
     timed("ivm_cdc_fold", _ivm_fold)
     timed("ivm_full_refresh", lambda: eng.refresh("mv_order_metrics"))

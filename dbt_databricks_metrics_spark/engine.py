@@ -132,9 +132,7 @@ class MetricView:
                 ] += 1
         if having:
             self._validate_having(having, dimensions, measures)
-            from pyspark.sql import functions as F
-
-            df = df.filter(F.expr(having))
+            df = df.filter(having)
         return df, route
 
     def explain_route(

@@ -102,6 +102,13 @@ def _sub_names(sql: str, subs: dict[str, str]) -> str:
 SHADOWED = "__source_"
 
 
+def quote_ident(name: str) -> str:
+    """*name* as a backtick-quoted SQL identifier, embedded backticks
+    doubled. Driver-tier steps are SQL text (``filter``/``selectExpr``),
+    one py4j call each, instead of one ``F.col``/``F.expr`` per column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 # semiadditive reduction of a window measure's frame values
 _REDUCE_BY = {"last": F.max_by, "first": F.min_by}
 
@@ -319,13 +326,15 @@ class QueryCompiler:
 
     def _project(self, spec: MetricViewSpec, src: DataFrame, reads: Sequence[str]) -> DataFrame:
         """:meth:`baseline_projection` carrying the joined fields and
-        shadowed columns that the expressions *reads* name."""
+        shadowed columns that the expressions *reads* name, as one
+        ``selectExpr`` of SQL text."""
+        q = quote_ident
         if spec.joins:
-            base_names = src.select("source.*").columns
-            ref = lambda n: F.col(f"source.{n}")  # noqa: E731
+            base_names = src.selectExpr("`source`.*").columns
+            ref = lambda n: f"`source`.{q(n)}"  # noqa: E731
         else:
             base_names = src.columns
-            ref = F.col
+            ref = q
         extra_dims = [
             d for d in spec.dimensions if not (d.expr == d.name and d.name in base_names)
         ]
@@ -333,21 +342,22 @@ class QueryCompiler:
         # column shadows it (the dim definition wins for metric queries)
         collide = {d.name for d in extra_dims}
         kept = [ref(n) for n in base_names if n not in collide]
+        # a newline closes each expression so a trailing line comment in
+        # it cannot swallow the alias
         extra = [
-            F.expr(self._rewrite_dim_expr(spec, d.expr)).alias(d.name)
-            for d in extra_dims
+            f"({self._rewrite_dim_expr(spec, d.expr)}\n) AS {q(d.name)}" for d in extra_dims
         ]
         taken = set(base_names) | collide
         aliases = {p[-1] for p in self._collect_join_paths(spec.joins)} - taken
         read, fields = self._reads(spec, reads, aliases)
         shadowed = [
-            ref(n).alias(SHADOWED + n) for n in base_names if n in collide and n in read
+            f"{ref(n)} AS {q(SHADOWED + n)}" for n in base_names if n in collide and n in read
         ]
         joined = [
-            F.struct(*[F.col(f"{a}.{c}").alias(c) for c in cs]).alias(a)
+            f"struct({', '.join(f'{q(a)}.{q(c)} AS {q(c)}' for c in cs)}) AS {q(a)}"
             for a, cs in fields.items()
         ]
-        return src.select(*kept, *extra, *shadowed, *joined)
+        return src.selectExpr(*kept, *extra, *shadowed, *joined)
 
     def uncarried_fields(self, spec: MetricViewSpec, where: Optional[str]) -> list[str]:
         """The joined ``alias.col`` fields *where* reads that the

@@ -52,6 +52,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from ..functions.aggregates import (
     Decomposition,
@@ -71,6 +72,7 @@ from .compiler import (
     QueryError,
     apply_derived,
     expand_derived,
+    quote_ident,
 )
 
 
@@ -133,7 +135,24 @@ class MaterializationState:
     """Physical state backing one metric view's materialization block."""
 
     baseline: Optional[str] = None  # parquet path of the unaggregated snapshot
+    # the schema the baseline build wrote, as a parquet read returns it
+    # (nullable): a read that passes it infers none, so runs no Spark job
+    baseline_schema: Optional[StructType] = None
     rollups: dict[str, BuiltRollup] = field(default_factory=dict)
+
+
+def _nullable(t: DataType) -> DataType:
+    """*t* with every field, element and value nullable, as Spark reads
+    back the parquet it wrote."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_nullable(t.keyType), _nullable(t.valueType), True)
+    return t
 
 
 def _cost(built: BuiltRollup) -> tuple:
@@ -409,11 +428,12 @@ class RollupManager:
             for r in rollup_specs:
                 if r.type == "unaggregated":
                     if redundant_baseline:
-                        state.baseline = None  # router falls through to live
+                        # router falls through to live
+                        state.baseline = state.baseline_schema = None
                         continue
                     path = self._path(spec.name, r.name)
                     publish_dir(path, flat.write.parquet)
-                    state.baseline = path
+                    state.baseline, state.baseline_schema = path, _nullable(flat.schema)
             if aggregated:
                 state.rollups.update(self.build_aggregated(spec, aggregated, flat))
         finally:
@@ -680,7 +700,11 @@ class RollupManager:
             provider = WindowGrainProvider(self, query, state)
         # the snapshot is the flat projection, persisted (no re-join or
         # re-filter); live projects the source at query time
-        flat = self.spark.read.parquet(state.baseline) if source == "baseline" else None
+        flat = (
+            self.spark.read.schema(state.baseline_schema).parquet(state.baseline)
+            if source == "baseline"
+            else None
+        )
         df = self.compiler.compile_storage(query, flat, window_grain_provider=provider)
         if provider and provider.used:
             return df, f"{source}+grain:{','.join(provider.used)}"
@@ -746,14 +770,17 @@ class RollupManager:
                 # the slice filters stored rows directly — before
                 # re-aggregation, which is what makes slicing on a
                 # non-grouped dim correct
-                merged = merged.filter(F.expr(query.where))
+                merged = merged.filter(query.where)
             if not exact:
                 merged = merged.groupBy(*[F.col(d) for d in dims]).agg(
                     *merge_columns(built.decompositions, query.measures)
                 )
-        return merged.select(
-            *[F.col(d) for d in dims],
-            *[F.expr(built.decompositions[m].finalize).alias(m) for m in query.measures],
+        return merged.selectExpr(
+            *[quote_ident(d) for d in dims],
+            *[
+                f"({built.decompositions[m].finalize}) AS {quote_ident(m)}"
+                for m in query.measures
+            ],
         )
 
     def _merge_on_driver(
@@ -768,7 +795,7 @@ class RollupManager:
         if query.where:
             import pyarrow as pa
 
-            rows = loaded.df.filter(F.expr(query.where)).select(_RID).collect()
+            rows = loaded.df.filter(query.where).selectExpr(quote_ident(_RID)).collect()
             table = table.take(pa.array([r[0] for r in rows], pa.int64()))
         merged = merge_table(
             table, query.dimensions, merge_functions(built.decompositions, query.measures)

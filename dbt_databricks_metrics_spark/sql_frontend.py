@@ -53,7 +53,7 @@ FROM <temp view>)`` beside the plain CTEs, so the plain final statement
 reaches ``spark.sql`` as written and Catalyst scopes every reference —
 aliases, joins, subqueries, inner-WITH shadowing. The one place outside
 that WITH clause is a MEASURE() statement's own WHERE/HAVING, which
-compiles through ``F.expr``: its subqueries are handed the declarations
+compiles as a filter expression: its subqueries are handed the declarations
 (:func:`_with_subqueries`).
 """
 
@@ -65,6 +65,8 @@ from typing import TYPE_CHECKING, Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .plans.compiler import quote_ident
 
 if TYPE_CHECKING:  # pragma: no cover
     from .engine import MetricEngine
@@ -306,24 +308,37 @@ def _strip_measure_calls(expr: str) -> str:
 
 
 def _split_select_alias(item: str) -> tuple[str, Optional[str]]:
-    """Split a select item into (expression, trailing ``AS alias``),
-    alias-matching over the masked copy so an `` as `` inside a string
-    literal never splits the item. Both halves slice the original. The
-    masked copy is right-stripped first: a trailing comment masks to
-    spaces, which would otherwise break the ``$`` anchor."""
+    """Split a select item into (expression, alias) the way Spark's
+    grammar reads a named expression: ``expr [AS] alias``, the alias an
+    identifier or a backtick-quoted one (returned unquoted). An alias with
+    no AS is the trailing identifier of :func:`_trailing_alias_span`, so
+    ``CASE … END`` or ``a AND b`` never splits. Matching runs over the
+    masked copy so an `` as `` inside a string literal never splits the
+    item; both halves slice the original. The masked copy is
+    right-stripped first: a trailing comment masks to spaces, which would
+    otherwise break the ``$`` anchor."""
     am = re.match(
-        r"^(.*?)\s+as\s+([A-Za-z_]\w*)$",
+        r"^(.*?)\s+as\s+(\w+)$",
         _mask_literals(item).rstrip(),
         re.IGNORECASE | re.DOTALL,
     )
-    if not am:
-        return item, None
-    alias = item[am.start(2):am.end(2)]
+    if am:
+        expr_end, (start, end) = am.end(1), am.span(2)
+    else:
+        span = _trailing_alias_span(item)
+        if span is None:
+            return item, None
+        expr_end, (start, end) = span[0], span
     # a masked literal is a run of '_' and would fake an identifier —
     # only accept an alias that is one in the ORIGINAL text
-    if not re.fullmatch(r"[A-Za-z_]\w*", alias):
+    token = item[start:end]
+    if re.fullmatch(r"[A-Za-z_]\w*", token):
+        alias = token
+    elif re.fullmatch(r"`(?:[^`]|``)+`", token):
+        alias = token[1:-1].replace("``", "`")
+    else:
         return item, None
-    return item[: am.end(1)].strip(), alias
+    return item[:expr_end].strip(), alias
 
 
 def _split_top_level(s: str) -> list[str]:
@@ -449,7 +464,7 @@ def _refuse_stray_measure(engine: "MetricEngine", text: str) -> None:
 def _with_subqueries(text: str, decls: Sequence[str]) -> str:
     """*text* with ``WITH <decls>`` opening each outermost ``(SELECT``
     subquery (found over the literal-masked copy). A MEASURE() statement's
-    WHERE/HAVING compiles through ``F.expr``, outside the statement's WITH
+    WHERE/HAVING compiles as a filter expression, outside the statement's WITH
     clause, so this is how a subquery there reads an earlier CTE."""
     if not decls:
         return text
@@ -813,19 +828,26 @@ def _compile_measure_query(
         log_workload=log_workload,
     )
     if having_pred is not None:
-        df = df.filter(F.expr(having_pred))
+        df = df.filter(having_pred)
     if order_specs:
         df = df.orderBy(*[_sort_col(e, d, n) for e, d, n in order_specs])
     # project in SELECT-item order AFTER the sort (a projection is narrow —
     # it preserves the sort order — and sort keys need the pre-projection
-    # columns); expression items evaluate over the aggregated frame
-    df = df.select(
-        *[
-            F.expr(payload).alias(alias) if kind == "expr"
-            else F.col(payload).alias(alias or payload)
-            for kind, payload, alias in items
-        ]
+    # columns); expression items evaluate over the aggregated frame. The
+    # routed frame is already dims + measures in that order, so a SELECT
+    # of exactly those names needs no projection (Catalyst's
+    # RemoveNoopOperators would drop it from the optimized plan anyway).
+    identity = [payload for _, payload, _ in items] == dims + measures and all(
+        kind != "expr" and alias in (None, payload) for kind, payload, alias in items
     )
+    if not identity:
+        df = df.selectExpr(
+            *[
+                f"({payload}) AS {quote_ident(alias)}" if kind == "expr"
+                else f"{quote_ident(payload)} AS {quote_ident(alias or payload)}"
+                for kind, payload, alias in items
+            ]
+        )
     if grp("limit"):
         df = df.limit(int(grp("limit")))
     return df, route
@@ -850,38 +872,34 @@ _ORDER_OPERATOR_WORDS = frozenset(
 )
 
 
-def _reject_alias_shaped_order_item(expr_txt: str, original_item: str) -> None:
-    """Raise when an ORDER BY expression ends in a bare identifier that
-    Spark's grammar would parse as a named-expression ALIAS (review r10
-    #1): ``F.expr("market_segment dsc")`` silently builds
-    ``market_segment AS dsc`` and sorts ascending — the typo'd direction
-    must fail loud like it did before the expression branch existed.
-    Heuristic over the masked token stream: trailing identifier + the
-    token before it is itself an operand (identifier / number / ``)`` /
-    ``]``) and not an operand-consuming operator word."""
+def _trailing_alias_span(expr_txt: str) -> Optional[tuple[int, int]]:
+    """The span of the trailing word that Spark's grammar reads as the
+    ALIAS of a named expression ``expr alias`` (no AS), or None.
+    Heuristic over the masked token stream: the trailing token is a bare
+    identifier not in ``_ORDER_TRAILING_OK`` or a backtick-quoted one,
+    and the token before it is itself an operand (identifier / number /
+    ``)`` / ``]``) and not an operand-consuming operator word."""
     toks = list(
         re.finditer(
             r"[A-Za-z_][\w.]*|\d+(?:\.\d+)?|\S", _mask_literals(expr_txt)
         )
     )
     if len(toks) < 2:
-        return
+        return None
     last, prev = toks[-1].group().lower(), toks[-2].group().lower()
     if prev.endswith("."):
         # `max(s).field` (struct-field access) or a dangling qualifier
         # (`t.` before a quoted column, ``t.`col` ``) — never an alias
-        return
+        return None
     if set(last) == {"_"}:
         # a masked quoted region — check the ORIGINAL text for the quote
         # kind (review r10 pass 5 #1): a string literal is an OPERAND,
         # never an alias (`ts - timestamp '2020-01-01'`; an alias-shaped
         # `seg 'x'` is a Spark parse error — loud), but a BACKTICK-quoted
-        # token is an identifier and `seg \`dsc\`` IS the silent-alias
-        # shape the guard exists for
-        orig_last = expr_txt[toks[-1].start():toks[-1].end()]
-        if not orig_last.startswith("`"):
-            return
-        last, quoted_ident = orig_last, True
+        # token is an identifier and `seg \`dsc\`` IS the alias shape
+        if not expr_txt[toks[-1].start():toks[-1].end()].startswith("`"):
+            return None
+        quoted_ident = True
     else:
         quoted_ident = False
     if (
@@ -900,8 +918,23 @@ def _reject_alias_shaped_order_item(expr_txt: str, original_item: str) -> None:
             )
         )
     ):
+        return toks[-1].span()
+    return None
+
+
+def _reject_alias_shaped_order_item(expr_txt: str, original_item: str) -> None:
+    """Raise when an ORDER BY expression ends in a word that Spark's
+    grammar would parse as a named-expression ALIAS (review r10 #1,
+    :func:`_trailing_alias_span`): ``F.expr("market_segment dsc")``
+    silently builds ``market_segment AS dsc`` and sorts ascending — the
+    typo'd direction must fail loud like it did before the expression
+    branch existed."""
+    span = _trailing_alias_span(expr_txt)
+    if span is not None:
+        last = expr_txt[span[0]:span[1]]
         raise MeasureSQLError(
-            f"bad ORDER BY item {original_item!r}: trailing word {last!r} "
+            f"bad ORDER BY item {original_item!r}: trailing word "
+            f"{last if last.startswith('`') else last.lower()!r} "
             f"is not ASC, DESC, or NULLS FIRST|LAST (Spark would silently "
             f"read it as a column alias and ignore your sort direction)"
         )

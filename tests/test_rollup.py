@@ -684,6 +684,32 @@ def test_driver_served_query_runs_no_job(engine, spark, dims, measures, where):
     assert _norm_rows(rows) == _rows(live)
 
 
+def test_baseline_schema_is_the_inferred_schema(engine, spark):
+    """The schema a baseline build records equals the one a parquet read
+    of the snapshot infers, for every baseline the project builds, so a
+    read that passes it sees the same columns and types."""
+    states = [engine.catalog.get(n).state for n in engine.catalog.names()]
+    built = [s for s in states if s is not None and s.baseline]
+    assert built
+    for state in built:
+        assert state.baseline_schema == spark.read.parquet(state.baseline).schema
+
+
+def test_baseline_routed_build_runs_no_job(engine, spark):
+    """Building a baseline-routed query infers no schema: 0 Spark jobs
+    before any ``collect``, and the rows equal the live answer."""
+    from dbt_databricks_metrics_spark.plans.compiler import MetricQuery
+
+    mv = engine.metric_view("mv_orders_simple")
+    n, (df, route) = _jobs(spark, "baseline_build",
+                           lambda: mv.query_routed(["order_priority"], ["order_count"]))
+    assert route == "baseline"
+    assert n == 0
+    live = engine._compiler.compile(
+        MetricQuery(mv.spec, ("order_priority",), ("order_count",)))
+    assert _rows(df) == _rows(live)
+
+
 def test_driver_served_measure_sql_runs_no_job(engine, spark):
     n, rows = _jobs(spark, "driver_sql", lambda: engine.sql(
         "SELECT market_segment, MEASURE(total_revenue) AS revenue "

@@ -381,6 +381,54 @@ def test_split_select_alias_literal_as():
     assert _split_select_alias("1 AS 'nope'") == ("1 AS 'nope'", None)
 
 
+@pytest.mark.parametrize(
+    "select",
+    [
+        "market_segment seg, MEASURE(total_revenue) AS `rev x`",
+        "market_segment, MEASURE(total_revenue) rev",
+        "market_segment AS `seg``q`, "
+        "MEASURE(total_revenue) / MEASURE(total_orders) aov",
+        "market_segment `seg`, MEASURE(total_orders) n, MEASURE(total_revenue) AS total_revenue",
+    ],
+)
+def test_select_aliases_match_spark(engine, spark, select):
+    """Every alias form Spark's grammar accepts — ``[AS] identifier`` or a
+    backtick-quoted one — names the output column as ``spark.sql`` names
+    it for the same statement over a reference view of the source."""
+    import math
+
+    mv = engine.metric_view("mv_order_metrics")
+    comp = engine._compiler
+    comp.baseline_projection(mv.spec, comp.source_plan(mv.spec)).createOrReplaceTempView(
+        "ref_order_metrics")
+    tail = " GROUP BY market_segment ORDER BY market_segment"
+    got = engine.sql(f"SELECT {select} FROM mv_order_metrics{tail}")
+    ref_select = select
+    for m in ("total_revenue", "total_orders"):
+        ref_select = ref_select.replace(f"MEASURE({m})", f"({mv.spec.measure(m).expr})")
+    try:
+        want = spark.sql(f"SELECT {ref_select} FROM ref_order_metrics{tail}")
+        got_rows, want_rows = got.collect(), want.collect()
+    finally:
+        spark.catalog.dropTempView("ref_order_metrics")
+    assert got.columns == want.columns
+    assert len(got_rows) == len(want_rows)
+    for g, w in zip(got_rows, want_rows):
+        for a, b in zip(g, w):
+            assert a == b or math.isclose(a, b, rel_tol=1e-9), (g, w)
+
+
+def test_split_select_alias_forms():
+    assert _split_select_alias("MEASURE(x) rev") == ("MEASURE(x)", "rev")
+    assert _split_select_alias("MEASURE(x) AS `a b`") == ("MEASURE(x)", "a b")
+    assert _split_select_alias("seg `a``b`") == ("seg", "a`b")
+    # the ORDER BY alias-shape rule: CASE … END and operator operands
+    # never split
+    for item in ("CASE WHEN MEASURE(x) > 0 THEN 1 ELSE 0 END",
+                 "MEASURE(x) IS NULL", "a AND b", "MEASURE(x) * 100"):
+        assert _split_select_alias(item) == (item, None)
+
+
 @settings(max_examples=150, deadline=None)
 @given(
     st.text(
